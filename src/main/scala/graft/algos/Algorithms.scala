@@ -151,4 +151,32 @@ object Algorithms {
     def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
       agg.fold(oldVal)(math.min(oldVal, _))
   }
+
+  /** Longest-path layering of a DAG ([[graft.graphs.GraphOps.criticalPath]]):
+    * value(v) = length of the longest chain ending at v. Every vertex starts
+    * at 0 and max-relaxes value+1 along its out-edges; only vertices whose
+    * layer grew re-send. Converges on a DAG in (longest chain + 1)
+    * supersteps; the cap is shared with the g37 oracle's recursion guard.
+    */
+  object LongestPath extends GmrAlgorithm {
+    override val idleNoOp = true
+    override val usesWeight = false // msg = srcVal + 1 — weight unread
+    override val usesOutDegree = false
+    override val maxIter: Int = graft.graphs.GraphOps.CriticalPathMaxRounds
+    val name = "longest-path"
+
+    def initCol(id: Column, meta: GraphMeta): Column = lit(0.0)
+    def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column =
+      srcVal + 1.0
+    def reduceAgg(msg: Column): Column = max(msg)
+    def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
+      when(agg.isNull, oldVal).otherwise(greatest(oldVal, agg))
+
+    def initFn(id: Long, meta: GraphMeta): Double = 0.0
+    def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double =
+      srcVal + 1.0
+    def mergeFn(a: Double, b: Double): Double = math.max(a, b)
+    def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
+      agg.fold(oldVal)(math.max(oldVal, _))
+  }
 }

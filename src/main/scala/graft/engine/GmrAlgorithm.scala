@@ -3,8 +3,10 @@ package graft.engine
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Static facts about the graph a run executes over. */
-final case class GraphMeta(numVertices: Long, source: Long = 1L)
+/** Static facts about the graph a run executes over. `numVertices` ≤ 0
+  * means unknown — [[GmrRunner.auto]] fills it in.
+  */
+final case class GraphMeta(numVertices: Long = -1L, source: Long = 1L)
 
 /** The engine's user API — a Spark-first re-expression of the reference's
   * `GMR` abstract class (gmr.h:92-123: initGraph/map/reduce/keyComp +

@@ -66,8 +66,7 @@ object GraphXRunner {
     // partitions). Heap stays as the OOM-safety bound; it can only shrink
     // the count below the |E| target, never inflate it.
     val MirrorBytes = 640L
-    val TargetEdgesPerPart = sys.props.get("graft.engine.graphxEdgesPerPart")
-      .map(_.toLong).getOrElse(8_000_000L)
+    val TargetEdgesPerPart = 8_000_000L
     val edgeDerived =
       if (numEdges > 0) ((numEdges + TargetEdgesPerPart - 1) /
         TargetEdgesPerPart).toInt
@@ -83,36 +82,17 @@ object GraphXRunner {
         System.err.println(s"[graphx] edge partitions capped at $maxEdgeParts " +
           s"(heap ${Runtime.getRuntime.maxMemory() >> 30}g, " +
           s"|V|=${meta.numVertices})")
-        // Two ways down to the cap, A/B-able because neither dominates on
-        // paper: `coalesce` FUSES the upstream into the capped task count
-        // (b06's 64M md5 edge generator then runs at parallelism 8 — a
-        // measured 52.8 s max task), while `shuffle` keeps the source at
-        // full width for the price of one ~1.2 GB exchange (guide §2.6 /
-        // §1.2). Shuffle key: xxhash64 over both endpoints — uniform even
-        // under hub skew, deterministic under task retry (guide §2.5:
-        // never rand(), never an n-valued key into n partitions). The
-        // measured winner is the default; see OPTIMIZATION_r11.md.
-        if (sys.props.get("graft.engine.graphxCapMode").contains("shuffle")) {
-          import org.apache.spark.sql.functions.xxhash64
-          sel.repartition(maxEdgeParts, xxhash64($"src", $"dst"))
-        } else sel.coalesce(maxEdgeParts)
+        // coalesce, not a shuffle: r11 measured both ways down to the cap
+        // on b06 (OPTIMIZATION_r11.md) and kept coalesce.
+        sel.coalesce(maxEdgeParts)
       } else sel
     val edgeRdd = cappedSel.rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
     val vertRdd = vertices.select("id").rdd.map(r => (r.getLong(0), ()))
-    val base0 = Graph(vertRdd, edgeRdd, (),
+    // Default vertex-cut placement: r11 measured EdgePartition2D on b06
+    // and rejected it (OPTIMIZATION_r11.md).
+    val base = Graph(vertRdd, edgeRdd, (),
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    // Optional vertex-cut strategy (SURVEY §4 names EdgePartition2D as the
-    // cheap locality improvement: mirrors per vertex bounded by
-    // 2·sqrt(parts) instead of parts). A/B-able without a code change:
-    // -Dgraft.engine.graphxPartitionStrategy=EdgePartition2D|EdgePartition1D
-    // |RandomVertexCut|CanonicalRandomVertexCut. Measured on the b06 64M
-    // anchor this round — see OPTIMIZATION_r11.md for the keep/reject
-    // number (results are strategy-independent; only placement changes).
-    val base = sys.props.get("graft.engine.graphxPartitionStrategy")
-      .map(nm => base0.partitionBy(
-        org.apache.spark.graphx.PartitionStrategy.fromString(nm)))
-      .getOrElse(base0)
     // The out-degree pass (a full aggregateMessages sweep over every edge
     // plus a vertex join) only runs when the algorithm's message hook reads
     // the degree — the same elision SqlRunner applies (guide §1.2: don't

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -37,36 +37,44 @@ object LocalRunner {
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
           alg: GmrAlgorithm, meta: GraphMeta): DataFrame = {
     import spark.implicits._
-
-    // One DF, one partition: kind 0 = vertex row, kind 1 = edge row.
     // coalesce(1) deliberately collapses the upstream scan into the loop
     // task: at the graph sizes that reach this runner a single-task parse
     // beats a repartition(1) exchange (measured 1.0 s vs 2.4 s warm on
     // 4elt) — the exchange's 32-task scan + shuffle overhead exceeds the
     // parse itself.
-    val packed = vertices.select(lit(0).as("kind"), $"id".as("a"),
-        lit(0L).as("b"), lit(0.0).as("w"))
-      .union(edges.select(lit(1).as("kind"), $"src".as("a"), $"dst".as("b"),
-        $"weight".as("w")))
-      .coalesce(1)
-
-    packed.mapPartitions { rows =>
-      val vertIds = mutable.ArrayBuffer.empty[Long]
-      val srcs = mutable.ArrayBuffer.empty[Long]
-      val dsts = mutable.ArrayBuffer.empty[Long]
-      val wgts = mutable.ArrayBuffer.empty[Double]
-      rows.foreach { r =>
-        if (r.getInt(0) == 0) vertIds += r.getLong(1)
-        else { srcs += r.getLong(1); dsts += r.getLong(2); wgts += r.getDouble(3) }
-      }
-      csrLoop(vertIds.toArray, srcs.toArray, dsts.toArray, wgts.toArray,
-        alg, meta)
+    packed(vertices, edges).coalesce(1).mapPartitions { rows =>
+      val (vertIds, srcs, dsts, wgts) = unpack(rows)
+      csrLoop(vertIds, srcs, dsts, wgts, alg, meta)
     }.toDF("id", "value")
+  }
+
+  /** Vertices and edges as ONE relation (kind 0 = vertex row, kind 1 =
+    * edge row), so a single scan feeds the CSR build — in the loop task
+    * here, or through one collect in [[GmrRunner]]'s driver tier.
+    */
+  private[engine] def packed(vertices: DataFrame, edges: DataFrame): DataFrame =
+    vertices.select(lit(0).as("kind"), col("id").as("a"), lit(0L).as("b"),
+        lit(0.0).as("w"))
+      .union(edges.select(lit(1).as("kind"), col("src").as("a"),
+        col("dst").as("b"), col("weight").as("w")))
+
+  /** [[packed]] rows back into the CSR loop's input arrays. */
+  private[engine] def unpack(rows: Iterator[Row])
+      : (Array[Long], Array[Long], Array[Long], Array[Double]) = {
+    val vertIds = mutable.ArrayBuffer.empty[Long]
+    val srcs = mutable.ArrayBuffer.empty[Long]
+    val dsts = mutable.ArrayBuffer.empty[Long]
+    val wgts = mutable.ArrayBuffer.empty[Double]
+    rows.foreach { r =>
+      if (r.getInt(0) == 0) vertIds += r.getLong(1)
+      else { srcs += r.getLong(1); dsts += r.getLong(2); wgts += r.getDouble(3) }
+    }
+    (vertIds.toArray, srcs.toArray, dsts.toArray, wgts.toArray)
   }
 
   /** The CSR build + superstep loop — same scalar algebra as the distributed
     * runners (active-set send, merge, update, |Δ|>ε), shared by the
-    * single-task path above and the driver-side file path below.
+    * single-task path above and [[GmrRunner]]'s driver tier.
     */
   private[engine] def csrLoop(vertIds: Array[Long], srcs: Array[Long],
                               dsts: Array[Long], wgts: Array[Double],
@@ -195,8 +203,32 @@ object LocalRunner {
   }
 }
 
-/** Facade that picks the physical runner from graph statistics. */
+/** The one place that decides where a [[GmrAlgorithm]] runs. [[auto]]
+  * picks a tier from |E|, the same statistics-driven physical choice as
+  * broadcast-join selection:
+  *
+  *  - driver (|E| ≤ [[DriverEdgeThreshold]]): one collect job pulls the
+  *    graph, [[LocalRunner.csrLoop]] runs on the driver, and the result
+  *    comes back as a local Dataset — no job per superstep at all;
+  *  - single task (|E| ≤ [[LocalEdgeThreshold]]): [[LocalRunner.run]], the
+  *    same loop in one executor task over a local CSR;
+  *  - distributed: [[SqlRunner.run]]'s shuffle supersteps.
+  *
+  * All three run the same superstep algebra (EngineSpec pins them equal),
+  * so the tier never shows in the answer, and all three return
+  * materialized rows: a caller may release its inputs as soon as the call
+  * returns. `meta.numVertices` ≤ 0 means unknown: the driver tier takes it
+  * from the collected vertex set, the others count it.
+  */
 object GmrRunner {
+  /** Up to this many edges the whole run stays on the driver: a graph this
+    * small pays more in job scheduling than in work, so one collect beats
+    * even the single-task tier's one job (g05's 15k-edge SSSP, noop-write
+    * median on a 4-core local[4] box: 0.14 s single-task, 0.10 s driver).
+    * 100k edge rows are ~10 MB of driver objects.
+    */
+  val DriverEdgeThreshold: Long = 100_000L
+
   /** Below this many edges the single-task local loop wins on latency AND
     * throughput: at 8M edges the measured gap is 3.4 s local vs 35 s
     * distributed (11-round SSSP, warm) — superstep shuffles only pay once
@@ -211,17 +243,78 @@ object GmrRunner {
   /** Below this file size a LOCAL graph file never touches the cluster:
     * parse and loop on the driver (one tiny job materializes the result).
     * The reference baseline is itself a single-node run — this tier is what
-    * makes the latency comparison apples-to-apples, and it's the same
-    * statistics-driven physical choice as broadcast-join selection.
+    * makes the latency comparison apples-to-apples.
     */
   val DriverFileBytesThreshold: Long = 64L * 1024 * 1024
 
   def auto(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
            alg: GmrAlgorithm, meta: GraphMeta, numEdges: Long): DataFrame =
+    if (numEdges <= DriverEdgeThreshold) onDriver(spark, vertices, edges, alg, meta)
+    else offDriver(spark, vertices, edges, alg, meta, numEdges)
+
+  /** [[auto]] over the graph whose vertex set is the endpoints of
+    * `edges(src, dst, weight)` plus `extraVertices` — the shape of every
+    * GraphOps vertex program. It sizes the run by counting `edges`, cached
+    * so the count and the run share one computation of the upstream (and
+    * released before returning); the driver tier derives the vertex set
+    * from the collected edges, so it costs one collect and no vertex job.
+    * Count first, then collect: a limit+collect probe instead re-ran the
+    * upstream at every executeTake escalation step (measured inside l57:
+    * six ~3.3 s jobs of the near-dup pair pipeline).
+    */
+  def autoEdges(spark: SparkSession, edges: DataFrame, alg: GmrAlgorithm,
+                meta: GraphMeta, extraVertices: Seq[Long] = Nil): DataFrame = {
+    import spark.implicits._
+    val e = edges.select($"src".cast("long").as("src"),
+      $"dst".cast("long").as("dst"), $"weight").cache()
+    try {
+      val numEdges = e.count()
+      if (numEdges <= DriverEdgeThreshold) {
+        val rows = e.collect()
+        val srcs = rows.map(_.getLong(0))
+        val dsts = rows.map(_.getLong(1))
+        loopOnDriver(spark, (srcs ++ dsts ++ extraVertices).distinct, srcs,
+          dsts, rows.map(_.getDouble(2)), alg, meta)
+      } else {
+        val v = e.select($"src".as("id")).union(e.select($"dst".as("id")))
+          .union(extraVertices.toDF("id")).distinct()
+        offDriver(spark, v, e, alg, meta, numEdges)
+      }
+    } finally e.unpersist()
+  }
+
+  /** The driver tier of [[auto]]: collect, loop, return local rows. */
+  private def onDriver(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
+               alg: GmrAlgorithm, meta: GraphMeta): DataFrame = {
+    val (vertIds, srcs, dsts, wgts) =
+      LocalRunner.unpack(LocalRunner.packed(vertices, edges).collect().iterator)
+    loopOnDriver(spark, vertIds, srcs, dsts, wgts, alg, meta)
+  }
+
+  /** The single-task and distributed tiers of [[auto]]. */
+  private def offDriver(spark: SparkSession, vertices: DataFrame,
+                        edges: DataFrame, alg: GmrAlgorithm, meta: GraphMeta,
+                        numEdges: Long): DataFrame = {
+    val m = if (meta.numVertices > 0) meta
+      else meta.copy(numVertices = vertices.count())
+    // SqlRunner's result is its last superstep's checkpoint; the lazy
+    // single-task loop runs here so this tier returns rows too.
     if (numEdges <= LocalEdgeThreshold)
-      LocalRunner.run(spark, vertices, edges, alg, meta)
-    else
-      SqlRunner.run(spark, vertices, edges, alg, meta, numEdges)
+      LocalRunner.run(spark, vertices, edges, alg, m).localCheckpoint()
+    else SqlRunner.run(spark, vertices, edges, alg, m, numEdges)
+  }
+
+  private def loopOnDriver(spark: SparkSession, vertIds: Array[Long],
+                           srcs: Array[Long], dsts: Array[Long],
+                           wgts: Array[Double], alg: GmrAlgorithm,
+                           meta: GraphMeta): DataFrame = {
+    import spark.implicits._
+    val m = if (meta.numVertices > 0) meta
+      else meta.copy(numVertices = vertIds.length.toLong)
+    spark.createDataset(
+      LocalRunner.csrLoop(vertIds, srcs, dsts, wgts, alg, m).toSeq)
+      .toDF("id", "value")
+  }
 
   /** File-backed auto-dispatch: a small local file runs wholly driver-side
     * (GMR text semantics: header, comments, 0-based shift, gap-fill — same
@@ -231,7 +324,6 @@ object GmrRunner {
     */
   def autoFile(spark: SparkSession, path: String, alg: GmrAlgorithm,
                metaFor: Long => GraphMeta): DataFrame = {
-    import spark.implicits._
     val p = if (path.startsWith("file:")) path.stripPrefix("file:") else path
     val f = new java.io.File(p)
     if (!p.contains("://") && f.isFile && f.length() <= DriverFileBytesThreshold) {
@@ -285,14 +377,11 @@ object GmrRunner {
         while (i < m) { sArr(i) = srcs(i) + shift; dArr(i) = dsts(i) + shift; i += 1 }
         val verts = Array.tabulate(nV.toInt)(j => j + 1L) // gap-fill: 1..|V|
         val tLoop = System.nanoTime()
-        val res = LocalRunner.csrLoop(verts, sArr, dArr,
-          Array.fill(m)(1.0), alg, metaFor(nV)).toSeq
-        val tDs = System.nanoTime()
-        val out = spark.createDataset(res).toDF("id", "value")
+        val out = loopOnDriver(spark, verts, sArr, dArr, Array.fill(m)(1.0),
+          alg, metaFor(nV))
         if (verbose)
           println(f"[${alg.name}] file parse: ${(tLoop - tParse) / 1e9}%.3f s, " +
-            f"csr loop: ${(tDs - tLoop) / 1e9}%.3f s, " +
-            f"dataset build: ${(System.nanoTime() - tDs) / 1e9}%.3f s")
+            f"csr loop + dataset build: ${(System.nanoTime() - tLoop) / 1e9}%.3f s")
         out
       } finally rd.close()
     } else {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.algos.Algorithms
+import graft.engine.{GmrRunner, GraphMeta}
 
 /** Graph operators over a derived edge view (FIXTURES.md §4): a deterministic
   * synthetic graph `edges(src, dst)` built from `orders` with pure modulo
@@ -12,9 +14,12 @@ import graft.Tables
   *
   * These are the DataFrame-native renderings of the reference's algorithm
   * library (SURVEY §2.2): hop-count SSSP/BFS, connected components,
-  * triangle count, PageRank. The iterative ones follow the reference's
-  * dataflow (message generation → shuffle → reduce → update → convergence
-  * check, SURVEY §3.1) collapsed to join→groupBy→join rounds with:
+  * triangle count, PageRank. The vertex programs among them (BFS, WCC,
+  * critical path, PageRank, bipartite parity) are [[GmrAlgorithm]]
+  * instances run by [[GmrRunner]], which alone picks the driver,
+  * single-task or distributed tier from |E|. The remaining iterative
+  * operators (matching, MIS, coloring, k-core, …) are join→groupBy→join
+  * rounds with:
   * - frontier/delta pruning (≙ the reference's active-vertex send filter),
   * - one driver action per iteration for convergence (≙ its Allgather),
   * - `localCheckpoint` per iteration to truncate lineage — without it the
@@ -65,119 +70,34 @@ object GraphOps {
   }
 
   /** G1 — hop-count SSSP from `source` (reference semantics: unit weights ⇒
-    * BFS level). Frontier-driven: each round only newly-discovered vertices
-    * send messages; terminates early when the frontier empties.
+    * BFS level), cut off at `maxDepth` hops: unit-weight [[Algorithms.Sssp]]
+    * with its superstep cap set to `maxDepth` — after k synchronous
+    * supersteps exactly the vertices within k hops are finite. Emits
+    * (id, dist) for every reached vertex, `source` always among them.
     */
   def bfs(s: SparkSession, edgeDf: DataFrame, source: Long = 1L,
           maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    // Size the loop's shuffles to the graph, then cache the edges ALREADY
-    // hash-partitioned on the join key: the cached partitioning satisfies
-    // each round's join requirement, so per round only the (small) frontier
-    // shuffles — the reference's precomputed `adjloc` routing table,
-    // expressed as partitioning reuse.
-    val e0 = edgeDf.cache() // the sizing count and the partitioned cache share one parse
-    val m = e0.count()
-    withShuffleParts(s, loopParallelism(s, m)) {
-      val e = e0.repartition($"src").cache()
-      var dist = s.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
-        .localCheckpoint()
-      // The frontier CARRIES its distance (dist+1 per hop) instead of baking a
-      // per-round literal into the plan: every round then compiles to the
-      // identical generated code and hits the codegen cache after round 1.
-      var frontier = dist
-      var depth = 0L
-      var done = false
-      while (!done && depth < maxDepth) {
-        depth += 1
-        val next = frontier.join(e, frontier("id") === e("src"))
-          .select(e("dst").as("id"), (frontier("dist") + 1L).as("dist")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-          .localCheckpoint()
-        if (next.isEmpty) done = true
-        else {
-          // Plain union of already-checkpointed pieces: lineage stays one
-          // level deep with no extra materialization job per round.
-          dist = dist.union(next)
-          frontier = next
-        }
-      }
-      e.unpersist()
-      e0.unpersist()
-      dist
-    }
+    GmrRunner.autoEdges(s, edgeDf.select($"src", $"dst", lit(1.0).as("weight")),
+        Scc.withCap(Algorithms.UnitWeighted(Algorithms.Sssp), maxDepth),
+        GraphMeta(source = source), extraVertices = Seq(source))
+      .filter($"value" =!= Double.PositiveInfinity)
+      .select($"id", $"value".cast("long").as("dist"))
   }
 
-  /** G4 — weakly connected components by iterated min-label propagation to a
-    * fixpoint (the intended semantics of the reference's WCC stub,
-    * algorithms.h:210). One count() action per round detects convergence.
+  /** G4 — weakly connected components: min-label propagation
+    * ([[Algorithms.Wcc]]) over both orientations of every edge, uncapped
+    * (labels settle within diameter + 1 supersteps). Emits (id, comp = min
+    * id of the component). Duplicate edges only repeat a min-merge, so the
+    * view skips [[symmetrize]]'s dedup shuffle — one per Borůvka round in
+    * [[Mst]].
     */
   def wcc(s: SparkSession, edgeDf: DataFrame): DataFrame = {
     import s.implicits._
-    val sym = symmetrize(s, edgeDf)
-      .cache() // sizing count + partitioned cache share one computation
-    // Stats-driven tier (same one-action probe as Mst's contraction): a
-    // pair graph under the threshold runs driver-side union-find with
-    // min-root attachment — identical labels to the min-label fixpoint —
-    // instead of paying several distributed rounds for a few thousand
-    // edges. The distributed loop below is the at-scale path (and stays
-    // oracle-gated through g06/g12's SqlRunner/GraphXRunner WCC).
-    // 100k edge rows ≈ 10 MB of driver objects — comfortably bounded;
-    // the earlier 1M cap was ~100 MB of Row overhead for a tier whose
-    // whole point is "too small to bother the cluster with".
-    val threshold = 100000
-    // count() FIRST: it materializes the cache in one parallel pass (and
-    // the distributed path needs the count anyway). The previous
-    // limit(n+1).collect() probe ran executeTake's partition-escalation
-    // loop against the UNMATERIALIZED cache — measured inside l57: six
-    // ~3.3 s jobs re-running the upstream near-dup pair pipeline, ~20 s of
-    // a 13 s query. The collect below then reads cached blocks only.
-    val m = sym.count()
-    if (m <= threshold) {
-      val sampled = sym.collect()
-      sym.unpersist()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      sampled.foreach { row =>
-        val (x, y) = (row.getLong(0), row.getLong(1))
-        val (rx, ry) = (find(x), find(y))
-        if (rx != ry) { // attach larger root under smaller => min labels
-          if (rx < ry) parent(ry) = rx else parent(rx) = ry
-        }
-      }
-      val ids = sampled.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      return ids.map(v => (v, find(v))).toSeq.toDF("id", "comp")
-    }
-    // Size the loop's shuffles to the graph (m counted above), then cache
-    // co-partitioned on the per-round join key (see bfs).
-    withShuffleParts(s, loopParallelism(s, m)) {
-      val ue = sym.repartition($"src").cache()
-      var labels = ue.select($"src".as("id")).distinct()
-        .select($"id", $"id".as("comp")).localCheckpoint()
-      var changed = 1L
-      while (changed > 0) {
-        val prop = labels.join(ue, $"id" === $"src")
-          .select($"dst".as("id"), $"comp", lit(false).as("self"))
-        // Each vertex's own row is tagged; the aggregation then yields both the
-        // new min-label and the previous one, so convergence needs no join —
-        // and the lazy checkpoint makes materialize+changed-count ONE job.
-        val next = labels.select($"id", $"comp", lit(true).as("self")).union(prop)
-          .groupBy($"id").agg(min($"comp").as("comp"),
-            max(when($"self", $"comp")).as("old_comp"))
-          .localCheckpoint(eager = false)
-        changed = next.filter($"comp" < $"old_comp").count()
-        labels = next.select($"id", $"comp")
-      }
-      ue.unpersist()
-      sym.unpersist()
-      labels
-    }
+    val e = edgeDf.select($"src", $"dst", lit(1.0).as("weight"))
+    GmrRunner.autoEdges(s, e.union(e.select($"dst".as("src"), $"src".as("dst"), $"weight")),
+        Scc.withCap(Algorithms.Wcc, Int.MaxValue), GraphMeta())
+      .select($"id", $"value".cast("long").as("comp"))
   }
 
   /** Deterministic hash-seeded random walks — the node2vec-style corpus
@@ -403,7 +323,8 @@ object GraphOps {
   def greedyColoring(s: SparkSession, edgeDf: DataFrame): DataFrame =
     greedyColoringRun(s, edgeDf).colors
 
-  /** Driver-tier threshold for [[greedyColoringRun]] — the wcc convention:
+  /** Driver-tier threshold for [[greedyColoringRun]] — the idea of
+    * [[GmrRunner]]'s driver tier, for a loop that is not a vertex program:
     * a graph whose canonical edge list fits comfortably in driver memory
     * runs the SEQUENTIAL greedy (provably ≡ JP: each vertex's color
     * depends only on its higher-priority neighbors' colors, which are
@@ -1041,53 +962,44 @@ object GraphOps {
     * min-id root) mod 2, then count the symmetric edge rows whose
     * endpoints share a color — a component is bipartite iff that count is
     * 0 (an equal-parity edge closes an odd cycle). `conflict_rows` counts
-    * BOTH orientations, so it is even by construction. Reuses [[wcc]]
-    * (with its driver/distributed tiering) for roots; the parity BFS is
-    * the standard frontier loop — one join + anti-join per level, levels =
-    * root eccentricity; the conflict count is one labeled pass over the
-    * edge relation. The schema/partition-quality sibling of [[louvain]]:
-    * bipartite violations are the canonical data-quality check on
-    * user–item / doc–shard bipartite exports.
+    * BOTH orientations, so it is even by construction. Reuses [[wcc]] for
+    * roots; the parity BFS is ONE unit-weight SSSP from [[Scc]]'s virtual
+    * source with an edge to every root, so dist(v) = 1 + hops from v's own
+    * root (other roots lie in other components) and parity = (dist − 1)
+    * mod 2. The conflict count is one labeled pass over the edge relation.
+    * Vertex ids must be ≥ 0. The schema/partition-quality sibling of
+    * [[louvain]]: bipartite violations are the canonical data-quality
+    * check on user–item / doc–shard bipartite exports.
     */
   def bipartite(s: SparkSession, edgeDf: DataFrame): DataFrame = {
     import s.implicits._
     val sym = symmetrize(s, edgeDf, dropSelfLoops = true).cache()
     val comp = wcc(s, edgeDf).cache()
-    val m = sym.count()
-    withShuffleParts(s, loopParallelism(s, m)) {
-      val ue = sym.repartition($"src").cache()
-      var dist = comp.filter($"id" === $"comp")
-        .select($"id", lit(0L).as("d")).localCheckpoint()
-      var frontier = dist
-      var changed = 1L
-      while (changed > 0) {
-        val fresh = frontier.join(ue, $"id" === $"src")
-          .select($"dst".as("id"), ($"d" + 1L).as("d")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-          .localCheckpoint(eager = false)
-        changed = fresh.count()
-        dist = dist.union(fresh).localCheckpoint()
-        frontier = fresh
-      }
-      val par = dist.select($"id", ($"d" % 2).as("par"))
-      val labeled = comp.join(par, "id").localCheckpoint()
-      val confl = ue
-        .join(labeled.select($"id".as("src"), $"comp", $"par".as("pa")), "src")
-        .join(labeled.select($"id".as("dst"), $"par".as("pb")), "dst")
-        .filter($"pa" === $"pb")
-        .groupBy($"comp").agg(count(lit(1)).as("conflict_rows"))
-      val out = labeled.groupBy($"comp")
-        .agg(count(lit(1)).as("n_vertices"))
-        .join(confl, Seq("comp"), "left")
-        .select($"comp", $"n_vertices",
-          coalesce($"conflict_rows", lit(0L)).as("conflict_rows"),
-          (coalesce($"conflict_rows", lit(0L)) === 0L).as("bipartite"))
-        .localCheckpoint() // materialize before releasing the caches
-      ue.unpersist()
-      sym.unpersist()
-      comp.unpersist()
-      out
-    }
+    // Every vertex is an endpoint: a root of the virtual edges, any other
+    // vertex of its component's symmetric edges.
+    val e = sym.union(comp.filter($"id" === $"comp")
+        .select(lit(Scc.VirtualSource).as("src"), $"id".as("dst")))
+      .withColumn("weight", lit(1.0))
+    val par = GmrRunner.autoEdges(s, e,
+        Scc.withCap(Algorithms.UnitWeighted(Algorithms.Sssp), Int.MaxValue),
+        GraphMeta(source = Scc.VirtualSource))
+      .select($"id", (($"value".cast("long") - 1L) % 2).as("par"))
+    val labeled = comp.join(par, "id")
+    val confl = sym
+      .join(labeled.select($"id".as("src"), $"comp", $"par".as("pa")), "src")
+      .join(labeled.select($"id".as("dst"), $"par".as("pb")), "dst")
+      .filter($"pa" === $"pb")
+      .groupBy($"comp").agg(count(lit(1)).as("conflict_rows"))
+    val out = labeled.groupBy($"comp")
+      .agg(count(lit(1)).as("n_vertices"))
+      .join(confl, Seq("comp"), "left")
+      .select($"comp", $"n_vertices",
+        coalesce($"conflict_rows", lit(0L)).as("conflict_rows"),
+        (coalesce($"conflict_rows", lit(0L)) === 0L).as("bipartite"))
+      .localCheckpoint() // materialize before releasing the caches
+    sym.unpersist()
+    comp.unpersist()
+    out
   }
 
   /** Katz centrality, truncated at walk length 3: c(v) = Σ_{k≤3} α^k·w_k(v)
@@ -1125,14 +1037,10 @@ object GraphOps {
   /** Longest-path layering of the DAG view (edges with src < dst — acyclic
     * by construction): layer(v) = length of the longest dependency chain
     * ending at v, the critical-path / earliest-start tick of a scheduling
-    * DAG with unit task costs. Bellman–Ford-style max-relaxation to the
-    * fixpoint: each round only the vertices whose layer INCREASED last
-    * round re-send layer+1 to their successors (the frontier/delta
-    * pruning ≙ the reference's active-vertex send filter, O4), receivers
-    * fold max(own, incoming) in the same self-tagged aggregation as
-    * [[wcc]] — so materialize + changed-count stay ONE job per round.
-    * Rounds = longest path length (18 on the gate view at sf0.1); at
-    * 100 TB the per-round shuffle is frontier-sized, not graph-sized.
+    * DAG with unit task costs. [[Algorithms.LongestPath]]'s
+    * max-relaxation: only vertices whose layer grew last superstep re-send
+    * layer+1 (≙ the reference's active-vertex send filter), so supersteps
+    * = longest chain + 1 (18 on the gate view at sf0.1).
     */
   /** Safety cap on relaxation rounds, shared with the oracle's recursive
     * walk guard (`w.l < cap`) so a fixture whose longest chain grew past
@@ -1143,77 +1051,10 @@ object GraphOps {
 
   def criticalPath(s: SparkSession, edgeDf: DataFrame): DataFrame = {
     import s.implicits._
-    val d = edgeDf.filter($"src" < $"dst").select($"src", $"dst")
-      .distinct().cache()
-    // Stats-driven tier (the wcc pattern): a DAG under 100k edges runs
-    // driver-side Kahn topological relaxation — ~20 distributed rounds of
-    // scheduling overhead for a few thousand edges measured 6.5 s where
-    // the driver loop is milliseconds; identical layers by construction
-    // (tier-equality pinned in GraphAlgoSpec). Larger DAGs take the
-    // distributed loop below.
-    // count() materializes the cache in one parallel pass before the
-    // driver pull — the limit+collect probe it replaces ran executeTake's
-    // partition escalation against the unmaterialized cache (see wcc).
-    val nEdges = d.count()
-    if (nEdges <= 100000) {
-      val tierProbe = d.collect()
-      d.unpersist()
-      val edges = tierProbe.map(r => (r.getLong(0), r.getLong(1)))
-      val succ = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val indeg = scala.collection.mutable.LongMap.empty[Int].withDefaultValue(0)
-      val layer = scala.collection.mutable.LongMap.empty[Long].withDefaultValue(0L)
-      val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      edges.foreach { case (_, dst) => indeg(dst) += 1 }
-      val queue = scala.collection.mutable.Queue(
-        verts.filter(v => indeg(v) == 0).sorted: _*)
-      while (queue.nonEmpty) {
-        val u = queue.dequeue()
-        succ.getOrElse(u, Array.empty[Long]).foreach { w =>
-          if (layer(u) + 1 > layer(w)) layer(w) = layer(u) + 1
-          indeg(w) -= 1
-          if (indeg(w) == 0) queue.enqueue(w)
-        }
-      }
-      return verts.map(v => (v, layer(v))).toSeq.toDF("id", "layer")
-    }
-    criticalPathDistributed(s, d)
-  }
-
-  /** The distributed relaxation tier of [[criticalPath]] — package-visible
-    * so the tier-equality spec can force it on a small fixture.
-    * `d` must already be the deduplicated src<dst DAG view, cached.
-    */
-  private[graft] def criticalPathDistributed(s: SparkSession,
-                                             d: DataFrame): DataFrame = {
-    import s.implicits._
-    val m = d.count()
-    withShuffleParts(s, loopParallelism(s, m)) {
-      val de = d.repartition($"src").cache()
-      var layers = de.select($"src".as("id"))
-        .union(de.select($"dst".as("id"))).distinct()
-        .select($"id", lit(0L).as("layer")).localCheckpoint()
-      var senders = layers
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < CriticalPathMaxRounds) {
-        rounds += 1
-        val prop = senders.join(de, $"id" === $"src")
-          .select($"dst".as("id"), ($"layer" + 1L).as("layer"),
-            lit(false).as("self"))
-        val next = layers.select($"id", $"layer", lit(true).as("self"))
-          .union(prop)
-          .groupBy($"id").agg(max($"layer").as("layer"),
-            max(when($"self", $"layer")).as("old_layer"))
-          .localCheckpoint(eager = false)
-        changed = next.filter($"layer" > $"old_layer").count()
-        senders = next.filter($"layer" > $"old_layer")
-          .select($"id", $"layer")
-        layers = next.select($"id", $"layer")
-      }
-      de.unpersist()
-      d.unpersist()
-      layers
-    }
+    val d = edgeDf.filter($"src" < $"dst").select($"src", $"dst").distinct()
+      .withColumn("weight", lit(1.0))
+    GmrRunner.autoEdges(s, d, Algorithms.LongestPath, GraphMeta())
+      .select($"id", $"value".cast("long").as("layer"))
   }
 
   /** Louvain phase-1 community detection (synchronous local-move variant)
@@ -1510,7 +1351,7 @@ object GraphOps {
   }
 
   /** Undirected view of a directed edge list: both orientations, dedup'd.
-    * One definition for every operator that symmetrizes (wcc, lpa, kcore,
+    * One definition for every operator that symmetrizes (lpa, kcore,
     * common-neighbors) so the semantics can't drift between them.
     */
   def symmetrize(s: SparkSession, edgeDf: DataFrame,
@@ -1530,13 +1371,13 @@ object GraphOps {
   def ppr2(s: SparkSession, edgeDf: DataFrame, source: Long = 1L,
            d: Double = 0.85): DataFrame = {
     import s.implicits._
-    val e = edgeDf.cache()
-    val v = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-    val deg = e.groupBy($"src").agg(count(lit(1)).cast("double").as("outdeg"))
+    val v = edgeDf.select($"src".as("id")).union(edgeDf.select($"dst".as("id")))
+      .distinct()
+    val deg = edgeDf.groupBy($"src").agg(count(lit(1)).cast("double").as("outdeg"))
     val restart = when($"id" === source, lit(1.0)).otherwise(lit(0.0))
 
     def step(rank: DataFrame): DataFrame = {
-      val contrib = e.join(rank, e("src") === rank("id"))
+      val contrib = edgeDf.join(rank, edgeDf("src") === rank("id"))
         .join(deg, Seq("src"))
         .groupBy($"dst")
         .agg(sum($"r" / $"outdeg").as("c"))
@@ -1550,36 +1391,22 @@ object GraphOps {
       .select($"id", $"r".as("rank"))
   }
 
-  /** G3 — PageRank, two statically-unrolled iterations (d = 0.85, uniform
-    * init, no dangling redistribution) so the oracle stays plain SQL. The
-    * open-ended iterative version lives in the engine runner.
+  /** G3 — PageRank, two iterations (d = 0.85, uniform 1/n init, no
+    * dangling redistribution): [[Algorithms.PageRank]] with a fixed
+    * iteration count, the same run g08 gates against this query's
+    * statically-unrolled oracle.
     */
   def pagerank2(s: SparkSession, edgeDf: DataFrame): DataFrame = {
     import s.implicits._
-    val e = edgeDf.cache()
-    val v = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-    val n = broadcast(v.agg(count(lit(1)).cast("double").as("nn")))
-    val deg = e.groupBy($"src").agg(count(lit(1)).cast("double").as("outdeg"))
-
-    def step(rank: DataFrame): DataFrame = {
-      val contrib = e.join(rank, e("src") === rank("id"))
-        .join(deg, Seq("src"))
-        .groupBy($"dst")
-        .agg(sum($"r" / $"outdeg").as("c"))
-      v.join(contrib, v("id") === contrib("dst"), "left")
-        .crossJoin(n)
-        .select(v("id"),
-          (lit(0.15) / $"nn" + lit(0.85) * coalesce($"c", lit(0.0))).as("r"))
-    }
-
-    val r0 = v.crossJoin(n).select($"id", (lit(1.0) / $"nn").as("r"))
-    val r2 = step(step(r0))
-    r2.select($"id", $"r".as("rank"))
+    val e = edgeDf.select($"src", $"dst", lit(1.0).as("weight"))
+    GmrRunner.autoEdges(s, e, Algorithms.PageRank(0.85, fixedIters = Some(2)),
+        GraphMeta())
+      .select($"id", $"value".as("rank"))
   }
 
   /** HITS (hubs & authorities, Kleinberg) — two statically-unrolled full
     * iterations (auth ← Σ in-hub, hub ← Σ out-auth, each L2-normalized)
-    * so the oracle stays plain SQL, like [[pagerank2]]/[[ppr2]]. Every
+    * so the oracle stays plain SQL, like [[ppr2]]. Every
     * normalized vector is rounded onto the shared 9-significant-digit
     * grid on BOTH engines, so each stage starts from identical doubles
     * and float noise cannot accumulate across the four chained matvecs.
@@ -1738,8 +1565,7 @@ object GraphOps {
     * most real graphs, at the cost of TWO BFS passes instead of the
     * all-pairs computation an exact diameter needs.
     *
-    * Scale posture: both sweeps are [[bfs]]'s frontier loop (edges cached
-    * pre-partitioned, only the frontier shuffles per round); the only
+    * Scale posture: both sweeps are [[bfs]] engine runs; the only
     * driver-side values are three O(1) scalars (seed, argmax vertex,
     * eccentricity) — the TakeOrdered(1) argmax never collects the
     * distance relation. Covers the seed's component; ids/depths BIGINT.
@@ -1747,12 +1573,10 @@ object GraphOps {
   def doubleSweep(s: SparkSession, edgeDf: DataFrame,
                   maxDepth: Int = 100): DataFrame = {
     import s.implicits._
-    val sym = symmetrize(s, edgeDf, dropSelfLoops = true).localCheckpoint()
+    val sym = symmetrize(s, edgeDf, dropSelfLoops = true)
     val minRow = sym.agg(min($"src")).head()
     if (minRow.isNullAt(0)) {
       // Empty graph: no seed to sweep from — empty result, same schema.
-      graft.engine.SqlRunner.checkpointRdd(sym)
-        .foreach(_.unpersist(blocking = false))
       return s.range(0).select(
         $"id".as("src1"), $"id".as("ecc1"), $"id".as("src2"),
         $"id".as("ecc2"), $"id".as("diameter_lb"), $"id".as("n_reached"))
@@ -1763,12 +1587,8 @@ object GraphOps {
     val far = d1.orderBy($"dist".desc, $"id".asc).limit(1).head()
     val (s2, ecc1) = (far.getLong(0), far.getLong(1))
     val d2 = bfs(s, sym, source = s2, maxDepth = maxDepth)
-      .localCheckpoint()
     val ecc2 = d2.agg(max($"dist")).head().getLong(0)
     val reached = d2.count()
-    // Result rows are pure literals — free every checkpoint before return.
-    Seq(sym, d2).foreach(df => graft.engine.SqlRunner.checkpointRdd(df)
-      .foreach(_.unpersist(blocking = false)))
     s.range(1).select(
       lit(s1).as("src1"), lit(ecc1).as("ecc1"),
       lit(s2).as("src2"), lit(ecc2).as("ecc2"),

@@ -209,6 +209,8 @@ object GraphQueries {
   private val louvainFinal: String = s"lv${GraphOps.LouvainRounds}"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // BFS levels from vertex 1: unit-weight SSSP capped at 20 hops through
+    // GmrRunner (semantics in GraphOps.bfs).
     "g01_sssp_bfs" -> ((s, dir) =>
       GraphOps.bfs(s, GraphOps.edges(s, dir))),
     "g02_triangles" -> ((s, dir) =>
@@ -218,18 +220,17 @@ object GraphQueries {
       GraphOps.pagerank2(s, GraphOps.edges(s, dir))
         .select($"id", graft.Canon.sig6($"rank").as("rank"))
     }),
+    // Min-label WCC over both orientations of the sparse view through
+    // GmrRunner (semantics in GraphOps.wcc).
     "g04_wcc" -> ((s, dir) =>
       GraphOps.wcc(s, GraphOps.sparseEdges(s, dir))),
-    // Same answers as g01/g04 but produced by the generic GmrAlgorithm
-    // engine (SqlRunner) — gates the engine itself behind the oracle.
-    // Auto-dispatched (stats pick LocalRunner at these edge counts; the
-    // distributed SqlRunner path stays gated by g06 and the test suite).
+    // Same answers as g01 through the engine directly, without the hop cap.
+    // At these edge counts GmrRunner picks its driver tier; the single-task
+    // and distributed tiers stay gated by g06/b02 and the test suite.
     "g05_sssp_engine" -> ((s, dir) => {
       import s.implicits._
       val e = GraphOps.edges(s, dir).withColumn("weight", lit(1.0))
-      val v = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-      GmrRunner.auto(s, v, e, Algorithms.Sssp, GraphMeta(v.count(), source = 1L),
-          numEdges = e.count())
+      GmrRunner.autoEdges(s, e, Algorithms.Sssp, GraphMeta(source = 1L))
         .filter($"value" =!= Double.PositiveInfinity)
         .select($"id", $"value".cast("long").as("dist"))
     }),
@@ -260,10 +261,8 @@ object GraphQueries {
     "g08_pagerank_engine" -> ((s, dir) => {
       import s.implicits._
       val e = GraphOps.edges(s, dir).withColumn("weight", lit(1.0))
-      val v = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-      val nV = v.count()
-      GmrRunner.auto(s, v, e, Algorithms.PageRank(0.85, fixedIters = Some(2)),
-          GraphMeta(nV), numEdges = e.count())
+      GmrRunner.autoEdges(s, e, Algorithms.PageRank(0.85, fixedIters = Some(2)),
+          GraphMeta())
         .select($"id", graft.Canon.sig6($"value").as("rank"))
     }),
     // The GraphX executor of the same algebra, gated by the same oracle as
@@ -286,9 +285,7 @@ object GraphQueries {
       val e = GraphOps.edges(s, dir)
         .withColumn("weight",
           (($"src" * 7 + $"dst" * 13) % 9 + 1).cast("double"))
-      val v = e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct()
-      GmrRunner.auto(s, v, e, Algorithms.Sssp, GraphMeta(v.count(), source = 1L),
-          numEdges = e.count())
+      GmrRunner.autoEdges(s, e, Algorithms.Sssp, GraphMeta(source = 1L))
         .filter($"value" =!= Double.PositiveInfinity)
         .select($"id", $"value".cast("long").as("dist"))
     }),
@@ -536,8 +533,8 @@ object GraphQueries {
     "g36_modularity" -> ((s, dir) =>
       GraphOps.modularity(s, GraphOps.sparseEdges(s, dir))),
     // Longest-path layering of the DAG view (src < dst): critical-path /
-    // earliest-start scheduling ticks by frontier max-relaxation
-    // (semantics + scale posture in GraphOps.criticalPath).
+    // earliest-start scheduling ticks, Algorithms.LongestPath through
+    // GmrRunner (semantics in GraphOps.criticalPath).
     "g37_critical_path" -> ((s, dir) =>
       GraphOps.criticalPath(s, GraphOps.sparseEdges(s, dir))),
     // Katz centrality truncated at length 3: integer walk counts via

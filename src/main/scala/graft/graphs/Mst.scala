@@ -50,52 +50,16 @@ object Mst {
           .select($"e.a".as("a"), $"e.b".as("b"), $"e.w".as("w"),
             $"e.ca".as("ca"), $"e.cb".as("cb"))
           .distinct()
-          // Lazy: the branch-deciding limit+collect materializes it.
+          // Lazy: wcc's size count below materializes it.
           .localCheckpoint(eager = false)
         // nominated is already checkpointed — the union is lineage-free.
         mst = mst.union(nominated.select($"a", $"b", $"w"))
-        // Contract over the component-merge graph. It has at most one edge
-        // per component (halving each round), so below a generous threshold
-        // a driver-side union-find replaces a whole distributed min-label
-        // fixpoint (the same stats-driven choice as GmrRunner.auto); the
-        // distributed closure remains the >threshold path.
-        val mergePairs = nominated.select($"ca", $"cb")
-        // One action decides the branch: pull up to threshold+1 pairs; an
-        // overflow row means "too big, go distributed" without a separate
-        // count() pass over `nominated`.
-        // 100k pair rows ≈ 10 MB of driver objects (same bound as
-        // GraphOps.wcc's tier — 1M Rows was ~100 MB of object overhead
-        // for a "too small to distribute" branch).
-        val threshold = 100000
-        val sampled = mergePairs.limit(threshold + 1).collect()
-        val mapping: DataFrame =
-          if (sampled.length <= threshold) {
-            val pairs = sampled.map(r => (r.getLong(0), r.getLong(1)))
-            val parent = scala.collection.mutable.LongMap.empty[Long]
-            def find(x: Long): Long = {
-              var r = x
-              while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-              var c = x
-              while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-              r
-            }
-            pairs.foreach { case (x, y) =>
-              val (rx, ry) = (find(x), find(y))
-              if (rx != ry) { // attach larger root under smaller => min wins
-                if (rx < ry) parent(ry) = rx else parent(rx) = ry
-              }
-            }
-            val resolved = pairs.flatMap { case (x, y) => Seq(x, y) }.distinct
-              .map(c => (c, find(c)))
-            // Collected on the driver and small by construction — broadcast.
-            broadcast(resolved.toSeq.toDF("old_comp", "new_comp"))
-          } else {
-            // Distributed-WCC output can be multi-million rows: a forced
-            // driver-side broadcast would OOM exactly on the large-graph
-            // path this branch serves — plain shuffle join instead.
-            GraphOps.wcc(s, mergePairs.select($"ca".as("src"), $"cb".as("dst")))
-              .select($"id".as("old_comp"), $"comp".as("new_comp"))
-          }
+        // Contract over the component-merge graph: its WCC labels map each
+        // old component to its merged one. It has at most one edge per
+        // component, and the component count halves every round, so
+        // [[GraphOps.wcc]] soon runs on the driver.
+        val mapping = GraphOps.wcc(s, nominated.select($"ca".as("src"), $"cb".as("dst")))
+          .select($"id".as("old_comp"), $"comp".as("new_comp"))
         // Contract: relabel both endpoints of the surviving cross edges.
         cur = cross
           .join(mapping.as("ma"), $"ca" === $"ma.old_comp", "left")

@@ -40,10 +40,15 @@ object Scc {
     * inside the peel must never stop early, or partial colors silently
     * split components.
     */
-  private def withCap(alg: GmrAlgorithm, cap: Int): GmrAlgorithm =
+  private[graphs] def withCap(alg: GmrAlgorithm, cap: Int): GmrAlgorithm =
     new graft.engine.DelegatingGmrAlgorithm(alg) {
       override def maxIter: Int = cap
     }
+
+  /** The backward phase's virtual source — also the root-linking source of
+    * [[GraphOps.bipartite]]'s parity BFS. Vertex ids must be ≥ 0.
+    */
+  private[graphs] val VirtualSource: Long = -1L
 
   private def free(df: DataFrame): Unit =
     SqlRunner.checkpointRdd(df).foreach(_.unpersist(blocking = false))
@@ -60,7 +65,6 @@ object Scc {
     */
   def sccEngine(s: SparkSession, edgeDf: DataFrame): DataFrame = {
     import s.implicits._
-    val virtualSource = -1L
 
     var eRem = edgeDf.select($"src", $"dst").distinct().localCheckpoint()
     var vRem = eRem.select($"src".as("id"))
@@ -111,13 +115,13 @@ object Scc {
       }
       colorRounds += 1
       val mRem = eRem.count() // sizes the runner dispatch (local vs shuffled)
-      // Phase 1: forward max-color over the remaining subgraph.
+      // Phase 1: forward max-color over the remaining subgraph. auto
+      // returns materialized rows, so the three reads below re-run nothing.
       val colors = GmrRunner.auto(s, vRem,
           eRem.withColumn("weight", lit(1.0)),
           withCap(Algorithms.FwdMaxColor, iterCap), GraphMeta(remaining),
           numEdges = mRem)
         .select($"id", $"value".cast("long").as("color"))
-        .localCheckpoint()
       // Phase 2: backward reach to the color root, inside the color class.
       val colorEdges = eRem
         .join(colors.as("cs"), $"src" === $"cs.id")
@@ -127,21 +131,21 @@ object Scc {
       val roots = colors.filter($"id" === $"color").select($"id")
       val bwdEdges = colorEdges
         .select($"dst".as("src"), $"src".as("dst")) // transpose
-        .union(roots.select(lit(virtualSource).as("src"), $"id".as("dst")))
+        .union(roots.select(lit(VirtualSource).as("src"), $"id".as("dst")))
         .withColumn("weight", lit(1.0))
-      val bwdVerts = vRem.union(s.range(1).select(lit(virtualSource).as("id")))
+      val bwdVerts = vRem.union(s.range(1).select(lit(VirtualSource).as("id")))
       // numEdges: transposed color-matched edges (≤ mRem) plus one virtual
       // edge per root (≤ remaining) — the conservative bound keeps the
       // local-vs-distributed dispatch from undercounting near the threshold.
       val reach = GmrRunner.auto(s, bwdVerts, bwdEdges,
         withCap(Algorithms.Sssp, iterCap),
-        GraphMeta(remaining + 1, source = virtualSource),
+        GraphMeta(remaining + 1, source = VirtualSource),
         numEdges = mRem + remaining)
       // Checkpointed: `settled` is read three times below (comp, the label
       // join, the anti-join) — without the checkpoint each read re-executes
       // the whole backward engine run.
       val settled = reach
-        .filter($"value" =!= Double.PositiveInfinity && $"id" =!= virtualSource)
+        .filter($"value" =!= Double.PositiveInfinity && $"id" =!= VirtualSource)
         .select($"id")
         .join(colors, "id")
         .localCheckpoint()
@@ -159,7 +163,7 @@ object Scc {
         .localCheckpoint()
       remaining = vRem.count()
       // New round state is materialized — free the superseded checkpoints.
-      Seq(oldResult, oldV, oldE, colors, settled).foreach(free)
+      Seq(oldResult, oldV, oldE, colors, reach, settled).foreach(free)
     }
     lastColorRounds = colorRounds
     result

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.algos.Algorithms
-import graft.engine.{GraphMeta, GraphXRunner, LocalRunner, SqlRunner}
+import graft.engine.{GmrRunner, GraphMeta, GraphXRunner, LocalRunner, SqlRunner}
 import graft.sources.GraphSource
 
 /** Golden + dual-runner tests for the GMR engine on the reference fixtures.
@@ -21,7 +21,9 @@ class EngineSpec extends AnyFunSuite {
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   private lazy val small = GraphSource.readGmrText(spark, "/root/reference/graph/small.graph")
-  private lazy val threeLine = GraphSource.readGmrText(spark, "/root/reference/graph/3line.graph")
+  // Reconstructed from FIXTURES.md §1 (src/test/resources/graph/3line.graph).
+  private lazy val threeLine = GraphSource.readGmrText(spark,
+    getClass.getResource("/graph/3line.graph").getPath)
 
   private val smallSsspGolden: Map[Long, Double] = Map(
     1L -> 0.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0, 5L -> 1.0, 10L -> 1.0,
@@ -290,6 +292,77 @@ class EngineSpec extends AnyFunSuite {
     assert(close(sqlR, gxR))
     assert(math.abs(sqlR.values.sum - 1.0) < 0.2) // mass ~conserved (dangling loss)
     edges.unpersist()
+  }
+
+  test("mid-size stress: tri-runner LongestPath equality on the 200k graph's " +
+      "src < dst edges") {
+    // The critical-path algebra (max-relaxation of layer + 1) on a random
+    // DAG big enough for multi-partition supersteps: exact max merges, so
+    // all three executors must agree bit-for-bit.
+    import spark.implicits._
+    val nV = 20000L
+    val edges = spark.range(0, 200000)
+      .select((pmod(xxhash64($"id"), lit(nV)) + 1).as("src"),
+        (pmod(xxhash64($"id" + 1000000L), lit(nV)) + 1).as("dst"))
+      .filter($"src" < $"dst")
+      .withColumn("weight", lit(1.0))
+      .cache()
+    val verts = spark.range(1, nV + 1).select($"id")
+    val meta = GraphMeta(nV)
+    val alg = Algorithms.LongestPath
+    val sqlR = toMap(SqlRunner.run(spark, verts, edges, alg, meta))
+    val localR = toMap(LocalRunner.run(spark, verts, edges, alg, meta))
+    val gxR = toMap(GraphXRunner.run(spark, verts, edges, alg, meta))
+    assert(sqlR == localR)
+    assert(sqlR == gxR)
+    assert(sqlR.values.max >= 10, s"unexpectedly shallow DAG: ${sqlR.values.max}")
+    edges.unpersist()
+  }
+
+  test("auto's driver tier, LocalRunner and SqlRunner return identical rows") {
+    // A DAG with an unreachable vertex (6: no path from source 1) and an
+    // isolated vertex (7). In-degree ≤ 2 everywhere, so PageRank's sums
+    // have at most two terms and are exact in any merge order.
+    import spark.implicits._
+    val verts = (1L to 7L).toDF("id")
+    val dag = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L), (6L, 5L))
+      .toDF("src", "dst").withColumn("weight", lit(1.0))
+    val sym = dag.union(dag.select($"dst".as("src"), $"src".as("dst"), $"weight"))
+    val meta = GraphMeta(7L, source = 1L)
+    val cases = Seq[(graft.engine.GmrAlgorithm, DataFrame)](
+      Algorithms.Sssp -> dag, Algorithms.Wcc -> sym,
+      Algorithms.PageRank(0.85, fixedIters = Some(2)) -> dag,
+      Algorithms.LongestPath -> dag)
+    cases.foreach { case (alg, e) =>
+      val viaAuto = GmrRunner.auto(spark, verts, e, alg, meta, e.count())
+      // |E| ≤ DriverEdgeThreshold: the result reads only driver-side rows.
+      assert(viaAuto.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        alg.name)
+      val driver = toMap(viaAuto)
+      assert(driver == toMap(LocalRunner.run(spark, verts, e, alg, meta)), alg.name)
+      assert(driver == toMap(SqlRunner.run(spark, verts, e, alg, meta)), alg.name)
+      // One edge past the driver tier, auto runs (and materializes) the
+      // single-task loop.
+      assert(driver == toMap(GmrRunner.auto(spark, verts, e, alg, meta,
+        GmrRunner.DriverEdgeThreshold + 1)), alg.name)
+    }
+    assert(toMap(GmrRunner.auto(spark, verts, dag, Algorithms.Sssp, meta, 6))
+      .filter(_._2.isInfinite).keySet == Set(6L, 7L))
+    // No edges and no extra vertices: an empty vertex set, empty rows.
+    assert(GmrRunner.autoEdges(spark, dag.limit(0), Algorithms.Wcc, GraphMeta())
+      .count() == 0)
+  }
+
+  test("bfs stops at maxDepth: a longer path is cut at the cap") {
+    import spark.implicits._
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    def depths(maxDepth: Int): Map[Long, Long] =
+      graft.graphs.GraphOps.bfs(spark, path, source = 1L, maxDepth = maxDepth)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(depths(2) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
+    assert(depths(20) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
+    assert(depths(0) == Map(1L -> 0L))
   }
 
   /** The 8M-edge BFS expansion vector (dist → vertex count), recorded from

@@ -88,26 +88,6 @@ class GraphAlgoSpec extends AnyFunSuite {
       6L -> 0L, 7L -> 1L))
   }
 
-  test("critical path: driver Kahn tier equals the distributed relaxation") {
-    import spark.implicits._
-    // A deterministic pseudo-random DAG (src < dst by construction): both
-    // tiers must produce identical layers — the dispatch threshold must
-    // never be observable in the answer.
-    val rnd = new scala.util.Random(7)
-    val edges = (0 until 400).map { _ =>
-      val a = rnd.nextInt(60); val b = rnd.nextInt(60)
-      (math.min(a, b).toLong, math.max(a, b).toLong)
-    }.filter(e => e._1 != e._2)
-    val e = edges.toDF("src", "dst")
-    val viaAuto = GraphOps.criticalPath(spark, e).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val d = e.filter($"src" < $"dst").distinct().cache()
-    val viaDistributed = GraphOps.criticalPathDistributed(spark, d).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaAuto == viaDistributed)
-    assert(viaAuto.nonEmpty && viaAuto.values.max >= 3) // non-trivial depth
-  }
-
   test("louvain: hand-traced parity rounds on the two-triangle bridge") {
     import spark.implicits._
     // Triangles {1,2,3} and {4,5,6} bridged by 3–4. Hand trace (deg =

@@ -17,7 +17,9 @@ class GraphSourceSpec extends AnyFunSuite {
   }
 
   test("3line.graph: trailing isolated vertex gap-filled") {
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/3line.graph")
+    // Reconstructed from FIXTURES.md §1 (src/test/resources/graph/3line.graph).
+    val g = GraphSource.readGmrText(spark,
+      getClass.getResource("/graph/3line.graph").getPath)
     assert(g.numVertices == 4)
     assert(g.vertices.count() == 4) // vertex 4 has no edges but exists
     assert(g.edges.count() == 3)

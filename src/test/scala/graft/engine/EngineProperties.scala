@@ -113,6 +113,45 @@ object EngineProperties extends Properties("graft.engine") {
       }
     }
 
+  // Random DAG: genGraph's edges oriented low → high id, self-loops dropped.
+  private val genDag: Gen[(Int, Array[Long], Array[Long])] =
+    genGraph.map { case (n, srcs, dsts, _) =>
+      val es = srcs.zip(dsts).filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      (n, es.map(_._1), es.map(_._2))
+    }
+
+  /** Kahn topological layering: layer(v) = longest chain ending at v. */
+  private def kahnLayers(n: Int, srcs: Array[Long],
+                         dsts: Array[Long]): Array[Long] = {
+    val succ = Array.fill(n + 1)(List.empty[Int])
+    val indeg = new Array[Int](n + 1)
+    for (i <- srcs.indices) {
+      succ(srcs(i).toInt) = dsts(i).toInt :: succ(srcs(i).toInt)
+      indeg(dsts(i).toInt) += 1
+    }
+    val layer = new Array[Long](n + 1)
+    val queue = scala.collection.mutable.Queue((1 to n).filter(indeg(_) == 0): _*)
+    while (queue.nonEmpty) {
+      val u = queue.dequeue()
+      succ(u).foreach { w =>
+        layer(w) = math.max(layer(w), layer(u) + 1)
+        indeg(w) -= 1
+        if (indeg(w) == 0) queue.enqueue(w)
+      }
+    }
+    layer
+  }
+
+  property("csrLoop LongestPath == Kahn layering on random DAGs") =
+    Prop.forAll(genDag) { case (n, srcs, dsts) =>
+      val verts = Array.tabulate(n)(i => (i + 1).toLong)
+      val got = LocalRunner.csrLoop(verts, srcs, dsts,
+        Array.fill(srcs.length)(1.0), Algorithms.LongestPath, GraphMeta(n)).toMap
+      val want = kahnLayers(n, srcs, dsts)
+      verts.forall(v => got(v) == want(v.toInt).toDouble)
+    }
+
   /** The same algebra with the frontier fast path disabled — csrLoop then
     * takes the original full-scan branch. Used to pin frontier ≡ bulk.
     */
