@@ -175,15 +175,11 @@ object LoopConf {
     * materialize every round eagerly, so the setting is in force for
     * exactly the loop's own shuffles.
     */
-  def withShuffleParts[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def withShuffleParts[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T =
+    withConfs(s, Map("spark.sql.shuffle.partitions" -> n.toString))(body)
 
-  /** Run `body` with session confs temporarily overridden (same scoping
-    * discipline as [[withShuffleParts]] — the loops materialize eagerly,
-    * so the overrides cover exactly the loop's own queries).
+  /** Run `body` with session confs temporarily overridden — the loops
+    * materialize eagerly, so the overrides cover exactly their own queries.
     */
   def withConfs[T](s: org.apache.spark.sql.SparkSession,
                    confs: Map[String, String])(body: => T): T = {

@@ -327,8 +327,6 @@ object GmrRunner {
     val p = if (path.startsWith("file:")) path.stripPrefix("file:") else path
     val f = new java.io.File(p)
     if (!p.contains("://") && f.isFile && f.length() <= DriverFileBytesThreshold) {
-      val verbose = sys.props.get("graft.engine.verbose").contains("true")
-      val tParse = System.nanoTime()
       // Hand-rolled scanner (the reference's parser is one too,
       // partition.h:81-153): first two integers per meaningful line, no
       // regex, no per-line String allocations beyond the reader's.
@@ -376,13 +374,8 @@ object GmrRunner {
         var i = 0
         while (i < m) { sArr(i) = srcs(i) + shift; dArr(i) = dsts(i) + shift; i += 1 }
         val verts = Array.tabulate(nV.toInt)(j => j + 1L) // gap-fill: 1..|V|
-        val tLoop = System.nanoTime()
-        val out = loopOnDriver(spark, verts, sArr, dArr, Array.fill(m)(1.0),
+        loopOnDriver(spark, verts, sArr, dArr, Array.fill(m)(1.0),
           alg, metaFor(nV))
-        if (verbose)
-          println(f"[${alg.name}] file parse: ${(tLoop - tParse) / 1e9}%.3f s, " +
-            f"csr loop + dataset build: ${(System.nanoTime() - tLoop) / 1e9}%.3f s")
-        out
       } finally rd.close()
     } else {
       val g = graft.sources.GraphSource.readGmrText(spark, path)

@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
   *               replaces the sort+run-length-group; hash agg needs no sort)
   *   update    = vertices ⟕ aggregate             (O11: merge + convergence)
   *
-  * Per-iteration driver cost is ONE action (the changed-count, ≙ the
-  * reference's piggybacked Allgather convergence exchange, igmr.cpp:137-149).
-  * `localCheckpoint` truncates lineage every round — without it the plan
-  * doubles per iteration and optimizer time dominates long before any
-  * realistic scale. Vertices carry their static out-degree so PageRank-style
-  * messages need no extra join.
+  * The rounds run through [[Fixpoint]]. Per-iteration driver cost is ONE
+  * action (the changed-count, ≙ the reference's piggybacked Allgather
+  * convergence exchange, igmr.cpp:137-149). `localCheckpoint` truncates
+  * lineage every round — without it the plan doubles per iteration and
+  * optimizer time dominates long before any realistic scale. Vertices carry
+  * their static out-degree so PageRank-style messages need no extra join.
   */
 object SqlRunner {
 
@@ -31,13 +31,7 @@ object SqlRunner {
                             saltedHubs: Int, saltFactor: Int,
                             changedTrace: Seq[Long])
 
-  /** Set `-Dgraft.engine.verbose=true` for the reference-log-style
-    * per-iteration line (iter, changed count, seconds — ≙ printTimeConsume,
-    * gmr.h:317-334).
-    */
-  private val verbose = sys.props.get("graft.engine.verbose").contains("true")
-
-  /** Superstep count of the most recent run — observability for tests and
+  /** Superstep count of the most recent run — observability for Bench and
     * the O17-style instrumentation (the reference logs per-iteration lines).
     * A convergence regression (e.g. the NaN-ordering hazard in the changed
     * test) shows up here as maxIter instead of ~diameter rounds.
@@ -77,7 +71,7 @@ object SqlRunner {
 
   /** Hub salting only engages once a single edge list is big enough for
     * the straggler to matter; below this the wave structure absorbs it.
-    * Tests override via -Dgraft.engine.hubMinDegree to force the path.
+    * Tests lower it via -Dgraft.engine.hubMinDegree to force the path.
     */
   private val HubMinDegreeFloor = 65536L
 
@@ -131,12 +125,6 @@ object SqlRunner {
     sys.props.get("graft.engine.broadcastPullMaxVertices").map(_.toLong)
       .getOrElse(math.max(1_000_000L,
         Runtime.getRuntime.maxMemory() / (64L * 48L)))
-
-  /** The local-checkpoint RDD backing a loop-state Dataset, if any. */
-  private[graft] def checkpointRdd(df: org.apache.spark.sql.Dataset[_]) =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
 
   /** Run `alg` over `edges(src, dst, weight)`; returns (id, value).
     * `numEdges` < 0 means unknown — one counting pass sizes the loop.
@@ -214,14 +202,12 @@ object SqlRunner {
     val vertexParts = {
       val sized = LoopConf.sizedParallelism(
         spark, math.max(1L, meta.numVertices), 24)
-      // Floor factor: how many task WAVES per core the vertex stages get
-      // once the state is big enough to want the whole box. 1 wave makes
-      // a straggling core cost a whole round tail; measured on the 64M
-      // anchors (b03/b07 A/B, OPTIMIZATION_r11.md) small multiples win.
-      val floorFactor = sys.props.get("graft.engine.vertexPartsFloorFactor")
-        .map(_.toInt).getOrElse(4)
+      // Floor of 4 task WAVES per core once the state is big enough to
+      // want the whole box. 1 wave makes a straggling core cost a whole
+      // round tail; measured on the 64M anchors (b03/b07 A/B,
+      // OPTIMIZATION_r11.md) small multiples win.
       if (meta.numVertices * 24L >= 8L * 1024 * 1024)
-        math.max(floorFactor * spark.sparkContext.defaultParallelism, sized)
+        math.max(4 * spark.sparkContext.defaultParallelism, sized)
       else sized
     }
     val parts = if (pullMode) vertexParts else LoopConf.loopParallelism(spark, m)
@@ -236,13 +222,9 @@ object SqlRunner {
     // sizing above), and the cached edge side is invisible to AQE's
     // skew/coalesce machinery anyway. Measured on the b03 64M anchor
     // (this round, same box): loop 17.2 → 14.4 s and 805 → 625 MB
-    // shuffled. Results are execution-identical; override with
-    // -Dgraft.engine.loopAdaptive=true to restore.
-    val loopConfs = Map("spark.sql.adaptive.enabled" ->
-      sys.props.getOrElse("graft.engine.loopAdaptive", "false"))
-    LoopConf.withConfs(spark, loopConfs) {
-    LoopConf.withShuffleParts(spark, parts) {
-      val tSetup = System.nanoTime()
+    // shuffled. Results are execution-identical.
+    LoopConf.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> parts.toString)) {
       // SKEW PROBE + HUB SALTING. Hash partitioning sends a vertex's whole
       // edge list to ONE partition, so a power-law hub whose out-degree
       // rivals a full partition serializes its scatter into a straggling,
@@ -272,11 +254,7 @@ object SqlRunner {
         .getOrElse(math.max(HubDegreePartitionFactor * meanPartEdges,
           HubMinDegreeFloor))
       val hubs: Array[(Long, Long)] =
-        // Override ≤ 0 disables the probe outright (the pre-probe code
-        // path) — the diagnostic A/B knob for attributing anchor-time
-        // movement to the probe vs the box.
-        if (hubMinDegreeOverride.exists(_ <= 0L) ||
-            (m < HubProbeMinEdges && hubMinDegreeOverride.isEmpty))
+        if (m < HubProbeMinEdges && hubMinDegreeOverride.isEmpty)
           Array.empty
         else
           // The straggler risk lives on the cache's PARTITION KEY: src
@@ -298,9 +276,8 @@ object SqlRunner {
           // Fan-out sized to the worst hub: enough sub-partitions that its
           // largest shard is about one mean partition, capped at 32.
           val worst = hubs.map(_._2).max
-          var f = 2
-          while (f < 32 && f.toLong * meanPartEdges < worst) f *= 2
-          f
+          Iterator.iterate(2)(_ * 2)
+            .find(f => f >= 32 || f.toLong * meanPartEdges >= worst).get
         }
       val hubIds: Seq[Long] = hubs.map(_._1).toIndexedSeq
       // Literal type matches the (possibly narrowed) id columns so the
@@ -335,17 +312,13 @@ object SqlRunner {
               pmod(xxhash64(sKey), lit(saltF.toLong)).cast("int"))
               .otherwise(lit(0)))
           .repartition(cacheParts, pKey, $"salt").cache()
-      if (verbose) {
-        e.count()
-        println(f"[${alg.name}] edge cache: ${(System.nanoTime() - tSetup) / 1e9}%.2f s")
-      }
       // The out-degree aggregate + vertex join only run for algorithms
       // whose message hook reads the degree (PageRank): at 64M edges it is
       // a full-width partial aggregate plus a vertex-sized join for a
       // column SSSP/WCC/max-color never evaluate. When skipped, an
       // explicit count() keeps the edge-cache materialization in SETUP
       // (deg used to force it), so loop seconds stay a loop measurement.
-      var verts =
+      val verts0 =
         if (alg.usesOutDegree) {
           val deg = e.groupBy($"src")
             .agg(count(lit(1)).cast("int").as("outdeg"))
@@ -361,17 +334,9 @@ object SqlRunner {
               alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
             .localCheckpoint()
         }
-      if (verbose)
-        println(f"[${alg.name}] setup total: ${(System.nanoTime() - tSetup) / 1e9}%.2f s" +
-          (if (salted) s" (salted ${hubs.length} hubs ×$saltF)" else ""))
 
       val tLoop = System.nanoTime()
-      val trace = Seq.newBuilder[Long]
-      var iter = 0
-      var changedCount = 1L
-      while (iter < alg.maxIter && changedCount > 0) {
-        iter += 1
-        val tIter = System.nanoTime()
+      val run = Fixpoint(verts0, alg.maxIter) { (verts, iter) =>
         val senders0 = if (alg.activeMessaging) verts.filter($"changed") else verts
         val senders1 = senders0.filter(alg.sendCondCol($"value"))
         // Classic salted path: a sender that is a hub fans out to every
@@ -444,51 +409,34 @@ object SqlRunner {
             // burns all 120 rounds instead of converging.
             (!isnan($"value" - $"old") &&
               abs($"value" - $"old") > alg.epsilon).as("changed"))
-        // Lazy: the changed-count below materializes the checkpoint in the
-        // same job, halving the per-superstep job count.
-        val next = updated.localCheckpoint(eager = false)
-        val t0 = System.nanoTime()
-        changedCount = next.filter($"changed").count()
-        trace += changedCount
         // Captured from the PRE-checkpoint frame: the checkpointed Dataset
         // plans as a bare LogicalRDD scan; `updated` carries the real
         // join→agg→join round plan (planning only — nothing re-executes).
         if (iter == 1 && sys.props.get("graft.engine.capturePlan").contains("true"))
           lastRoundPlan = Some(updated.queryExecution.executedPlan)
-        if (verbose) {
-          println(f"[${alg.name}] iter $iter: changed=$changedCount " +
-            f"(count ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
-            f"full ${(System.nanoTime() - tIter) / 1e9}%.2f s)")
-          // The PRE-checkpoint frame: `next` plans as a bare LogicalRDD
-          // scan; `updated` carries the real join→agg→join round plan.
-          if (iter == 1)
-            println(updated.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
-        }
-        // The count above materialized `next`'s checkpoint, which truncates
-        // its lineage — the previous round's checkpoint is now unreferenced.
-        // Free it eagerly: 120 rounds of leaked vertex state is 120×|V| rows
-        // of memory pressure, and the resulting GC pauses were measured
-        // dominating round time at 4M vertices.
-        checkpointRdd(verts).foreach(_.unpersist(blocking = false))
-        verts = next
+        // Lazy: the changed-count materializes the checkpoint in the same
+        // job, halving the per-superstep job count. Fixpoint then frees the
+        // superseded round's checkpoint: 120 rounds of leaked vertex state
+        // is 120×|V| rows of memory pressure, and the resulting GC pauses
+        // were measured dominating round time at 4M vertices. The count
+        // stays in this file: tracers mark round ends by its call site.
+        val next = updated.localCheckpoint(eager = false)
+        Fixpoint.Step(next, next.filter($"changed").count())
+      } { verts =>
+        // Re-widen narrowed ids: the surface schema is (id LONG, value).
+        verts.select(
+          (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value")
       }
       // Local first, volatile second: RunStats must carry THIS call's loop
       // wall — reading the volatile back would let a concurrent run's
       // assignment slip in between (the race RunStats exists to avoid).
       val loopSecs = (System.nanoTime() - tLoop) / 1e9
       lastLoopSeconds = loopSecs
-      val tUn = System.nanoTime()
       e.unpersist()
       if (needCount) sel.unpersist()
-      lastIterations = iter
-      if (verbose)
-        println(f"[${alg.name}] unpersist: ${(System.nanoTime() - tUn) / 1e9}%.2f s")
-      // Re-widen narrowed ids: the surface schema is (id LONG, value).
-      (verts.select(
-          (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value"),
-        RunStats(iter, loopSecs, hubs.length, saltF, trace.result()))
-    }
+      lastIterations = run.rounds.length
+      (run.result, RunStats(run.rounds.length, loopSecs, hubs.length, saltF,
+        run.rounds.map(_.changed)))
     }
   }
 }

@@ -23,10 +23,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession
   * Scale posture: adjacency is built ONCE (one groupByKey of the edge
   * relation) and cached; per round the vertex state and messages shuffle
   * (hash-partitioned on vertex id — Spark's shuffle is the reference's
-  * all-to-all O5), state is local-checkpointed per round with the previous
-  * round's checkpoint freed eagerly, and convergence is one count() action
-  * per round, exactly like [[SqlRunner]]. The typed tier trades the scalar
-  * tier's zero-shuffle edge-cache join for generality — algorithms whose
+  * all-to-all O5), state is local-checkpointed per round, and convergence
+  * is one count() action per round; the rounds run through [[Fixpoint]],
+  * exactly like [[SqlRunner]]. The typed tier trades the scalar tier's
+  * zero-shuffle edge-cache join for generality — algorithms whose
   * algebra fits a Catalyst Column should stay on [[SqlRunner]].
   */
 trait TypedGmrAlgorithm[V, M] extends Serializable {
@@ -61,11 +61,6 @@ trait TypedGmrAlgorithm[V, M] extends Serializable {
 
 object TypedRunner {
 
-  /** Superstep count of the most recent run (same caveat as
-    * [[SqlRunner.lastIterations]]).
-    */
-  @volatile var lastIterations: Int = 0
-
   /** Run `alg` over `edges(src, dst, weight)`; returns (id, value). */
   def run[V, M](spark: SparkSession, vertices: DataFrame, edges: DataFrame,
                 alg: TypedGmrAlgorithm[V, M], meta: GraphMeta)
@@ -92,7 +87,7 @@ object TypedRunner {
       }
       .cache()
 
-    var verts: Dataset[(Long, V, Boolean)] =
+    val verts0: Dataset[(Long, V, Boolean)] =
       vertices.select($"id").as[Long].groupByKey(identity)
         .cogroup(adj.groupByKey(_._1)) { (id, vs, as) =>
           if (vs.hasNext)
@@ -103,11 +98,7 @@ object TypedRunner {
         }
         .localCheckpoint()
 
-    var iter = 0
-    var changedCount = 1L
-    while (iter < alg.maxIter && changedCount > 0) {
-      iter += 1
-      val round = iter // stable copy for the closures below
+    val run = Fixpoint(verts0, alg.maxIter) { (verts, round) =>
       val senders = if (alg.activeMessaging) verts.filter(_._3) else verts
       val msgs: Dataset[(Long, M)] = senders.groupByKey(_._1)
         .cogroup(adj.groupByKey(_._1)) { (id, vs, as) =>
@@ -131,12 +122,9 @@ object TypedRunner {
           }
         }
         .localCheckpoint(eager = false)
-      changedCount = next.filter(_._3).count()
-      SqlRunner.checkpointRdd(verts).foreach(_.unpersist(blocking = false))
-      verts = next
-    }
+      Fixpoint.Step(next, next.filter(_._3).count())
+    }(verts => verts.map(t => (t._1, t._2)))
     adj.unpersist()
-    lastIterations = iter
-    verts.map(t => (t._1, t._2))
+    run.result
   }
 }

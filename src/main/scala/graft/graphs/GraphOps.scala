@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.algos.Algorithms
-import graft.engine.{GmrRunner, GraphMeta}
+import graft.engine.{Fixpoint, GmrRunner, GraphMeta}
 
 /** Graph operators over a derived edge view (FIXTURES.md §4): a deterministic
   * synthetic graph `edges(src, dst)` built from `orders` with pure modulo
@@ -17,13 +17,12 @@ import graft.engine.{GmrRunner, GraphMeta}
   * triangle count, PageRank. The vertex programs among them (BFS, WCC,
   * critical path, PageRank, bipartite parity) are [[GmrAlgorithm]]
   * instances run by [[GmrRunner]], which alone picks the driver,
-  * single-task or distributed tier from |E|. The remaining iterative
-  * operators (matching, MIS, coloring, k-core, …) are join→groupBy→join
-  * rounds with:
-  * - frontier/delta pruning (≙ the reference's active-vertex send filter),
-  * - one driver action per iteration for convergence (≙ its Allgather),
-  * - `localCheckpoint` per iteration to truncate lineage — without it the
-  *   plan doubles every round and the job dies long before 100 TB.
+  * single-task or distributed tier from |E|. The remaining fixpoint
+  * operators (matching, MIS, coloring, coreness, k-core, k-truss) are
+  * join→groupBy→join rounds run by [[Fixpoint]], each round one driver
+  * action (≙ the reference's Allgather) over state `localCheckpoint`ed to
+  * truncate lineage — without it the plan doubles every round and the job
+  * dies long before 100 TB.
   */
 object GraphOps {
 
@@ -163,40 +162,44 @@ object GraphOps {
       .filter($"a" =!= $"b").distinct().cache()
     val m = canon0.count()
     withShuffleParts(s, LoopConf.sizedParallelism(s, m, 24)) {
-      var rem = canon0.localCheckpoint()
+      val rem0 = canon0.localCheckpoint()
       canon0.unpersist()
-      var matched = rem.limit(0).select($"a".as("id"), $"b".as("mate"))
-      var rounds = 0
-      while (!rem.isEmpty) {
-        rounds += 1
-        val h = conv(substring(md5(concat(lit(s"match:$rounds:"),
-          $"a".cast("string"), lit(":"), $"b".cast("string"))), 1, 8), 16, 10)
-          .cast("long")
-        val pri = struct($"h", $"a", $"b")
-        val he = rem.withColumn("h", h)
-        // Per-VERTEX minima over BOTH orientations: a vertex appears as
-        // `a` in some canonical edges and as `b` in others, so grouping
-        // the two sides separately would let it "win" twice and
-        // double-match (caught by the differential spec). Explode each
-        // edge to its two endpoints, take one min per vertex.
-        val minV = he
-          .select(explode(array($"a", $"b")).as("v"), pri.as("p"))
-          .groupBy($"v").agg(min($"p").as("mp"))
-        val sel = he
-          .join(minV.select($"v".as("a"), $"mp".as("pa")), Seq("a"))
-          .join(minV.select($"v".as("b"), $"mp".as("pb")), Seq("b"))
-          .filter(pri === $"pa" && pri === $"pb")
-          .select($"a", $"b").localCheckpoint()
-        matched = matched
-          .unionByName(sel.select($"a".as("id"), $"b".as("mate")))
-          .unionByName(sel.select($"b".as("id"), $"a".as("mate")))
-          .localCheckpoint()
-        val mv = sel.select($"a".as("v")).union(sel.select($"b")).distinct()
-          .localCheckpoint(eager = false)
-        rem = rem.join(mv, rem("a") === mv("v"), "left_anti")
-        rem = rem.join(mv, rem("b") === mv("v"), "left_anti").localCheckpoint()
-      }
-      Matching(matched, rounds)
+      val matched0 = rem0.limit(0).select($"a".as("id"), $"b".as("mate"))
+      // Counts the unmatched edges; the min-priority one always matches.
+      val run = Fixpoint((rem0, matched0)) { case ((rem, matched), round) =>
+        val n = Fixpoint.rows(rem)
+        if (n == 0) Fixpoint.Step((rem, matched), 0)
+        else {
+          val h = conv(substring(md5(concat(lit(s"match:$round:"),
+            $"a".cast("string"), lit(":"), $"b".cast("string"))), 1, 8), 16, 10)
+            .cast("long")
+          val pri = struct($"h", $"a", $"b")
+          val he = rem.withColumn("h", h)
+          // Per-VERTEX minima over BOTH orientations: a vertex appears as
+          // `a` in some canonical edges and as `b` in others, so grouping
+          // the two sides separately would let it "win" twice and
+          // double-match (caught by the differential spec). Explode each
+          // edge to its two endpoints, take one min per vertex.
+          val minV = he
+            .select(explode(array($"a", $"b")).as("v"), pri.as("p"))
+            .groupBy($"v").agg(min($"p").as("mp"))
+          val sel = he
+            .join(minV.select($"v".as("a"), $"mp".as("pa")), Seq("a"))
+            .join(minV.select($"v".as("b"), $"mp".as("pb")), Seq("b"))
+            .filter(pri === $"pa" && pri === $"pb")
+            .select($"a", $"b").localCheckpoint()
+          val mv = sel.select($"a".as("v")).union(sel.select($"b")).distinct()
+            .localCheckpoint(eager = false)
+          val rem1 = rem.join(mv, rem("a") === mv("v"), "left_anti")
+          Fixpoint.Step((
+            rem1.join(mv, rem1("b") === mv("v"), "left_anti").localCheckpoint(),
+            matched
+              .unionByName(sel.select($"a".as("id"), $"b".as("mate")))
+              .unionByName(sel.select($"b".as("id"), $"a".as("mate")))
+              .localCheckpoint()), n, Seq(sel, mv))
+        }
+      } { case (_, matched) => matched }
+      Matching(run.result, run.changedRounds)
     }
   }
 
@@ -237,45 +240,49 @@ object GraphOps {
       .filter($"a" =!= $"b").distinct().cache()
     val m = canon0.count()
     withShuffleParts(s, LoopConf.sizedParallelism(s, m, 24)) {
-      var remE = canon0.localCheckpoint()
+      val remE0 = canon0.localCheckpoint()
       canon0.unpersist()
-      var remV = remE.select($"a".as("v")).union(remE.select($"b"))
+      val remV0 = remE0.select($"a".as("v")).union(remE0.select($"b"))
         .distinct().localCheckpoint()
-      var mis = remV.limit(0).select($"v".as("id"))
-      var rounds = 0
-      while (!remV.isEmpty) {
-        rounds += 1
-        val pv = remV.select($"v",
-          conv(substring(md5(concat(lit(s"mis:$rounds:"),
-            $"v".cast("string"))), 1, 8), 16, 10).cast("long").as("h"))
-        // Neighbor minima over BOTH orientations of the canonical edges;
-        // field names pinned so the struct comparison below type-checks.
-        val withP = remE
-          .join(pv.select($"v".as("a"), $"h".as("ha")), Seq("a"))
-          .join(pv.select($"v".as("b"), $"h".as("hb")), Seq("b"))
-        val nbrMin = withP
-          .select($"a".as("v"), struct($"hb".as("ph"), $"b".as("pv")).as("p"))
-          .unionByName(withP.select($"b".as("v"),
-            struct($"ha".as("ph"), $"a".as("pv")).as("p")))
-          .groupBy($"v").agg(min($"p").as("mp"))
-        val winners = pv.join(nbrMin, Seq("v"), "left")
-          .filter($"mp".isNull ||
-            struct($"h".as("ph"), $"v".as("pv")) < $"mp")
-          .select($"v").localCheckpoint()
-        mis = mis.unionByName(winners.select($"v".as("id")))
-          .localCheckpoint()
-        val dead = winners
-          .unionByName(remE.join(winners.select($"v".as("a")),
-            Seq("a"), "left_semi").select($"b".as("v")))
-          .unionByName(remE.join(winners.select($"v".as("b")),
-            Seq("b"), "left_semi").select($"a".as("v")))
-          .distinct().localCheckpoint(eager = false)
-        remV = remV.join(dead, Seq("v"), "left_anti").localCheckpoint()
-        remE = remE.join(dead.select($"v".as("a")), Seq("a"), "left_anti")
-        remE = remE.join(dead.select($"v".as("b")), Seq("b"), "left_anti")
-          .localCheckpoint()
-      }
-      Mis(mis, rounds)
+      val mis0 = remV0.limit(0).select($"v".as("id"))
+      // Counts the undecided vertices; the min-priority one always joins.
+      val run = Fixpoint((remE0, remV0, mis0)) { case ((remE, remV, mis), round) =>
+        val n = Fixpoint.rows(remV)
+        if (n == 0) Fixpoint.Step((remE, remV, mis), 0)
+        else {
+          val pv = remV.select($"v",
+            conv(substring(md5(concat(lit(s"mis:$round:"),
+              $"v".cast("string"))), 1, 8), 16, 10).cast("long").as("h"))
+          // Neighbor minima over BOTH orientations of the canonical edges;
+          // field names pinned so the struct comparison below type-checks.
+          val withP = remE
+            .join(pv.select($"v".as("a"), $"h".as("ha")), Seq("a"))
+            .join(pv.select($"v".as("b"), $"h".as("hb")), Seq("b"))
+          val nbrMin = withP
+            .select($"a".as("v"), struct($"hb".as("ph"), $"b".as("pv")).as("p"))
+            .unionByName(withP.select($"b".as("v"),
+              struct($"ha".as("ph"), $"a".as("pv")).as("p")))
+            .groupBy($"v").agg(min($"p").as("mp"))
+          val winners = pv.join(nbrMin, Seq("v"), "left")
+            .filter($"mp".isNull ||
+              struct($"h".as("ph"), $"v".as("pv")) < $"mp")
+            .select($"v").localCheckpoint()
+          val dead = winners
+            .unionByName(remE.join(winners.select($"v".as("a")),
+              Seq("a"), "left_semi").select($"b".as("v")))
+            .unionByName(remE.join(winners.select($"v".as("b")),
+              Seq("b"), "left_semi").select($"a".as("v")))
+            .distinct().localCheckpoint(eager = false)
+          Fixpoint.Step((
+            remE.join(dead.select($"v".as("a")), Seq("a"), "left_anti")
+              .join(dead.select($"v".as("b")), Seq("b"), "left_anti")
+              .localCheckpoint(),
+            remV.join(dead, Seq("v"), "left_anti").localCheckpoint(),
+            mis.unionByName(winners.select($"v".as("id"))).localCheckpoint()),
+            n, Seq(winners, dead))
+        }
+      } { case (_, _, mis) => mis }
+      Mis(run.result, run.changedRounds)
     }
   }
 
@@ -414,52 +421,57 @@ object GraphOps {
       // Full symmetric neighbor view (for the mex over COLORED neighbors —
       // retired edges still constrain colors) + the shrinking uncolored
       // remainder (for the priority contest).
-      val sym = canon0.select($"a".as("v"), $"b".as("nb"))
+      val sym0 = canon0.select($"a".as("v"), $"b".as("nb"))
         .unionByName(canon0.select($"b".as("v"), $"a".as("nb")))
         .localCheckpoint()
-      var remE = canon0.localCheckpoint()
+      val remE0 = canon0.localCheckpoint()
       canon0.unpersist()
-      var remV = remE.select($"a".as("v")).union(remE.select($"b"))
+      val remV0 = remE0.select($"a".as("v")).union(remE0.select($"b"))
         .distinct().localCheckpoint()
-      var colored = remV.limit(0)
+      val colored0 = remV0.limit(0)
         .select($"v".as("id"), lit(0L).as("color"))
-      var rounds = 0
-      while (!remV.isEmpty) {
-        rounds += 1
-        // Max uncolored-neighbor priority per vertex, over BOTH
-        // orientations of the remaining canonical edges (the g26/g27
-        // both-sides lesson).
-        val nbrMax = remE
-          .select($"a".as("v"), pri($"b").as("p"))
-          .unionByName(remE.select($"b".as("v"), pri($"a").as("p")))
-          .groupBy($"v").agg(max($"p").as("mp"))
-        val winners = remV.join(nbrMax, Seq("v"), "left")
-          .filter($"mp".isNull || pri($"v") > $"mp")
-          .select($"v").localCheckpoint()
-        // Greedy mex over each winner's already-colored neighbors: rank
-        // the distinct neighbor colors ascending; the mex is the first
-        // rank whose color differs from it, else the count (colors are a
-        // dense 0.. prefix iff no gap). Window is per-vertex partitioned.
-        val ncol = sym.join(winners, Seq("v"), "left_semi")
-          .join(colored.withColumnRenamed("id", "nb"), Seq("nb"))
-          .select($"v", $"color").distinct()
-        val rn = row_number().over(
-          Window.partitionBy($"v").orderBy($"color")) - 1
-        val mex = ncol.withColumn("rn", rn.cast("long"))
-          .groupBy($"v")
-          .agg(min(when($"color" =!= $"rn", $"rn")).as("gap"),
-            count(lit(1)).as("n"))
-          .select($"v", coalesce($"gap", $"n").as("color"))
-        colored = colored
-          .unionByName(winners.join(mex, Seq("v"), "left")
-            .select($"v".as("id"), coalesce($"color", lit(0L)).as("color")))
-          .localCheckpoint()
-        remV = remV.join(winners, Seq("v"), "left_anti").localCheckpoint()
-        remE = remE.join(winners.select($"v".as("a")), Seq("a"), "left_anti")
-        remE = remE.join(winners.select($"v".as("b")), Seq("b"), "left_anti")
-          .localCheckpoint()
-      }
-      Coloring(colored, rounds)
+      // Counts the uncolored vertices; the max-priority one always wins.
+      val run = Fixpoint((sym0, remE0, remV0, colored0)) {
+          case ((sym, remE, remV, colored), _) =>
+        val n = Fixpoint.rows(remV)
+        if (n == 0) Fixpoint.Step((sym, remE, remV, colored), 0)
+        else {
+          // Max uncolored-neighbor priority per vertex, over BOTH
+          // orientations of the remaining canonical edges (the g26/g27
+          // both-sides lesson).
+          val nbrMax = remE
+            .select($"a".as("v"), pri($"b").as("p"))
+            .unionByName(remE.select($"b".as("v"), pri($"a").as("p")))
+            .groupBy($"v").agg(max($"p").as("mp"))
+          val winners = remV.join(nbrMax, Seq("v"), "left")
+            .filter($"mp".isNull || pri($"v") > $"mp")
+            .select($"v").localCheckpoint()
+          // Greedy mex over each winner's already-colored neighbors: rank
+          // the distinct neighbor colors ascending; the mex is the first
+          // rank whose color differs from it, else the count (colors are a
+          // dense 0.. prefix iff no gap). Window is per-vertex partitioned.
+          val ncol = sym.join(winners, Seq("v"), "left_semi")
+            .join(colored.withColumnRenamed("id", "nb"), Seq("nb"))
+            .select($"v", $"color").distinct()
+          val rn = row_number().over(
+            Window.partitionBy($"v").orderBy($"color")) - 1
+          val mex = ncol.withColumn("rn", rn.cast("long"))
+            .groupBy($"v")
+            .agg(min(when($"color" =!= $"rn", $"rn")).as("gap"),
+              count(lit(1)).as("n"))
+            .select($"v", coalesce($"gap", $"n").as("color"))
+          Fixpoint.Step((sym,
+            remE.join(winners.select($"v".as("a")), Seq("a"), "left_anti")
+              .join(winners.select($"v".as("b")), Seq("b"), "left_anti")
+              .localCheckpoint(),
+            remV.join(winners, Seq("v"), "left_anti").localCheckpoint(),
+            colored
+              .unionByName(winners.join(mex, Seq("v"), "left")
+                .select($"v".as("id"), coalesce($"color", lit(0L)).as("color")))
+              .localCheckpoint()), n, Seq(winners))
+        }
+      } { case (_, _, _, colored) => colored }
+      Coloring(run.result, run.changedRounds)
     }
   }
 
@@ -547,13 +559,10 @@ object GraphOps {
   def coreness(s: SparkSession, edgeDf: DataFrame): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val sym = symmetrize(s, edgeDf, dropSelfLoops = true).localCheckpoint()
-    var c = sym.groupBy($"src".as("id")).agg(count(lit(1)).as("c"))
+    val sym0 = symmetrize(s, edgeDf, dropSelfLoops = true).localCheckpoint()
+    val c0 = sym0.groupBy($"src".as("id")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 120) {
-      rounds += 1
+    Fixpoint((sym0, c0), maxRounds = 120) { case ((sym, c), _) =>
       val nb = sym.as("s").join(c.as("p"), col("s.dst") === col("p.id"))
         .select(col("s.src").as("v"), col("p.c").as("nc"))
       // H-index: sort each vertex's neighbor values descending; the
@@ -564,15 +573,10 @@ object GraphOps {
         .groupBy($"v".as("id"))
         .agg(max(least($"rn", $"nc")).as("c"))
         .localCheckpoint()
-      changed = next.as("n").join(c.as("o"), col("n.id") === col("o.id"))
-        .filter(col("n.c") =!= col("o.c")).count()
-      graft.engine.SqlRunner.checkpointRdd(c)
-        .foreach(_.unpersist(blocking = false))
-      c = next
-    }
-    graft.engine.SqlRunner.checkpointRdd(sym)
-      .foreach(_.unpersist(blocking = false))
-    c.select($"id", $"c".as("coreness"))
+      Fixpoint.Step((sym, next), next.as("n")
+        .join(c.as("o"), col("n.id") === col("o.id"))
+        .filter(col("n.c") =!= col("o.c")).count())
+    } { case (_, c) => c.select($"id", $"c".as("coreness")) }.result
   }
 
   /** HyperANF — the approximate neighborhood function N(h) = Σ_v |B_h(v)|
@@ -623,15 +627,13 @@ object GraphOps {
       val next = nbr.unionByName(sk)
         .groupBy($"id").agg(expr("hll_union_agg(sk)").as("sk"))
         .localCheckpoint()
-      graft.engine.SqlRunner.checkpointRdd(sk)
-        .foreach(_.unpersist(blocking = false))
+      Fixpoint.release(sk)
       sk = next
       // One 1-row aggregate per round — bounded driver state (maxH longs),
       // the b07-trace convention.
       est += sk.agg(sum(expr("hll_sketch_estimate(sk)"))).head().getLong(0)
     }
-    graft.engine.SqlRunner.checkpointRdd(sk)
-      .foreach(_.unpersist(blocking = false))
+    Fixpoint.release(sk)
     // Exact twin at gate scale: cumulative distinct (u, v) pairs within
     // h hops via the same leveled expansion as harmonic4 — but with each
     // level CHECKPOINTED, unlike harmonic4's single-action plan (where
@@ -648,8 +650,7 @@ object GraphOps {
       .take(maxH + 1).toVector
     val exact = (1 to maxH).map(h =>
       levels.take(h + 1).reduce(_ union _).distinct().count())
-    (e +: levels).foreach(df => graft.engine.SqlRunner.checkpointRdd(df)
-      .foreach(_.unpersist(blocking = false)))
+    Fixpoint.release(e +: levels)
     (est.result().toSeq, exact)
   }
 
@@ -748,8 +749,7 @@ object GraphOps {
     }
     // The result is already eagerly materialized (betweenness4From ends in
     // a localCheckpoint); the vertex relation's blocks can go.
-    graft.engine.SqlRunner.checkpointRdd(v)
-      .foreach(_.unpersist(blocking = false))
+    Fixpoint.release(v)
     res
   }
 
@@ -829,9 +829,7 @@ object GraphOps {
       .agg(graft.Canon.sig6(sum($"delta") * lit(scale)).as("bc"))
       .filter($"bc" > 0.0)
       .localCheckpoint()
-    ((md +: sigs) ++ ds).foreach(df =>
-      graft.engine.SqlRunner.checkpointRdd(df)
-        .foreach(_.unpersist(blocking = false)))
+    Fixpoint.release((md +: sigs) ++ ds)
     out
   }
 
@@ -1191,44 +1189,40 @@ object GraphOps {
     * @param edgeDf directed edges; treated as undirected (symmetrized).
     * @return surviving vertices with their within-core degree.
     */
-  /** Peel rounds of the last [[kcore]] run — observability for the g15
-    * oracle's static unroll: the 24-round SQL is exact only while the
-    * measured fixpoint stays comfortably under it, and GraphAlgoSpec pins
-    * `lastPeelRounds ≤ unroll/2` on the gate's own scale factor so a data
-    * regeneration that deepens the peel cascade fails a NAMED test instead
-    * of a bare oracle hash mismatch.
-    */
-  @volatile var lastPeelRounds: Int = 0
+  def kcore(s: SparkSession, edgeDf: DataFrame, k: Int): DataFrame =
+    kcoreRun(s, edgeDf, k).result
 
-  def kcore(s: SparkSession, edgeDf: DataFrame, k: Int): DataFrame = {
+  /** [[kcore]] plus its per-round records. Their `changedRounds` (the peel
+    * depth) is observability for the g15 oracle's static unroll: the
+    * 24-round SQL is exact only while the measured fixpoint stays
+    * comfortably under it, and GraphAlgoSpec pins it ≤ unroll/2 on the
+    * gate's own scale factor so a data regeneration that deepens the peel
+    * cascade fails a NAMED test instead of a bare oracle hash mismatch.
+    */
+  def kcoreRun(s: SparkSession, edgeDf: DataFrame, k: Int): Fixpoint.Run[DataFrame] = {
     import s.implicits._
     val sym = symmetrize(s, edgeDf, dropSelfLoops = true).cache()
     val m = sym.count()
     withShuffleParts(s, loopParallelism(s, m)) {
-      var ue = sym.localCheckpoint()
+      val ue0 = sym.localCheckpoint()
       sym.unpersist()
-      var done = false
-      var rounds = 0
-      while (!done) {
+      Fixpoint(ue0) { (ue, _) =>
         val deg = ue.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
-        // Lazy: the branch-deciding isEmpty materializes it in one job.
+        // Lazy: the count materializes it in the same job.
         val bad = deg.filter($"deg" < k).select($"id")
           .localCheckpoint(eager = false)
-        if (bad.isEmpty) done = true
-        else {
-          rounds += 1
-          ue = ue
-            .join(bad, ue("src") === bad("id"), "left_anti")
-            .join(bad, ue("dst") === bad("id"), "left_anti")
-            .localCheckpoint()
-        }
+        val n = Fixpoint.rows(bad)
+        Fixpoint.Step(if (n == 0) ue else ue
+          .join(bad, ue("src") === bad("id"), "left_anti")
+          .join(bad, ue("dst") === bad("id"), "left_anti")
+          .localCheckpoint(), n, Seq(bad))
+      } { ue =>
+        // Eager checkpoint: the closing aggregation must run INSIDE this
+        // block or the caller's action would replay it at the restored
+        // session-wide partition cap (32 near-empty tasks for a tiny core).
+        ue.groupBy($"src".as("id")).agg(count(lit(1)).as("core_deg"))
+          .localCheckpoint()
       }
-      lastPeelRounds = rounds
-      // Eager checkpoint: the closing aggregation must run INSIDE this
-      // block or the caller's action would replay it at the restored
-      // session-wide partition cap (32 near-empty tasks for a tiny core).
-      ue.groupBy($"src".as("id")).agg(count(lit(1)).as("core_deg"))
-        .localCheckpoint()
     }
   }
 
@@ -1241,13 +1235,17 @@ object GraphOps {
     * fixpoint; each round is one wedge join + aggregation on the SHRINKING
     * edge list, so the expensive first round bounds the cost and the
     * oracle's static unroll stays exact past convergence (converged rounds
-    * are idempotent). Shares [[lastPeelRounds]] with kcore for the same
-    * unroll-headroom pin.
+    * are idempotent). [[ktrussRun]] reports the peel depth for the same
+    * unroll-headroom pin as [[kcoreRun]].
     *
     * @param edgeDf directed edges; treated as undirected (symmetrized).
     * @return surviving vertices with their within-truss degree.
     */
-  def ktruss(s: SparkSession, edgeDf: DataFrame, k: Int): DataFrame = {
+  def ktruss(s: SparkSession, edgeDf: DataFrame, k: Int): DataFrame =
+    ktrussRun(s, edgeDf, k).result
+
+  /** [[ktruss]] plus its per-round records (`changedRounds` = peel depth). */
+  def ktrussRun(s: SparkSession, edgeDf: DataFrame, k: Int): Fixpoint.Run[DataFrame] = {
     import s.implicits._
     val symAll = symmetrize(s, edgeDf, dropSelfLoops = true).cache()
     val m = symAll.count()
@@ -1260,11 +1258,9 @@ object GraphOps {
     // aggregation is the whole round). The ×64 amplification factor keeps
     // fixture-sized graphs on one task while real graphs fan out.
     withShuffleParts(s, LoopConf.sizedParallelism(s, m, 24 * 64)) {
-      var sym = symAll.localCheckpoint()
+      val sym0 = symAll.localCheckpoint()
       symAll.unpersist()
-      var done = false
-      var rounds = 0
-      while (!done) {
+      Fixpoint(sym0) { (sym, _) =>
         val canon = sym.filter($"src" < $"dst")
         val sup = canon.as("t")
           .join(sym.as("x"), $"t.src" === $"x.src")
@@ -1278,21 +1274,18 @@ object GraphOps {
           .filter($"sup".isNull || $"sup" < k - 2)
           .select(canon("src").as("bs"), canon("dst").as("bd"))
           .localCheckpoint(eager = false)
-        if (bad.isEmpty) done = true
-        else {
-          rounds += 1
-          val badSym = bad.union(bad.select($"bd".as("bs"), $"bs".as("bd")))
-          sym = sym.join(badSym,
-              sym("src") === badSym("bs") && sym("dst") === badSym("bd"),
-              "left_anti")
-            .localCheckpoint()
-        }
+        val n = Fixpoint.rows(bad)
+        val badSym = bad.union(bad.select($"bd".as("bs"), $"bs".as("bd")))
+        Fixpoint.Step(if (n == 0) sym else sym.join(badSym,
+            sym("src") === badSym("bs") && sym("dst") === badSym("bd"),
+            "left_anti")
+          .localCheckpoint(), n, Seq(bad))
+      } { sym =>
+        // Inside the block, like kcore: the closing aggregation must not
+        // replay at the restored session-wide partition cap.
+        sym.groupBy($"src".as("id")).agg(count(lit(1)).as("truss_deg"))
+          .localCheckpoint()
       }
-      lastPeelRounds = rounds
-      // Inside the block, like kcore: the closing aggregation must not
-      // replay at the restored session-wide partition cap.
-      sym.groupBy($"src".as("id")).agg(count(lit(1)).as("truss_deg"))
-        .localCheckpoint()
     }
   }
 
@@ -1544,8 +1537,7 @@ object GraphOps {
     // depends on the one-row pin).
     val onerow = eAgg.crossJoin(nAgg).localCheckpoint()
     sym.unpersist()
-    graft.engine.SqlRunner.checkpointRdd(deg)
-      .foreach(_.unpersist(blocking = false))
+    Fixpoint.release(deg)
     ks.map { k =>
       val n = col(s"n$k"); val e = col(s"e$k")
       onerow.select(
@@ -1632,8 +1624,7 @@ object GraphOps {
       $"n_scc", $"n_nontrivial", $"n_cyclic_vertices",
       $"n_condensed_edges", ($"n_nontrivial" === 0L).as("is_dag"))
       .localCheckpoint()
-    Seq(e, comp).foreach(df => graft.engine.SqlRunner.checkpointRdd(df)
-      .foreach(_.unpersist(blocking = false)))
+    Fixpoint.release(Seq(e, comp))
     out
   }
 }

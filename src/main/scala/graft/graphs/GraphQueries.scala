@@ -734,7 +734,7 @@ object GraphQueries {
       // themselves are value-pinned by the g03/g08 oracles and EngineSpec.
       // b07's output is the trace alone — free the final vertex state's
       // checkpoint instead of leaking 4M rows until session cleanup.
-      SqlRunner.checkpointRdd(res).foreach(_.unpersist(blocking = false))
+      graft.engine.Fixpoint.release(res)
       require(stats.changedTrace == B07ChangedGolden,
         s"b07 changed-count trace drifted from the pinned golden: " +
           s"${stats.changedTrace}")
@@ -1679,7 +1679,7 @@ object GraphQueries {
   /** k-truss peel, statically unrolled like [[kcoreOracle]] — converged
     * rounds are idempotent (the support recompute keeps every edge), so
     * `rounds` only needs to exceed the measured fixpoint; GraphAlgoSpec
-    * pins `lastPeelRounds ≤ rounds/2` headroom on the gate's scale factor.
+    * pins `ktrussRun`'s depth ≤ rounds/2 on the gate's scale factor.
     * Each round: wedge-join support per canonical edge, keep edges with
     * support ≥ k−2, rebuild the symmetric view from the kept canon set.
     */

@@ -20,7 +20,7 @@ object Mst {
     */
   def boruvka(s: SparkSession, edges: DataFrame): DataFrame = {
     import s.implicits._
-    import graft.engine.LoopConf
+    import graft.engine.{Fixpoint, LoopConf}
     // Size the loop's shuffles to the graph (the working set only shrinks
     // from here, so the initial |E| is the right bound for every round).
     val e0 = edges.cache()
@@ -31,15 +31,15 @@ object Mst {
     // it in place each round. The working set shrinks geometrically with the
     // component count, instead of re-joining the full edge list against a
     // label table every round.
-    var cur = e0.select($"a", $"b", $"w", $"a".as("ca"), $"b".as("cb"))
+    val cur0 = e0.select($"a", $"b", $"w", $"a".as("ca"), $"b".as("cb"))
       .localCheckpoint()
     e0.unpersist()
-    var mst = Seq.empty[(Long, Long, Double)].toDF("a", "b", "w")
-    var done = false
-    while (!done) {
-      // Lazy: the isEmpty below materializes the checkpoint in its own job.
+    val mst0 = Seq.empty[(Long, Long, Double)].toDF("a", "b", "w")
+    Fixpoint((cur0, mst0)) { case ((cur, mst), _) =>
+      // Lazy: counting it materializes the checkpoint in the same job.
       val cross = cur.filter($"ca" =!= $"cb").localCheckpoint(eager = false)
-      if (cross.isEmpty) done = true
+      val n = Fixpoint.rows(cross)
+      if (n == 0) Fixpoint.Step((cur, mst), 0, Seq(cross))
       else {
         // Each component nominates its lightest outgoing edge (from either
         // endpoint's perspective); a doubly-nominated edge dedupes.
@@ -52,8 +52,6 @@ object Mst {
           .distinct()
           // Lazy: wcc's size count below materializes it.
           .localCheckpoint(eager = false)
-        // nominated is already checkpointed — the union is lineage-free.
-        mst = mst.union(nominated.select($"a", $"b", $"w"))
         // Contract over the component-merge graph: its WCC labels map each
         // old component to its merged one. It has at most one edge per
         // component, and the component count halves every round, so
@@ -61,16 +59,19 @@ object Mst {
         val mapping = GraphOps.wcc(s, nominated.select($"ca".as("src"), $"cb".as("dst")))
           .select($"id".as("old_comp"), $"comp".as("new_comp"))
         // Contract: relabel both endpoints of the surviving cross edges.
-        cur = cross
+        val next = cross
           .join(mapping.as("ma"), $"ca" === $"ma.old_comp", "left")
           .join(mapping.as("mb"), $"cb" === $"mb.old_comp", "left")
           .select($"a", $"b", $"w",
             coalesce($"ma.new_comp", $"ca").as("ca"),
             coalesce($"mb.new_comp", $"cb").as("cb"))
           .localCheckpoint()
+        // nominated is already checkpointed — the union is lineage-free,
+        // and Fixpoint keeps every round's nominations it reads.
+        Fixpoint.Step((next, mst.union(nominated.select($"a", $"b", $"w"))),
+          n, Seq(cross, mapping))
       }
-    }
-    mst
+    } { case (_, mst) => mst }.result
     }
   }
 

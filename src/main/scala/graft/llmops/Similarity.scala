@@ -271,14 +271,12 @@ object Similarity {
             .as("d"))
         .localCheckpoint()
       // The new checkpoint is materialized, so prev's is unreferenced —
-      // free the backing RDD (SqlRunner's loop-state release pattern).
-      graft.engine.SqlRunner.checkpointRdd(prev)
-        .foreach(_.unpersist(blocking = false))
+      // free the backing RDD.
+      graft.engine.Fixpoint.release(prev)
     }
     // The output rows live in the per-pick one-row checkpoints; the final
     // pool is dead state.
-    graft.engine.SqlRunner.checkpointRdd(pool)
-      .foreach(_.unpersist(blocking = false))
+    graft.engine.Fixpoint.release(pool)
     e.unpersist()
     out
   }
@@ -759,8 +757,7 @@ object Similarity {
       .filter($"z" > zCut)
       .select($"cluster", $"vec_id", $"d2", $"z")
       .localCheckpoint()
-    graft.engine.SqlRunner.checkpointRdd(pts)
-      .foreach(_.unpersist(blocking = false))
+    graft.engine.Fixpoint.release(pts)
     out
   }
 

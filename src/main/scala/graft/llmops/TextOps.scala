@@ -653,8 +653,7 @@ object Dedup {
     val tp = ex.intersect(fd).count()
     val nEx = ex.count()
     val nFd = fd.count()
-    Seq(ex, fd).foreach(df => graft.engine.SqlRunner.checkpointRdd(df)
-      .foreach(_.unpersist(blocking = false)))
+    graft.engine.Fixpoint.release(Seq(ex, fd))
     s.range(1).select(
       lit(nEx).as("n_exact"), lit(nFd).as("n_found"),
       lit(tp).as("n_true_pos"),

@@ -20,7 +20,7 @@ class EngineSpec extends AnyFunSuite {
   private def toMap(df: DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-  private lazy val small = GraphSource.readGmrText(spark, "/root/reference/graph/small.graph")
+  private lazy val small = GraphSource.readGmrText(spark, Fixtures("graph/small.graph"))
   // Reconstructed from FIXTURES.md §1 (src/test/resources/graph/3line.graph).
   private lazy val threeLine = GraphSource.readGmrText(spark,
     getClass.getResource("/graph/3line.graph").getPath)
@@ -57,14 +57,15 @@ class EngineSpec extends AnyFunSuite {
 
   test("SSSP 3line: unreachable isolated vertex stays at infinity") {
     val meta = GraphMeta(threeLine.numVertices, source = 1L)
-    val got = toMap(SqlRunner.run(spark, threeLine.vertices, threeLine.edges, Algorithms.Sssp, meta))
-    assert(got == Map(1L -> 0.0, 2L -> 1.0, 3L -> 2.0, 4L -> Double.PositiveInfinity))
+    val (df, stats) = SqlRunner.runWithStats(spark, threeLine.vertices,
+      threeLine.edges, Algorithms.Sssp, meta)
+    assert(toMap(df) == Map(1L -> 0.0, 2L -> 1.0, 3L -> 2.0, 4L -> Double.PositiveInfinity))
     // Convergence regression pin: the unreachable vertex's |inf - inf| = NaN
     // must NOT count as changed (Spark SQL orders NaN above everything, the
     // opposite of Java) — with the hazard present this loop runs the full
     // 120-round cap instead of ~diameter rounds.
-    assert(SqlRunner.lastIterations <= 4,
-      s"SqlRunner took ${SqlRunner.lastIterations} supersteps on a diameter-2 graph")
+    assert(stats.iterations <= 4,
+      s"SqlRunner took ${stats.iterations} supersteps on a diameter-2 graph")
   }
 
   test("WCC on symmetrized 3line: {1,2,3} and isolated {4}") {
@@ -196,10 +197,11 @@ class EngineSpec extends AnyFunSuite {
     // pull-mode salting twin below covers that side.
     sys.props.put("graft.engine.broadcastPullMaxVertices", "0")
     try {
-      val sqlR = toMap(SqlRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
-      assert(SqlRunner.lastSaltedHubs >= 1,
-        s"expected the hub probe to fire, saltedHubs=${SqlRunner.lastSaltedHubs}")
-      assert(SqlRunner.lastSaltFactor >= 2)
+      val (df, stats) = SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)
+      val sqlR = toMap(df)
+      assert(stats.saltedHubs >= 1,
+        s"expected the hub probe to fire, saltedHubs=${stats.saltedHubs}")
+      assert(stats.saltFactor >= 2)
       val localR = toMap(LocalRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
       assert(sqlR == localR)
     } finally {
@@ -208,9 +210,9 @@ class EngineSpec extends AnyFunSuite {
     }
     // Uniform default threshold: the same runner on the same graph keeps
     // the unsalted plan (no false engagement on mere 2×-mean variance).
-    val again = toMap(SqlRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
-    assert(SqlRunner.lastSaltedHubs == 0 && SqlRunner.lastSaltFactor == 1)
-    assert(again.count(!_._2.isInfinite) > 10000)
+    val (again, stats) = SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)
+    assert(stats.saltedHubs == 0 && stats.saltFactor == 1)
+    assert(toMap(again).count(!_._2.isInfinite) > 10000)
     edges.unpersist()
   }
 
@@ -233,10 +235,11 @@ class EngineSpec extends AnyFunSuite {
     val meta = GraphMeta(nV, source = 1L)
     sys.props.put("graft.engine.hubMinDegree", "5000")
     try {
-      val sqlR = toMap(SqlRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
-      assert(SqlRunner.lastSaltedHubs >= 1,
-        s"expected the dst-hub probe to fire, saltedHubs=${SqlRunner.lastSaltedHubs}")
-      assert(SqlRunner.lastSaltFactor >= 2)
+      val (df, stats) = SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)
+      val sqlR = toMap(df)
+      assert(stats.saltedHubs >= 1,
+        s"expected the dst-hub probe to fire, saltedHubs=${stats.saltedHubs}")
+      assert(stats.saltFactor >= 2)
       val localR = toMap(LocalRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
       assert(sqlR == localR)
     } finally sys.props.remove("graft.engine.hubMinDegree")

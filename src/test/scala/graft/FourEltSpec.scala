@@ -33,14 +33,14 @@ class FourEltSpec extends AnyFunSuite {
     df.collect().map(_.getDouble(1)).groupBy(identity).view.mapValues(_.length).toMap
 
   test("SSSP on 4elt matches independently computed BFS golden — SqlRunner") {
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/4elt.graph")
+    val g = GraphSource.readGmrText(spark, Fixtures("graph/4elt.graph"))
     assert(g.numVertices == 15606 && g.numEdges == 91756)
     val meta = GraphMeta(g.numVertices, source = 1L)
     checkHistogram(histOf(SqlRunner.run(spark, g.vertices, g.edges, Algorithms.Sssp, meta)))
   }
 
   test("SSSP on 4elt matches golden — LocalRunner (the auto-picked path)") {
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/4elt.graph")
+    val g = GraphSource.readGmrText(spark, Fixtures("graph/4elt.graph"))
     val meta = GraphMeta(g.numVertices, source = 1L)
     val t0 = System.nanoTime()
     val res = LocalRunner.run(spark, g.vertices, g.edges, Algorithms.Sssp, meta)
@@ -54,13 +54,13 @@ class FourEltSpec extends AnyFunSuite {
     import spark.implicits._
     val t0 = System.nanoTime()
     val viaFile = graft.engine.GmrRunner
-      .autoFile(spark, "/root/reference/graph/4elt.graph", Algorithms.Sssp,
+      .autoFile(spark, Fixtures("graph/4elt.graph"), Algorithms.Sssp,
         n => GraphMeta(n, source = 1L))
     checkHistogram(histOf(viaFile))
     info(f"autoFile 4elt SSSP wall: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
       "(BASELINE native: 0.28 s)")
     // Row-for-row equality against the cluster path, not just the histogram.
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/4elt.graph")
+    val g = GraphSource.readGmrText(spark, Fixtures("graph/4elt.graph"))
     val viaCluster = LocalRunner.run(spark, g.vertices, g.edges,
       Algorithms.Sssp, GraphMeta(g.numVertices, source = 1L))
     assert(viaFile.as("a").join(viaCluster.as("b"), "id")

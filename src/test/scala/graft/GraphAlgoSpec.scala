@@ -12,7 +12,7 @@ class GraphAlgoSpec extends AnyFunSuite {
 
   test("triangle count on small.graph = 2 (DataFrame triple join)") {
     import spark.implicits._
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/small.graph")
+    val g = GraphSource.readGmrText(spark, Fixtures("graph/small.graph"))
     val n = GraphOps.triangleCount(spark, g.edges.select($"src", $"dst"))
       .collect()(0).getLong(0)
     assert(n == 2) // {1,2,3} and {1,4,5}, FIXTURES.md §1
@@ -40,7 +40,7 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("GraphX TriangleCount agrees (cross-engine check)") {
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/small.graph")
+    val g = GraphSource.readGmrText(spark, Fixtures("graph/small.graph"))
     val edgeRdd = g.edges.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
     val graph = Graph.fromEdges(edgeRdd, ())
       .partitionBy(PartitionStrategy.RandomVertexCut)
@@ -210,9 +210,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     // report a bare hash mismatch with no hint at the cause. Pin the
     // margin HERE, on the gate's own sf0.01 data, with the cause in the
     // failure message: if this fires, raise kcoreOracle's `rounds`.
-    GraphOps.kcore(spark, GraphOps.edges(spark, "/root/testdata/sf0.01"),
-      k = 3).count()
-    val rounds = GraphOps.lastPeelRounds
+    val rounds = GraphOps.kcoreRun(spark,
+      GraphOps.edges(spark, "/root/testdata/sf0.01"), k = 3).changedRounds
     assert(rounds <= 12,
       s"k-core peel took $rounds rounds at sf0.01 — the g15 DuckDB oracle " +
         s"unrolls only 24; raise kcoreOracle(rounds = ...) before trusting " +
@@ -294,9 +293,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     // Same empirical-bound pin as g15's: the g21 oracle unrolls 10 truss
     // rounds; if the gate-scale data ever needs more than half that,
     // fail HERE with the cause instead of a bare oracle hash mismatch.
-    GraphOps.ktruss(spark, GraphOps.edges(spark, "/root/testdata/sf0.01"),
-      k = 3).count()
-    val rounds = GraphOps.lastPeelRounds
+    val rounds = GraphOps.ktrussRun(spark,
+      GraphOps.edges(spark, "/root/testdata/sf0.01"), k = 3).changedRounds
     assert(rounds <= 5,
       s"k-truss peel took $rounds rounds at sf0.01 — the g21 DuckDB oracle " +
         s"unrolls only 10; raise ktrussOracle(rounds = ...) before trusting " +

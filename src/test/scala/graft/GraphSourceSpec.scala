@@ -9,7 +9,7 @@ class GraphSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("small.graph: header counts, vertex set, edge count") {
-    val g = GraphSource.readGmrText(spark, "/root/reference/graph/small.graph")
+    val g = GraphSource.readGmrText(spark, Fixtures("graph/small.graph"))
     assert(g.numVertices == 10)
     assert(g.numEdges == 22)
     assert(g.vertices.count() == 10)

@@ -1,0 +1,87 @@
+package graft
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.algos.{Algorithms, TypedAlgorithms}
+import graft.engine.{GraphMeta, SqlRunner, TypedRunner}
+import graft.graphs.{GraphOps, Mst, Scc}
+
+/** Block ownership of the fixpoint loops: once a call's result is
+  * materialized, every RDD the call persisted must be one the result's
+  * plan still reads (directly or through lineage). Anything else is a
+  * block the call leaked into the session.
+  */
+class LeakSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** A 300-vertex random digraph: cycles, multi-round peels, hubs. */
+  private def edges: DataFrame = {
+    import spark.implicits._
+    spark.range(0, 1500)
+      .select(pmod(xxhash64($"id"), lit(300L)).as("src"),
+        pmod(xxhash64($"id" + 7919L), lit(300L)).as("dst"))
+      .filter($"src" =!= $"dst")
+  }
+
+  private def canon: DataFrame = {
+    import spark.implicits._
+    edges.select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
+      .distinct()
+  }
+
+  private def lineage(r: RDD[_]): Seq[RDD[_]] =
+    r +: r.dependencies.flatMap(d => lineage(d.rdd))
+
+  /** Persisted RDDs `call` leaves behind that its result does not read. */
+  private def leaked(call: => Dataset[_]): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val result = call
+    result.write.format("noop").mode("overwrite").save()
+    val read = result.queryExecution.analyzed
+      .collect { case l: LogicalRDD => l.rdd }.flatMap(lineage).map(_.id).toSet
+    sc.getPersistentRDDs.keySet.toSet -- before -- read
+  }
+
+  private val calls: Seq[(String, () => Dataset[_])] = Seq(
+    "SqlRunner.runWithStats" -> (() => {
+      import spark.implicits._
+      val e = edges.withColumn("weight", lit(1.0))
+      SqlRunner.runWithStats(spark, spark.range(0, 300).select($"id"), e,
+        Algorithms.Sssp, GraphMeta(300L, source = 0L))._1
+    }),
+    "TypedRunner.run (g18's shape)" -> (() => {
+      import spark.implicits._
+      val sym = GraphOps.symmetrize(spark, edges, dropSelfLoops = true)
+        .withColumn("weight", lit(1.0))
+      TypedRunner.run(spark, sym.select($"src".as("id")).distinct(), sym,
+        TypedAlgorithms.TrianglesPerMidVertex, GraphMeta(0L))
+    }),
+    "GraphOps.coreness" -> (() => GraphOps.coreness(spark, edges)),
+    "GraphOps.kcore" -> (() => GraphOps.kcore(spark, edges, k = 3)),
+    "GraphOps.ktruss" -> (() => GraphOps.ktruss(spark, edges, k = 3)),
+    "GraphOps.maximalMatchingRun" ->
+      (() => GraphOps.maximalMatchingRun(spark, edges).pairs),
+    "GraphOps.maximalIndependentSetRun" ->
+      (() => GraphOps.maximalIndependentSetRun(spark, edges).members),
+    "GraphOps.distributedColoringRun" ->
+      (() => GraphOps.distributedColoringRun(spark, canon).colors),
+    "Mst.boruvka" -> (() => {
+      import spark.implicits._
+      Mst.boruvka(spark, canon.withColumn("w",
+        $"a".cast("double") + $"b".cast("double") / 1000.0))
+    }),
+    "Scc.sccEngine" -> (() => Scc.sccEngine(spark, edges)),
+  )
+
+  calls.foreach { case (name, call) =>
+    test(s"$name leaves only blocks its result reads") {
+      val left = leaked(call())
+      assert(left.isEmpty, s"$name leaked persisted RDDs ${left.toSeq.sorted}")
+    }
+  }
+}

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference-CLI facade: same algorithm names, same graph files. */
 class MainSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val small = "/root/reference/graph/small.graph"
+  private def small = Fixtures("graph/small.graph")
 
   test("CLI sssp on small.graph reproduces the hand golden") {
     val got = Main.run(spark, "sssp", small)
@@ -42,6 +42,8 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("unknown algorithm is rejected") {
-    intercept[IllegalArgumentException](Main.run(spark, "bogus", small))
+    // Rejected before the graph is read, so the fixture need not exist.
+    intercept[IllegalArgumentException](
+      Main.run(spark, "bogus", s"${Fixtures.Root}/graph/small.graph"))
   }
 }

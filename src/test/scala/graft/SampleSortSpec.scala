@@ -15,7 +15,7 @@ class SampleSortSpec extends AnyFunSuite {
   test("distributed sort over the reference sample fixture matches golden") {
     import spark.implicits._
     val nums = spark.read
-      .text("/root/reference/sampledata/number.part.*")
+      .text(Fixtures("sampledata/number.part.*"))
       .as[String]
       .flatMap(_.trim.split("\\s+").filter(_.nonEmpty).map(_.toInt))
     val sorted = nums.orderBy($"value").collect()

@@ -12,11 +12,16 @@ class SccSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def sccOf(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  /** SCC labels plus the number of FW-BW coloring rounds the peel took. */
+  private def sccRun(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     import spark.implicits._
-    Scc.sccEngine(spark, edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val run = Scc.sccEngineRun(spark, edges.toDF("src", "dst"))
+    (run.result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      run.changedRounds)
   }
+
+  private def sccOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    sccRun(edges)._1
 
   test("cycle + tail + 2-cycle hand golden") {
     // {1,2,3} is a 3-cycle, {4,5} a 2-cycle, 3→4 bridges them.
@@ -34,19 +39,19 @@ class SccSpec extends AnyFunSuite {
     // cost one FW-BW round (two engine fixpoints) PER component; the trim
     // loop peels both chain ends per iteration and the coloring never runs.
     val n = 64L
-    val got = sccOf((1L until n).map(i => i -> (i + 1)))
+    val (got, colorRounds) = sccRun((1L until n).map(i => i -> (i + 1)))
     assert(got == (1L to n).map(i => i -> i).toMap)
-    assert(Scc.lastColorRounds == 0,
-      s"expected all-trim settle, got ${Scc.lastColorRounds} coloring rounds")
+    assert(colorRounds == 0,
+      s"expected all-trim settle, got $colorRounds coloring rounds")
   }
 
   test("cycle with pendant tails: one coloring round after trim") {
     // Tails trim away, the 3-cycle needs exactly one FW-BW round.
-    val got = sccOf(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L,
-      0L -> 1L))
+    val (got, colorRounds) = sccRun(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L,
+      3L -> 4L, 4L -> 5L, 0L -> 1L))
     assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L))
-    assert(Scc.lastColorRounds == 1,
-      s"expected 1 coloring round, got ${Scc.lastColorRounds}")
+    assert(colorRounds == 1,
+      s"expected 1 coloring round, got $colorRounds")
   }
 
   test("a 150-cycle is ONE component (propagation must outlive the 120-iter default)") {

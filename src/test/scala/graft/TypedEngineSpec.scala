@@ -18,7 +18,7 @@ class TypedEngineSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val small =
-    GraphSource.readGmrText(spark, "/root/reference/graph/small.graph")
+    GraphSource.readGmrText(spark, Fixtures("graph/small.graph"))
 
   test("typed SSSP == SqlRunner SSSP on small.graph") {
     import spark.implicits._
