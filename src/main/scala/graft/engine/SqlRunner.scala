@@ -1,6 +1,14 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 /** DataFrame executor for [[GmrAlgorithm]] — the reference's iteration driver
@@ -11,12 +19,20 @@ import org.apache.spark.sql.functions._
   *               replaces the sort+run-length-group; hash agg needs no sort)
   *   update    = vertices ⟕ aggregate             (O11: merge + convergence)
   *
-  * The rounds run through [[Fixpoint]]. Per-iteration driver cost is ONE
-  * action (the changed-count, ≙ the reference's piggybacked Allgather
-  * convergence exchange, igmr.cpp:137-149). `localCheckpoint` truncates
-  * lineage every round — without it the plan doubles per iteration and
-  * optimizer time dominates long before any realistic scale. Vertices carry
-  * their static out-degree so PageRank-style messages need no extra join.
+  * Like the reference's compiled map→sort→reduce, the round is PREPARED
+  * once: round 1 is built as a Dataset and planned, and every round —
+  * round 1 included — executes a fresh copy of that physical plan with its
+  * vertex-state scans rebound to the previous round's checkpoint
+  * ([[rebind]]). No round is analyzed, optimized or planned again. The
+  * rounds run through [[Fixpoint]]; each marks its output for local
+  * checkpoint (lineage stays one round deep) and runs ONE action, a
+  * one-stage count of the changed rows that also materializes the
+  * checkpoint (≙ the reference's piggybacked Allgather convergence
+  * exchange, igmr.cpp:137-149). Pull mode adds the senders' broadcast job.
+  * The vertex state is seeded hash-partitioned on id at the loop's
+  * partition count, the layout each round's update join keeps, so the one
+  * plan fits every round. Vertices carry their static out-degree so
+  * PageRank-style messages need no extra join.
   */
 object SqlRunner {
 
@@ -56,7 +72,8 @@ object SqlRunner {
   @volatile var lastSaltedHubs: Int = 0
   @volatile var lastSaltFactor: Int = 1
 
-  /** First-superstep executed plan of the most recent run, captured only
+  /** The prepared round plan of the most recent run (round 1's executed
+    * plan, the template every round copies), captured only
     * under -Dgraft.engine.capturePlan=true — PlanAuditSpec inspects the
     * scatter join structurally (zero-exchange edge side, salted keys)
     * without paying plan retention on production runs.
@@ -318,36 +335,65 @@ object SqlRunner {
       // column SSSP/WCC/max-color never evaluate. When skipped, an
       // explicit count() keeps the edge-cache materialization in SETUP
       // (deg used to force it), so loop seconds stay a loop measurement.
-      val verts0 =
+      //
+      // The vertex state is seeded HASH-PARTITIONED on id at the partition
+      // count a round's update join leaves it in, so round 1's plan already
+      // has the steady-state shape (no exchange on the vertex side) and
+      // serves as the template for every round. The join takes the larger
+      // layout of its two sides: in unsalted pull mode the messages keep
+      // the dst-partitioned cache's layout (no exchange before the
+      // aggregate), otherwise they are shuffled to `parts`.
+      val stateParts = if (pullMode && !salted) math.max(parts, cacheParts) else parts
+      val init = {
+        val v = vertices.select(nid($"id").as("id"))
         if (alg.usesOutDegree) {
           val deg = e.groupBy($"src")
             .agg(count(lit(1)).cast("int").as("outdeg"))
-          vertices.select(nid($"id").as("id"))
-            .join(deg, $"id" === deg("src"), "left")
+          v.join(deg, $"id" === deg("src"), "left")
             .select($"id", coalesce($"outdeg", lit(0)).as("outdeg"),
               alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
-            .localCheckpoint()
         } else {
           e.count()
-          vertices.select(nid($"id").as("id"))
-            .select($"id", lit(0).as("outdeg"),
-              alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
-            .localCheckpoint()
+          v.select($"id", lit(0).as("outdeg"),
+            alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
         }
+      }.repartition(stateParts, $"id")
+      val initRows = init.queryExecution.toRdd.map(_.copy())
+      val initOut = init.queryExecution.analyzed.output
+      // Every state holds one row per vertex: the seed's estimate serves
+      // them all.
+      val stateStats = {
+        val st = init.queryExecution.optimizedPlan.stats
+        Statistics(st.sizeInBytes, st.rowCount)
+      }
+      val verts0 = checkpoint(spark, initOut, initRows,
+        HashPartitioning(initOut.filter(_.name == "id"), stateParts), stateStats)
+      initRows.count() // materialized in setup, as the loop's input
 
       val tLoop = System.nanoTime()
-      val run = Fixpoint(verts0, alg.maxIter) { (verts, iter) =>
+      // THE ROUND, planned once: round 1's join→agg→join Dataset over the
+      // seed state, built and planned here and never executed itself. Every
+      // round runs a fresh copy of this physical plan with its vertex-state
+      // scans rebound to the current checkpoint ([[rebind]]) — the
+      // reference's compiled map→sort→reduce rerun per iteration, with no
+      // per-round analysis, optimization or planning.
+      val template = {
+        val verts = verts0
         val senders0 = if (alg.activeMessaging) verts.filter($"changed") else verts
         val senders1 = senders0.filter(alg.sendCondCol($"value"))
         // Classic salted path: a sender that is a hub fans out to every
         // salt shard of its own edge list; everyone else probes shard 0.
         // The fan-out adds ≤ |hub∩senders|·(saltF−1) rows to the SMALL
-        // relation. Pull mode never fans senders out — its salt is pure
-        // cache layout.
+        // relation, shuffled here on both scatter keys — the exchange the
+        // planner adds itself for a multi-partition cache, written out so
+        // that a one-partition cache is not re-shuffled to match the
+        // id-partitioned senders. Pull mode never fans senders out — its
+        // salt is pure cache layout.
         val senders2 = if (!salted || pullMode) senders1 else
           senders1.withColumn("salt",
             explode(when($"id".isInCollection(hubLits), allSalts)
               .otherwise(array(lit(0)))))
+            .repartition(parts, $"id", $"salt")
         // SENDER-SIDE MESSAGE PRECOMPUTE (guide §2.3: shuffle fewer bytes,
         // aggregate before you shuffle — applied to the scatter side). When
         // the message never reads the edge weight (usesWeight=false:
@@ -409,19 +455,29 @@ object SqlRunner {
             // burns all 120 rounds instead of converging.
             (!isnan($"value" - $"old") &&
               abs($"value" - $"old") > alg.epsilon).as("changed"))
-        // Captured from the PRE-checkpoint frame: the checkpointed Dataset
-        // plans as a bare LogicalRDD scan; `updated` carries the real
-        // join→agg→join round plan (planning only — nothing re-executes).
-        if (iter == 1 && sys.props.get("graft.engine.capturePlan").contains("true"))
-          lastRoundPlan = Some(updated.queryExecution.executedPlan)
+        updated.queryExecution.executedPlan
+      }
+      if (sys.props.get("graft.engine.capturePlan").contains("true"))
+        lastRoundPlan = Some(template)
+      if (template.outputPartitioning.numPartitions != stateParts)
+        throw new IllegalStateException(s"the round re-lays the ${stateParts}-" +
+          s"partition vertex state out as ${template.outputPartitioning}:\n$template")
+      val changedAt = template.output.indexWhere(_.name == "changed")
+      val run = Fixpoint(verts0, alg.maxIter) { (verts, _) =>
         // Lazy: the changed-count materializes the checkpoint in the same
-        // job, halving the per-superstep job count. Fixpoint then frees the
-        // superseded round's checkpoint: 120 rounds of leaked vertex state
-        // is 120×|V| rows of memory pressure, and the resulting GC pauses
-        // were measured dominating round time at 4M vertices. The count
-        // stays in this file: tracers mark round ends by its call site.
-        val next = updated.localCheckpoint(eager = false)
-        Fixpoint.Step(next, next.filter($"changed").count())
+        // job — one stage, as the count reads the round's rows directly
+        // instead of planning an aggregate over the checkpoint. Fixpoint
+        // then frees the superseded round's checkpoint: 120 rounds of
+        // leaked vertex state is 120×|V| rows of memory pressure, and the
+        // resulting GC pauses were measured dominating round time at 4M
+        // vertices. The count stays in this file: tracers mark round ends
+        // by its call site.
+        val rows = GraftFrames.execute(spark,
+          rebind(template, initRows, stateRdd(verts))).map(_.copy())
+        val next = checkpoint(spark, template.output, rows,
+          template.outputPartitioning, stateStats)
+        Fixpoint.Step(next,
+          rows.filter(r => !r.isNullAt(changedAt) && r.getBoolean(changedAt)).count())
       } { verts =>
         // Re-widen narrowed ids: the surface schema is (id LONG, value).
         verts.select(
@@ -438,5 +494,53 @@ object SqlRunner {
       (run.result, RunStats(run.rounds.length, loopSecs, hubs.length, saltF,
         run.rounds.map(_.changed)))
     }
+  }
+
+  /** `rows` marked for local checkpoint — materialized by the first job
+    * that reads them — as a frame of `output` laid out by `partitioning`.
+    */
+  private def checkpoint(spark: SparkSession, output: Seq[Attribute],
+                         rows: RDD[InternalRow], partitioning: Partitioning,
+                         stats: Statistics): DataFrame = {
+    rows.localCheckpoint()
+    GraftFrames.ofRdd(spark, output, rows, partitioning, stats)
+  }
+
+  /** The vertex-state checkpoint a state frame scans. */
+  private def stateRdd(state: DataFrame): RDD[InternalRow] =
+    state.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+      .getOrElse(throw new IllegalStateException(
+        s"superstep state is not a checkpoint scan:\n${state.queryExecution.analyzed}"))
+
+  /** A fresh, executable copy of the prepared round plan `template` whose
+    * scans of `from` read `to` instead. Every operator is copied, so no
+    * exchange, broadcast or metric of one round survives into the next,
+    * and the template itself never runs. Fails loudly on a plan a rebind
+    * cannot serve: an adaptive plan (it re-plans itself as stages finish,
+    * so its copy would run stale decisions), a reused exchange (its copy
+    * would still point into the template), no scan of `from`, or a `to`
+    * whose partition count differs from the layout the plan was built on.
+    */
+  private[engine] def rebind(template: SparkPlan, from: RDD[_],
+                             to: RDD[InternalRow]): SparkPlan = {
+    template.foreach {
+      case p @ (_: AdaptiveSparkPlanExec | _: ReusedExchangeExec) =>
+        throw new IllegalStateException(
+          s"cannot rebind a plan containing ${p.nodeName}:\n$template")
+      case _ =>
+    }
+    var matched = 0
+    val plan = template.clone().transform {
+      case s: RDDScanExec if s.rdd eq from =>
+        if (to.getNumPartitions != from.getNumPartitions)
+          throw new IllegalStateException(s"rebind of RDD ${from.id} " +
+            s"(${from.getNumPartitions} partitions) to RDD ${to.id} " +
+            s"(${to.getNumPartitions} partitions) would break the plan's layout")
+        matched += 1
+        s.copy(rdd = to)
+    }
+    if (matched == 0)
+      throw new IllegalStateException(s"no scan of RDD ${from.id} to rebind in:\n$template")
+    plan
   }
 }

@@ -1,0 +1,36 @@
+package org.apache.spark.sql
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+
+/** The few lines of graft that need Spark's `private[sql]` API: running a
+  * prepared physical plan under its session, and wrapping rows it produced
+  * as a DataFrame without planning them again.
+  */
+object GraftFrames {
+
+  private def classicSession(spark: SparkSession): classic.SparkSession =
+    spark.asInstanceOf[classic.SparkSession]
+
+  /** `plan`'s RDD, built with `spark` active so every conf the operators
+    * read at execution comes from that session.
+    */
+  def execute(spark: SparkSession, plan: SparkPlan): RDD[InternalRow] =
+    classicSession(spark).withActive(plan.execute())
+
+  /** A DataFrame scanning `rdd`, whose rows are `output`, laid out by
+    * `partitioning` and estimated by `stats` — a checkpoint as
+    * `Dataset.localCheckpoint` would wrap it. The attributes are fresh, so
+    * the frame shares no ids with the plan that produced the rows.
+    */
+  def ofRdd(spark: SparkSession, output: Seq[Attribute], rdd: RDD[InternalRow],
+            partitioning: Partitioning, stats: Statistics): DataFrame = {
+    val s = classicSession(spark)
+    classic.Dataset.ofRows(s, LogicalRDD(output, rdd, partitioning, Nil,
+      isStreaming = false)(s, Some(stats)).newInstance())
+  }
+}

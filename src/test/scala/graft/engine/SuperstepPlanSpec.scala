@@ -1,0 +1,269 @@
+package graft.engine
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.algos.Algorithms
+
+/** SqlRunner's prepared round: one physical plan, planned in round 1 and
+  * re-executed every round with its vertex-state scans rebound to the
+  * current checkpoint. Pins that the rebound rounds compute exactly what
+  * LocalRunner's in-memory loop does, that planning does not grow with the
+  * round count, that the changed count is a one-stage job, and that the
+  * rebind refuses plans it cannot serve.
+  */
+class SuperstepPlanSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** 600 vertices on a ring with one random chord each (≈ 10 SSSP rounds
+    * from 0), plus vertex 600 — reached from 3 — whose 10,000 out-edges
+    * into a 100-vertex cluster make it a hub once the threshold is lowered.
+    * Weights 1–9.
+    */
+  private lazy val graph: (DataFrame, DataFrame) = {
+    val s = spark
+    import s.implicits._
+    val n = 600L
+    val ring = s.range(0, n).select($"id".as("src"), (($"id" + 1) % n).as("dst"))
+    val chords = s.range(0, n)
+      .select($"id".as("src"), pmod(xxhash64($"id", lit(7)), lit(n)).as("dst"))
+    val hub = s.range(0, 10000)
+      .select(lit(n).as("src"), (pmod(xxhash64($"id"), lit(100L)) + n + 1).as("dst"))
+    val cluster = s.range(n + 1, n + 101)
+      .select($"id".as("src"), pmod(xxhash64($"id", lit(11)), lit(n)).as("dst"))
+    val edges = ring.union(chords).union(hub).union(cluster)
+      .union(Seq((3L, n)).toDF("src", "dst"))
+      .filter($"src" =!= $"dst")
+      .withColumn("weight", (pmod(xxhash64($"src", $"dst"), lit(9L)) + 1).cast("double"))
+    (s.range(0, n + 101).select($"id"), edges)
+  }
+  private val meta = GraphMeta(701L, source = 0L)
+
+  /** 600k random edges over 20k vertices: the edge cache and the classic
+    * loop take 2 partitions while the vertex state alone would take 1, so
+    * the seed must follow the larger side. Vertex 1 is an out-degree hub
+    * (classic salting) and vertex 2 an in-degree hub (pull salting).
+    */
+  private lazy val wide: (DataFrame, DataFrame) = {
+    val s = spark
+    import s.implicits._
+    val nV = wideMeta.numVertices
+    (s.range(0, nV).select($"id"),
+      s.range(0, 600000)
+        .select(when($"id" % 64 === 0, lit(1L))
+            .otherwise(pmod(xxhash64($"id"), lit(nV))).as("src"),
+          when($"id" % 64 === 1, lit(2L))
+            .otherwise(pmod(xxhash64($"id" + 1000000L), lit(nV))).as("dst"))
+        .filter($"src" =!= $"dst")
+        .withColumn("weight", lit(1.0)))
+  }
+  private val wideMeta = GraphMeta(20000L, source = 3L)
+
+  private def values(df: DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** The changed-vertex count of every round of LocalRunner's loop: round
+    * k's states are LocalRunner's results capped at k − 1 and k rounds.
+    */
+  private def localTrace(alg: GmrAlgorithm, rounds: Int,
+                         g: (DataFrame, DataFrame) = graph,
+                         m: GraphMeta = meta): Seq[Long] = {
+    val (verts, edges) = g
+    def capped(k: Int): Map[Long, Double] =
+      values(LocalRunner.run(spark, verts, edges,
+        new DelegatingGmrAlgorithm(alg) { override def maxIter: Int = k }, m))
+    val states = (0 to rounds).map(capped)
+    states.zip(states.tail).map { case (before, after) =>
+      before.count { case (id, old) =>
+        val d = after(id) - old
+        !d.isNaN && math.abs(d) > alg.epsilon
+      }.toLong
+    }
+  }
+
+  private def withProps[T](props: (String, String)*)(body: => T): T = {
+    props.foreach { case (k, v) => sys.props.put(k, v) }
+    try body finally props.foreach { case (k, _) => sys.props.remove(k) }
+  }
+
+  private val modes: Seq[(String, Seq[(String, String)])] = Seq(
+    "pull" -> Nil,
+    "classic" -> Seq("graft.engine.broadcastPullMaxVertices" -> "0"),
+    "salted" -> Seq("graft.engine.broadcastPullMaxVertices" -> "0",
+      "graft.engine.hubMinDegree" -> "5000"))
+
+  private val algorithms: Seq[(String, GmrAlgorithm)] = Seq(
+    "SSSP" -> Algorithms.UnitWeighted(Algorithms.Sssp),
+    "weighted SSSP" -> Algorithms.Sssp,
+    "PageRank" -> Algorithms.PageRank(0.85),
+    "WCC" -> Algorithms.Wcc)
+
+  algorithms.foreach { case (algName, alg) =>
+    test(s"$algName: rebound rounds match LocalRunner's rows and changed " +
+        "trace in pull, classic and salted mode") {
+      val (verts, edges) = graph
+      val local = values(LocalRunner.run(spark, verts, edges, alg, meta))
+      var trace: Seq[Long] = Nil
+      modes.foreach { case (mode, props) =>
+        val (got, stats) = withProps(props: _*) {
+          SqlRunner.runWithStats(spark, verts, edges, alg, meta)
+        }
+        val rows = values(got)
+        assert(stats.iterations >= 5, s"$mode: only ${stats.iterations} rounds")
+        assert((stats.saltedHubs > 0) == (mode == "salted"),
+          s"$mode: ${stats.saltedHubs} salted hubs")
+        assert(rows.keySet == local.keySet, mode)
+        rows.foreach { case (id, v) =>
+          val want = local(id)
+          assert(v == want || math.abs(v - want) <= 1e-9 * math.max(1.0, math.abs(want)),
+            s"$mode: vertex $id = $v, LocalRunner $want")
+        }
+        if (trace.isEmpty) trace = localTrace(alg, stats.iterations)
+        assert(stats.changedTrace == trace, s"$mode changed trace")
+      }
+    }
+  }
+
+  test("multi-partition layouts: SSSP rows and trace match LocalRunner in " +
+      "every mode, and unsalted rounds run exchange-free on the vertex side") {
+    val (verts, edges) = wide
+    val alg = Algorithms.UnitWeighted(Algorithms.Sssp)
+    val local = values(LocalRunner.run(spark, verts, edges, alg, wideMeta))
+    val hubs = "graft.engine.hubMinDegree" -> "5000"
+    val classic = "graft.engine.broadcastPullMaxVertices" -> "0"
+    val traces = Seq("pull" -> Nil, "pull salted" -> Seq(hubs),
+        "classic" -> Seq(classic), "classic salted" -> Seq(classic, hubs))
+      .map { case (mode, props) =>
+        val (got, stats) = withProps(("graft.engine.capturePlan" -> "true") +: props: _*) {
+          SqlRunner.runWithStats(spark, verts, edges, alg, wideMeta)
+        }
+        val plan = SqlRunner.lastRoundPlan.get
+        SqlRunner.lastRoundPlan = None
+        assert((stats.saltedHubs > 0) == props.contains(hubs), mode)
+        if (!props.contains(hubs)) {
+          assert(plan.outputPartitioning.numPartitions == 2, s"$mode:\n$plan")
+          val toVerts = plan.collect { case j: ShuffledHashJoinExec => j.left }
+            .flatMap(_.collect { case x: ShuffleExchangeExec => x })
+          assert(toVerts.isEmpty, s"$mode shuffles the vertex state:\n$plan")
+        }
+        assert(values(got) == local, mode)
+        stats.changedTrace
+      }
+    assert(traces.forall(_ == traces.head), traces)
+    assert(traces.head == localTrace(alg, traces.head.size, wide, wideMeta))
+  }
+
+  /** Path 0 → 1 → … → len−1 as (vertices, edges). */
+  private def path(len: Int): (DataFrame, DataFrame) = {
+    val s = spark
+    import s.implicits._
+    (s.range(0, len).select($"id"),
+      (0 until len - 1).map(i => (i.toLong, i + 1L, 1.0)).toDF("src", "dst", "weight"))
+  }
+
+  test("the round is planned once: optimizer runs do not grow with rounds") {
+    val runs = new AtomicInteger
+    object CountRuns extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = { runs.incrementAndGet(); plan }
+    }
+    val exp = spark.asInstanceOf[classic.SparkSession].experimental
+    val prev = exp.extraOptimizations
+    exp.extraOptimizations = prev :+ CountRuns
+    def optimizerRuns(len: Int): Int = {
+      val (verts, edges) = path(len)
+      runs.set(0)
+      val (got, stats) = SqlRunner.runWithStats(spark, verts, edges,
+        Algorithms.UnitWeighted(Algorithms.Sssp), GraphMeta(len.toLong, source = 0L))
+      val n = runs.get
+      assert(stats.iterations == len, s"path of $len: ${stats.iterations} rounds")
+      assert(values(got) == (0 until len).map(i => i.toLong -> i.toDouble).toMap)
+      n
+    }
+    try {
+      val (short, long) = (optimizerRuns(4), optimizerRuns(12))
+      assert(short > 0, "the counting rule never ran")
+      assert(short == long, s"4 rounds ran the optimizer $short times, 12 rounds $long")
+    } finally exp.extraOptimizations = prev
+  }
+
+  test("pull mode: every round's changed count is a one-stage job") {
+    // On a multi-partition state, so no round can pass by skipping a merge
+    // of partial counts. Per job: its call site and the stages that ran in it. A job also
+    // lists the skipped stages of inputs computed earlier (the edge cache);
+    // only stages that complete did work in it.
+    val jobOf = new ConcurrentHashMap[Int, Int]
+    val sites = new ConcurrentHashMap[Int, String]
+    val ran = new ConcurrentHashMap[Int, Int]
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(jobOf.put(_, e.jobId))
+        sites.put(e.jobId, e.stageInfos.maxBy(_.stageId).name)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        ran.merge(jobOf.get(e.stageInfo.stageId), 1, _ + _)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val (verts, edges) = wide
+    spark.sparkContext.addSparkListener(listener)
+    val stats = try {
+      val (_, stats) = SqlRunner.runWithStats(spark, verts, edges,
+        Algorithms.UnitWeighted(Algorithms.Sssp), wideMeta)
+      // The bus delivers in order: once a later job's end arrives, every
+      // event of the run has.
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      def marked = sites.asScala.exists { case (job, site) =>
+        site.startsWith("count at SuperstepPlanSpec") && ended.contains(job)
+      }
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
+      stats
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // Setup counts share the call site; the rounds' are the last ones.
+    val counts = sites.asScala.toSeq.sortBy(_._1)
+      .collect { case (job, site) if site.startsWith("count at SqlRunner") => job }
+      .takeRight(stats.iterations)
+    val stages = counts.map(j => j -> ran.getOrDefault(j, 0))
+    assert(counts.size == stats.iterations && stages.forall(_._2 == 1), stages)
+  }
+
+  test("rebind refuses an adaptive plan, a plan without the scan, and a " +
+      "different partition count") {
+    val s = spark
+    import s.implicits._
+    val adaptive = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "true")) {
+      s.range(100).groupBy(($"id" % 3).as("k")).count().queryExecution.executedPlan
+    }
+    val ckpt = s.range(0, 100, 1, 2).select($"id", ($"id" * 2).as("v")).localCheckpoint()
+    val ckptRdd = ckpt.queryExecution.analyzed
+      .collectFirst { case l: LogicalRDD => l.rdd }.get
+    val plan = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "false")) {
+      ckpt.filter($"v" > 10).queryExecution.executedPlan
+    }
+    val same = s.range(0, 100, 1, 2).select($"id", ($"id" * 3).as("v"))
+      .queryExecution.toRdd
+    val other = s.range(0, 100, 1, 3).select($"id", $"id".as("v")).queryExecution.toRdd
+    def refused(p: => Any): String = intercept[IllegalStateException](p).getMessage
+    assert(refused(SqlRunner.rebind(adaptive, ckptRdd, same)).contains("AdaptiveSparkPlan"))
+    assert(refused(SqlRunner.rebind(plan, same, other)).contains("no scan of RDD"))
+    assert(refused(SqlRunner.rebind(plan, ckptRdd, other)).contains("partitions"))
+    // The guards leave the one legal rebind: same layout, new rows.
+    val rebound = SqlRunner.rebind(plan, ckptRdd, same).execute()
+      .map(r => r.getLong(1)).collect().sorted
+    assert(rebound.toSeq == (4 until 100).map(_ * 3L))
+  }
+}
