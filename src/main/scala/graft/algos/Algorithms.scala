@@ -30,7 +30,8 @@ object Algorithms {
       srcVal + weight
     override def sendCondCol(srcVal: Column): Column = srcVal =!= lit(Inf)
     def reduceAgg(msg: Column): Column = min(msg)
-    def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
+    def updateCol(id: Column, oldVal: Column, agg: Column,
+                  meta: GraphMeta): Column =
       when(agg.isNull, oldVal).otherwise(least(oldVal, agg))
 
     def initFn(id: Long, meta: GraphMeta): Double =
@@ -39,7 +40,8 @@ object Algorithms {
       srcVal + weight
     override def sendCondFn(srcVal: Double): Boolean = !srcVal.isPosInfinity
     def mergeFn(a: Double, b: Double): Double = math.min(a, b)
-    def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
+    def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+                 meta: GraphMeta): Double =
       agg.fold(oldVal)(math.min(oldVal, _))
   }
 
@@ -74,33 +76,83 @@ object Algorithms {
     * (gmr.h:319 — a partition-count-dependent bug, SURVEY §2.2) is NOT
     * reproduced: we use global n, the README §4.1 formula.
     * Standard mode: `PageRank(0.85)` with 1/n init.
+    * Personalized mode (`personalized = true`, random walk with restart):
+    * all mass starts at `meta.source` and the (1-d) teleport returns there,
+    * `PR' = d·Σ(PR(u)/outdeg(u)) + (1-d)·[v = source]`; `n` is unused.
     */
   final case class PageRank(d: Double, uniformInit: Boolean = false,
-                            fixedIters: Option[Int] = None)
+                            fixedIters: Option[Int] = None,
+                            personalized: Boolean = false)
       extends GmrAlgorithm {
-    val name = s"pagerank_d$d"
+    val name = if (personalized) s"ppr_d$d" else s"pagerank_d$d"
     override val activeMessaging = false
     override val usesWeight = false // msg = value/outdeg — weight unread
     // A fixed iteration count (≙ algoIterNum, gmr.h:121) disables the ε-stop.
     override val maxIter: Int = fixedIters.getOrElse(120)
     override val epsilon: Double = if (fixedIters.isDefined) -1.0 else 1e-4
 
+    /** The teleport term, `(1-d)/n` or `(1-d)·[id = source]`. */
+    private def restartCol(id: Column, meta: GraphMeta): Column =
+      if (personalized) when(id === meta.source, 1.0 - d).otherwise(0.0)
+      else lit((1.0 - d) / meta.numVertices)
+    private def restartFn(id: Long, meta: GraphMeta): Double =
+      if (personalized) { if (id == meta.source) 1.0 - d else 0.0 }
+      else (1.0 - d) / meta.numVertices
+
     def initCol(id: Column, meta: GraphMeta): Column =
-      if (uniformInit) lit(1.0) else lit(1.0 / meta.numVertices)
+      if (personalized) when(id === meta.source, 1.0).otherwise(0.0)
+      else if (uniformInit) lit(1.0) else lit(1.0 / meta.numVertices)
     def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column =
       srcVal / srcOutDeg
     override def sendCondCol(srcVal: Column): Column = lit(true)
     def reduceAgg(msg: Column): Column = sum(msg)
-    def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
-      lit((1.0 - d) / meta.numVertices) + lit(d) * coalesce(agg, lit(0.0))
+    def updateCol(id: Column, oldVal: Column, agg: Column,
+                  meta: GraphMeta): Column =
+      restartCol(id, meta) + lit(d) * coalesce(agg, lit(0.0))
 
     def initFn(id: Long, meta: GraphMeta): Double =
-      if (uniformInit) 1.0 else 1.0 / meta.numVertices
+      if (personalized) { if (id == meta.source) 1.0 else 0.0 }
+      else if (uniformInit) 1.0 else 1.0 / meta.numVertices
     def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double =
       srcVal / srcOutDeg
     def mergeFn(a: Double, b: Double): Double = a + b
-    def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
-      (1.0 - d) / meta.numVertices + d * agg.getOrElse(0.0)
+    def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+                 meta: GraphMeta): Double =
+      restartFn(id, meta) + d * agg.getOrElse(0.0)
+  }
+
+  /** k-core membership by peeling ([[graft.graphs.GraphOps.kcore]]) over a
+    * symmetric edge set. The value is an alive flag (1.0 / 0.0); every
+    * alive vertex sends 1.0 to each neighbour, and a vertex stays alive
+    * while it was alive and counts at least `k` alive neighbours. A vertex
+    * dies once and stays dead, so a round's changed count is the vertices
+    * it peeled and the peel depth is the rounds that changed something.
+    * Every alive vertex sends every round, and the loop is uncapped: a
+    * path peels one vertex from each end per round, past any fixed cap.
+    */
+  final case class KCore(k: Int) extends GmrAlgorithm {
+    override val activeMessaging = false
+    override val usesWeight = false // msg = 1 — weight unread
+    override val usesOutDegree = false
+    override val maxIter: Int = Int.MaxValue
+    val name = s"kcore_$k"
+
+    def initCol(id: Column, meta: GraphMeta): Column = lit(1.0)
+    def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column =
+      lit(1.0)
+    override def sendCondCol(srcVal: Column): Column = srcVal > 0.0
+    def reduceAgg(msg: Column): Column = sum(msg)
+    def updateCol(id: Column, oldVal: Column, agg: Column,
+                  meta: GraphMeta): Column =
+      when(oldVal > 0.0 && coalesce(agg, lit(0.0)) >= k, 1.0).otherwise(0.0)
+
+    def initFn(id: Long, meta: GraphMeta): Double = 1.0
+    def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double = 1.0
+    override def sendCondFn(srcVal: Double): Boolean = srcVal > 0.0
+    def mergeFn(a: Double, b: Double): Double = a + b
+    def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+                 meta: GraphMeta): Double =
+      if (oldVal > 0.0 && agg.getOrElse(0.0) >= k) 1.0 else 0.0
   }
 
   /** Forward max-color propagation — phase 1 of FW-BW-coloring SCC
@@ -118,13 +170,15 @@ object Algorithms {
     def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column =
       srcVal
     def reduceAgg(msg: Column): Column = max(msg)
-    def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
+    def updateCol(id: Column, oldVal: Column, agg: Column,
+                  meta: GraphMeta): Column =
       when(agg.isNull, oldVal).otherwise(greatest(oldVal, agg))
 
     def initFn(id: Long, meta: GraphMeta): Double = id.toDouble
     def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double = srcVal
     def mergeFn(a: Double, b: Double): Double = math.max(a, b)
-    def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
+    def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+                 meta: GraphMeta): Double =
       agg.fold(oldVal)(math.max(oldVal, _))
   }
 
@@ -142,13 +196,15 @@ object Algorithms {
     def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column =
       srcVal
     def reduceAgg(msg: Column): Column = min(msg)
-    def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
+    def updateCol(id: Column, oldVal: Column, agg: Column,
+                  meta: GraphMeta): Column =
       when(agg.isNull, oldVal).otherwise(least(oldVal, agg))
 
     def initFn(id: Long, meta: GraphMeta): Double = id.toDouble
     def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double = srcVal
     def mergeFn(a: Double, b: Double): Double = math.min(a, b)
-    def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
+    def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+                 meta: GraphMeta): Double =
       agg.fold(oldVal)(math.min(oldVal, _))
   }
 
@@ -169,14 +225,16 @@ object Algorithms {
     def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column =
       srcVal + 1.0
     def reduceAgg(msg: Column): Column = max(msg)
-    def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
+    def updateCol(id: Column, oldVal: Column, agg: Column,
+                  meta: GraphMeta): Column =
       when(agg.isNull, oldVal).otherwise(greatest(oldVal, agg))
 
     def initFn(id: Long, meta: GraphMeta): Double = 0.0
     def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double =
       srcVal + 1.0
     def mergeFn(a: Double, b: Double): Double = math.max(a, b)
-    def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
+    def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+                 meta: GraphMeta): Double =
       agg.fold(oldVal)(math.max(oldVal, _))
   }
 }

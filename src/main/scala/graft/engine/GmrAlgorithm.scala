@@ -73,14 +73,15 @@ trait GmrAlgorithm extends Serializable {
   def sendCondCol(srcVal: Column): Column = lit(true)
   def reduceAgg(msg: Column): Column
   /** `agg` is null when the vertex received no message this round. */
-  def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column
+  def updateCol(id: Column, oldVal: Column, agg: Column, meta: GraphMeta): Column
 
   // ---- GraphXRunner hooks (scalars) ----
   def initFn(id: Long, meta: GraphMeta): Double
   def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double
   def sendCondFn(srcVal: Double): Boolean = true
   def mergeFn(a: Double, b: Double): Double
-  def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double
+  def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+               meta: GraphMeta): Double
 }
 
 /** Forwarding proxy over a base algorithm: every member — hooks AND tuning
@@ -103,15 +104,16 @@ class DelegatingGmrAlgorithm(protected val base: GmrAlgorithm)
     base.msgCol(srcVal, weight, srcOutDeg)
   override def sendCondCol(srcVal: Column): Column = base.sendCondCol(srcVal)
   def reduceAgg(msg: Column): Column = base.reduceAgg(msg)
-  def updateCol(oldVal: Column, agg: Column, meta: GraphMeta): Column =
-    base.updateCol(oldVal, agg, meta)
+  def updateCol(id: Column, oldVal: Column, agg: Column, meta: GraphMeta): Column =
+    base.updateCol(id, oldVal, agg, meta)
   def initFn(id: Long, meta: GraphMeta): Double = base.initFn(id, meta)
   def msgFn(srcVal: Double, weight: Double, srcOutDeg: Int): Double =
     base.msgFn(srcVal, weight, srcOutDeg)
   override def sendCondFn(srcVal: Double): Boolean = base.sendCondFn(srcVal)
   def mergeFn(a: Double, b: Double): Double = base.mergeFn(a, b)
-  def updateFn(oldVal: Double, agg: Option[Double], meta: GraphMeta): Double =
-    base.updateFn(oldVal, agg, meta)
+  def updateFn(id: Long, oldVal: Double, agg: Option[Double],
+               meta: GraphMeta): Double =
+    base.updateFn(id, oldVal, agg, meta)
 }
 
 /** Stats-driven sizing for iterative-loop shuffles.

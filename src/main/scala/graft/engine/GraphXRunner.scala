@@ -125,8 +125,8 @@ object GraphXRunner {
         alg.mergeFn,
         TripletFields.Src)
       val prev = g
-      g = g.outerJoinVertices(msgs) { (_, attr, m) =>
-        val nv = alg.updateFn(attr.value, m, meta)
+      g = g.outerJoinVertices(msgs) { (id, attr, m) =>
+        val nv = alg.updateFn(id, attr.value, m, meta)
         val delta = math.abs(nv - attr.value)
         VAttr(nv, delta > alg.epsilon, attr.outdeg) // NaN (inf-inf) => false
       }.cache()

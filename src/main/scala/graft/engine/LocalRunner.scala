@@ -23,29 +23,47 @@ import scala.collection.mutable
   */
 object LocalRunner {
 
-  /** Superstep-loop wall seconds / iteration count of the LAST [[csrLoop]]
-    * in this JVM (CSR build and input packing excluded) — written from
-    * inside the loop task, valid under local[*] where executor threads
-    * share the JVM. Consumer: Bench's b02 sidecar, which captures the pair
-    * immediately after the anchor runs (its strictly-sequential protocol),
-    * so later small-graph queries overwriting the volatiles can't race it.
+  /** Superstep-loop wall seconds / iteration count of the LAST
+    * [[runWithStats]] in this JVM (CSR build and input packing excluded),
+    * copied from its [[SqlRunner.RunStats]]. Consumer: Bench's b02 sidecar,
+    * which captures the pair immediately after the anchor runs (its
+    * strictly-sequential protocol), so later runs overwriting the volatiles
+    * can't race it.
     */
   @volatile private[graft] var lastLoopSeconds: Double = 0.0
   @volatile private[graft] var lastIterations: Int = 0
 
-  /** Run `alg` in a single task; returns (id, value). */
+  /** Run `alg` in a single task; returns materialized (id, value) rows. */
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-          alg: GmrAlgorithm, meta: GraphMeta): DataFrame = {
+          alg: GmrAlgorithm, meta: GraphMeta): DataFrame =
+    runWithStats(spark, vertices, edges, alg, meta)._1
+
+  /** [[run]] plus this call's own [[SqlRunner.RunStats]], carried out of
+    * the loop task by an accumulator registered for this call alone.
+    */
+  def runWithStats(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
+                   alg: GmrAlgorithm, meta: GraphMeta)
+      : (DataFrame, SqlRunner.RunStats) = {
     import spark.implicits._
+    val stats = spark.sparkContext.collectionAccumulator[SqlRunner.RunStats](
+      s"${alg.name} loop stats")
     // coalesce(1) deliberately collapses the upstream scan into the loop
     // task: at the graph sizes that reach this runner a single-task parse
     // beats a repartition(1) exchange (measured 1.0 s vs 2.4 s warm on
     // 4elt) — the exchange's 32-task scan + shuffle overhead exceeds the
-    // parse itself.
-    packed(vertices, edges).coalesce(1).mapPartitions { rows =>
+    // parse itself. The eager checkpoint runs that task, once.
+    val out = packed(vertices, edges).coalesce(1).mapPartitions { rows =>
       val (vertIds, srcs, dsts, wgts) = unpack(rows)
-      csrLoop(vertIds, srcs, dsts, wgts, alg, meta)
-    }.toDF("id", "value")
+      val (values, st) = csrLoop(vertIds, srcs, dsts, wgts, alg, meta)
+      stats.add(st)
+      values
+    }.toDF("id", "value").localCheckpoint()
+    // No partition, no task: the empty graph ran no round.
+    val st = if (stats.value.isEmpty) SqlRunner.RunStats(0, 0.0, 0, 1, Nil)
+      else stats.value.get(0)
+    lastLoopSeconds = st.loopSeconds
+    lastIterations = st.iterations
+    (out, st)
   }
 
   /** Vertices and edges as ONE relation (kind 0 = vertex row, kind 1 =
@@ -74,12 +92,14 @@ object LocalRunner {
 
   /** The CSR build + superstep loop — same scalar algebra as the distributed
     * runners (active-set send, merge, update, |Δ|>ε), shared by the
-    * single-task path above and [[GmrRunner]]'s driver tier.
+    * single-task path above and [[GmrRunner]]'s driver tier. Returns the
+    * (id, value) rows and the loop's [[SqlRunner.RunStats]] (CSR build
+    * excluded from its seconds).
     */
   private[engine] def csrLoop(vertIds: Array[Long], srcs: Array[Long],
                               dsts: Array[Long], wgts: Array[Double],
                               alg: GmrAlgorithm, meta: GraphMeta)
-      : Iterator[(Long, Double)] = {
+      : (Iterator[(Long, Double)], SqlRunner.RunStats) = {
     val n = vertIds.length
     val idx = new mutable.LongMap[Int](n * 2)
     var i = 0
@@ -105,6 +125,11 @@ object LocalRunner {
 
     val value = Array.tabulate(n)(j => alg.initFn(vertIds(j), meta))
     val loopT0 = System.nanoTime()
+    val trace = Seq.newBuilder[Long]
+    def result(iterations: Int) =
+      ((0 until n).iterator.map(j => (vertIds(j), value(j))),
+        SqlRunner.RunStats(iterations, (System.nanoTime() - loopT0) / 1e9,
+          0, 1, trace.result()))
 
     // Frontier path: when a no-message update is the identity, only last
     // round's changed vertices can send and only actual receivers can
@@ -146,7 +171,7 @@ object LocalRunner {
         while (ri < rLen) {
           val v = receivers(ri)
           val old = value(v)
-          val nv = alg.updateFn(old, Some(msg(v)), meta)
+          val nv = alg.updateFn(vertIds(v), old, Some(msg(v)), meta)
           value(v) = nv
           // Java NaN compares false (|inf-inf| from an unreachable merge
           // stays "unchanged"), matching the SQL path's isnan guard.
@@ -156,10 +181,9 @@ object LocalRunner {
         }
         val t = frontier; frontier = spare; spare = t
         fLen = nf
+        trace += nf
       }
-      lastLoopSeconds = (System.nanoTime() - loopT0) / 1e9
-      lastIterations = iter
-      return (0 until n).iterator.map(j => (vertIds(j), value(j)))
+      return result(iter)
     }
 
     var changed = Array.fill(n)(true)
@@ -189,17 +213,17 @@ object LocalRunner {
       changedCount = 0
       var u2 = 0
       while (u2 < n) {
-        val nv = alg.updateFn(value(u2), if (hasMsg(u2)) Some(msg(u2)) else None, meta)
+        val nv = alg.updateFn(vertIds(u2), value(u2),
+          if (hasMsg(u2)) Some(msg(u2)) else None, meta)
         val delta = math.abs(nv - value(u2))
         if (delta > alg.epsilon) { nextChanged(u2) = true; changedCount += 1 }
         value(u2) = nv
         u2 += 1
       }
       changed = nextChanged
+      trace += changedCount
     }
-    lastLoopSeconds = (System.nanoTime() - loopT0) / 1e9
-    lastIterations = iter
-    (0 until n).iterator.map(j => (vertIds(j), value(j)))
+    result(iter)
   }
 }
 
@@ -217,8 +241,10 @@ object LocalRunner {
   * All three run the same superstep algebra (EngineSpec pins them equal),
   * so the tier never shows in the answer, and all three return
   * materialized rows: a caller may release its inputs as soon as the call
-  * returns. `meta.numVertices` ≤ 0 means unknown: the driver tier takes it
-  * from the collected vertex set, the others count it.
+  * returns. Each tier also returns the call's own [[SqlRunner.RunStats]]
+  * (the local tiers report no salting). `meta.numVertices` ≤ 0 means
+  * unknown: the driver tier takes it from the collected vertex set, the
+  * others count it.
   */
 object GmrRunner {
   /** Up to this many edges the whole run stays on the driver: a graph this
@@ -249,8 +275,8 @@ object GmrRunner {
 
   def auto(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
            alg: GmrAlgorithm, meta: GraphMeta, numEdges: Long): DataFrame =
-    if (numEdges <= DriverEdgeThreshold) onDriver(spark, vertices, edges, alg, meta)
-    else offDriver(spark, vertices, edges, alg, meta, numEdges)
+    (if (numEdges <= DriverEdgeThreshold) onDriver(spark, vertices, edges, alg, meta)
+    else offDriver(spark, vertices, edges, alg, meta, numEdges))._1
 
   /** [[auto]] over the graph whose vertex set is the endpoints of
     * `edges(src, dst, weight)` plus `extraVertices` — the shape of every
@@ -263,7 +289,14 @@ object GmrRunner {
     * six ~3.3 s jobs of the near-dup pair pipeline).
     */
   def autoEdges(spark: SparkSession, edges: DataFrame, alg: GmrAlgorithm,
-                meta: GraphMeta, extraVertices: Seq[Long] = Nil): DataFrame = {
+                meta: GraphMeta, extraVertices: Seq[Long] = Nil): DataFrame =
+    autoEdgesWithStats(spark, edges, alg, meta, extraVertices)._1
+
+  /** [[autoEdges]] plus this call's own [[SqlRunner.RunStats]]. */
+  def autoEdgesWithStats(spark: SparkSession, edges: DataFrame,
+                         alg: GmrAlgorithm, meta: GraphMeta,
+                         extraVertices: Seq[Long] = Nil)
+      : (DataFrame, SqlRunner.RunStats) = {
     import spark.implicits._
     val e = edges.select($"src".cast("long").as("src"),
       $"dst".cast("long").as("dst"), $"weight").cache()
@@ -285,7 +318,7 @@ object GmrRunner {
 
   /** The driver tier of [[auto]]: collect, loop, return local rows. */
   private def onDriver(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
-               alg: GmrAlgorithm, meta: GraphMeta): DataFrame = {
+               alg: GmrAlgorithm, meta: GraphMeta): (DataFrame, SqlRunner.RunStats) = {
     val (vertIds, srcs, dsts, wgts) =
       LocalRunner.unpack(LocalRunner.packed(vertices, edges).collect().iterator)
     loopOnDriver(spark, vertIds, srcs, dsts, wgts, alg, meta)
@@ -294,26 +327,23 @@ object GmrRunner {
   /** The single-task and distributed tiers of [[auto]]. */
   private def offDriver(spark: SparkSession, vertices: DataFrame,
                         edges: DataFrame, alg: GmrAlgorithm, meta: GraphMeta,
-                        numEdges: Long): DataFrame = {
+                        numEdges: Long): (DataFrame, SqlRunner.RunStats) = {
     val m = if (meta.numVertices > 0) meta
       else meta.copy(numVertices = vertices.count())
-    // SqlRunner's result is its last superstep's checkpoint; the lazy
-    // single-task loop runs here so this tier returns rows too.
     if (numEdges <= LocalEdgeThreshold)
-      LocalRunner.run(spark, vertices, edges, alg, m).localCheckpoint()
-    else SqlRunner.run(spark, vertices, edges, alg, m, numEdges)
+      LocalRunner.runWithStats(spark, vertices, edges, alg, m)
+    else SqlRunner.runWithStats(spark, vertices, edges, alg, m, numEdges)
   }
 
   private def loopOnDriver(spark: SparkSession, vertIds: Array[Long],
                            srcs: Array[Long], dsts: Array[Long],
                            wgts: Array[Double], alg: GmrAlgorithm,
-                           meta: GraphMeta): DataFrame = {
+                           meta: GraphMeta): (DataFrame, SqlRunner.RunStats) = {
     import spark.implicits._
     val m = if (meta.numVertices > 0) meta
       else meta.copy(numVertices = vertIds.length.toLong)
-    spark.createDataset(
-      LocalRunner.csrLoop(vertIds, srcs, dsts, wgts, alg, m).toSeq)
-      .toDF("id", "value")
+    val (values, stats) = LocalRunner.csrLoop(vertIds, srcs, dsts, wgts, alg, m)
+    (spark.createDataset(values.toSeq).toDF("id", "value"), stats)
   }
 
   /** File-backed auto-dispatch: a small local file runs wholly driver-side
@@ -375,7 +405,7 @@ object GmrRunner {
         while (i < m) { sArr(i) = srcs(i) + shift; dArr(i) = dsts(i) + shift; i += 1 }
         val verts = Array.tabulate(nV.toInt)(j => j + 1L) // gap-fill: 1..|V|
         loopOnDriver(spark, verts, sArr, dArr, Array.fill(m)(1.0),
-          alg, metaFor(nV))
+          alg, metaFor(nV))._1
       } finally rd.close()
     } else {
       val g = graft.sources.GraphSource.readGmrText(spark, path)

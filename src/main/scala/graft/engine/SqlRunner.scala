@@ -446,7 +446,7 @@ object SqlRunner {
           .agg(alg.reduceAgg($"msg").as("agg"))
         val updated = verts.join(aggs.hint("SHUFFLE_HASH"), verts("id") === aggs("mdst"), "left")
           .select(verts("id"), verts("outdeg"), verts("value").as("old"),
-            alg.updateCol(verts("value"), $"agg", meta).as("value"))
+            alg.updateCol(verts("id"), verts("value"), $"agg", meta).as("value"))
           .select($"id", $"outdeg", $"value",
             // NaN-safe the SQL way: |inf-inf| is NaN, and Spark SQL orders
             // NaN GREATER than every value (unlike Java, where NaN

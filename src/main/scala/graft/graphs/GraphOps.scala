@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.algos.Algorithms
-import graft.engine.{Fixpoint, GmrRunner, GraphMeta}
+import graft.engine.{Fixpoint, GmrRunner, GraphMeta, SqlRunner}
 
 /** Graph operators over a derived edge view (FIXTURES.md §4): a deterministic
   * synthetic graph `edges(src, dst)` built from `orders` with pure modulo
@@ -15,14 +15,14 @@ import graft.engine.{Fixpoint, GmrRunner, GraphMeta}
   * These are the DataFrame-native renderings of the reference's algorithm
   * library (SURVEY §2.2): hop-count SSSP/BFS, connected components,
   * triangle count, PageRank. The vertex programs among them (BFS, WCC,
-  * critical path, PageRank, bipartite parity) are [[GmrAlgorithm]]
-  * instances run by [[GmrRunner]], which alone picks the driver,
-  * single-task or distributed tier from |E|. The remaining fixpoint
-  * operators (matching, MIS, coloring, coreness, k-core, k-truss) are
-  * join→groupBy→join rounds run by [[Fixpoint]], each round one driver
-  * action (≙ the reference's Allgather) over state `localCheckpoint`ed to
-  * truncate lineage — without it the plan doubles every round and the job
-  * dies long before 100 TB.
+  * critical path, PageRank, personalized PageRank, bipartite parity,
+  * k-core) are [[GmrAlgorithm]] instances run by [[GmrRunner]], which
+  * alone picks the driver, single-task or distributed tier from |E|. The
+  * remaining fixpoint operators (matching, MIS, coloring, coreness,
+  * k-truss) are join→groupBy→join rounds run by [[Fixpoint]], each round
+  * one driver action (≙ the reference's Allgather) over state
+  * `localCheckpoint`ed to truncate lineage — without it the plan doubles
+  * every round and the job dies long before 100 TB.
   */
 object GraphOps {
 
@@ -1180,50 +1180,39 @@ object GraphOps {
   }
 
   /** k-core decomposition by iterative peeling: drop every vertex with
-    * degree < k, recompute degrees, repeat to the fixpoint. The classic
-    * iterated-aggregate shape no single SQL statement can express (the
-    * oracle gap is documented in RegistrySpec; the spec pins hand goldens
-    * and the membership invariant). The working set only shrinks, and each
-    * round is one aggregation + two anti joins on the shrinking edge list.
+    * degree < k, recompute degrees, repeat to the fixpoint — the vertex
+    * program [[Algorithms.KCore]] over both orientations of every edge. The
+    * oracle gap (no single SQL statement iterates an aggregate to its
+    * fixpoint) is documented in RegistrySpec; the spec pins hand goldens
+    * and the membership invariant.
     *
     * @param edgeDf directed edges; treated as undirected (symmetrized).
     * @return surviving vertices with their within-core degree.
     */
   def kcore(s: SparkSession, edgeDf: DataFrame, k: Int): DataFrame =
-    kcoreRun(s, edgeDf, k).result
+    kcoreRun(s, edgeDf, k)._1
 
-  /** [[kcore]] plus its per-round records. Their `changedRounds` (the peel
-    * depth) is observability for the g15 oracle's static unroll: the
-    * 24-round SQL is exact only while the measured fixpoint stays
-    * comfortably under it, and GraphAlgoSpec pins it ≤ unroll/2 on the
-    * gate's own scale factor so a data regeneration that deepens the peel
-    * cascade fails a NAMED test instead of a bare oracle hash mismatch.
+  /** [[kcore]] plus its run's statistics. The peel depth, the nonzero
+    * entries of `changedTrace`, is observability for the g15 oracle's
+    * static unroll: the 24-round SQL is exact only while the measured
+    * fixpoint stays comfortably under it, and GraphAlgoSpec pins it
+    * ≤ unroll/2 on the gate's own scale factor so a data regeneration that
+    * deepens the peel cascade fails a NAMED test instead of a bare oracle
+    * hash mismatch.
     */
-  def kcoreRun(s: SparkSession, edgeDf: DataFrame, k: Int): Fixpoint.Run[DataFrame] = {
+  def kcoreRun(s: SparkSession, edgeDf: DataFrame,
+               k: Int): (DataFrame, SqlRunner.RunStats) = {
     import s.implicits._
-    val sym = symmetrize(s, edgeDf, dropSelfLoops = true).cache()
-    val m = sym.count()
-    withShuffleParts(s, loopParallelism(s, m)) {
-      val ue0 = sym.localCheckpoint()
-      sym.unpersist()
-      Fixpoint(ue0) { (ue, _) =>
-        val deg = ue.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
-        // Lazy: the count materializes it in the same job.
-        val bad = deg.filter($"deg" < k).select($"id")
-          .localCheckpoint(eager = false)
-        val n = Fixpoint.rows(bad)
-        Fixpoint.Step(if (n == 0) ue else ue
-          .join(bad, ue("src") === bad("id"), "left_anti")
-          .join(bad, ue("dst") === bad("id"), "left_anti")
-          .localCheckpoint(), n, Seq(bad))
-      } { ue =>
-        // Eager checkpoint: the closing aggregation must run INSIDE this
-        // block or the caller's action would replay it at the restored
-        // session-wide partition cap (32 near-empty tasks for a tiny core).
-        ue.groupBy($"src".as("id")).agg(count(lit(1)).as("core_deg"))
-          .localCheckpoint()
-      }
-    }
+    val sym = symmetrize(s, edgeDf, dropSelfLoops = true)
+    // The run caches its own copy of `sym` and releases it on return; the
+    // closing aggregate re-derives `sym` rather than holding a second
+    // cached copy through the run.
+    val (alive, stats) = GmrRunner.autoEdgesWithStats(s,
+      sym.withColumn("weight", lit(1.0)), Algorithms.KCore(k), GraphMeta())
+    val core = alive.filter($"value" > 0.0).select($"id")
+    (sym.join(core, $"src" === core("id"), "left_semi")
+      .join(core, $"dst" === core("id"), "left_semi")
+      .groupBy($"src".as("id")).agg(count(lit(1)).as("core_deg")), stats)
   }
 
   /** k-truss: the maximal subgraph in which every edge closes at least
@@ -1356,32 +1345,20 @@ object GraphOps {
     if (dropSelfLoops) sym.filter($"src" =!= $"dst") else sym
   }
 
-  /** Personalized PageRank (random walk with restart), two statically-
-    * unrolled iterations so the oracle stays plain SQL: mass teleports back
+  /** Personalized PageRank (random walk with restart), two iterations:
+    * [[Algorithms.PageRank]] in personalized mode, so mass teleports back
     * to the SOURCE instead of uniformly — the similarity-to-a-seed query
-    * built on the same damped-contribution round as [[pagerank2]].
+    * built on the same damped-contribution round as [[pagerank2]]. Emits
+    * the vertices holding mass.
     */
   def ppr2(s: SparkSession, edgeDf: DataFrame, source: Long = 1L,
            d: Double = 0.85): DataFrame = {
     import s.implicits._
-    val v = edgeDf.select($"src".as("id")).union(edgeDf.select($"dst".as("id")))
-      .distinct()
-    val deg = edgeDf.groupBy($"src").agg(count(lit(1)).cast("double").as("outdeg"))
-    val restart = when($"id" === source, lit(1.0)).otherwise(lit(0.0))
-
-    def step(rank: DataFrame): DataFrame = {
-      val contrib = edgeDf.join(rank, edgeDf("src") === rank("id"))
-        .join(deg, Seq("src"))
-        .groupBy($"dst")
-        .agg(sum($"r" / $"outdeg").as("c"))
-      v.join(contrib, v("id") === contrib("dst"), "left")
-        .select(v("id"),
-          (lit(1.0 - d) * restart + lit(d) * coalesce($"c", lit(0.0))).as("r"))
-    }
-
-    step(step(v.select($"id", restart.as("r"))))
-      .filter($"r" > 0.0)
-      .select($"id", $"r".as("rank"))
+    GmrRunner.autoEdges(s, edgeDf.select($"src", $"dst", lit(1.0).as("weight")),
+        Algorithms.PageRank(d, fixedIters = Some(2), personalized = true),
+        GraphMeta(source = source))
+      .filter($"value" > 0.0)
+      .select($"id", $"value".as("rank"))
   }
 
   /** G3 — PageRank, two iterations (d = 0.85, uniform 1/n init, no
@@ -1399,7 +1376,8 @@ object GraphOps {
 
   /** HITS (hubs & authorities, Kleinberg) — two statically-unrolled full
     * iterations (auth ← Σ in-hub, hub ← Σ out-auth, each L2-normalized)
-    * so the oracle stays plain SQL, like [[ppr2]]. Every
+    * so the oracle stays plain SQL, as the two-round PageRank oracles
+    * (g08, g17) are. Every
     * normalized vector is rounded onto the shared 9-significant-digit
     * grid on BOTH engines, so each stage starts from identical doubles
     * and float noise cannot accumulate across the four chained matvecs.

@@ -294,6 +294,21 @@ class EngineSpec extends AnyFunSuite {
     assert(close(sqlR, localR))
     assert(close(sqlR, gxR))
     assert(math.abs(sqlR.values.sum - 1.0) < 0.2) // mass ~conserved (dangling loss)
+    // Personalized mode, whose restart term reads the vertex id, and the
+    // k-core peel over the graph's symmetrization (exact integer sums).
+    val ppr = Algorithms.PageRank(0.85, fixedIters = Some(3), personalized = true)
+    val pMeta = GraphMeta(nV, source = 1L)
+    val pprR = toMap(SqlRunner.run(spark, verts, edges, ppr, pMeta))
+    assert(close(pprR, toMap(LocalRunner.run(spark, verts, edges, ppr, pMeta))))
+    assert(close(pprR, toMap(GraphXRunner.run(spark, verts, edges, ppr, pMeta))))
+    assert(pprR(1L) >= 0.15 && pprR.count(_._2 > 0) > 100)
+    val sym = edges.union(edges.select($"dst".as("src"), $"src".as("dst"), $"weight"))
+    val kcore = Algorithms.KCore(12)
+    val coreR = toMap(SqlRunner.run(spark, verts, sym, kcore, meta))
+    assert(coreR == toMap(LocalRunner.run(spark, verts, sym, kcore, meta)))
+    assert(coreR == toMap(GraphXRunner.run(spark, verts, sym, kcore, meta)))
+    val alive = coreR.count(_._2 > 0)
+    assert(alive > 0 && alive < nV, s"trivial 12-core: $alive of $nV alive")
     edges.unpersist()
   }
 
@@ -335,7 +350,8 @@ class EngineSpec extends AnyFunSuite {
     val cases = Seq[(graft.engine.GmrAlgorithm, DataFrame)](
       Algorithms.Sssp -> dag, Algorithms.Wcc -> sym,
       Algorithms.PageRank(0.85, fixedIters = Some(2)) -> dag,
-      Algorithms.LongestPath -> dag)
+      Algorithms.LongestPath -> dag, Algorithms.KCore(2) -> sym,
+      Algorithms.PageRank(0.85, fixedIters = Some(2), personalized = true) -> dag)
     cases.foreach { case (alg, e) =>
       val viaAuto = GmrRunner.auto(spark, verts, e, alg, meta, e.count())
       // |E| ≤ DriverEdgeThreshold: the result reads only driver-side rows.

@@ -131,6 +131,25 @@ class GraphAlgoSpec extends AnyFunSuite {
     assert(!got.contains(0L)) // no in-edges within 4 hops
   }
 
+  test("ppr2: two restart rounds from vertex 1, hand-traced") {
+    import spark.implicits._
+    // Out-degrees 1:2, 2:1, 3:1, 4:1; d = 0.85, all mass starts at 1.
+    //   r1: 1 = 0.15, 2 = 0.85·(1/2) = 0.425, 3 = 0.425, 4 = 0
+    //   r2: 1 = 0.15 + 0.85·0.425 = 0.51125
+    //       2 = 0.85·(0.15/2) = 0.06375
+    //       3 = 0.85·(0.15/2 + 0.425) = 0.425
+    //       4 = 0 (nothing reaches it) — dropped
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L))
+      .toDF("src", "dst")
+    val got = GraphOps.ppr2(spark, edges)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val want = Map(1L -> 0.51125, 2L -> 0.06375, 3L -> 0.425)
+    assert(got.keySet == want.keySet)
+    want.foreach { case (v, r) =>
+      assert(math.abs(got(v) - r) < 1e-12, s"vertex $v: ${got(v)} vs $r")
+    }
+  }
+
   test("HITS 2 iterations: hubs/authorities on a 3-fan, hand-traced") {
     import spark.implicits._
     // 1→3, 2→3, 4→3, 3→5: vertices 1,2,4 are pure hubs, 3 the dominant
@@ -201,6 +220,17 @@ class GraphAlgoSpec extends AnyFunSuite {
     assert(n == 120, s"3-core size drifted: $n")
   }
 
+  test("k-core: a 300-vertex path peels away in 150 rounds, past the " +
+      "default iteration cap") {
+    import spark.implicits._
+    // k = 2 strips the path's two end vertices per round: 150 rounds with
+    // a change, more than the engine's default 120-superstep cap.
+    val path = (1L until 300L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (core, stats) = GraphOps.kcoreRun(spark, path, k = 2)
+    assert(core.isEmpty)
+    assert(stats.changedTrace.count(_ > 0) == 150)
+  }
+
   test("k-core peel depth stays within half the g15 oracle's static unroll") {
     import spark.implicits._
     // The g15 oracle is a FIXED 24-round unrolled peel (kcoreOracle —
@@ -211,7 +241,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     // margin HERE, on the gate's own sf0.01 data, with the cause in the
     // failure message: if this fires, raise kcoreOracle's `rounds`.
     val rounds = GraphOps.kcoreRun(spark,
-      GraphOps.edges(spark, "/root/testdata/sf0.01"), k = 3).changedRounds
+      GraphOps.edges(spark, "/root/testdata/sf0.01"), k = 3)._2.changedTrace
+      .count(_ > 0)
     assert(rounds <= 12,
       s"k-core peel took $rounds rounds at sf0.01 — the g15 DuckDB oracle " +
         s"unrolls only 24; raise kcoreOracle(rounds = ...) before trusting " +

@@ -76,6 +76,7 @@ class LeakSpec extends AnyFunSuite {
     }),
     "GraphOps.coreness" -> (() => GraphOps.coreness(spark, edges)),
     "GraphOps.kcore" -> (() => GraphOps.kcore(spark, edges, k = 3)),
+    "GraphOps.ppr2" -> (() => GraphOps.ppr2(spark, edges)),
     "GraphOps.ktruss" -> (() => GraphOps.ktruss(spark, edges, k = 3)),
     "GraphOps.maximalMatchingRun" ->
       (() => GraphOps.maximalMatchingRun(spark, edges).pairs),

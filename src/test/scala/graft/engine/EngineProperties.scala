@@ -56,7 +56,7 @@ object EngineProperties extends Properties("graft.engine") {
     Prop.forAll(genGraph) { case (n, srcs, dsts, ws) =>
       val verts = Array.tabulate(n)(i => (i + 1).toLong)
       val got = LocalRunner.csrLoop(verts, srcs, dsts, ws,
-        Algorithms.Sssp, GraphMeta(n, source = 1L)).toMap
+        Algorithms.Sssp, GraphMeta(n, source = 1L))._1.toMap
       val want = dijkstra(n, srcs, dsts, ws, 1)
       verts.forall { v =>
         val g = got(v); val w = want(v.toInt)
@@ -71,7 +71,7 @@ object EngineProperties extends Properties("graft.engine") {
       val d2 = dsts ++ srcs
       val verts = Array.tabulate(n)(i => (i + 1).toLong)
       val got = LocalRunner.csrLoop(verts, s2, d2, Array.fill(s2.length)(1.0),
-        Algorithms.Wcc, GraphMeta(n)).toMap
+        Algorithms.Wcc, GraphMeta(n))._1.toMap
       // Union-find with min-root labels.
       val parent = Array.tabulate(n + 1)(identity)
       def find(x: Int): Int = {
@@ -93,7 +93,7 @@ object EngineProperties extends Properties("graft.engine") {
       val verts = Array.tabulate(n)(i => (i + 1).toLong)
       val got = LocalRunner.csrLoop(verts, srcs, dsts,
         Array.fill(srcs.length)(1.0), Algorithms.Bfs,
-        GraphMeta(n, source = 1L)).toMap
+        GraphMeta(n, source = 1L))._1.toMap
       // Queue BFS.
       val adj = Array.fill(n + 1)(List.empty[Int])
       for (i <- srcs.indices)
@@ -147,9 +147,44 @@ object EngineProperties extends Properties("graft.engine") {
     Prop.forAll(genDag) { case (n, srcs, dsts) =>
       val verts = Array.tabulate(n)(i => (i + 1).toLong)
       val got = LocalRunner.csrLoop(verts, srcs, dsts,
-        Array.fill(srcs.length)(1.0), Algorithms.LongestPath, GraphMeta(n)).toMap
+        Array.fill(srcs.length)(1.0), Algorithms.LongestPath, GraphMeta(n))._1.toMap
       val want = kahnLayers(n, srcs, dsts)
       verts.forall(v => got(v) == want(v.toInt).toDouble)
+    }
+
+  // Random simple undirected graph: genGraph's edges without self-loops or
+  // repeats, in both orientations (the view GraphOps.kcore peels).
+  private val genSym: Gen[(Int, Array[Long], Array[Long])] =
+    genGraph.map { case (n, srcs, dsts, _) =>
+      val es = srcs.zip(dsts).filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+      (n, es.map(_._1) ++ es.map(_._2), es.map(_._2) ++ es.map(_._1))
+    }
+
+  /** Sequential peel: delete any vertex of degree < k until none is left. */
+  private def peel(n: Int, srcs: Array[Long], dsts: Array[Long],
+                   k: Int): Array[Boolean] = {
+    val nbrs = Array.fill(n + 1)(List.empty[Int])
+    for (i <- srcs.indices) nbrs(srcs(i).toInt) = dsts(i).toInt :: nbrs(srcs(i).toInt)
+    val alive = Array.fill(n + 1)(true)
+    var peeled = true
+    while (peeled) {
+      peeled = false
+      for (v <- 1 to n if alive(v) && nbrs(v).count(alive) < k) {
+        alive(v) = false
+        peeled = true
+      }
+    }
+    alive
+  }
+
+  property("csrLoop KCore == sequential peel on random symmetric graphs") =
+    Prop.forAll(genSym, Gen.choose(0, 5)) { case ((n, srcs, dsts), k) =>
+      val verts = Array.tabulate(n)(i => (i + 1).toLong)
+      val got = LocalRunner.csrLoop(verts, srcs, dsts,
+        Array.fill(srcs.length)(1.0), Algorithms.KCore(k), GraphMeta(n))._1.toMap
+      val want = peel(n, srcs, dsts, k)
+      verts.forall(v => (got(v) > 0) == want(v.toInt))
     }
 
   /** The same algebra with the frontier fast path disabled — csrLoop then
@@ -172,9 +207,9 @@ object EngineProperties extends Properties("graft.engine") {
           if (alg eq Algorithms.Wcc) (srcs ++ dsts, dsts ++ srcs,
             Array.fill(2 * ws.length)(1.0))
           else (srcs, dsts, ws)
-        val frontier = LocalRunner.csrLoop(verts, s2, d2, w2, alg, meta).toMap
+        val frontier = LocalRunner.csrLoop(verts, s2, d2, w2, alg, meta)._1.toMap
         val bulk = LocalRunner.csrLoop(verts, s2, d2, w2,
-          bulkVariant(alg), meta).toMap
+          bulkVariant(alg), meta)._1.toMap
         // Bit-identical, including Inf at unreached vertices.
         verts.forall { v =>
           java.lang.Double.doubleToLongBits(frontier(v)) ==
