@@ -1,73 +1,19 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import graft.obs.{MetricsListener, RunLog}
 
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (metric/value/unit/queries/sf) plus shuffle and
-  * spill totals from a task-metrics listener — the O17 instrumentation
-  * analogue (the reference logs per-phase ticks and cumulative shuffle
-  * bytes, gmr.h:317-334, igmr.cpp:158).
+  * spill totals from [[MetricsListener]]. Each query runs inside
+  * [[RunLog.capture]], so its sidecars read the runs and measures that
+  * query recorded, and nothing else.
   */
 object Bench {
-
-  private final class MetricsListener extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val spilled = new AtomicLong
-    /** Cumulative task CPU nanoseconds (executorCpuTime) — the
-      * host-neutral work measure: wall-derived eips swing 2-3× with the
-      * driver VM while cpu-seconds-per-edge moves only with the code, so
-      * cross-round adjudication reads the *_eips_cpu ratios against a
-      * tight ±1.5× band instead of excusing everything inside the wall
-      * band (r10 verdict item 3).
-      */
-    val taskCpuNs = new AtomicLong
-    /** Task-end event count — part of the boundary-stability check: a
-      * shuffle-LIGHT query's final tasks move none of the byte counters, so
-      * polling bytes alone can declare "settled" while its task-end events
-      * (and their max-task durations) are still on the async bus, getting
-      * misattributed to the next query.
-      */
-    val taskEnds = new AtomicLong
-    /** Longest single task since the last [[resetMaxTask]] — the straggler
-      * signal: a skew-serialized stage shows up here as one task spanning
-      * most of the query's wall time (reset per query by the bench loop).
-      */
-    val maxTaskMs = new AtomicLong
-    /** Every task duration since the last reset — feeds the per-query
-      * max/median CONTENTION ratio: on an otherwise-idle box the 64M
-      * anchors' tasks are uniform (ratio ~1-3), while a contended/stolen
-      * host shows one 13x-median task at identical shuffle volume (the
-      * r8 gate-box signature). Bounded: the heaviest anchor ends ~20k
-      * tasks, a few hundred KB of longs.
-      */
-    val taskDurMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
-    def resetMaxTask(): Unit = { maxTaskMs.set(0); taskDurMs.clear() }
-    /** (max, median) task seconds since the last reset; (0,0) if no tasks. */
-    def taskSpread(): (Double, Double) = {
-      import scala.jdk.CollectionConverters._
-      val ds = taskDurMs.asScala.map(_.longValue).toArray.sorted
-      if (ds.isEmpty) (0.0, 0.0)
-      else (ds.last / 1000.0, ds(ds.length / 2) / 1000.0)
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        taskCpuNs.addAndGet(m.executorCpuTime)
-      }
-      if (t.taskInfo != null) {
-        maxTaskMs.getAndUpdate(cur => math.max(cur, t.taskInfo.duration))
-        taskDurMs.add(t.taskInfo.duration)
-      }
-      taskEnds.incrementAndGet()
-    }
-  }
 
   /** Deterministic host-speed calibration probe (~2 s): a fixed
     * single-thread xorshift loop (clock/IPC) and a fixed strided-sum sweep
@@ -117,15 +63,60 @@ object Bench {
   private val CalibRefCpuSec = 2.874
   private val CalibRefMemSec = 0.645
 
-  /** The SqlRunner superstep anchors — the queries whose loop stats the
-    * sidecars read from the runner's volatiles. ONE definition shared
+  /** The SqlRunner superstep anchors — the queries whose sidecars read
+    * the loop stats of the one run each records. ONE definition shared
     * with [[Scaling]], so a new superstep anchor cannot be adjudicated
     * here but silently recorded loop-less in BENCH_SCALING.json.
     */
   private[graft] val SuperstepAnchors = Set("b03_sssp_rand64m",
     "b04_sssp_skew64m", "b05_pagerank_skew64m", "b07_pagerank_conv64m")
 
+  /** The compact per-query comparison (the `pq_*` fields) of this sweep's
+    * `now` seconds against the last `history` line (BENCH_HISTORY.jsonl)
+    * measured at `sfDir`; empty when there is none or nothing in common.
+    */
+  private[graft] def pqSummary(history: Seq[String], sfDir: String,
+                               now: Seq[(String, Double)]): String = {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper
+    history.reverseIterator.filter(_.trim.nonEmpty).map(json.readTree)
+      .find(_.path("sf").asText == sfDir)
+      .fold("") { prevRun =>
+        val prevQ = prevRun.path("queries").properties.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toMap
+        val common = now.collect {
+          case (k, v) if v > 0 && prevQ.getOrElse(k, -1.0) > 0 => (k, prevQ(k), v)
+        }
+        if (common.isEmpty) "" else {
+          val speedups = common.map { case (_, pv, v) => pv / v }
+          val geomean = math.exp(speedups.map(math.log).sum / speedups.size)
+          val regressed = speedups.count(_ < 1.0 / 1.3)
+          val improved = speedups.count(_ > 1.3)
+          // Top movers by ABSOLUTE seconds (a 0.2→0.4 s blip is ratio 2x
+          // but irrelevant; a 110→260 s anchor is the story).
+          def movers(sel: ((String, Double, Double)) => Double, n: Int) =
+            common.sortBy(c => -sel(c)).take(n)
+              .filter(c => sel(c) > 1.0)
+              .map { case (k, pv, v) => "\"" + k + f"\":[$pv%.1f,$v%.1f]" }
+              .mkString("{", ",", "}")
+          val topRegr = movers({ case (_, pv, v) => v - pv }, 3)
+          val topImpr = movers({ case (_, pv, v) => pv - v }, 3)
+          f""","pq_n_common":${common.size},"pq_geomean_speedup":$geomean%.3f,"pq_improved":$improved,"pq_regressed":$regressed,"pq_top_regr":$topRegr,"pq_top_impr":$topImpr"""
+        }
+      }
+  }
+
   def main(args: Array[String]): Unit = {
+    // The registry warm (see below) is chosen before the session starts:
+    // an unknown value fails here instead of falling through to another
+    // warm and silently invalidating an A/B measurement.
+    val registryWarm = sys.env.getOrElse("SPARK_GRAFT_REGISTRY_WARM", "full")
+    val warmNames: Seq[String] = registryWarm match {
+      case "full" => SparkEntry.queries.keys.toSeq.sorted
+        .filterNot(n => n.startsWith("b0") && n != "b01_sssp_4elt")
+      case "none" => Seq.empty
+      case other => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_REGISTRY_WARM=$other: expected full or none")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       GraftSession.defaultCores.toString).toInt
@@ -176,19 +167,8 @@ object Bench {
     // symmetrically at reduced scale below (superstep shapes for
     // b03/b04/b05/b07, GraphX for b06; b08's packed wedge-close and b02's
     // CSR tier compile via g02/b01 at sf0.001). The artifact carries
-    // `registry_warm`; A/B via SPARK_GRAFT_REGISTRY_WARM=subset|none
-    // (r11's list / no warm) — measured deltas in OPTIMIZATION_r12.md.
-    val registryWarm = sys.env.getOrElse("SPARK_GRAFT_REGISTRY_WARM", "full")
-    val legacyWarmList = Seq("q01_filter_project", "q03_join_agg",
-      "l10_lang_dist", "b01_sssp_4elt", "l03_jaccard_pairs",
-      "l04_minhash_pairs", "l12_fingerprints", "l14_kmeans",
-      "l25_neardup_clusters", "g06_wcc_engine", "g02_triangles")
-    val warmNames: Seq[String] = registryWarm match {
-      case "none" => Seq.empty
-      case "subset" => legacyWarmList
-      case _ => SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(n => n.startsWith("b0") && n != "b01_sssp_4elt")
-    }
+    // `registry_warm`; A/B via SPARK_GRAFT_REGISTRY_WARM=none (no warm)
+    // — measured deltas in OPTIMIZATION_r12.md.
     warmNames.foreach { n =>
       try { SparkEntry.queries(n)(spark, warmDir).count(): Unit }
       catch { case _: Throwable => () }
@@ -267,69 +247,71 @@ object Bench {
     // more than per-query codegen compilation saves — so each query's first
     // run in a fresh-ish session is the honest and the better number.)
     // Distributed-tier anchor sidecars (b03 uniform, b04/b05 skewed):
-    // loop seconds + superstep count + skew-handling engagement flags,
-    // captured from SqlRunner right after each anchor runs. Throughput is
+    // loop seconds + superstep count + skew-handling engagement flags from
+    // the one SqlRunner run each anchor records. Throughput is
     // computed below from the EXACT generator edge count (the src≠dst
     // filter drops a handful of the nominal 64M) in BOTH accountings —
     // BASELINE.md's G2 convention |E|×iters/total-wall (69.0M × 15 /
     // 146.5 s ≈ 7.1M/s, log.txt:53-55) and loop-only wall.
-    val anchorNames = SuperstepAnchors
-    final case class AnchorRun(loopSec: Double, iters: Int, hubs: Int,
-                               saltF: Int, totalSec: Double, maxTask: Double,
-                               medTask: Double, cpuSec: Double) {
-      def contention: Double = if (medTask > 0) maxTask / medTask else 0.0
-    }
-    val anchorStats = scala.collection.mutable.Map.empty[String, AnchorRun]
     // GENERIC anchors (r9 verdict item 1): b02 (local CSR tier), b06
     // (GraphX), b08 (TriangleCount) run no SqlRunner superstep loop, so
-    // the loop-keyed machinery above cannot adjudicate them — and b06/b08
+    // the loop-keyed machinery cannot adjudicate them — and b06/b08
     // were exactly the two anchors the r9 gate artifact could not clear.
     // Same listener-derived max/median-task contention signal, same
-    // threshold, same post-sweep rerun; stats are (wall sec, task spread).
+    // threshold, same post-sweep rerun. b02's loop figures come from its
+    // one LocalRunner run, b08's phase split from its measures — always
+    // from the records of the same run as the wall clock.
     val genericNames = Set("b02_sssp_rand8m", "b06_sssp_graphx64m",
       "b08_triangles_8m")
-    // loopSec/iters carry the LocalRunner CSR-loop figures for b02 and
-    // canonSec/closeSec the TriangleCount phase split for b08 (zeros for
-    // the others) — captured AT RUN TIME from the runner volatiles, so a
-    // later query (or a rerun) overwriting them can't desynchronize a
-    // run's wall clock from its own phase figures.
-    final case class GRun(sec: Double, maxTask: Double, medTask: Double,
-                          loopSec: Double, iters: Int,
-                          canonSec: Double, closeSec: Double,
-                          cpuSec: Double) {
+    /** One timed run of a query: wall seconds (-1 if it threw), its own
+      * shuffle read/write/spill MB and task CPU seconds, its longest and
+      * median task, and what it recorded.
+      */
+    final case class QRun(name: String, sec: Double, readMb: Double,
+                          writeMb: Double, spillMb: Double, maxTask: Double,
+                          medTask: Double, cpuSec: Double,
+                          records: RunLog.Records) {
+      def ok: Boolean = sec >= 0
       def contention: Double = if (medTask > 0) maxTask / medTask else 0.0
+      /** A loop anchor's one engine run. */
+      def run: engine.SqlRunner.RunStats = records.onlyRun(name)
     }
-    def gRun(name: String, dt: Double, mxT: Double, medT: Double,
-             cpu: Double): GRun =
-      if (name.startsWith("b02"))
-        GRun(dt, mxT, medT, graft.engine.LocalRunner.lastLoopSeconds,
-          graft.engine.LocalRunner.lastIterations, 0.0, 0.0, cpu)
-      else if (name.startsWith("b08")) {
-        val (c, cl) = graphs.GraphQueries.lastTriStats
-        GRun(dt, mxT, medT, 0.0, 0, c, cl, cpu)
-      } else GRun(dt, mxT, medT, 0.0, 0, 0.0, 0.0, cpu)
-    val genericStats = scala.collection.mutable.Map.empty[String, GRun]
-    // Per-query shuffle deltas (O17: the reference logs cumulative shuffle
-    // bytes per phase; here each query's own read/write/spill) — reported in
-    // the FILE artifact only, the stdout line must stay under the driver's
-    // 4 KB tail capture.
-    val perQ = Seq.newBuilder[(String, Double, Double, Double, Double, Double)]
-    // Task-end events arrive on an async listener bus: count() returning
-    // does not mean the last wave was delivered, and sampling mid-drain
-    // misattributes bytes to the NEXT query. Poll until the totals stop
-    // moving (typically one 25 ms beat) before reading a boundary.
-    def settled(): (Long, Long, Long, Long) = {
-      def snap() = (listener.shuffleRead.get, listener.shuffleWrite.get,
-        listener.spilled.get, listener.taskCpuNs.get, listener.taskEnds.get)
-      var cur = snap()
-      var tries = 0
-      while (tries < 40) {
-        Thread.sleep(25)
-        val nxt = snap()
-        if (nxt == cur) return (cur._1, cur._2, cur._3, cur._4)
-        cur = nxt; tries += 1
+    // ONE measuring protocol for the sweep and every rerun: settle the
+    // listener (so no earlier task lands in this query's deltas), run
+    // inside a capture, settle, read the task spread, then drop cached
+    // relations AND the persisted RDDs that back localCheckpoints
+    // (clearCache does not touch those — iterative queries leave one block
+    // set per superstep) and let the context cleaner reclaim broadcast
+    // residue: queries are independent.
+    def timed(name: String, failLabel: String): QRun = {
+      val (r0, w0, s0, c0) = listener.settled()
+      listener.resetMaxTask()
+      val t0 = System.nanoTime()
+      val (ok, records) = RunLog.capture {
+        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"BENCH $failLabel $name: ${e.getClass.getName}: ${e.getMessage}")
+          false
+        }
       }
-      (cur._1, cur._2, cur._3, cur._4)
+      // A throwing query reports -1, never a normal-looking duration.
+      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val (r1, w1, s1, c1) = listener.settled()
+      val (mxT, medT) = listener.taskSpread()
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.valuesIterator
+        .foreach(_.unpersist(blocking = false))
+      System.gc()
+      val mb = 1024.0 * 1024.0
+      // Kept to the end of the sweep, so without the round plans: a plan
+      // would keep the shuffles it read from the context cleaner.
+      val r = QRun(name, dt, (r1 - r0) / mb, (w1 - w0) / mb, (s1 - s0) / mb,
+        mxT, medT, (c1 - c0) / 1e9,
+        records.copy(runs = records.runs.map(_.copy(roundPlan = None))))
+      // A loop anchor whose records hold other than one engine run would
+      // publish another run's figures: stop the bench now.
+      if (r.ok && (SuperstepAnchors(name) || name == "b02_sssp_rand8m")) r.run
+      r
     }
     // Dev-only subset runs (variance probes, single-query A/Bs): a
     // comma-separated name list in SPARK_GRAFT_ONLY restricts the loop.
@@ -337,48 +319,17 @@ object Bench {
     // registry; the sidecars below tolerate missing anchors/recall rows.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = selected.map { case (name, fn) =>
-      val (r0, w0, s0, c0) = settled()
-      listener.resetMaxTask()
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-        false
-      }
-      // A throwing query reports -1, never a normal-looking duration.
-      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      val (r1, w1, s1, c1) = settled()
-      val (mxT, medT) = listener.taskSpread()
-      val cpuSec = (c1 - c0) / 1e9
-      if (ok && anchorNames(name))
-        anchorStats(name) = AnchorRun(graft.engine.SqlRunner.lastLoopSeconds,
-          graft.engine.SqlRunner.lastIterations,
-          graft.engine.SqlRunner.lastSaltedHubs,
-          graft.engine.SqlRunner.lastSaltFactor, dt, mxT, medT, cpuSec)
-      if (ok && genericNames(name))
-        genericStats(name) = gRun(name, dt, mxT, medT, cpuSec)
-      val mb = 1024.0 * 1024.0
-      perQ += ((name, (r1 - r0) / mb, (w1 - w0) / mb, (s1 - s0) / mb, mxT,
-        cpuSec))
-      // Queries are independent: drop cached relations AND the persisted
-      // RDDs that back localCheckpoints (clearCache does not touch those —
-      // iterative queries leave one block set per superstep), then let the
-      // context cleaner reclaim broadcast residue.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      name -> dt
-    }
+    val runs = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n))).map(timed(_, "FAIL"))
+    val results = runs.map(r => r.name -> r.sec)
+    val anchorStats = runs.filter(r => r.ok && SuperstepAnchors(r.name))
+    val genericStats = runs.filter(r => r.ok && genericNames(r.name))
     // Headline totals are the QUERY LOOP's alone, snapshotted before the
     // sidecars below run additional Spark jobs (anchor edge counts, recall
     // re-executions) — sampling at JSON-build time would count sidecar
     // shuffle in the benchmark totals and break round-over-round
     // comparability of the observability metrics.
-    val (benchRead, benchWrite, benchSpilled, benchCpuNs) = settled()
+    val (benchRead, benchWrite, benchSpilled, benchCpuNs) = listener.settled()
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     // Failures carry the -1 sentinel per-query but must not subtract from
@@ -405,51 +356,19 @@ object Bench {
     // 3-8 (a full shuffle wave's stragglers vs the many small post-AQE
     // tasks), while the r8 contended gate box measured a 25.6 s max task
     // against the same sub-second median (ratio ~50) — 12 separates the
-    // regimes with margin on both sides.
-    // ONE rerun protocol for every anchor family (the loop anchors and
-    // the generic ones must adjudicate under the same rules or the
-    // artifact's cross-anchor comparability is fiction): settle the
-    // listener, run, settle, read the task spread, sweep caches. Returns
-    // (wall sec, max task, median task) or None if the query threw.
-    def rerunMeasure(name: String, contention: Double)
-        : Option[(Double, Double, Double, Double)] = {
-      System.err.println(f"BENCH rerun $name: contention $contention%.1f > 12")
-      val (_, _, _, rc0) = settled()
-      listener.resetMaxTask()
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"BENCH rerun FAIL $name: ${e.getMessage}")
-        false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (_, _, _, rc1) = settled()
-      val (mxT, medT) = listener.taskSpread()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-      if (ok) Some((dt, mxT, medT, (rc1 - rc0) / 1e9)) else None
+    // regimes with margin on both sides. Both anchor families rerun under
+    // the same protocol ([[timed]]) or the artifact's cross-anchor
+    // comparability is fiction.
+    def rerun(first: QRun): Option[QRun] = {
+      System.err.println(f"BENCH rerun ${first.name}: contention ${first.contention}%.1f > 12")
+      Some(timed(first.name, "rerun FAIL")).filter(_.ok)
     }
-    val rerunStats = scala.collection.mutable.Map.empty[String, AnchorRun]
-    anchorStats.toSeq.sortBy(_._1).foreach { case (name, first) =>
-      if (first.contention > 12.0)
-        rerunMeasure(name, first.contention).foreach { case (dt, mxT, medT, cpu) =>
-          rerunStats(name) = AnchorRun(graft.engine.SqlRunner.lastLoopSeconds,
-            graft.engine.SqlRunner.lastIterations,
-            graft.engine.SqlRunner.lastSaltedHubs,
-            graft.engine.SqlRunner.lastSaltFactor, dt, mxT, medT, cpu)
-        }
-    }
+    val rerunStats = anchorStats.filter(_.contention > 12.0)
+      .flatMap(rerun).map(r => r.name -> r).toMap
     // Generic anchors: same protocol, plus a 5 s floor (a 0.2 s query's
     // max/median ratio is scheduler jitter, not host contention).
-    val genericRerun = scala.collection.mutable.Map.empty[String, GRun]
-    genericStats.toSeq.sortBy(_._1).foreach { case (name, first) =>
-      if (first.contention > 12.0 && first.sec >= 5.0)
-        rerunMeasure(name, first.contention).foreach { case (dt, mxT, medT, cpu) =>
-          genericRerun(name) = gRun(name, dt, mxT, medT, cpu)
-        }
-    }
+    val genericRerun = genericStats.filter(r => r.contention > 12.0 && r.sec >= 5.0)
+      .flatMap(rerun).map(r => r.name -> r).toMap
     /** Better of first run / contention rerun, plus the rerun audit-trail
       * fields WHENEVER a rerun ran — two agreeing runs are themselves the
       * adjudication ("structurally high ratio, not contention": GraphX
@@ -458,8 +377,8 @@ object Bench {
       * first full-bench artifact measured 354 with the rerun landing on
       * the same wall, which the recorded pair makes readable).
       */
-    def bestGeneric(name: String): Option[(GRun, String)] =
-      genericStats.get(name).map { first =>
+    def bestGeneric(name: String): Option[(QRun, String)] =
+      genericStats.find(_.name == name).map { first =>
         val rr = genericRerun.get(name)
         val best = rr.filter(_.sec < first.sec).getOrElse(first)
         val key = name.take(3)
@@ -470,31 +389,32 @@ object Bench {
     lazy val uniformEdges = graphs.GraphQueries.uniformEdges64M(spark).count()
     lazy val skewEdges = graphs.GraphQueries.skewEdges64M(spark).count()
     lazy val edges8M = graphs.GraphQueries.uniformEdges8M(spark).count()
-    val anchorExtra = anchorStats.toSeq.sortBy(_._1).map {
-      case (name, first) =>
+    val anchorExtra = anchorStats.map { first =>
+        val name = first.name
         // The eips fields report the better of first run / contention
         // rerun — the number closest to the code's actual throughput on
         // this box; the first run's figures stay beside it when a rerun
         // happened, so the adjudication is auditable.
         val rr = rerunStats.get(name)
-        val best = rr.filter(r => r.loopSec > 0 &&
-          (first.loopSec <= 0 || r.loopSec < first.loopSec)).getOrElse(first)
-        val dt = if (best eq first) results.toMap.getOrElse(name, -1.0)
-          else best.totalSec
+        val best = rr.filter(r => r.run.loopSeconds > 0 &&
+          (first.run.loopSeconds <= 0 || r.run.loopSeconds < first.run.loopSeconds))
+          .getOrElse(first)
+        val loop = best.run
         val edges = if (name.contains("skew")) skewEdges else uniformEdges
         val key = name.take(3)
-        val eipsTotal = if (dt > 0) edges.toDouble * best.iters / dt else -1.0
-        val eipsLoop = if (best.loopSec > 0)
-          edges.toDouble * best.iters / best.loopSec else -1.0
+        val eipsTotal =
+          if (best.sec > 0) edges.toDouble * loop.iterations / best.sec else -1.0
+        val eipsLoop = if (loop.loopSeconds > 0)
+          edges.toDouble * loop.iterations / loop.loopSeconds else -1.0
         val eipsLoopNorm = if (eipsLoop > 0) eipsLoop * hostFactor else -1.0
         // Host-neutral work rate: edge-iterations per task-CPU-second.
         // Wall eips swing 2-3× with the VM; this moves only with the code
         // (plus JIT/contention noise well under 1.5×), so the cpu_vs_prev
         // band below can be tight.
         val eipsCpu = if (best.cpuSec > 0)
-          edges.toDouble * best.iters / best.cpuSec else -1.0
-        f""","${key}_edges":$edges,"${key}_iters":${best.iters},"${key}_loop_sec":${best.loopSec}%.3f,"${key}_eips_total":$eipsTotal%.0f,"${key}_eips_loop":$eipsLoop%.0f,"${key}_eips_loop_norm":$eipsLoopNorm%.0f,"${key}_task_cpu_sec":${best.cpuSec}%.1f,"${key}_eips_cpu":$eipsCpu%.0f,"${key}_salted_hubs":${best.hubs},"${key}_salt_factor":${best.saltF},"${key}_max_task_sec":${best.maxTask}%.1f,"${key}_median_task_sec":${best.medTask}%.2f,"${key}_contention":${best.contention}%.1f""" +
-          rr.map(r => f""","${key}_rerun":true,"${key}_first_loop_sec":${first.loopSec}%.3f,"${key}_first_contention":${first.contention}%.1f""").getOrElse("")
+          edges.toDouble * loop.iterations / best.cpuSec else -1.0
+        f""","${key}_edges":$edges,"${key}_iters":${loop.iterations},"${key}_loop_sec":${loop.loopSeconds}%.3f,"${key}_eips_total":$eipsTotal%.0f,"${key}_eips_loop":$eipsLoop%.0f,"${key}_eips_loop_norm":$eipsLoopNorm%.0f,"${key}_task_cpu_sec":${best.cpuSec}%.1f,"${key}_eips_cpu":$eipsCpu%.0f,"${key}_salted_hubs":${loop.saltedHubs},"${key}_salt_factor":${loop.saltFactor},"${key}_max_task_sec":${best.maxTask}%.1f,"${key}_median_task_sec":${best.medTask}%.2f,"${key}_contention":${best.contention}%.1f""" +
+          rr.map(r => f""","${key}_rerun":true,"${key}_first_loop_sec":${first.run.loopSeconds}%.3f,"${key}_first_contention":${first.contention}%.1f""").getOrElse("")
     }.mkString +
       // b02 sidecar: the local-CSR-tier anchor — round count from the SAME
       // depth golden the query (and since r10 its DuckDB oracle) pins,
@@ -506,11 +426,12 @@ object Bench {
         val iters = graphs.GraphQueries.goldenRounds(
           graphs.GraphQueries.B02DepthGolden)
         val eips = edges8M.toDouble * iters / best.sec
-        val eipsLoop = if (best.loopSec > 0)
-          edges8M.toDouble * best.iters / best.loopSec else -1.0
+        val loop = best.run
+        val eipsLoop = if (loop.loopSeconds > 0)
+          edges8M.toDouble * loop.iterations / loop.loopSeconds else -1.0
         val eipsCpu = if (best.cpuSec > 0)
           edges8M.toDouble * iters / best.cpuSec else -1.0
-        f""","b02_edges":$edges8M,"b02_iters":$iters,"b02_sec":${best.sec}%.3f,"b02_loop_sec":${best.loopSec}%.3f,"b02_eips_total":$eips%.0f,"b02_eips_total_norm":${eips * hostFactor}%.0f,"b02_eips_loop":$eipsLoop%.0f,"b02_eips_loop_norm":${eipsLoop * hostFactor}%.0f,"b02_task_cpu_sec":${best.cpuSec}%.1f,"b02_eips_cpu":$eipsCpu%.0f$audit"""
+        f""","b02_edges":$edges8M,"b02_iters":$iters,"b02_sec":${best.sec}%.3f,"b02_loop_sec":${loop.loopSeconds}%.3f,"b02_eips_total":$eips%.0f,"b02_eips_total_norm":${eips * hostFactor}%.0f,"b02_eips_loop":$eipsLoop%.0f,"b02_eips_loop_norm":${eipsLoop * hostFactor}%.0f,"b02_task_cpu_sec":${best.cpuSec}%.1f,"b02_eips_cpu":$eipsCpu%.0f$audit"""
       }.getOrElse("") +
       // b06 sidecar (r9 verdict item 1: the GraphX anchor previously had
       // neither a throughput figure nor contention adjudication, making
@@ -532,7 +453,7 @@ object Bench {
         val eps = edges8M.toDouble / best.sec
         val epsCpu = if (best.cpuSec > 0) edges8M.toDouble / best.cpuSec
           else -1.0
-        f""","b08_edges":$edges8M,"b08_sec":${best.sec}%.3f,"b08_canon_sec":${best.canonSec}%.3f,"b08_close_sec":${best.closeSec}%.3f,"b08_eps":$eps%.0f,"b08_eps_norm":${eps * hostFactor}%.0f,"b08_task_cpu_sec":${best.cpuSec}%.1f,"b08_eps_cpu":$epsCpu%.0f$audit"""
+        f""","b08_edges":$edges8M,"b08_sec":${best.sec}%.3f,"b08_canon_sec":${best.records.measure("b08.canon_sec")}%.3f,"b08_close_sec":${best.records.measure("b08.close_sec")}%.3f,"b08_eps":$eps%.0f,"b08_eps_norm":${eps * hostFactor}%.0f,"b08_task_cpu_sec":${best.cpuSec}%.1f,"b08_eps_cpu":$epsCpu%.0f$audit"""
       }.getOrElse("")
     // Sketch-quality sidecar: measured recall of the LSH variants against
     // their exact twins on THIS run's data — a hash-function or banding
@@ -618,12 +539,15 @@ object Bench {
     // so cross-round deltas must be read as eips ratios against that
     // band, and the artifact now carries that lens itself instead of
     // requiring a manual tools/compare_bench.py pass.
+    // The full artifact. A subset run (SPARK_GRAFT_ONLY) writes beside it,
+    // never over it, so the next full sweep compares against a full sweep.
+    val outPath = Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
+    val historyPath = Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl"))
     val (eipsVsPrev, eipsVsPrevCompact) = try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
-      if (!java.nio.file.Files.exists(p)) ("", "") else {
-        val prev = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
+      if (!Files.exists(outPath)) ("", "") else {
+        val prev = new String(Files.readAllBytes(outPath), UTF_8)
         val re = "\"(b[0-9]+_(?:eips_(?:total|loop|cpu)|eps_cpu))\":([0-9.]+)".r
         // FIRST occurrence wins: a prior artifact also carries these keys
         // inside its own eips_vs_prev ratio block, and last-wins would
@@ -701,54 +625,20 @@ object Bench {
     // PER-QUERY round-over-round visibility (r11 verdict item 2d: the
     // driver's PERF per_query has been empty every round because 231
     // per-query walls never fit its ~2 KB stdout tail). Two devices:
-    //  1. this block — the previous artifact's queries map is read before
-    //     this run overwrites it, and a COMPACT comparison summary
-    //     (n_common, geomean speedup, counts, the top absolute-seconds
-    //     movers both ways) rides the stdout tail, so the driver can see
-    //     per-query movement without the full map;
+    //  1. this block — a COMPACT comparison summary (n_common, geomean
+    //     speedup, counts, the top absolute-seconds movers both ways)
+    //     against the previous full sweep at the same sf rides the stdout
+    //     tail, so the driver can see per-query movement without the map;
     //  2. BENCH_HISTORY.jsonl below — the full rounded per-query map is
-    //     APPENDED (never clobbered) per full sweep and committed, so
-    //     any round can diff any other without git archaeology.
-    val pqVsPrev = try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
-      if (!java.nio.file.Files.exists(p) || only.nonEmpty) "" else {
-        val prev = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val qStart = prev.indexOf("\"queries\":{")
-        if (qStart < 0) "" else {
-          val body = prev.substring(qStart + 11,
-            prev.indexOf('}', qStart + 11).max(qStart + 11))
-          val entryRe = "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r
-          val prevQ = entryRe.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          val nowQ = results.toMap
-          val common = nowQ.toSeq.collect {
-            case (k, v) if v > 0 && prevQ.getOrElse(k, -1.0) > 0 =>
-              (k, prevQ(k), v)
-          }
-          if (common.isEmpty) "" else {
-            val speedups = common.map { case (_, pv, v) => pv / v }
-            val geomean = math.exp(speedups.map(math.log).sum / speedups.size)
-            val regressed = speedups.count(_ < 1.0 / 1.3)
-            val improved = speedups.count(_ > 1.3)
-            // Top movers by ABSOLUTE seconds (a 0.2→0.4 s blip is ratio 2x
-            // but irrelevant; a 110→260 s anchor is the story).
-            def movers(sel: ((String, Double, Double)) => Double, n: Int) =
-              common.sortBy(c => -sel(c)).take(n)
-                .filter(c => sel(c) > 1.0)
-                .map { case (k, pv, v) => "\"" + k + f"\":[$pv%.1f,$v%.1f]" }
-                .mkString("{", ",", "}")
-            val topRegr = movers({ case (_, pv, v) => v - pv }, 3)
-            val topImpr = movers({ case (_, pv, v) => pv - v }, 3)
-            f""","pq_n_common":${common.size},"pq_geomean_speedup":$geomean%.3f,"pq_improved":$improved,"pq_regressed":$regressed,"pq_top_regr":$topRegr,"pq_top_impr":$topImpr"""
-          }
-        }
+    //     APPENDED (never clobbered) per full sweep and committed, so any
+    //     round can diff any other. This block reads its last line at this
+    //     sf, before this run appends.
+    val pqVsPrev = if (only.nonEmpty || !Files.exists(historyPath)) "" else
+      try pqSummary(Files.readAllLines(historyPath, UTF_8).asScala.toSeq, sfDir, results)
+      catch { case e: Throwable =>
+        System.err.println(s"BENCH pq-compare sidecar failed: ${e.getMessage}")
+        ""
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"BENCH pq-compare sidecar failed: ${e.getMessage}")
-      ""
-    }
     val calibExtra = f""","calib_cpu_sec":$calibCpu%.3f,"calib_mem_sec":$calibMem%.3f,"host_factor":$hostFactor%.3f,"superstep_warm":$superstepWarm,"registry_warm":"$registryWarm""""
     val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"queries":$qs,"sf":"$sfDir","shuffle_read_mb":${benchRead / mb}%.1f,"shuffle_write_mb":${benchWrite / mb}%.1f,"spilled_mb":${benchSpilled / mb}%.1f,"task_cpu_sec":${benchCpuNs / 1e9}%.1f,"cpus":$cpus$calibExtra$anchorExtra$recallExtra$eipsVsPrev$pqVsPrev}"""
     println(json)
@@ -756,37 +646,30 @@ object Bench {
     // of stdout, which has truncated the per-query map (and with it the
     // b-anchor timings) in past rounds. The file is the durable artifact —
     // it additionally carries the per-query shuffle/spill deltas, which the
-    // stdout line omits to stay inside the tail capture.
-    val perQList = perQ.result()
-    val shuffleQs = perQList.filter { case (_, r, w, sp, _, _) =>
-      r >= 0.05 || w >= 0.05 || sp >= 0.05 }
-      .map { case (n, r, w, sp, _, _) =>
-        "\"" + n + f"\":[$r%.1f,$w%.1f,$sp%.1f]" }
+    // stdout line omits to stay inside the tail capture (O17: the
+    // reference logs cumulative shuffle bytes per phase; here each query's
+    // own read/write/spill).
+    val shuffleQs = runs.filter(r => r.readMb >= 0.05 || r.writeMb >= 0.05 || r.spillMb >= 0.05)
+      .map(r => "\"" + r.name + f"\":[${r.readMb}%.1f,${r.writeMb}%.1f,${r.spillMb}%.1f]")
       .mkString("{", ",", "}")
     // Straggler evidence per query (file artifact only): the longest single
     // task, for every query where it exceeds 1 s. Under skew handling a
     // 64M-edge superstep anchor must NOT show one task spanning most of its
     // wall time — b04's entry here beside b03's is the recorded proof.
-    val maxTaskQs = perQList.filter(_._5 >= 1.0)
-      .map { case (n, _, _, _, mt, _) => "\"" + n + f"\":$mt%.1f" }
-      .mkString("{", ",", "}")
+    val maxTaskQs = runs.filter(_.maxTask >= 1.0)
+      .map(r => "\"" + r.name + f"\":${r.maxTask}%.1f").mkString("{", ",", "}")
     // Per-query task-CPU seconds (file artifact only; ≥1 s): the
     // host-neutral per-operator work map cross-round comparisons read
     // instead of wall seconds (guide §1 — measure what the code does, not
     // what the box allowed).
-    val cpuQs = perQList.filter(_._6 >= 1.0)
-      .map { case (n, _, _, _, _, cs) => "\"" + n + f"\":$cs%.1f" }
-      .mkString("{", ",", "}")
+    val cpuQs = runs.filter(_.cpuSec >= 1.0)
+      .map(r => "\"" + r.name + f"\":${r.cpuSec}%.1f").mkString("{", ",", "}")
     // Streaming progress (file artifact only): micro-batches run and peak
     // state-store rows per streaming query — bounded state is the
     // watermark contract, now a recorded number instead of a spec claim.
-    val streamQs = {
-      import scala.jdk.CollectionConverters._
-      graft.streaming.EventQueries.lastDrainStats.asScala.toSeq.sortBy(_._1)
-        .map { case (tag, (batches, rows)) =>
-          "\"" + tag + s"\":[$batches,$rows]" }
-        .mkString("{", ",", "}")
-    }
+    val streamQs = runs.flatMap(r => streaming.EventQueries.drains(r.records)).sortBy(_._1)
+      .map { case (tag, (batches, rows)) => "\"" + tag + s"\":[$batches,$rows]" }
+      .mkString("{", ",", "}")
     // Host fingerprint (file artifact only): the 64M-edge anchors are
     // memory-bandwidth/clock-bound, and the per-round VM varies — the same
     // commit measured b03's loop at 19 s and 63 s on two boxes. Recording
@@ -802,10 +685,9 @@ object Bench {
     val fileJson = json.dropRight(1) +
       s""","host_cpu":"${cpuModel.replace("\"", "")}","heap_gb":$memGb""" +
       s""","query_shuffle_rws_mb":$shuffleQs,"query_max_task_sec":$maxTaskQs,"query_cpu_sec":$cpuQs,"stream_batches_staterows":$streamQs}"""
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
-    java.nio.file.Files.write(out,
-      (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.write(
+      if (only.isEmpty) outPath else Paths.get(outPath.toString + ".subset"),
+      (fileJson + "\n").getBytes(UTF_8))
     // COMPACT SUMMARY, printed LAST and mirrored to a second file: the
     // driver captures only the final 4 KB of stdout, which truncates the
     // 182-entry per-query line above mid-JSON (BENCH_r08.parsed was null
@@ -855,10 +737,9 @@ object Bench {
     // claim against the 231-query registry.
     val summaryPath = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_SUMMARY", "BENCH_SUMMARY.json")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        if (only.isEmpty) summaryPath else summaryPath + ".subset"),
-      (compact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.write(
+      Paths.get(if (only.isEmpty) summaryPath else summaryPath + ".subset"),
+      (compact + "\n").getBytes(UTF_8))
     // Full-sweep history: APPEND the rounded per-query map (the driver and
     // the judge can diff any round against any other without git
     // archaeology of the clobbered BENCH_LOCAL.json).
@@ -866,10 +747,7 @@ object Bench {
       val histQs = results.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
         .mkString("{", ",", "}")
       val hist = f"""{"total":$total%.3f,"failed":$failed,"sf":"$sfDir","cpus":$cpus,"host_factor":$hostFactor%.3f,"superstep_warm":$superstepWarm,"registry_warm":"$registryWarm","queries":$histQs}"""
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(sys.env.getOrElse(
-          "SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl")),
-        (hist + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      Files.write(historyPath, (hist + "\n").getBytes(UTF_8),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     }

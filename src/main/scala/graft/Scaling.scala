@@ -55,23 +55,21 @@ object Scaling {
       anchors.collect { case (name, floor) if c >= floor => name }
         .foreach { name =>
         val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"SCALING FAIL $name@$c: ${e.getMessage}")
-          false
+        val (ok, records) = obs.RunLog.capture {
+          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"SCALING FAIL $name@$c: ${e.getMessage}")
+            false
+          }
         }
         val dt = (System.nanoTime() - t0) / 1e9
         if (ok) {
-          // Loop stats are only meaningful for the SqlRunner superstep
-          // anchors; the volatiles hold the LAST loop run, which under
-          // this strictly sequential driver is exactly `name`'s when it
-          // has one (b08/b02 leave them stale → recorded as 0/0 via the
-          // name guard below). The set is Bench's own, so a future
-          // superstep anchor cannot be recorded loop-less here silently.
-          val hasLoop = Bench.SuperstepAnchors(name)
-          points += Point(c, name, dt,
-            if (hasLoop) engine.SqlRunner.lastLoopSeconds else 0.0,
-            if (hasLoop) engine.SqlRunner.lastIterations else 0)
+          // Loop stats exist only for the SqlRunner superstep anchors, each
+          // of which records exactly one run. The set is Bench's own, so a
+          // future superstep anchor cannot be recorded loop-less here.
+          val loop = Option.when(Bench.SuperstepAnchors(name))(records.onlyRun(name))
+          points += Point(c, name, dt, loop.fold(0.0)(_.loopSeconds),
+            loop.fold(0)(_.iterations))
         }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.valuesIterator

@@ -23,23 +23,15 @@ import scala.collection.mutable
   */
 object LocalRunner {
 
-  /** Superstep-loop wall seconds / iteration count of the LAST
-    * [[runWithStats]] in this JVM (CSR build and input packing excluded),
-    * copied from its [[SqlRunner.RunStats]]. Consumer: Bench's b02 sidecar,
-    * which captures the pair immediately after the anchor runs (its
-    * strictly-sequential protocol), so later runs overwriting the volatiles
-    * can't race it.
-    */
-  @volatile private[graft] var lastLoopSeconds: Double = 0.0
-  @volatile private[graft] var lastIterations: Int = 0
-
   /** Run `alg` in a single task; returns materialized (id, value) rows. */
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
           alg: GmrAlgorithm, meta: GraphMeta): DataFrame =
     runWithStats(spark, vertices, edges, alg, meta)._1
 
-  /** [[run]] plus this call's own [[SqlRunner.RunStats]], carried out of
-    * the loop task by an accumulator registered for this call alone.
+  /** [[run]] plus this call's own [[SqlRunner.RunStats]] (CSR build and
+    * input packing excluded from its seconds), carried out of the loop task
+    * by an accumulator registered for this call alone and recorded for the
+    * caller's [[graft.obs.RunLog.capture]].
     */
   def runWithStats(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
                    alg: GmrAlgorithm, meta: GraphMeta)
@@ -61,9 +53,7 @@ object LocalRunner {
     // No partition, no task: the empty graph ran no round.
     val st = if (stats.value.isEmpty) SqlRunner.RunStats(0, 0.0, 0, 1, Nil)
       else stats.value.get(0)
-    lastLoopSeconds = st.loopSeconds
-    lastIterations = st.iterations
-    (out, st)
+    (out, graft.obs.RunLog.run(st))
   }
 
   /** Vertices and edges as ONE relation (kind 0 = vertex row, kind 1 =
@@ -242,9 +232,10 @@ object LocalRunner {
   * so the tier never shows in the answer, and all three return
   * materialized rows: a caller may release its inputs as soon as the call
   * returns. Each tier also returns the call's own [[SqlRunner.RunStats]]
-  * (the local tiers report no salting). `meta.numVertices` ≤ 0 means
-  * unknown: the driver tier takes it from the collected vertex set, the
-  * others count it.
+  * (the local tiers report no salting and no round plan) and records it,
+  * once, for the caller's [[graft.obs.RunLog.capture]]. `meta.numVertices`
+  * ≤ 0 means unknown: the driver tier takes it from the collected vertex
+  * set, the others count it.
   */
 object GmrRunner {
   /** Up to this many edges the whole run stays on the driver: a graph this
@@ -343,7 +334,7 @@ object GmrRunner {
     val m = if (meta.numVertices > 0) meta
       else meta.copy(numVertices = vertIds.length.toLong)
     val (values, stats) = LocalRunner.csrLoop(vertIds, srcs, dsts, wgts, alg, m)
-    (spark.createDataset(values.toSeq).toDF("id", "value"), stats)
+    (spark.createDataset(values.toSeq).toDF("id", "value"), graft.obs.RunLog.run(stats))
   }
 
   /** File-backed auto-dispatch: a small local file runs wholly driver-side

@@ -36,49 +36,20 @@ import org.apache.spark.sql.functions._
   */
 object SqlRunner {
 
-  /** Per-call run observability, returned by [[runWithStats]] — the
-    * race-free alternative to the last-writer-wins volatiles below for
-    * callers (anchor queries under Verify's thread pool) that pin a run's
-    * own trace. `changedTrace(i)` is superstep i+1's changed-vertex count;
-    * the final entry is 0 for an ε-converged run and nonzero when a fixed
-    * iteration cap stopped the loop.
+  /** A run's own observability, returned by [[runWithStats]] and
+    * recorded for the caller's [[graft.obs.RunLog.capture]].
+    * `changedTrace(i)` is superstep i+1's changed-vertex count; the final
+    * entry is 0 for an ε-converged run and nonzero when a fixed iteration
+    * cap stopped the loop. `saltedHubs`/`saltFactor` record whether skew
+    * handling engaged (1 = uniform path, no salting). `roundPlan` is the
+    * prepared round plan every superstep copies — SqlRunner's alone; the
+    * local tiers run no plan per round. The plan keeps the shuffles it read
+    * reachable, so a caller that stores stats past the call drops it.
     */
   final case class RunStats(iterations: Int, loopSeconds: Double,
                             saltedHubs: Int, saltFactor: Int,
-                            changedTrace: Seq[Long])
-
-  /** Superstep count of the most recent run — observability for Bench and
-    * the O17-style instrumentation (the reference logs per-iteration lines).
-    * A convergence regression (e.g. the NaN-ordering hazard in the changed
-    * test) shows up here as maxIter instead of ~diameter rounds.
-    * Last-writer-wins under concurrent runs (Verify's thread pool): only
-    * meaningful where runs are sequential, as in the test suites.
-    */
-  @volatile var lastIterations: Int = 0
-
-  /** Superstep-loop wall seconds of the most recent run (setup — edge
-    * cache, degree, init — excluded), for edges/s throughput reporting
-    * against the reference's iteration-phase anchor. Same last-writer-wins
-    * caveat as [[lastIterations]].
-    */
-  @volatile var lastLoopSeconds: Double = 0.0
-
-  /** Skew-handling observability for the most recent run: how many
-    * high-degree vertices had their edge lists salted across partitions,
-    * and the salt fan-out used (1 = uniform path, no salting). Benches
-    * persist these beside the throughput so "skew handling engaged" is a
-    * recorded fact, not an inference. Same last-writer-wins caveat.
-    */
-  @volatile var lastSaltedHubs: Int = 0
-  @volatile var lastSaltFactor: Int = 1
-
-  /** The prepared round plan of the most recent run (round 1's executed
-    * plan, the template every round copies), captured only
-    * under -Dgraft.engine.capturePlan=true — PlanAuditSpec inspects the
-    * scatter join structurally (zero-exchange edge side, salted keys)
-    * without paying plan retention on production runs.
-    */
-  @volatile var lastRoundPlan: Option[org.apache.spark.sql.execution.SparkPlan] = None
+                            changedTrace: Seq[Long],
+                            roundPlan: Option[SparkPlan] = None)
 
   /** A vertex qualifies as a salted hub when its out-degree exceeds this
     * multiple of the mean per-partition edge count (i.e. its edge list
@@ -301,8 +272,6 @@ object SqlRunner {
       // IN-set probe stays a same-type comparison inside codegen.
       val hubLits: Seq[Any] =
         if (narrowIds) hubIds.map(_.toInt) else hubIds
-      lastSaltedHubs = hubs.length
-      lastSaltFactor = saltF
       val allSalts = array((0 until saltF).map(i => lit(i)): _*)
       // Cached pre-partitioned on src (or (src, salt) under skew): every
       // superstep's senders⋈edges join finds the edge side already
@@ -457,8 +426,6 @@ object SqlRunner {
               abs($"value" - $"old") > alg.epsilon).as("changed"))
         updated.queryExecution.executedPlan
       }
-      if (sys.props.get("graft.engine.capturePlan").contains("true"))
-        lastRoundPlan = Some(template)
       if (template.outputPartitioning.numPartitions != stateParts)
         throw new IllegalStateException(s"the round re-lays the ${stateParts}-" +
           s"partition vertex state out as ${template.outputPartitioning}:\n$template")
@@ -483,16 +450,11 @@ object SqlRunner {
         verts.select(
           (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value")
       }
-      // Local first, volatile second: RunStats must carry THIS call's loop
-      // wall — reading the volatile back would let a concurrent run's
-      // assignment slip in between (the race RunStats exists to avoid).
       val loopSecs = (System.nanoTime() - tLoop) / 1e9
-      lastLoopSeconds = loopSecs
       e.unpersist()
       if (needCount) sel.unpersist()
-      lastIterations = run.rounds.length
-      (run.result, RunStats(run.rounds.length, loopSecs, hubs.length, saltF,
-        run.rounds.map(_.changed)))
+      (run.result, graft.obs.RunLog.run(RunStats(run.rounds.length, loopSecs,
+        hubs.length, saltF, run.rounds.map(_.changed), Some(template))))
     }
   }
 

@@ -885,16 +885,7 @@ object GraphOps {
       .select(shiftleft($"e1.a", 32).bitwiseOR($"e2.b").as("ab"))
     val closeSide = if (nEdges <= BroadcastCloseEdgeCap) broadcast(keyed)
       else keyed.hint("SHUFFLE_HASH")
-    val closed = wedges.join(closeSide, "ab")
-    // Plan evidence on demand (the count below executes eagerly, so an
-    // outside Explain would only see the trivial local result relation) —
-    // the SqlRunner capturePlan convention.
-    if (sys.props.get("graft.graphs.capturePlan").contains("true"))
-      // scalastyle:off println
-      println(closed.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      // scalastyle:on println
-    closed.count()
+    wedges.join(closeSide, "ab").count()
   }
 
   /** [[wedgeClosePacked]] over a two-column canonical (a < b) relation:

@@ -718,8 +718,8 @@ object GraphQueries {
     // N times with a DATA-determined N. Output/pin: the per-superstep
     // changed-count trace (see [[B07ChangedGolden]]) — the convergence
     // trajectory analogue of b03's depth histogram. Calls runWithStats
-    // directly: per-call stats, no volatile races under Verify's pool
-    // (and 64M is past the auto-dispatch threshold anyway, pinned by b03).
+    // directly for the run's own trace (64M is past the auto-dispatch
+    // threshold anyway, pinned by b03).
     "b07_pagerank_conv64m" -> ((s, dir) => {
       import s.implicits._
       val nV = AnchorNV
@@ -778,7 +778,8 @@ object GraphQueries {
       val tri = GraphOps.wedgeClosePacked(s, ue, nEdges)
       val t2 = System.nanoTime()
       ue.unpersist(blocking = false)
-      lastTriStats = ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
+      graft.obs.RunLog.measure("b08.canon_sec", (t1 - t0) / 1e9)
+      graft.obs.RunLog.measure("b08.close_sec", (t2 - t1) / 1e9)
       require(tri == B08TriGolden,
         s"b08 triangle total drifted from the pinned golden: $tri")
       Seq(tri).toDF("triangles")
@@ -793,13 +794,6 @@ object GraphQueries {
     * E[tri] ≈ d³/6 ≈ 683 of a uniform random digraph at out-degree 8.
     */
   private[graft] val B08TriGolden = 633L
-
-  /** Phase wall-clock of the last [[queries b08_triangles_8m]] run:
-    * (canonical-edge build seconds, wedge-close seconds) — Bench records
-    * them beside the throughput so the anchor carries the same per-phase
-    * observability as the reference's own TC logs.
-    */
-  @volatile private[graft] var lastTriStats: (Double, Double) = (0.0, 0.0)
 
   private val bfsOracle =
     s"""WITH RECURSIVE e AS ($edgesSql),

@@ -130,7 +130,7 @@ object EventQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      lastDrainStats.put("s11", (batches.get(), 0L))
+      recordDrain("s11", batches.get(), 0L)
       unstage(staged)
       state.get()
     }),
@@ -591,7 +591,7 @@ object EventQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      lastDrainStats.put("s10", (batches.get(), 0L))
+      recordDrain("s10", batches.get(), 0L)
       unstage(staged)
       state.get()
         .select($"key", $"c_name".as("name"), sig6($"c_acctbal").as("acctbal"))
@@ -620,22 +620,24 @@ object EventQueries {
     }),
   )
 
-  /** Run a finite streaming plan to a memory sink (AvailableNow drains the
-    * source then stops) and return the drained result. The uniquely-named
-    * sink keeps Verify's concurrent sessions from colliding; the result is
-    * local-checkpointed off the sink and the temp view dropped immediately —
-    * unique names mean the sinks are never overwritten, so without the drop
-    * every run would pin its full drained output in driver memory for the
-    * session's lifetime (the checkpoint blocks are freed by the standard
-    * per-query unpersist sweep).
+  /** Records a drain's micro-batches run and peak state-store rows under
+    * its tag — O17-style observability beyond wall time: a watermark
+    * regression shows up as unbounded state rows long before memory dies.
+    * Bench persists these per streaming query.
     */
-  /** (micro-batches run, peak state-store rows) of the most recent drain
-    * per tag — O17-style observability beyond wall time: a watermark
-    * regression shows up as unbounded state rows here long before memory
-    * dies. Bench persists these per streaming query.
+  private def recordDrain(tag: String, batches: Int, stateRows: Long): Unit = {
+    graft.obs.RunLog.measure(s"$tag.batches", batches)
+    graft.obs.RunLog.measure(s"$tag.state_rows", stateRows.toDouble)
+  }
+
+  /** The drains `records` holds: tag → (micro-batches run, peak state-store
+    * rows).
     */
-  val lastDrainStats =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
+  def drains(records: graft.obs.RunLog.Records): Map[String, (Int, Long)] =
+    records.measures.collect { case (n, b) if n.endsWith(".batches") =>
+      val tag = n.stripSuffix(".batches")
+      tag -> ((b.toInt, records.measure(s"$tag.state_rows").toLong))
+    }.toMap
 
   /** The SCD2 change-event projection q68 and s11 share. */
   private def scd2Events(s: SparkSession, dir: String): DataFrame = {
@@ -692,6 +694,15 @@ object EventQueries {
     graft.engine.LoopConf.sizedParallelism(s,
       math.max(1L, new java.io.File(s"$dir/events.parquet").length()), 4)
 
+  /** Run a finite streaming plan to a memory sink (AvailableNow drains the
+    * source then stops) and return the drained result. The uniquely-named
+    * sink keeps Verify's concurrent sessions from colliding; the result is
+    * local-checkpointed off the sink and the temp view dropped immediately —
+    * unique names mean the sinks are never overwritten, so without the drop
+    * every run would pin its full drained output in driver memory for the
+    * session's lifetime (the checkpoint blocks are freed by the standard
+    * per-query unpersist sweep).
+    */
   private def drain(s: SparkSession, df: DataFrame, tag: String,
                     mode: String, dir: String): DataFrame = {
     val sink = s"${tag}_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -706,9 +717,9 @@ object EventQueries {
         .start()
       q.awaitTermination()
       val prog = q.recentProgress
-      lastDrainStats.put(tag, (prog.length,
+      recordDrain(tag, prog.length,
         prog.flatMap(p => Option(p.stateOperators).toSeq.flatten)
-          .map(_.numRowsTotal).foldLeft(0L)(math.max)))
+          .map(_.numRowsTotal).foldLeft(0L)(math.max))
     }
     val out = s.table(sink).localCheckpoint()
     s.catalog.dropTempView(sink)

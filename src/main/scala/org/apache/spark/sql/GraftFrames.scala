@@ -16,10 +16,12 @@ object GraftFrames {
   private def classicSession(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]
 
-  /** `plan`'s RDD, built with `spark` active so every conf the operators
-    * read at execution comes from that session.
+  /** `plan`'s RDD, with `spark` active while `plan` is built and run: an
+    * operator takes its session (and so every conf it reads) from the
+    * thread's active session when it is constructed, so a plan copied on
+    * a thread without one would have none.
     */
-  def execute(spark: SparkSession, plan: SparkPlan): RDD[InternalRow] =
+  def execute(spark: SparkSession, plan: => SparkPlan): RDD[InternalRow] =
     classicSession(spark).withActive(plan.execute())
 
   /** A DataFrame scanning `rdd`, whose rows are `output`, laid out by

@@ -311,15 +311,15 @@ class PlanAuditSpec extends AnyFunSuite {
       .withColumn("weight", lit(1.0))
     val verts = s.range(1, nV + 1).select($"id")
     sys.props.put("graft.engine.hubMinDegree", "5000")
-    sys.props.put("graft.engine.capturePlan", "true")
     // Classic path pinned explicitly (pull mode — the sub-8M-vertex
     // default — has no scatter shuffle to audit; its twin is below).
     sys.props.put("graft.engine.broadcastPullMaxVertices", "0")
     try {
-      SqlRunner.run(s, verts, edges, Algorithms.Sssp,
-        GraphMeta(nV, source = 1L), numEdges = 200000L).count()
-      assert(SqlRunner.lastSaltedHubs >= 1, "salting must engage on this fixture")
-      val plan = SqlRunner.lastRoundPlan.getOrElse(fail("no captured plan"))
+      val (res, stats) = SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
+        GraphMeta(nV, source = 1L), numEdges = 200000L)
+      res.count()
+      assert(stats.saltedHubs >= 1, "salting must engage on this fixture")
+      val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
       val nodes = expand(plan)
       // The scatter join is the two-key SHJ (id, salt)×(src, salt); the
       // one-key SHJ is the verts⋈aggs update join.
@@ -345,9 +345,7 @@ class PlanAuditSpec extends AnyFunSuite {
         s"edge side must not re-shuffle:\n$streamed")
     } finally {
       sys.props.remove("graft.engine.hubMinDegree")
-      sys.props.remove("graft.engine.capturePlan")
       sys.props.remove("graft.engine.broadcastPullMaxVertices")
-      SqlRunner.lastRoundPlan = None
     }
   }
 
@@ -373,28 +371,23 @@ class PlanAuditSpec extends AnyFunSuite {
       .filter($"src" =!= $"dst")
       .withColumn("weight", lit(1.0))
     val verts = s.range(1, nV + 1).select($"id")
-    sys.props.put("graft.engine.capturePlan", "true")
-    try {
-      SqlRunner.run(s, verts, edges, Algorithms.Sssp,
-        GraphMeta(nV, source = 1L), numEdges = 200000L).count()
-      val plan = SqlRunner.lastRoundPlan.getOrElse(fail("no captured plan"))
-      val nodes = expand(plan)
-      val scatter = nodes.collectFirst {
-        case j: BroadcastHashJoinExec => j
-      }.getOrElse(fail(s"no BroadcastHashJoin in:\n$plan"))
-      val streamed = scatter.buildSide match {
-        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => scatter.right
-        case _ => scatter.left
-      }
-      val sub = expand(streamed)
-      assert(sub.exists(_.isInstanceOf[InMemoryTableScanExec]),
-        s"edge side must read the cache:\n$streamed")
-      assert(!sub.exists(_.isInstanceOf[ShuffleExchangeExec]),
-        s"edge side must not re-shuffle:\n$streamed")
-    } finally {
-      sys.props.remove("graft.engine.capturePlan")
-      SqlRunner.lastRoundPlan = None
+    val (res, stats) = SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
+      GraphMeta(nV, source = 1L), numEdges = 200000L)
+    res.count()
+    val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
+    val nodes = expand(plan)
+    val scatter = nodes.collectFirst {
+      case j: BroadcastHashJoinExec => j
+    }.getOrElse(fail(s"no BroadcastHashJoin in:\n$plan"))
+    val streamed = scatter.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildLeft => scatter.right
+      case _ => scatter.left
     }
+    val sub = expand(streamed)
+    assert(sub.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      s"edge side must read the cache:\n$streamed")
+    assert(!sub.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"edge side must not re-shuffle:\n$streamed")
   }
 
   test("AQE splits a skewed sort-merge join partition at runtime") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.RunLog
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Ev
 
@@ -119,10 +120,10 @@ class StreamingSpec extends AnyFunSuite {
     // batch count (a single-batch drain would pass the oracle only if the
     // runtime coalesced files, hiding the cross-batch composition) and
     // the +200 composition on a twice-updated key.
-    val out = graft.SparkEntry.queries("s10_stream_cdc_merge")(
+    val (out, records) = RunLog.capture(graft.SparkEntry.queries("s10_stream_cdc_merge")(
       spark, "/root/testdata/sf0.001")
-      .as[(Long, String, Double)].collect()
-    assert(graft.streaming.EventQueries.lastDrainStats.get("s10")._1 == 2)
+      .as[(Long, String, Double)].collect())
+    assert(graft.streaming.EventQueries.drains(records)("s10")._1 == 2)
     val snap = Tables.load(spark, "/root/testdata/sf0.001", "customer")
       .select($"c_custkey", $"c_acctbal").as[(Long, Double)].collect().toMap
     val k0 = snap.keys.filter(_ % 7 == 0).min
@@ -143,9 +144,9 @@ class StreamingSpec extends AnyFunSuite {
     // one-shot result — pin the batch count (coalesced files would hide
     // the composition) and row-set equality with the batch query.
     val sf = "/root/testdata/sf0.001"
-    val s11 = graft.SparkEntry.queries("s11_stream_scd2")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    assert(graft.streaming.EventQueries.lastDrainStats.get("s11")._1 == 2)
+    val (s11, records) = RunLog.capture(graft.SparkEntry.queries("s11_stream_scd2")(spark, sf)
+      .collect().map(_.toSeq).toSet)
+    assert(graft.streaming.EventQueries.drains(records)("s11")._1 == 2)
     val q68 = graft.SparkEntry.queries("q68_scd2_merge")(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(s11 == q68,
@@ -249,10 +250,10 @@ class StreamingSpec extends AnyFunSuite {
     // maxFilesPerTrigger=1 — correctness REQUIRES the per-user ValueState
     // to persist across batches (a reset state under-counts n_events).
     // The drain stats must therefore record >= 2 micro-batches with data.
-    val got = SparkEntry.queries("s08_stream_hwm")(
+    val (got, records) = RunLog.capture(SparkEntry.queries("s08_stream_hwm")(
         spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2))))
-      .toMap
+      .toMap)
     val exp = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .groupBy($"user_id")
       .agg(graft.Canon.sig6(max($"value")).as("mx"),
@@ -260,7 +261,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2))))
       .toMap
     assert(got == exp)
-    val (batches, _) = graft.streaming.EventQueries.lastDrainStats.get("s08")
+    val (batches, _) = graft.streaming.EventQueries.drains(records)("s08")
     assert(batches >= 2,
       s"expected >=2 micro-batches (two staged files), got $batches")
   }
@@ -273,11 +274,11 @@ class StreamingSpec extends AnyFunSuite {
     // events EARLIER than the first's — the persisted list must be
     // displaced/re-ranked, not appended to. Equality with the batch top-3
     // window proves the merge; the drain stats pin the two batches.
-    val got = SparkEntry.queries("s12_stream_lastn")(
+    val (got, records) = RunLog.capture(SparkEntry.queries("s12_stream_lastn")(
         spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
-      .toMap
+      .toMap)
     val w = Window.partitionBy($"user_id")
       .orderBy(unix_millis($"ts".cast("timestamp")).desc, $"event_id".desc)
     val exp = Tables.load(spark, "/root/testdata/sf0.001", "events")
@@ -289,7 +290,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == exp)
-    val (batches, _) = graft.streaming.EventQueries.lastDrainStats.get("s12")
+    val (batches, _) = graft.streaming.EventQueries.drains(records)("s12")
     assert(batches >= 2,
       s"expected >=2 micro-batches (two staged files), got $batches")
   }
@@ -301,12 +302,12 @@ class StreamingSpec extends AnyFunSuite {
     // per-type partials into map entries persisted by batch 1 — an
     // overwrite (or counts bleeding across types) breaks equality with
     // the plain batch per-(user, type) aggregate.
-    val got = SparkEntry.queries("s14_stream_typecounts")(
+    val (got, records) = RunLog.capture(SparkEntry.queries("s14_stream_typecounts")(
         spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getLong(0), r.getString(1)) ->
         ((r.getLong(2), r.getDouble(3))))
-      .toMap
+      .toMap)
     val exp = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .groupBy($"user_id", $"event_type")
       .agg(count(lit(1)).as("cnt"), graft.Canon.exactSum($"value", 2).as("t"))
@@ -315,7 +316,7 @@ class StreamingSpec extends AnyFunSuite {
         ((r.getLong(2), r.getDouble(3))))
       .toMap
     assert(got == exp)
-    val (batches, _) = graft.streaming.EventQueries.lastDrainStats.get("s14")
+    val (batches, _) = graft.streaming.EventQueries.drains(records)("s14")
     assert(batches >= 2,
       s"expected >=2 micro-batches (two staged files), got $batches")
   }
@@ -327,9 +328,9 @@ class StreamingSpec extends AnyFunSuite {
     // advances the watermark — so each firing consumes state written in a
     // PRIOR batch (a lost ValueState would fire with nothing to emit, a
     // lost timer would never fire).
-    val got = SparkEntry.queries("s13_stream_timeout")(
+    val (got, records) = RunLog.capture(SparkEntry.queries("s13_stream_timeout")(
         spark, "/root/testdata/sf0.001")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))))
     assert(got.map(_._1).distinct.length == got.length,
       "a user timed out more than once")
     val exp = Tables.load(spark, "/root/testdata/sf0.001", "events")
@@ -338,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
         count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
     assert(got.toMap == exp.toMap)
-    val (batches, _) = graft.streaming.EventQueries.lastDrainStats.get("s13")
+    val (batches, _) = graft.streaming.EventQueries.drains(records)("s13")
     assert(batches >= 2,
       s"expected >=2 micro-batches (data, then sentinel), got $batches")
   }

@@ -148,11 +148,10 @@ class SuperstepPlanSpec extends AnyFunSuite {
     val traces = Seq("pull" -> Nil, "pull salted" -> Seq(hubs),
         "classic" -> Seq(classic), "classic salted" -> Seq(classic, hubs))
       .map { case (mode, props) =>
-        val (got, stats) = withProps(("graft.engine.capturePlan" -> "true") +: props: _*) {
+        val (got, stats) = withProps(props: _*) {
           SqlRunner.runWithStats(spark, verts, edges, alg, wideMeta)
         }
-        val plan = SqlRunner.lastRoundPlan.get
-        SqlRunner.lastRoundPlan = None
+        val plan = stats.roundPlan.get
         assert((stats.saltedHubs > 0) == props.contains(hubs), mode)
         if (!props.contains(hubs)) {
           assert(plan.outputPartitioning.numPartitions == 2, s"$mode:\n$plan")
@@ -198,6 +197,23 @@ class SuperstepPlanSpec extends AnyFunSuite {
       assert(short > 0, "the counting rule never ran")
       assert(short == long, s"4 rounds ran the optimizer $short times, 12 rounds $long")
     } finally exp.extraOptimizations = prev
+  }
+
+  test("rounds run on a thread with no active session") {
+    // Each round copies the prepared plan, and an operator takes its
+    // session from the thread's active one when it is built: the copy must
+    // be made with the loop's session active, whatever thread runs it.
+    val (verts, edges) = path(5)
+    var got: Either[Throwable, Int] = Left(new IllegalStateException("not run"))
+    val t = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      got = try Right(SqlRunner.runWithStats(spark, verts, edges,
+        Algorithms.UnitWeighted(Algorithms.Sssp), GraphMeta(5L, source = 0L))._2.iterations)
+      catch { case e: Throwable => Left(e) }
+    })
+    t.start()
+    t.join(120000)
+    assert(got.fold(throw _, identity) == 5)
   }
 
   test("pull mode: every round's changed count is a one-stage job") {
