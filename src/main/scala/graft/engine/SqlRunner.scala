@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** DataFrame executor for [[GmrAlgorithm]] — the reference's iteration driver
@@ -25,13 +27,15 @@ import org.apache.spark.sql.functions._
   * vertex-state scans rebound to the previous round's checkpoint
   * ([[rebind]]). No round is analyzed, optimized or planned again. The
   * rounds run through [[Fixpoint]]; each marks its output for local
-  * checkpoint (lineage stays one round deep) and runs ONE action, a
+  * checkpoint (lineage stays one round deep) and runs ONE job, a
   * one-stage count of the changed rows that also materializes the
   * checkpoint (≙ the reference's piggybacked Allgather convergence
-  * exchange, igmr.cpp:137-149). Pull mode adds the senders' broadcast job.
-  * The vertex state is seeded hash-partitioned on id at the loop's
-  * partition count, the layout each round's update join keeps, so the one
-  * plan fits every round. Vertices carry their static out-degree so
+  * exchange, igmr.cpp:137-149). In pull mode the same job returns the next
+  * round's senders ([[Frontier]]); the driver broadcasts them and the
+  * round's plan copy reads that broadcast in place of its own exchange, so
+  * no round runs a broadcast job. The vertex state is seeded
+  * hash-partitioned on id at the loop's partition count, the layout each
+  * round's update join keeps, so the one plan fits every round. Vertices carry their static out-degree so
   * PageRank-style messages need no extra join.
   */
 object SqlRunner {
@@ -45,11 +49,15 @@ object SqlRunner {
     * prepared round plan every superstep copies — SqlRunner's alone; the
     * local tiers run no plan per round. The plan keeps the shuffles it read
     * reachable, so a caller that stores stats past the call drops it.
+    * `sendersTrace(i)` is superstep i+1's sender count in pull mode, the
+    * rows its broadcast carried; classic mode and the local tiers leave it
+    * empty.
     */
   final case class RunStats(iterations: Int, loopSeconds: Double,
                             saltedHubs: Int, saltFactor: Int,
                             changedTrace: Seq[Long],
-                            roundPlan: Option[SparkPlan] = None)
+                            roundPlan: Option[SparkPlan] = None,
+                            sendersTrace: Seq[Long] = Nil)
 
   /** A vertex qualifies as a salted hub when its out-degree exceeds this
     * multiple of the mean per-partition edge count (i.e. its edge list
@@ -100,11 +108,10 @@ object SqlRunner {
   private def broadcastPullMaxVertices: Long =
     // MEMORY-DERIVED default (r11 verdict item 8, replacing the flat 8M
     // tuned to one box): a broadcast hash relation costs ~48 B/vertex
-    // built (16 B row + LongHashedRelation overhead); the ContextCleaner
-    // frees the previous round's broadcast lazily (on the GC after the
-    // round's checkpoint unlinks it — localCheckpoint's markCheckpointed
-    // drops the closure references), so a few retained generations must
-    // fit beside the edge cache. heap/(64·48) caps one generation at
+    // built (16 B row + LongHashedRelation overhead). Each round destroys
+    // its broadcast once its job has finished, so one generation is live
+    // at a time, next to the packed senders it was built from (~28 B per
+    // sender) and the edge cache. heap/(64·48) caps one generation at
     // ~heap/64: a 20 GiB driver derives ~6.5M vertices (the 4M anchors
     // stay in pull mode), an 8 GiB one ~2.6M (the anchors correctly fall
     // back to classic). Broadcast blocks are storage-managed
@@ -185,8 +192,18 @@ object SqlRunner {
     // the edge cache explicitly from the EDGE bytes. Classic mode's
     // message shuffle is edge-sized, so it keeps the edge-derived conf
     // unchanged.
+    //
+    // CORE FLOOR for the edge-sized layouts: every round scans the whole
+    // edge cache, so a graph of 1M edges at 8 MB per partition (2
+    // partitions) ran every round on 2 of 4 cores. Once a graph has
+    // ≥ 64K edges per core, its edge cache and classic mode's `parts`
+    // take at least one partition per core; smaller graphs keep the
+    // sized count (1 below 64K edges), where dispatch outweighs the work.
+    val coreFloor = math.min(spark.sparkContext.defaultParallelism.toLong,
+      m / 65536).toInt
     val edgeRowBytes = (if (usesWeight) 8 else 0) + (if (narrowIds) 8 else 16)
-    val edgeParts = LoopConf.sizedParallelism(spark, m, edgeRowBytes.toLong)
+    val edgeParts = math.max(coreFloor,
+      LoopConf.sizedParallelism(spark, m, edgeRowBytes.toLong))
     val vertexParts = {
       val sized = LoopConf.sizedParallelism(
         spark, math.max(1L, meta.numVertices), 24)
@@ -198,7 +215,9 @@ object SqlRunner {
         math.max(4 * spark.sparkContext.defaultParallelism, sized)
       else sized
     }
-    val parts = if (pullMode) vertexParts else LoopConf.loopParallelism(spark, m)
+    val parts =
+      if (pullMode) vertexParts
+      else math.max(coreFloor, LoopConf.loopParallelism(spark, m))
     // The partition count the edge cache is actually laid out at — the
     // denominator of the hub-straggler threshold below.
     val cacheParts = if (pullMode) edgeParts else parts
@@ -337,9 +356,7 @@ object SqlRunner {
       }
       val verts0 = checkpoint(spark, initOut, initRows,
         HashPartitioning(initOut.filter(_.name == "id"), stateParts), stateStats)
-      initRows.count() // materialized in setup, as the loop's input
 
-      val tLoop = System.nanoTime()
       // THE ROUND, planned once: round 1's join→agg→join Dataset over the
       // seed state, built and planned here and never executed itself. Every
       // round runs a fresh copy of this physical plan with its vertex-state
@@ -430,22 +447,56 @@ object SqlRunner {
         throw new IllegalStateException(s"the round re-lays the ${stateParts}-" +
           s"partition vertex state out as ${template.outputPartitioning}:\n$template")
       val changedAt = template.output.indexWhere(_.name == "changed")
-      val run = Fixpoint(verts0, alg.maxIter) { (verts, _) =>
-        // Lazy: the changed-count materializes the checkpoint in the same
-        // job — one stage, as the count reads the round's rows directly
-        // instead of planning an aggregate over the checkpoint. Fixpoint
-        // then frees the superseded round's checkpoint: 120 rounds of
-        // leaked vertex state is 120×|V| rows of memory pressure, and the
-        // resulting GC pauses were measured dominating round time at 4M
-        // vertices. The count stays in this file: tracers mark round ends
-        // by its call site.
-        val rows = GraftFrames.execute(spark,
-          rebind(template, initRows, stateRdd(verts))).map(_.copy())
-        val next = checkpoint(spark, template.output, rows,
-          template.outputPartitioning, stateStats)
-        Fixpoint.Step(next,
-          rows.filter(r => !r.isNullAt(changedAt) && r.getBoolean(changedAt)).count())
-      } { verts =>
+      // Pull mode: the round's one broadcast, whose side — the senders —
+      // each state's job gathers for the round that reads that state.
+      val exchange = if (pullMode) Some(onlyBroadcast(template)) else None
+      val senderSide = exchange.map(x => Frontier.select(x.child, initRows))
+      // ONE job over a state's rows: it materializes their checkpoint,
+      // counts the changed rows and, in pull mode, packs the senders. One
+      // stage, as it reads the rows directly instead of planning an
+      // aggregate over the checkpoint. It stays in this file: tracers mark
+      // round ends by its call site.
+      def stateJob(rows: RDD[InternalRow]): (Long, Option[Frontier.Packed]) = {
+        val parts = GraftFrames.count(rows) { it =>
+          val packer = senderSide.map(_.packer(TaskContext.getPartitionId()))
+          var changed = 0L
+          it.foreach { r =>
+            if (!r.isNullAt(changedAt) && r.getBoolean(changedAt)) changed += 1
+            packer.foreach(_.add(r))
+          }
+          (changed, packer.map(_.result))
+        }
+        val packed = parts.flatMap(_._2)
+        (parts.map(_._1).sum,
+          senderSide.map(_ => Frontier.Packed(packed.map(_._1).sum, packed.map(_._2).toSeq)))
+      }
+      // The seed's job: the loop's input, materialized in setup.
+      val seedSenders = stateJob(initRows)._2
+      val sendersTrace = Seq.newBuilder[Long]
+
+      val tLoop = System.nanoTime()
+      val run = Fixpoint((verts0, seedSenders), alg.maxIter) { case ((verts, frontier), _) =>
+        // The driver builds and broadcasts the senders the previous job
+        // packed, and destroys the broadcast once this round's job is done:
+        // the checkpoint it feeds is materialized by then.
+        val relation = for (x <- exchange; f <- frontier) yield {
+          sendersTrace += f.count
+          GraftFrames.broadcast(spark, x, f.rows(x.output.size), f.count)
+        }
+        try {
+          // Lazy: the state job materializes the checkpoint. Fixpoint then
+          // frees the superseded round's checkpoint: 120 rounds of leaked
+          // vertex state is 120×|V| rows of memory pressure, and the
+          // resulting GC pauses were measured dominating round time at 4M
+          // vertices.
+          val rows = GraftFrames.execute(spark,
+            rebind(template, initRows, stateRdd(verts), relation)).map(_.copy())
+          val next = checkpoint(spark, template.output, rows,
+            template.outputPartitioning, stateStats)
+          val (changed, nextSenders) = stateJob(rows)
+          Fixpoint.Step((next, nextSenders), changed)
+        } finally relation.foreach(GraftFrames.destroy)
+      } { case (verts, _) =>
         // Re-widen narrowed ids: the surface schema is (id LONG, value).
         verts.select(
           (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value")
@@ -454,7 +505,8 @@ object SqlRunner {
       e.unpersist()
       if (needCount) sel.unpersist()
       (run.result, graft.obs.RunLog.run(RunStats(run.rounds.length, loopSecs,
-        hubs.length, saltF, run.rounds.map(_.changed), Some(template))))
+        hubs.length, saltF, run.rounds.map(_.changed), Some(template),
+        sendersTrace.result())))
     }
   }
 
@@ -475,24 +527,30 @@ object SqlRunner {
         s"superstep state is not a checkpoint scan:\n${state.queryExecution.analyzed}"))
 
   /** A fresh, executable copy of the prepared round plan `template` whose
-    * scans of `from` read `to` instead. Every operator is copied, so no
-    * exchange, broadcast or metric of one round survives into the next,
-    * and the template itself never runs. Fails loudly on a plan a rebind
-    * cannot serve: an adaptive plan (it re-plans itself as stages finish,
-    * so its copy would run stale decisions), a reused exchange (its copy
-    * would still point into the template), no scan of `from`, or a `to`
-    * whose partition count differs from the layout the plan was built on.
+    * scans of `from` read `to` instead and, given `senders`, whose one
+    * broadcast exchange is replaced by a leaf serving that broadcast. Every
+    * operator is copied, so no exchange, broadcast or metric of one round
+    * survives into the next, and the template itself never runs. Fails
+    * loudly on a plan a rebind cannot serve: an adaptive plan (it re-plans
+    * itself as stages finish, so its copy would run stale decisions), a
+    * reused exchange (its copy would still point into the template), no
+    * scan of `from`, a `to` whose partition count differs from the layout
+    * the plan was built on, or `senders` for a plan without exactly one
+    * broadcast exchange.
     */
-  private[engine] def rebind(template: SparkPlan, from: RDD[_],
-                             to: RDD[InternalRow]): SparkPlan = {
+  private[engine] def rebind(template: SparkPlan, from: RDD[_], to: RDD[InternalRow],
+                             senders: Option[Broadcast[Any]] = None): SparkPlan = {
     template.foreach {
       case p @ (_: AdaptiveSparkPlanExec | _: ReusedExchangeExec) =>
         throw new IllegalStateException(
           s"cannot rebind a plan containing ${p.nodeName}:\n$template")
       case _ =>
     }
+    senders.foreach(_ => onlyBroadcast(template))
     var matched = 0
     val plan = template.clone().transform {
+      case x: BroadcastExchangeExec if senders.isDefined =>
+        GraftFrames.serve(x, senders.get)
       case s: RDDScanExec if s.rdd eq from =>
         if (to.getNumPartitions != from.getNumPartitions)
           throw new IllegalStateException(s"rebind of RDD ${from.id} " +
@@ -505,4 +563,12 @@ object SqlRunner {
       throw new IllegalStateException(s"no scan of RDD ${from.id} to rebind in:\n$template")
     plan
   }
+
+  /** `plan`'s one broadcast exchange; fails loudly on none or several. */
+  private def onlyBroadcast(plan: SparkPlan): BroadcastExchangeExec =
+    plan.collect { case x: BroadcastExchangeExec => x } match {
+      case Seq(x) => x
+      case xs => throw new IllegalStateException(
+        s"expected one broadcast exchange, found ${xs.size} in:\n$plan")
+    }
 }

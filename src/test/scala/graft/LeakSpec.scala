@@ -98,4 +98,28 @@ class LeakSpec extends AnyFunSuite {
       assert(left.isEmpty, s"$name leaked persisted RDDs ${left.toSeq.sorted}")
     }
   }
+
+  /** Ids of the broadcasts resident in the block manager that carry a
+    * join's hash relation: serialized-only ones (pieces, no value block on
+    * the driver) and those whose value a task read back. Task binaries are
+    * broadcast too, with their bytes as the value; the cleaner frees those.
+    */
+  private def relationBroadcasts(): Set[Long] = {
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    bm.getMatchingBlockIds(_.isBroadcast)
+      .collect { case b: org.apache.spark.storage.BroadcastBlockId => b }
+      .groupBy(_.broadcastId).collect {
+        case (id, blocks) if blocks.forall(_.field.nonEmpty) ||
+            blocks.filter(_.field.isEmpty).exists(b => bm.getLocalValues(b)
+              .exists(_.data.toList.exists(_.getClass.getName.contains("HashedRelation")))) =>
+          id
+      }.toSet
+  }
+
+  test("SqlRunner.runWithStats releases its rounds' broadcasts before it returns") {
+    val before = relationBroadcasts()
+    sssp()
+    val left = relationBroadcasts() -- before
+    assert(left.isEmpty, s"broadcasts ${left.toSeq.sorted} outlive the run")
+  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
@@ -23,8 +24,9 @@ import graft.algos.Algorithms
   * re-executed every round with its vertex-state scans rebound to the
   * current checkpoint. Pins that the rebound rounds compute exactly what
   * LocalRunner's in-memory loop does, that planning does not grow with the
-  * round count, that the changed count is a one-stage job, and that the
-  * rebind refuses plans it cannot serve.
+  * round count, that each round is one one-stage job, that the loop's
+  * partitions follow the graph's size, and that the rebind refuses plans
+  * it cannot serve.
   */
 class SuperstepPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -54,9 +56,10 @@ class SuperstepPlanSpec extends AnyFunSuite {
   private val meta = GraphMeta(701L, source = 0L)
 
   /** 600k random edges over 20k vertices: the edge cache and the classic
-    * loop take 2 partitions while the vertex state alone would take 1, so
-    * the seed must follow the larger side. Vertex 1 is an out-degree hub
-    * (classic salting) and vertex 2 an in-degree hub (pull salting).
+    * loop take one partition per core while the vertex state alone would
+    * take 1, so the seed must follow the larger side. Vertex 1 is an
+    * out-degree hub (classic salting) and vertex 2 an in-degree hub (pull
+    * salting).
     */
   private lazy val wide: (DataFrame, DataFrame) = {
     val s = spark
@@ -154,7 +157,10 @@ class SuperstepPlanSpec extends AnyFunSuite {
         val plan = stats.roundPlan.get
         assert((stats.saltedHubs > 0) == props.contains(hubs), mode)
         if (!props.contains(hubs)) {
-          assert(plan.outputPartitioning.numPartitions == 2, s"$mode:\n$plan")
+          val stateParts = plan.outputPartitioning.numPartitions
+          assert(stateParts == cacheParts(plan) &&
+            stateParts > LoopConf.sizedParallelism(spark, wideMeta.numVertices, 24),
+            s"$mode:\n$plan")
           val toVerts = plan.collect { case j: ShuffledHashJoinExec => j.left }
             .flatMap(_.collect { case x: ShuffleExchangeExec => x })
           assert(toVerts.isEmpty, s"$mode shuffles the vertex state:\n$plan")
@@ -164,6 +170,53 @@ class SuperstepPlanSpec extends AnyFunSuite {
       }
     assert(traces.forall(_ == traces.head), traces)
     assert(traces.head == localTrace(alg, traces.head.size, wide, wideMeta))
+  }
+
+  /** The partition count of the edge cache `plan` scans. */
+  private def cacheParts(plan: SparkPlan): Int =
+    plan.collectFirst { case c: InMemoryTableScanExec => c }
+      .getOrElse(fail(s"no edge cache in:\n$plan"))
+      .relation.cachedPlan.outputPartitioning.numPartitions
+
+  test("the loop fills the cores from 64K edges per core, and a small graph " +
+      "keeps one partition") {
+    val s = spark
+    import s.implicits._
+    val cores = s.sparkContext.defaultParallelism
+    assert(cores == 4, "TestSpark runs local[4]")
+    val nV = 50000L
+    val big = (s.range(0, nV).select($"id"),
+      s.range(0, 1000000).select(($"id" % nV).as("src"),
+        pmod(xxhash64($"id"), lit(nV)).as("dst")).withColumn("weight", lit(1.0)))
+    val oneRound = new DelegatingGmrAlgorithm(Algorithms.UnitWeighted(Algorithms.Sssp)) {
+      override def maxIter: Int = 1
+    }
+    Seq("pull" -> Nil, "classic" -> Seq("graft.engine.broadcastPullMaxVertices" -> "0"))
+      .foreach { case (mode, props) =>
+        def laidOut(g: (DataFrame, DataFrame), m: GraphMeta): (Int, Int) = {
+          val plan = withProps(props: _*) {
+            SqlRunner.runWithStats(s, g._1, g._2, oneRound, m)
+          }._2.roundPlan.get
+          (plan.outputPartitioning.numPartitions, cacheParts(plan))
+        }
+        assert(laidOut(big, GraphMeta(nV, source = 0L)) == (cores, cores), s"$mode, 1M edges")
+        assert(laidOut(graph, meta) == (1, 1), s"$mode, ${meta.numVertices} vertices")
+      }
+  }
+
+  test("sendersTrace: each pull-mode round's sender count — the previous " +
+      "round's changed vertices for SSSP") {
+    val (pv, pe) = path(6)
+    val onPath = SqlRunner.runWithStats(spark, pv, pe,
+      Algorithms.UnitWeighted(Algorithms.Sssp), GraphMeta(6L, source = 0L))._2
+    assert(onPath.sendersTrace == Seq.fill(6)(1L), onPath)
+    val (verts, edges) = graph
+    val stats = SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)._2
+    assert(stats.sendersTrace == 1L +: stats.changedTrace.init, stats)
+    val classic = withProps("graft.engine.broadcastPullMaxVertices" -> "0") {
+      SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)._2
+    }
+    assert(classic.sendersTrace.isEmpty, classic)
   }
 
   /** Path 0 → 1 → … → len−1 as (vertices, edges). */
@@ -249,12 +302,21 @@ class SuperstepPlanSpec extends AnyFunSuite {
       while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
       stats
     } finally spark.sparkContext.removeSparkListener(listener)
-    // Setup counts share the call site; the rounds' are the last ones.
-    val counts = sites.asScala.toSeq.sortBy(_._1)
+    // Setup counts share the call site; the seed's and the rounds' are the
+    // last ones.
+    val jobs = sites.asScala.toSeq.sortBy(_._1)
+    val seeded = jobs
       .collect { case (job, site) if site.startsWith("count at SqlRunner") => job }
-      .takeRight(stats.iterations)
+      .takeRight(stats.iterations + 1)
+    val counts = seeded.tail
     val stages = counts.map(j => j -> ran.getOrDefault(j, 0))
     assert(counts.size == stats.iterations && stages.forall(_._2 == 1), stages)
+    // Nothing else runs from the seed's count to the last round's: the
+    // senders come back with each count, so no round collects them itself.
+    val between = jobs.filter { case (job, _) =>
+      job > seeded.head && job < seeded.last && !seeded.contains(job)
+    }
+    assert(between.isEmpty, s"jobs between the counts $seeded: $between")
   }
 
   test("rebind refuses an adaptive plan, a plan without the scan, and a " +
@@ -281,5 +343,22 @@ class SuperstepPlanSpec extends AnyFunSuite {
     val rebound = SqlRunner.rebind(plan, ckptRdd, same).execute()
       .map(r => r.getLong(1)).collect().sorted
     assert(rebound.toSeq == (4 until 100).map(_ * 3L))
+  }
+
+  test("rebind refuses senders to serve in a plan without one broadcast exchange") {
+    val s = spark
+    import s.implicits._
+    val ckpt = s.range(0, 100, 1, 2).select($"id", ($"id" * 2).as("v")).localCheckpoint()
+    val ckptRdd = ckpt.queryExecution.analyzed
+      .collectFirst { case l: LogicalRDD => l.rdd }.get
+    val plan = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "false")) {
+      ckpt.filter($"v" > 10).queryExecution.executedPlan
+    }
+    val senders = s.sparkContext.broadcast[Any](0)
+    try {
+      val msg = intercept[IllegalStateException](
+        SqlRunner.rebind(plan, ckptRdd, ckptRdd, Some(senders))).getMessage
+      assert(msg.contains("expected one broadcast exchange, found 0"), msg)
+    } finally senders.destroy()
   }
 }
