@@ -5,17 +5,18 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression,
   Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
   RDDScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.Platform
 
 /** A pull-mode round's senders, gathered by the job of the round before it
   * (≙ the reference's next-frontier exchange, igmr.cpp:137-153): each
-  * state partition packs the rows the round plan's broadcast side would
-  * select from it, as `UnsafeRow` bytes, and the driver builds the next
-  * round's broadcast from them without a job of its own.
+  * state partition packs the rows the sender selection selects from it,
+  * as `UnsafeRow` bytes, and the driver sorts them into the [[Senders]] it
+  * broadcasts to the next round's scatter without a job of its own.
   */
 private[engine] object Frontier {
 
@@ -23,27 +24,49 @@ private[engine] object Frontier {
     * prefixed by its size in bytes.
     */
   final case class Packed(count: Long, parts: Seq[Array[Byte]]) {
-    /** The senders as rows of `numFields` fields, read in place. */
-    def rows(numFields: Int): Iterator[InternalRow] = parts.iterator.flatMap { bytes =>
+    /** The senders as rows of `fields`, ordered by their `id` field. */
+    def senders(fields: Seq[Attribute]): Senders = {
+      val idAt = fields.indexWhere(_.name == "id")
+      val wide = fields(idAt).dataType == LongType
+      val bytes = Array.concat(parts: _*)
+      val n = count.toInt
+      val (ids, at, sizes) = (new Array[Long](n), new Array[Int](n), new Array[Int](n))
       val in = ByteBuffer.wrap(bytes)
-      Iterator.continually(in).takeWhile(_.hasRemaining).map { b =>
-        val size = b.getInt()
-        val row = new UnsafeRow(numFields)
-        row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + b.position(), size)
-        b.position(b.position() + size)
-        row
+      val row = new UnsafeRow(fields.size)
+      for (i <- 0 until n) {
+        sizes(i) = in.getInt()
+        at(i) = in.position()
+        row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at(i), sizes(i))
+        ids(i) = if (wide) row.getLong(idAt) else row.getInt(idAt).toLong
+        in.position(at(i) + sizes(i))
       }
+      val order = EdgeIndex.sortedOrder(ids)
+      new Senders(EdgeIndex.permute(ids, order), EdgeIndex.permute(at, order),
+        EdgeIndex.permute(sizes, order), bytes)
     }
   }
 
-  /** The broadcast side `side` of a round plan — a filter/project chain
-    * over its scan of `from`, the state the plan was built on, topped by a
-    * projection — bound so a task can evaluate it on any state's rows.
-    * Fails loudly on a side of any other shape.
+  /** A round's senders as the scatter reads them: `ids` ascending, and
+    * sender i's row at `at(i)` in `bytes`, `sizes(i)` bytes long.
+    */
+  final class Senders private[Frontier] (val ids: Array[Long], at: Array[Int],
+                                         sizes: Array[Int], bytes: Array[Byte])
+      extends Serializable {
+    def size: Int = ids.length
+
+    /** Points `row` at sender i's row. */
+    def read(i: Int, row: UnsafeRow): Unit =
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at(i), sizes(i))
+  }
+
+  /** The sender selection `side` — a filter/project chain over its scan of
+    * `from`, the state it was planned on, topped by a projection — bound so
+    * a task can evaluate it on any state's rows. Fails loudly on a plan of
+    * any other shape.
     */
   def select(side: SparkPlan, from: RDD[_]): Select = {
     def shape = new IllegalStateException(
-      s"cannot gather senders through the broadcast side:\n$side")
+      s"cannot gather senders through the selection:\n$side")
     def steps(p: SparkPlan): List[Either[Expression, Seq[Expression]]] = p match {
       case w: WholeStageCodegenExec => steps(w.child)
       case i: InputAdapter => steps(i.child)

@@ -1,41 +1,50 @@
 package graft.engine
 
 import org.apache.spark.TaskContext
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  UnknownPartitioning}
 import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** DataFrame executor for [[GmrAlgorithm]] — the reference's iteration driver
-  * (igmr.cpp:116-247) collapsed to a join→groupBy→join round per superstep:
+  * (igmr.cpp:116-247) collapsed to a scatter→groupBy→join round per superstep:
   *
-  *   messages  = activeVertices ⋈ edges           (O4: scan+filter+project)
+  *   messages  = the senders' out-edges          (O4: scan+filter+project)
   *   aggregate = messages.groupBy(dst).agg(...)   (O6+O10: Spark's shuffle
   *               replaces the sort+run-length-group; hash agg needs no sort)
   *   update    = vertices ⟕ aggregate             (O11: merge + convergence)
   *
+  * Two modes hold the edges. PULL mode, whenever the vertex state fits a
+  * broadcast ([[broadcastPullMaxVertices]]), partitions them by dst and
+  * indexes each partition as a CSR over src ([[EdgeIndex]], ≙ the
+  * reference's per-process subgraph): the driver broadcasts each round's
+  * senders, the scatter visits only their out-edges, and the messages reach
+  * the aggregate without an exchange. CLASSIC mode caches the edges
+  * columnar, partitioned by src, and shuffle-hash-joins the senders into
+  * them.
+  *
   * Like the reference's compiled map→sort→reduce, the round is PREPARED
   * once: round 1 is built as a Dataset and planned, and every round —
   * round 1 included — executes a fresh copy of that physical plan with its
-  * vertex-state scans rebound to the previous round's checkpoint
-  * ([[rebind]]). No round is analyzed, optimized or planned again. The
-  * rounds run through [[Fixpoint]]; each marks its output for local
-  * checkpoint (lineage stays one round deep) and runs ONE job, a
+  * vertex-state scans, and in pull mode its messages scan, rebound to the
+  * round's inputs ([[rebind]]). No round is analyzed, optimized or planned
+  * again. The rounds run through [[Fixpoint]]; each marks its output for
+  * local checkpoint (lineage stays one round deep) and runs ONE job, a
   * one-stage count of the changed rows that also materializes the
   * checkpoint (≙ the reference's piggybacked Allgather convergence
   * exchange, igmr.cpp:137-149). In pull mode the same job returns the next
-  * round's senders ([[Frontier]]); the driver broadcasts them and the
-  * round's plan copy reads that broadcast in place of its own exchange, so
-  * no round runs a broadcast job. The vertex state is seeded
-  * hash-partitioned on id at the loop's partition count, the layout each
-  * round's update join keeps, so the one plan fits every round. Vertices carry their static out-degree so
+  * round's senders ([[Frontier]]), so no round runs a job to gather them.
+  * The vertex state is seeded hash-partitioned on id at the loop's
+  * partition count, the layout each round's update join keeps, so the one
+  * plan fits every round. Vertices carry their static out-degree so
   * PageRank-style messages need no extra join.
   */
 object SqlRunner {
@@ -50,14 +59,16 @@ object SqlRunner {
     * local tiers run no plan per round. The plan keeps the shuffles it read
     * reachable, so a caller that stores stats past the call drops it.
     * `sendersTrace(i)` is superstep i+1's sender count in pull mode, the
-    * rows its broadcast carried; classic mode and the local tiers leave it
-    * empty.
+    * rows its broadcast carried, and `messagesTrace(i)` the message rows
+    * its scatter emitted (a retried task counts again); classic mode and
+    * the local tiers leave both empty.
     */
   final case class RunStats(iterations: Int, loopSeconds: Double,
                             saltedHubs: Int, saltFactor: Int,
                             changedTrace: Seq[Long],
                             roundPlan: Option[SparkPlan] = None,
-                            sendersTrace: Seq[Long] = Nil)
+                            sendersTrace: Seq[Long] = Nil,
+                            messagesTrace: Seq[Long] = Nil)
 
   /** A vertex qualifies as a salted hub when its out-degree exceeds this
     * multiple of the mean per-partition edge count (i.e. its edge list
@@ -94,29 +105,30 @@ object SqlRunner {
 
   /** BROADCAST-PULL mode cap (guide §8: broadcast the plan, move heavy
     * rows once — here, never). When the vertex state fits a per-round
-    * broadcast (≤ this many vertices, ~16 B each before hash-relation
-    * overhead), the edge cache is partitioned by DST and each superstep
-    * broadcast-joins the senders INTO it: the scatter join shuffles
-    * nothing, and because message rows are then dst-clustered, the
-    * partial aggregation collapses them to ≤|V| rows before the exchange
-    * — per-round shuffle drops from |frontier out-edges| (64M rows/1 GB
-    * on the PageRank anchors) to ≤|V| partials (4M rows). Above the cap
-    * (a 100 TB graph's vertex state does not broadcast) the classic
-    * src-partitioned shuffle path below runs unchanged — override with
+    * broadcast (≤ this many vertices), the edges are partitioned by DST and
+    * indexed per partition ([[EdgeIndex]]), and each superstep broadcasts
+    * its senders to every index partition: the scatter shuffles nothing,
+    * and because message rows are then dst-clustered, the aggregation
+    * collapses them to ≤|V| rows with no exchange — per-round shuffle drops
+    * from |frontier out-edges| (64M rows/1 GB on the PageRank anchors) to
+    * at most the partials of a salted layout. Above the cap (a 100 TB
+    * graph's vertex state does not broadcast) the classic src-partitioned
+    * shuffle path below runs unchanged — override with
     * -Dgraft.engine.broadcastPullMaxVertices for deployment sizing.
     */
   private def broadcastPullMaxVertices: Long =
     // MEMORY-DERIVED default (r11 verdict item 8, replacing the flat 8M
-    // tuned to one box): a broadcast hash relation costs ~48 B/vertex
-    // built (16 B row + LongHashedRelation overhead). Each round destroys
-    // its broadcast once its job has finished, so one generation is live
-    // at a time, next to the packed senders it was built from (~28 B per
-    // sender) and the edge cache. heap/(64·48) caps one generation at
-    // ~heap/64: a 20 GiB driver derives ~6.5M vertices (the 4M anchors
-    // stay in pull mode), an 8 GiB one ~2.6M (the anchors correctly fall
-    // back to classic). Broadcast blocks are storage-managed
-    // (MEMORY_AND_DISK) so the executor side evicts under pressure; the
-    // derivation bounds the driver-side build.
+    // tuned to one box), sized when a generation was a ~48 B/vertex hash
+    // relation. One generation now is a round's sorted senders — each its
+    // packed row (~28 B) plus an 8 B id and two 4 B offsets, ~44 B — held
+    // on the driver next to the packed bytes it was built from and the
+    // edge index; each round destroys its broadcast once its job has
+    // finished, so one generation is live at a time. heap/(64·48) caps one
+    // generation at ~heap/64: a 20 GiB driver derives ~6.5M vertices (the
+    // 4M anchors stay in pull mode), an 8 GiB one ~2.6M (the anchors
+    // correctly fall back to classic). Broadcast blocks are
+    // storage-managed (MEMORY_AND_DISK) so the executor side evicts under
+    // pressure; the derivation bounds the driver-side build.
     sys.props.get("graft.engine.broadcastPullMaxVertices").map(_.toLong)
       .getOrElse(math.max(1_000_000L,
         Runtime.getRuntime.maxMemory() / (64L * 48L)))
@@ -166,12 +178,14 @@ object SqlRunner {
       !b.isNullAt(0) && b.getLong(0) >= 0L &&
         b.getLong(1) < Int.MaxValue.toLong
     }
-    def nid(c: org.apache.spark.sql.Column) =
-      if (narrowIds) c.cast("int") else c
+    // Every id column takes one type, so the edge index's dst hashes as
+    // the messages scan declares it and its src as the senders' ids.
+    val idType = if (narrowIds) IntegerType else LongType
+    def nid(c: org.apache.spark.sql.Column) = c.cast(idType)
     // Mode selection (see [[broadcastPullMaxVertices]]): pull mode
-    // partitions the cache by DST and broadcasts the senders per round —
-    // zero-shuffle scatter, dst-clustered messages so the partial
-    // aggregation collapses them to ≤|V| rows before the exchange.
+    // partitions the edges by DST, indexes them, and broadcasts the
+    // senders per round — a zero-shuffle scatter over the senders'
+    // out-edges only, whose dst-clustered messages aggregate in place.
     val pullMode = meta.numVertices > 0 &&
       meta.numVertices <= broadcastPullMaxVertices
     // PARTITION SIZING BY RELATION (guide §2.2/§2.3: size partitions to
@@ -193,8 +207,8 @@ object SqlRunner {
     // message shuffle is edge-sized, so it keeps the edge-derived conf
     // unchanged.
     //
-    // CORE FLOOR for the edge-sized layouts: every round scans the whole
-    // edge cache, so a graph of 1M edges at 8 MB per partition (2
+    // CORE FLOOR for the edge-sized layouts: every round's scatter runs
+    // per edge partition, so a graph of 1M edges at 8 MB per partition (2
     // partitions) ran every round on 2 of 4 cores. Once a graph has
     // ≥ 64K edges per core, its edge cache and classic mode's `parts`
     // take at least one partition per core; smaller graphs keep the
@@ -218,16 +232,16 @@ object SqlRunner {
     val parts =
       if (pullMode) vertexParts
       else math.max(coreFloor, LoopConf.loopParallelism(spark, m))
-    // The partition count the edge cache is actually laid out at — the
+    // The partition count the edges are actually laid out at — the
     // denominator of the hub-straggler threshold below.
     val cacheParts = if (pullMode) edgeParts else parts
     // AQE OFF for the loop's own queries (r12, guide §1.2 config-last):
     // every superstep replans its stages through the adaptive executor —
     // a driver-side latency per stage per round — yet nothing here is
-    // adaptive: the join strategy is explicit (broadcast/SHUFFLE_HASH
-    // hints), the exchange sizes are pre-computed from |V|/|E| (the
-    // sizing above), and the cached edge side is invisible to AQE's
-    // skew/coalesce machinery anyway. Measured on the b03 64M anchor
+    // adaptive: the join strategy is explicit (SHUFFLE_HASH hints; pull
+    // mode's scatter is no join), the exchange sizes are pre-computed from
+    // |V|/|E| (the sizing above), and the persisted edge side is invisible
+    // to AQE's skew/coalesce machinery anyway. Measured on the b03 64M anchor
     // (this round, same box): loop 17.2 → 14.4 s and 805 → 625 MB
     // shuffled. Results are execution-identical.
     LoopConf.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false",
@@ -292,56 +306,76 @@ object SqlRunner {
       val hubLits: Seq[Any] =
         if (narrowIds) hubIds.map(_.toInt) else hubIds
       val allSalts = array((0 until saltF).map(i => lit(i)): _*)
-      // Cached pre-partitioned on src (or (src, salt) under skew): every
-      // superstep's senders⋈edges join finds the edge side already
-      // hash-partitioned on its key, so only the (active-set-sized)
-      // senders relation shuffles per round — the DataFrame form of the
-      // reference's precomputed adjloc routing table (partition.h:276-279).
+      // Laid out pre-partitioned — the DataFrame form of the reference's
+      // precomputed adjloc routing table (partition.h:276-279):
+      //  - classic mode on src (or (src, salt) under skew): every
+      //    superstep's senders⋈edges join finds the edge side already
+      //    hash-partitioned on its key, so only the (active-set-sized)
+      //    senders relation shuffles per round;
+      //  - pull mode on dst, the aggregation key: the salt, when present,
+      //    only SPLITS a hot dst's rows across partitions; the scatter and
+      //    the groupBy never reference it (the aggregate merges the split
+      //    partials back on the small exchange).
       // Narrowing applies HERE, to the relation every superstep re-reads
       // — the sizing cache above keeps the caller's width.
       val eBase =
         if (usesWeight) sel.select(nid($"src").as("src"),
           nid($"dst").as("dst"), $"weight")
         else sel.select(nid($"src").as("src"), nid($"dst").as("dst"))
-      // Pull mode: partitioned by dst (the aggregation key) — the salt,
-      // when present, only SPLITS a hot dst's rows across partitions; the
-      // scatter join and the groupBy never reference it (the partial
-      // aggregate merges the split partials back on the tiny exchange).
-      // Classic mode: partitioned by src[, salt] exactly as before.
       val pKey = if (pullMode) $"dst" else $"src"
       val sKey = if (pullMode) $"src" else $"dst"
-      val e =
-        if (!salted) eBase.repartition(cacheParts, pKey).cache()
+      val laidOut =
+        if (!salted) eBase.repartition(cacheParts, pKey)
         else eBase.withColumn("salt",
             when(pKey.isInCollection(hubLits),
               pmod(xxhash64(sKey), lit(saltF.toLong)).cast("int"))
               .otherwise(lit(0)))
-          .repartition(cacheParts, pKey, $"salt").cache()
+          .repartition(cacheParts, pKey, $"salt")
+      // Classic mode scans a columnar cache of the layout; pull mode indexes
+      // each of its partitions as a CSR over src, so a round reads only its
+      // senders' out-edges. A hash partition holds about m / cacheParts
+      // edges; the index's builders start with an eighth more.
+      val cache = if (pullMode) None else Some(laidOut.cache())
+      val index = if (!pullMode) None else {
+        val perPart = m / cacheParts
+        Some(EdgeIndex.build(laidOut, usesWeight, (perPart + perPart / 8 + 16).toInt))
+      }
       // The out-degree aggregate + vertex join only run for algorithms
       // whose message hook reads the degree (PageRank): at 64M edges it is
       // a full-width partial aggregate plus a vertex-sized join for a
       // column SSSP/WCC/max-color never evaluate. When skipped, an
-      // explicit count() keeps the edge-cache materialization in SETUP
-      // (deg used to force it), so loop seconds stay a loop measurement.
+      // explicit count keeps the edges' materialization in SETUP (deg used
+      // to force it), so loop seconds stay a loop measurement.
       //
       // The vertex state is seeded HASH-PARTITIONED on id at the partition
       // count a round's update join leaves it in, so round 1's plan already
       // has the steady-state shape (no exchange on the vertex side) and
       // serves as the template for every round. The join takes the larger
       // layout of its two sides: in unsalted pull mode the messages keep
-      // the dst-partitioned cache's layout (no exchange before the
+      // the dst-partitioned index's layout (no exchange before the
       // aggregate), otherwise they are shuffled to `parts`.
       val stateParts = if (pullMode && !salted) math.max(parts, cacheParts) else parts
       val init = {
         val v = vertices.select(nid($"id").as("id"))
         if (alg.usesOutDegree) {
-          val deg = e.groupBy($"src")
-            .agg(count(lit(1)).cast("int").as("outdeg"))
+          val deg = index match {
+            // A source's out-edges spread over the dst partitions: sum the
+            // index's per-partition key counts.
+            case Some(ix) =>
+              val out = Seq(AttributeReference("src", idType, nullable = false)(),
+                AttributeReference("n", IntegerType, nullable = false)())
+              GraftFrames.ofRdd(spark, out, EdgeIndex.degrees(ix, idType),
+                  UnknownPartitioning(cacheParts), Statistics(BigInt(m) * 12))
+                .groupBy($"src").agg(sum($"n").cast("int").as("outdeg"))
+            case None =>
+              cache.get.groupBy($"src").agg(count(lit(1)).cast("int").as("outdeg"))
+          }
           v.join(deg, $"id" === deg("src"), "left")
             .select($"id", coalesce($"outdeg", lit(0)).as("outdeg"),
               alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
         } else {
-          e.count()
+          cache.foreach(_.count())
+          index.foreach(_.count())
           v.select($"id", lit(0).as("outdeg"),
             alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
         }
@@ -357,15 +391,9 @@ object SqlRunner {
       val verts0 = checkpoint(spark, initOut, initRows,
         HashPartitioning(initOut.filter(_.name == "id"), stateParts), stateStats)
 
-      // THE ROUND, planned once: round 1's join→agg→join Dataset over the
-      // seed state, built and planned here and never executed itself. Every
-      // round runs a fresh copy of this physical plan with its vertex-state
-      // scans rebound to the current checkpoint ([[rebind]]) — the
-      // reference's compiled map→sort→reduce rerun per iteration, with no
-      // per-round analysis, optimization or planning.
-      val template = {
-        val verts = verts0
-        val senders0 = if (alg.activeMessaging) verts.filter($"changed") else verts
+      // THE SENDERS of a state, over the seed state.
+      val senders = {
+        val senders0 = if (alg.activeMessaging) verts0.filter($"changed") else verts0
         val senders1 = senders0.filter(alg.sendCondCol($"value"))
         // Classic salted path: a sender that is a hub fans out to every
         // salt shard of its own edge list; everyone else probes shard 0.
@@ -374,62 +402,102 @@ object SqlRunner {
         // planner adds itself for a multi-partition cache, written out so
         // that a one-partition cache is not re-shuffled to match the
         // id-partitioned senders. Pull mode never fans senders out — its
-        // salt is pure cache layout.
-        val senders2 = if (!salted || pullMode) senders1 else
+        // salt is pure index layout.
+        val fanOut = salted && !pullMode
+        val senders2 = if (!fanOut) senders1 else
           senders1.withColumn("salt",
             explode(when($"id".isInCollection(hubLits), allSalts)
               .otherwise(array(lit(0)))))
             .repartition(parts, $"id", $"salt")
+        val keys = if (fanOut) Seq($"id", $"salt") else Seq($"id")
         // SENDER-SIDE MESSAGE PRECOMPUTE (guide §2.3: shuffle fewer bytes,
         // aggregate before you shuffle — applied to the scatter side). When
         // the message never reads the edge weight (usesWeight=false:
         // PageRank's value/outdeg, label propagations, the unit-weight
         // anchors), msg is a pure function of the SENDER row — so evaluate
-        // it ONCE per sender here instead of once per edge in the scatter
-        // join's output (|senders| divisions instead of |messages|: 4M vs
+        // it ONCE per sender here instead of once per edge in the scatter's
+        // output (|senders| divisions instead of |messages|: 4M vs
         // 64M/round on the PageRank anchors), and ship/broadcast only
         // (id[, salt], msg) — the value/outdeg/changed columns never enter
-        // the join. Identical results: the same expression over the same
+        // the scatter. Identical results: the same expression over the same
         // operands, evaluated earlier.
-        val senders = if (usesWeight) senders2 else {
-          // A sender with no out-edges matches no scatter row, so dropping
-          // it is result-identical and shrinks the broadcast — and it is
+        if (usesWeight) senders2.select(keys :+ $"outdeg" :+ $"value": _*) else {
+          // A sender with no out-edges matches no edge, so dropping it is
+          // result-identical and shrinks the broadcast — and it is
           // REQUIRED here: the precomputed expression now evaluates on
           // every sender row, and PageRank's value/outdeg would hit
-          // DIVIDE_BY_ZERO (ANSI) on dangling vertices that the join used
-          // to filter out before the expression ever ran.
+          // DIVIDE_BY_ZERO (ANSI) on dangling vertices that the scatter
+          // used to filter out before the expression ever ran.
           val live =
             if (alg.usesOutDegree) senders2.filter($"outdeg" > 0)
             else senders2
-          val msgC = alg.msgCol($"value", lit(1.0), $"outdeg").as("msg")
-          if (salted && !pullMode) live.select($"id", $"salt", msgC)
-          else live.select($"id", msgC)
+          live.select(keys :+ alg.msgCol($"value", lit(1.0), $"outdeg").as("msg"): _*)
         }
-        val scatterCond =
-          if (!salted || pullMode) senders("id") === e("src")
-          else senders("id") === e("src") && senders("salt") === e("salt")
-        // Join strategy per mode. Pull: the senders broadcast into the
-        // dst-partitioned cache — no exchange at all on the scatter, and
-        // the message rows emerge dst-clustered, so the hash aggregate's
-        // partial pass collapses them to ≤|V| rows before the (only)
-        // per-round exchange. Classic: SHUFFLE_HASH on the small side of
-        // both joins — without the hint the planner sees two
-        // co-partitioned inputs (the edge cache and the vertex checkpoint
-        // both carry hash partitioning), plans a zero-exchange sort-merge
-        // join, and RE-SORTS the full edge relation EVERY superstep
-        // (measured 13-35 s/round at 64M edges regardless of active-set
-        // size); hash join keeps the zero-exchange property but probes
-        // the big side linearly.
-        val scattered =
-          if (pullMode) e.join(broadcast(senders), scatterCond)
-          else senders.hint("SHUFFLE_HASH").join(e, scatterCond)
-        val aggs = scattered
-          .select(e("dst").as("mdst"),
-            (if (usesWeight)
-              alg.msgCol(senders("value"), e("weight"), senders("outdeg"))
-            else senders("msg")).as("msg"))
+      }
+      val payload = if (usesWeight) Seq("outdeg", "value") else Seq("msg")
+      // Pull mode plans the sender selection on its own, once: each
+      // state's job packs the rows it selects ([[Frontier]]), and each
+      // round scatters them over the index.
+      val selection = if (pullMode) Some(senders.queryExecution.executedPlan) else None
+      // Pull mode's messages, one row per out-edge of a sender: the
+      // index's destination, the sender's payload and, when the message
+      // reads it, the weight ([[EdgeIndex.scatter]]). The round plan scans
+      // them from `placeholder`, with the index's partitions, which each
+      // round rebinds to that round's scatter. Unsalted, the rows sit in
+      // their dst's partition, so they reach the aggregate with no
+      // exchange; salted, a dst's rows span partitions, so the layout is
+      // unknown and the planner exchanges the partial aggregates.
+      val layout = selection.map { sel =>
+        EdgeIndex.Layout(idType, sel.output.size, payload.map { name =>
+          val at = sel.output.indexWhere(_.name == name)
+          (at, sel.output(at).dataType)
+        }, usesWeight)
+      }
+      val placeholder = index.map(_.mapPartitions(_ => Iterator.empty[InternalRow]))
+
+      // THE ROUND, planned once: round 1's scatter→agg→join Dataset over the
+      // seed state, built and planned here and never executed itself. Every
+      // round runs a fresh copy of this physical plan with its inputs
+      // rebound ([[rebind]]) — the reference's compiled map→sort→reduce
+      // rerun per iteration, with no per-round analysis, optimization or
+      // planning.
+      val template = {
+        val messages = (placeholder, selection) match {
+          case (Some(rows), Some(sel)) =>
+            val out = AttributeReference("mdst", idType, nullable = false)() +:
+              payload.map { name =>
+                val a = sel.output.find(_.name == name).get
+                AttributeReference(name, a.dataType, a.nullable)()
+              } ++:
+              (if (usesWeight) Seq(AttributeReference("weight", DoubleType,
+                laidOut.schema("weight").nullable)()) else Nil)
+            GraftFrames.ofRdd(spark, out, rows,
+              if (salted) UnknownPartitioning(cacheParts)
+              else HashPartitioning(out.take(1), cacheParts),
+              Statistics(BigInt(m) * (edgeRowBytes + 8)))
+          case _ =>
+            // Classic: SHUFFLE_HASH on the small side of both joins —
+            // without the hint the planner sees two co-partitioned inputs
+            // (the edge cache and the vertex checkpoint both carry hash
+            // partitioning), plans a zero-exchange sort-merge join, and
+            // RE-SORTS the full edge relation EVERY superstep (measured
+            // 13-35 s/round at 64M edges regardless of active-set size);
+            // hash join keeps the zero-exchange property but probes the big
+            // side linearly.
+            val e = cache.get
+            val scatterCond =
+              if (!salted) senders("id") === e("src")
+              else senders("id") === e("src") && senders("salt") === e("salt")
+            senders.hint("SHUFFLE_HASH").join(e, scatterCond)
+              .select(e("dst").as("mdst") +: payload.map(senders(_)) ++:
+                (if (usesWeight) Seq(e("weight")) else Nil): _*)
+        }
+        val aggs = messages
+          .select($"mdst", (if (usesWeight) alg.msgCol($"value", $"weight", $"outdeg")
+            else $"msg").as("msg"))
           .groupBy($"mdst")
           .agg(alg.reduceAgg($"msg").as("agg"))
+        val verts = verts0
         val updated = verts.join(aggs.hint("SHUFFLE_HASH"), verts("id") === aggs("mdst"), "left")
           .select(verts("id"), verts("outdeg"), verts("value").as("old"),
             alg.updateCol(verts("id"), verts("value"), $"agg", meta).as("value"))
@@ -447,18 +515,16 @@ object SqlRunner {
         throw new IllegalStateException(s"the round re-lays the ${stateParts}-" +
           s"partition vertex state out as ${template.outputPartitioning}:\n$template")
       val changedAt = template.output.indexWhere(_.name == "changed")
-      // Pull mode: the round's one broadcast, whose side — the senders —
-      // each state's job gathers for the round that reads that state.
-      val exchange = if (pullMode) Some(onlyBroadcast(template)) else None
-      val senderSide = exchange.map(x => Frontier.select(x.child, initRows))
+      val senderSide = selection.map(Frontier.select(_, initRows))
       // ONE job over a state's rows: it materializes their checkpoint,
-      // counts the changed rows and, in pull mode, packs the senders. One
-      // stage, as it reads the rows directly instead of planning an
-      // aggregate over the checkpoint. It stays in this file: tracers mark
-      // round ends by its call site.
-      def stateJob(rows: RDD[InternalRow]): (Long, Option[Frontier.Packed]) = {
+      // counts the changed rows and, in pull mode, packs the senders when a
+      // later round reads them. One stage, as it reads the rows directly
+      // instead of planning an aggregate over the checkpoint. It stays in
+      // this file: tracers mark round ends by its call site.
+      def stateJob(rows: RDD[InternalRow], pack: Boolean): (Long, Option[Frontier.Packed]) = {
+        val side = senderSide.filter(_ => pack)
         val parts = GraftFrames.count(rows) { it =>
-          val packer = senderSide.map(_.packer(TaskContext.getPartitionId()))
+          val packer = side.map(_.packer(TaskContext.getPartitionId()))
           var changed = 0L
           it.foreach { r =>
             if (!r.isNullAt(changedAt) && r.getBoolean(changedAt)) changed += 1
@@ -468,45 +534,55 @@ object SqlRunner {
         }
         val packed = parts.flatMap(_._2)
         (parts.map(_._1).sum,
-          senderSide.map(_ => Frontier.Packed(packed.map(_._1).sum, packed.map(_._2).toSeq)))
+          side.map(_ => Frontier.Packed(packed.map(_._1).sum, packed.map(_._2).toSeq)))
       }
       // The seed's job: the loop's input, materialized in setup.
-      val seedSenders = stateJob(initRows)._2
+      val seedSenders = stateJob(initRows, pack = true)._2
       val sendersTrace = Seq.newBuilder[Long]
+      val messagesTrace = Seq.newBuilder[Long]
+      val emitted = spark.sparkContext.longAccumulator
 
       val tLoop = System.nanoTime()
-      val run = Fixpoint((verts0, seedSenders), alg.maxIter) { case ((verts, frontier), _) =>
-        // The driver builds and broadcasts the senders the previous job
+      val run = Fixpoint((verts0, seedSenders), alg.maxIter) { case ((verts, frontier), round) =>
+        // The driver sorts and broadcasts the senders the previous job
         // packed, and destroys the broadcast once this round's job is done:
         // the checkpoint it feeds is materialized by then.
-        val relation = for (x <- exchange; f <- frontier) yield {
+        val sent = for (sel <- selection; f <- frontier) yield {
           sendersTrace += f.count
-          GraftFrames.broadcast(spark, x, f.rows(x.output.size), f.count)
+          spark.sparkContext.broadcast(f.senders(sel.output))
         }
         try {
+          val messages = for (ix <- index; rows <- placeholder; s <- sent; l <- layout)
+            yield rows -> EdgeIndex.scatter(ix, s, l, emitted)
+          val emitted0 = emitted.sum
           // Lazy: the state job materializes the checkpoint. Fixpoint then
           // frees the superseded round's checkpoint: 120 rounds of leaked
           // vertex state is 120×|V| rows of memory pressure, and the
           // resulting GC pauses were measured dominating round time at 4M
           // vertices.
           val rows = GraftFrames.execute(spark,
-            rebind(template, initRows, stateRdd(verts), relation)).map(_.copy())
+            rebind(template, (initRows -> stateRdd(verts)) +: messages.toSeq: _*)).map(_.copy())
           val next = checkpoint(spark, template.output, rows,
             template.outputPartitioning, stateStats)
-          val (changed, nextSenders) = stateJob(rows)
+          // The last round's senders would go unread: no round follows the
+          // cap. An ε-stop is decided by this job's own count, so its last
+          // pack stays.
+          val (changed, nextSenders) = stateJob(rows, pack = round < alg.maxIter)
+          if (messages.isDefined) messagesTrace += emitted.sum - emitted0
           Fixpoint.Step((next, nextSenders), changed)
-        } finally relation.foreach(GraftFrames.destroy)
+        } finally sent.foreach(GraftFrames.destroy)
       } { case (verts, _) =>
         // Re-widen narrowed ids: the surface schema is (id LONG, value).
         verts.select(
           (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value")
       }
       val loopSecs = (System.nanoTime() - tLoop) / 1e9
-      e.unpersist()
+      cache.foreach(_.unpersist())
+      index.foreach(_.unpersist())
       if (needCount) sel.unpersist()
       (run.result, graft.obs.RunLog.run(RunStats(run.rounds.length, loopSecs,
         hubs.length, saltF, run.rounds.map(_.changed), Some(template),
-        sendersTrace.result())))
+        sendersTrace.result(), messagesTrace.result())))
     }
   }
 
@@ -527,48 +603,37 @@ object SqlRunner {
         s"superstep state is not a checkpoint scan:\n${state.queryExecution.analyzed}"))
 
   /** A fresh, executable copy of the prepared round plan `template` whose
-    * scans of `from` read `to` instead and, given `senders`, whose one
-    * broadcast exchange is replaced by a leaf serving that broadcast. Every
-    * operator is copied, so no exchange, broadcast or metric of one round
-    * survives into the next, and the template itself never runs. Fails
-    * loudly on a plan a rebind cannot serve: an adaptive plan (it re-plans
-    * itself as stages finish, so its copy would run stale decisions), a
-    * reused exchange (its copy would still point into the template), no
-    * scan of `from`, a `to` whose partition count differs from the layout
-    * the plan was built on, or `senders` for a plan without exactly one
-    * broadcast exchange.
+    * scans of each `from` in `swaps` read its `to` instead. Every operator
+    * is copied, so no exchange or metric of one round survives into the
+    * next, and the template itself never runs. Fails loudly on a plan a
+    * rebind cannot serve: an adaptive plan (it re-plans itself as stages
+    * finish, so its copy would run stale decisions), a reused exchange (its
+    * copy would still point into the template), no scan of some `from`, or
+    * a `to` whose partition count differs from its `from`'s, the layout the
+    * plan was built on.
     */
-  private[engine] def rebind(template: SparkPlan, from: RDD[_], to: RDD[InternalRow],
-                             senders: Option[Broadcast[Any]] = None): SparkPlan = {
+  private[engine] def rebind(template: SparkPlan,
+                             swaps: (RDD[_], RDD[InternalRow])*): SparkPlan = {
     template.foreach {
       case p @ (_: AdaptiveSparkPlanExec | _: ReusedExchangeExec) =>
         throw new IllegalStateException(
           s"cannot rebind a plan containing ${p.nodeName}:\n$template")
       case _ =>
     }
-    senders.foreach(_ => onlyBroadcast(template))
-    var matched = 0
+    val matched = scala.collection.mutable.Set.empty[Int]
     val plan = template.clone().transform {
-      case x: BroadcastExchangeExec if senders.isDefined =>
-        GraftFrames.serve(x, senders.get)
-      case s: RDDScanExec if s.rdd eq from =>
+      case s: RDDScanExec if swaps.exists(_._1 eq s.rdd) =>
+        val (from, to) = swaps.find(_._1 eq s.rdd).get
         if (to.getNumPartitions != from.getNumPartitions)
           throw new IllegalStateException(s"rebind of RDD ${from.id} " +
             s"(${from.getNumPartitions} partitions) to RDD ${to.id} " +
             s"(${to.getNumPartitions} partitions) would break the plan's layout")
-        matched += 1
+        matched += from.id
         s.copy(rdd = to)
     }
-    if (matched == 0)
+    swaps.find { case (from, _) => !matched(from.id) }.foreach { case (from, _) =>
       throw new IllegalStateException(s"no scan of RDD ${from.id} to rebind in:\n$template")
+    }
     plan
   }
-
-  /** `plan`'s one broadcast exchange; fails loudly on none or several. */
-  private def onlyBroadcast(plan: SparkPlan): BroadcastExchangeExec =
-    plan.collect { case x: BroadcastExchangeExec => x } match {
-      case Seq(x) => x
-      case xs => throw new IllegalStateException(
-        s"expected one broadcast exchange, found ${xs.size} in:\n$plan")
-    }
 }

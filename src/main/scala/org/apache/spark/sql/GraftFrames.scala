@@ -7,15 +7,13 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastMode, BroadcastPartitioning,
-  Partitioning}
-import org.apache.spark.sql.execution.{LeafExecNode, LogicalRDD, SparkPlan}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 
 /** The few lines of graft that need Spark's `private[sql]` API: running a
   * prepared physical plan under its session, wrapping rows it produced
-  * as a DataFrame without planning them again, and serving a plan's
-  * broadcast from rows the driver already holds.
+  * as a DataFrame without planning them again, and freeing a broadcast
+  * before a call returns.
   */
 object GraftFrames {
 
@@ -49,31 +47,6 @@ object GraftFrames {
   def count[T: ClassTag](rows: RDD[InternalRow])(f: Iterator[InternalRow] => T): Array[T] =
     rows.sparkContext.runJob(rows, f)
 
-  /** `rows` built into `exchange`'s relation on the driver and broadcast
-    * as the exchange broadcasts it (`mode.transform`, serialized only).
-    */
-  def broadcast(spark: SparkSession, exchange: BroadcastExchangeExec,
-                rows: Iterator[InternalRow], numRows: Long): Broadcast[Any] =
-    classicSession(spark).withActive {
-      spark.sparkContext.broadcastInternal(
-        exchange.mode.transform(rows, Some(numRows)), serializedOnly = true)
-    }
-
-  /** A leaf that serves `relation` in `exchange`'s place: a join reads it
-    * as the exchange's broadcast, and no job collects the exchange's side.
-    */
-  def serve(exchange: BroadcastExchangeExec, relation: Broadcast[Any]): SparkPlan =
-    ServedBroadcastExec(exchange.output, exchange.mode, relation)
-
   /** Frees `relation`'s blocks everywhere before returning. */
   def destroy(relation: Broadcast[_]): Unit = relation.destroy(blocking = true)
-
-  private case class ServedBroadcastExec(output: Seq[Attribute], mode: BroadcastMode,
-                                         relation: Broadcast[Any]) extends LeafExecNode {
-    override def outputPartitioning: Partitioning = BroadcastPartitioning(mode)
-    override protected def doExecute(): RDD[InternalRow] =
-      throw new UnsupportedOperationException(s"$nodeName only serves a broadcast")
-    override protected[sql] def doExecuteBroadcast[T](): Broadcast[T] =
-      relation.asInstanceOf[Broadcast[T]]
-  }
 }

@@ -100,9 +100,10 @@ class LeakSpec extends AnyFunSuite {
   }
 
   /** Ids of the broadcasts resident in the block manager that carry a
-    * join's hash relation: serialized-only ones (pieces, no value block on
-    * the driver) and those whose value a task read back. Task binaries are
-    * broadcast too, with their bytes as the value; the cleaner frees those.
+    * join's hash relation or a round's senders: serialized-only ones
+    * (pieces, no value block on the driver) and those whose value is a
+    * relation or the senders. Task binaries are broadcast too, with their
+    * bytes as the value; the cleaner frees those.
     */
   private def relationBroadcasts(): Set[Long] = {
     val bm = org.apache.spark.SparkEnv.get.blockManager
@@ -111,7 +112,8 @@ class LeakSpec extends AnyFunSuite {
       .groupBy(_.broadcastId).collect {
         case (id, blocks) if blocks.forall(_.field.nonEmpty) ||
             blocks.filter(_.field.isEmpty).exists(b => bm.getLocalValues(b)
-              .exists(_.data.toList.exists(_.getClass.getName.contains("HashedRelation")))) =>
+              .exists(_.data.toList.exists(v => v.getClass.getName.contains("HashedRelation") ||
+                v.getClass.getName == "graft.engine.Frontier$Senders"))) =>
           id
       }.toSet
   }

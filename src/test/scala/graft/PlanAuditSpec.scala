@@ -349,16 +349,15 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("broadcast-pull scatter: the superstep round plan has a broadcast " +
-      "join and a cache-reading edge side with no shuffle above it") {
+  test("broadcast-pull scatter: the messages scan reaches the aggregate unshuffled") {
     // The default mode below BroadcastPullMaxVertices: the senders
-    // broadcast INTO the dst-partitioned cache, so the scatter join is a
-    // BroadcastHashJoin whose streamed side reads the InMemory cache with
-    // zero ShuffleExchange — the per-round wire traffic is only the
-    // (partial-aggregated, ≤|V|-row) message exchange.
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // broadcast to the dst-partitioned edge index, so the scatter's
+    // message rows are already clustered on the aggregation key and reach
+    // the aggregate with zero ShuffleExchange — the scatter moves no row
+    // over the wire.
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions._
     import graft.engine.{GraphMeta, SqlRunner}
     import graft.algos.Algorithms
@@ -375,19 +374,16 @@ class PlanAuditSpec extends AnyFunSuite {
       GraphMeta(nV, source = 1L), numEdges = 200000L)
     res.count()
     val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
-    val nodes = expand(plan)
-    val scatter = nodes.collectFirst {
-      case j: BroadcastHashJoinExec => j
-    }.getOrElse(fail(s"no BroadcastHashJoin in:\n$plan"))
-    val streamed = scatter.buildSide match {
-      case org.apache.spark.sql.catalyst.optimizer.BuildLeft => scatter.right
-      case _ => scatter.left
-    }
-    val sub = expand(streamed)
-    assert(sub.exists(_.isInstanceOf[InMemoryTableScanExec]),
-      s"edge side must read the cache:\n$streamed")
+    // The outermost aggregate is the reduce the update join reads.
+    val reduce = expand(plan).collectFirst { case a: BaseAggregateExec => a }
+      .getOrElse(fail(s"no aggregate in:\n$plan"))
+    val sub = expand(reduce)
+    assert(sub.exists {
+      case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
+      case _ => false
+    }, s"the aggregate must read the messages scan:\n$reduce")
     assert(!sub.exists(_.isInstanceOf[ShuffleExchangeExec]),
-      s"edge side must not re-shuffle:\n$streamed")
+      s"the messages must not shuffle before the aggregate:\n$reduce")
   }
 
   test("AQE splits a skewed sort-merge join partition at runtime") {

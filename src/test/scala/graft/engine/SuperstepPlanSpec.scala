@@ -10,7 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
@@ -84,19 +84,29 @@ class SuperstepPlanSpec extends AnyFunSuite {
     */
   private def localTrace(alg: GmrAlgorithm, rounds: Int,
                          g: (DataFrame, DataFrame) = graph,
-                         m: GraphMeta = meta): Seq[Long] = {
+                         m: GraphMeta = meta): Seq[Long] =
+    changedSets(alg, localStates(alg, rounds, g, m)).tail.map(_.size.toLong)
+
+  /** LocalRunner's states after 0, 1, …, `rounds` rounds. */
+  private def localStates(alg: GmrAlgorithm, rounds: Int, g: (DataFrame, DataFrame),
+                          m: GraphMeta): Seq[Map[Long, Double]] = {
     val (verts, edges) = g
-    def capped(k: Int): Map[Long, Double] =
+    (0 to rounds).map { k =>
       values(LocalRunner.run(spark, verts, edges,
         new DelegatingGmrAlgorithm(alg) { override def maxIter: Int = k }, m))
-    val states = (0 to rounds).map(capped)
-    states.zip(states.tail).map { case (before, after) =>
-      before.count { case (id, old) =>
-        val d = after(id) - old
-        !d.isNaN && math.abs(d) > alg.epsilon
-      }.toLong
     }
   }
+
+  /** The vertices each state changed: every vertex for the seed, then
+    * those round k moved by more than ε.
+    */
+  private def changedSets(alg: GmrAlgorithm, states: Seq[Map[Long, Double]]): Seq[Set[Long]] =
+    states.head.keySet +: states.zip(states.tail).map { case (before, after) =>
+      before.collect { case (id, old) if {
+        val d = after(id) - old
+        !d.isNaN && math.abs(d) > alg.epsilon
+      } => id }.toSet
+    }
 
   private def withProps[T](props: (String, String)*)(body: => T): T = {
     props.foreach { case (k, v) => sys.props.put(k, v) }
@@ -172,11 +182,14 @@ class SuperstepPlanSpec extends AnyFunSuite {
     assert(traces.head == localTrace(alg, traces.head.size, wide, wideMeta))
   }
 
-  /** The partition count of the edge cache `plan` scans. */
+  /** The partition count of the edges `plan` scans: pull mode's messages
+    * scan over the edge index, or classic mode's columnar cache.
+    */
   private def cacheParts(plan: SparkPlan): Int =
-    plan.collectFirst { case c: InMemoryTableScanExec => c }
-      .getOrElse(fail(s"no edge cache in:\n$plan"))
-      .relation.cachedPlan.outputPartitioning.numPartitions
+    plan.collectFirst {
+      case m: RDDScanExec if m.output.exists(_.name == "mdst") => m.rdd.getNumPartitions
+      case c: InMemoryTableScanExec => c.relation.cachedPlan.outputPartitioning.numPartitions
+    }.getOrElse(fail(s"no edges scanned in:\n$plan"))
 
   test("the loop fills the cores from 64K edges per core, and a small graph " +
       "keeps one partition") {
@@ -217,6 +230,35 @@ class SuperstepPlanSpec extends AnyFunSuite {
       SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)._2
     }
     assert(classic.sendersTrace.isEmpty, classic)
+  }
+
+  test("messagesTrace: each pull-mode round's scatter rows, its senders' " +
+      "summed out-degree") {
+    // Round k's senders are the vertices round k − 1 changed that pass the
+    // send condition; each sends one message per out-edge. WCC on the path
+    // starts with every vertex sending, more senders than the index holds
+    // source ids, so its first scatter walks the ids and probes the senders.
+    def check(alg: GmrAlgorithm, g: (DataFrame, DataFrame), m: GraphMeta): Seq[Long] = {
+      val (got, stats) = SqlRunner.runWithStats(spark, g._1, g._2, alg, m)
+      val states = localStates(alg, stats.iterations, g, m)
+      assert(values(got) == states.last, alg.name)
+      val outDeg = g._2.groupBy("src").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+      val want = changedSets(alg, states).zip(states).take(stats.iterations).map {
+        case (changed, state) =>
+          changed.toSeq.filter(v => alg.sendCondFn(state(v))).map(outDeg).sum
+      }
+      assert(stats.messagesTrace == want, s"${alg.name}: $stats")
+      stats.messagesTrace
+    }
+    val onPath = check(Algorithms.UnitWeighted(Algorithms.Sssp), path(6), GraphMeta(6L, source = 0L))
+    assert(onPath == Seq(1L, 1L, 1L, 1L, 1L, 0L), "the path's end sends along no edge")
+    check(Algorithms.Wcc, path(6), GraphMeta(6L))
+    check(Algorithms.Sssp, graph, meta)
+    val classic = withProps("graft.engine.broadcastPullMaxVertices" -> "0") {
+      SqlRunner.runWithStats(spark, graph._1, graph._2, Algorithms.Sssp, meta)._2
+    }
+    assert(classic.messagesTrace.isEmpty, classic)
   }
 
   /** Path 0 → 1 → … → len−1 as (vertices, edges). */
@@ -336,29 +378,37 @@ class SuperstepPlanSpec extends AnyFunSuite {
       .queryExecution.toRdd
     val other = s.range(0, 100, 1, 3).select($"id", $"id".as("v")).queryExecution.toRdd
     def refused(p: => Any): String = intercept[IllegalStateException](p).getMessage
-    assert(refused(SqlRunner.rebind(adaptive, ckptRdd, same)).contains("AdaptiveSparkPlan"))
-    assert(refused(SqlRunner.rebind(plan, same, other)).contains("no scan of RDD"))
-    assert(refused(SqlRunner.rebind(plan, ckptRdd, other)).contains("partitions"))
+    assert(refused(SqlRunner.rebind(adaptive, ckptRdd -> same)).contains("AdaptiveSparkPlan"))
+    assert(refused(SqlRunner.rebind(plan, same -> other)).contains("no scan of RDD"))
+    assert(refused(SqlRunner.rebind(plan, ckptRdd -> other)).contains("partitions"))
     // The guards leave the one legal rebind: same layout, new rows.
-    val rebound = SqlRunner.rebind(plan, ckptRdd, same).execute()
+    val rebound = SqlRunner.rebind(plan, ckptRdd -> same).execute()
       .map(r => r.getLong(1)).collect().sorted
     assert(rebound.toSeq == (4 until 100).map(_ * 3L))
   }
 
-  test("rebind refuses senders to serve in a plan without one broadcast exchange") {
+  test("rebind swaps the state and messages scans together, each guarded") {
+    // A pull-mode round rebinds two leaves; either one's guard refuses the
+    // whole copy, and a legal rebind reads both new inputs.
     val s = spark
     import s.implicits._
-    val ckpt = s.range(0, 100, 1, 2).select($"id", ($"id" * 2).as("v")).localCheckpoint()
-    val ckptRdd = ckpt.queryExecution.analyzed
-      .collectFirst { case l: LogicalRDD => l.rdd }.get
-    val plan = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "false")) {
-      ckpt.filter($"v" > 10).queryExecution.executedPlan
+    def ckpt(from: Long, parts: Int) = {
+      val df = s.range(from, from + 100, 1, parts).select($"id").localCheckpoint()
+      (df, df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get)
     }
-    val senders = s.sparkContext.broadcast[Any](0)
-    try {
-      val msg = intercept[IllegalStateException](
-        SqlRunner.rebind(plan, ckptRdd, ckptRdd, Some(senders))).getMessage
-      assert(msg.contains("expected one broadcast exchange, found 0"), msg)
-    } finally senders.destroy()
+    val ((a, aRdd), (b, bRdd)) = (ckpt(0, 2), ckpt(1000, 3))
+    val plan = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "false")) {
+      a.union(b).queryExecution.executedPlan
+    }
+    def rows(from: Long, parts: Int) =
+      s.range(from, from + 10, 1, parts).select($"id").queryExecution.toRdd
+    def refused(p: => Any): String = intercept[IllegalStateException](p).getMessage
+    assert(refused(SqlRunner.rebind(plan, aRdd -> rows(0, 2), rows(0, 2) -> rows(0, 3)))
+      .contains("no scan of RDD"))
+    assert(refused(SqlRunner.rebind(plan, aRdd -> rows(0, 2), bRdd -> rows(0, 2)))
+      .contains("partitions"))
+    val rebound = SqlRunner.rebind(plan, aRdd -> rows(10, 2), bRdd -> rows(2000, 3))
+      .execute().map(_.getLong(0)).collect().sorted
+    assert(rebound.toSeq == (10L until 20L) ++ (2000L until 2010L))
   }
 }
