@@ -2,21 +2,23 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuilder
 
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SpecificInternalRow, UnsafeRow}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
-/** Pull mode's edges as the reference keeps its subgraph, a CSR per
+/** SqlRunner's edges as the reference keeps its subgraph, a CSR per
   * process reached through a routing table (partition.h:276-279): each
-  * partition of the dst-partitioned edges becomes its sorted distinct
-  * source ids, where each one's out-edges start, and their destinations
-  * and weights. A round's scatter visits only its senders' out-edges, so
-  * its work follows the frontier instead of the edge count.
+  * partition of the partitioned edges (by dst in pull mode, by src in
+  * classic mode) becomes its sorted distinct source ids, where each one's
+  * out-edges start, and their destinations and weights. A round's scatter
+  * visits only its senders' out-edges, so its work follows the frontier
+  * instead of the edge count.
   */
 private[engine] object EdgeIndex {
 
@@ -182,6 +184,22 @@ private[engine] object EdgeIndex {
   def scatter(index: RDD[Part], senders: Broadcast[Frontier.Senders], layout: Layout,
               emitted: LongAccumulator): RDD[InternalRow] =
     index.mapPartitions(_.flatMap(part => new Scatter(part, senders.value, layout, emitted)))
+
+  /** Classic mode's messages over `index`, laid out like the vertex state
+    * `state`: each task packs the senders `side` selects from its own state
+    * partition as rows of `fields` and scatters them over its own index
+    * partition, so no sender leaves its partition.
+    */
+  def scatter(index: RDD[Part], state: RDD[InternalRow], side: Frontier.Select,
+              fields: Seq[Attribute], layout: Layout,
+              emitted: LongAccumulator): RDD[InternalRow] =
+    index.zipPartitions(state) { (parts, rows) =>
+      val packer = side.packer(TaskContext.getPartitionId())
+      rows.foreach(packer.add)
+      val (n, bytes) = packer.result
+      val senders = Frontier.Packed(n, Seq(bytes)).senders(fields)
+      parts.flatMap(new Scatter(_, senders, layout, emitted))
+    }
 
   private final class Scatter(part: Part, senders: Frontier.Senders, layout: Layout,
                               emitted: LongAccumulator) extends Iterator[InternalRow] {

@@ -12,11 +12,13 @@ import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.Platform
 
-/** A pull-mode round's senders, gathered by the job of the round before it
-  * (≙ the reference's next-frontier exchange, igmr.cpp:137-153): each
-  * state partition packs the rows the sender selection selects from it,
-  * as `UnsafeRow` bytes, and the driver sorts them into the [[Senders]] it
-  * broadcasts to the next round's scatter without a job of its own.
+/** A round's senders (≙ the reference's next-frontier exchange,
+  * igmr.cpp:137-153): each state partition packs the rows the sender
+  * selection selects from it, as `UnsafeRow` bytes, sorted by id into the
+  * [[Senders]] the scatter reads. In pull mode the job of the round before
+  * packs them and the driver sorts and broadcasts them to the next round's
+  * scatter without a job of its own; in classic mode each scatter task
+  * packs and sorts its own state partition's senders.
   */
 private[engine] object Frontier {
 

@@ -22,26 +22,30 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   *               replaces the sort+run-length-group; hash agg needs no sort)
   *   update    = vertices ⟕ aggregate             (O11: merge + convergence)
   *
-  * Two modes hold the edges. PULL mode, whenever the vertex state fits a
-  * broadcast ([[broadcastPullMaxVertices]]), partitions them by dst and
-  * indexes each partition as a CSR over src ([[EdgeIndex]], ≙ the
-  * reference's per-process subgraph): the driver broadcasts each round's
-  * senders, the scatter visits only their out-edges, and the messages reach
-  * the aggregate without an exchange. CLASSIC mode caches the edges
-  * columnar, partitioned by src, and shuffle-hash-joins the senders into
-  * them.
+  * The edges live in one representation: each partition indexed as a CSR
+  * over src ([[EdgeIndex]], ≙ the reference's per-process subgraph), so a
+  * round's scatter visits only its senders' out-edges. The two modes differ
+  * only in the index's partition key and where a task finds its senders.
+  * PULL mode, whenever the vertex state fits a broadcast
+  * ([[broadcastPullMaxVertices]]), partitions the edges by dst: the driver
+  * broadcasts each round's senders to every partition, and the messages
+  * reach the aggregate without an exchange. CLASSIC mode partitions them by
+  * src at the vertex state's own layout: each task scatters the senders of
+  * its own state partition, and the messages take one exchange on their
+  * destination into the aggregate (≙ the reference's map over each
+  * process's own vertices, gmr.h computing()).
   *
   * Like the reference's compiled map→sort→reduce, the round is PREPARED
   * once: round 1 is built as a Dataset and planned, and every round —
   * round 1 included — executes a fresh copy of that physical plan with its
-  * vertex-state scans, and in pull mode its messages scan, rebound to the
-  * round's inputs ([[rebind]]). No round is analyzed, optimized or planned
-  * again. The rounds run through [[Fixpoint]]; each marks its output for
-  * local checkpoint (lineage stays one round deep) and runs ONE job, a
-  * one-stage count of the changed rows that also materializes the
-  * checkpoint (≙ the reference's piggybacked Allgather convergence
-  * exchange, igmr.cpp:137-149). In pull mode the same job returns the next
-  * round's senders ([[Frontier]]), so no round runs a job to gather them.
+  * vertex-state scan and its messages scan rebound to the round's inputs
+  * ([[rebind]]). No round is analyzed, optimized or planned again. The
+  * rounds run through [[Fixpoint]]; each marks its output for local
+  * checkpoint (lineage stays one round deep) and runs ONE job, a count of
+  * the changed rows that also materializes the checkpoint (≙ the
+  * reference's piggybacked Allgather convergence exchange,
+  * igmr.cpp:137-149). In pull mode the same job returns the next round's
+  * senders ([[Frontier]]), so no round runs a job to gather them.
   * The vertex state is seeded hash-partitioned on id at the loop's
   * partition count, the layout each round's update join keeps, so the one
   * plan fits every round. Vertices carry their static out-degree so
@@ -53,15 +57,16 @@ object SqlRunner {
     * recorded for the caller's [[graft.obs.RunLog.capture]].
     * `changedTrace(i)` is superstep i+1's changed-vertex count; the final
     * entry is 0 for an ε-converged run and nonzero when a fixed iteration
-    * cap stopped the loop. `saltedHubs`/`saltFactor` record whether skew
-    * handling engaged (1 = uniform path, no salting). `roundPlan` is the
-    * prepared round plan every superstep copies — SqlRunner's alone; the
-    * local tiers run no plan per round. The plan keeps the shuffles it read
-    * reachable, so a caller that stores stats past the call drops it.
-    * `sendersTrace(i)` is superstep i+1's sender count in pull mode, the
-    * rows its broadcast carried, and `messagesTrace(i)` the message rows
-    * its scatter emitted (a retried task counts again); classic mode and
-    * the local tiers leave both empty.
+    * cap stopped the loop. `saltedHubs`/`saltFactor` record whether pull
+    * mode's in-degree hub salting engaged (1 = uniform path, no salting;
+    * classic mode never salts). `roundPlan` is the prepared round plan
+    * every superstep copies — SqlRunner's alone; the local tiers run no
+    * plan per round. The plan keeps the shuffles it read reachable, so a
+    * caller that stores stats past the call drops it. `sendersTrace(i)` is
+    * superstep i+1's sender count in pull mode, the rows its broadcast
+    * carried (classic mode broadcasts none and leaves it empty), and
+    * `messagesTrace(i)` the message rows its scatter emitted in either mode
+    * (a retried task counts again). The local tiers leave both empty.
     */
   final case class RunStats(iterations: Int, loopSeconds: Double,
                             saltedHubs: Int, saltFactor: Int,
@@ -70,7 +75,7 @@ object SqlRunner {
                             sendersTrace: Seq[Long] = Nil,
                             messagesTrace: Seq[Long] = Nil)
 
-  /** A vertex qualifies as a salted hub when its out-degree exceeds this
+  /** A vertex qualifies as a salted hub when its in-degree exceeds this
     * multiple of the mean per-partition edge count (i.e. its edge list
     * alone outweighs a whole average partition by 2×).
     */
@@ -109,11 +114,15 @@ object SqlRunner {
     * indexed per partition ([[EdgeIndex]]), and each superstep broadcasts
     * its senders to every index partition: the scatter shuffles nothing,
     * and because message rows are then dst-clustered, the aggregation
-    * collapses them to ≤|V| rows with no exchange — per-round shuffle drops
-    * from |frontier out-edges| (64M rows/1 GB on the PageRank anchors) to
-    * at most the partials of a salted layout. Above the cap (a 100 TB
-    * graph's vertex state does not broadcast) the classic src-partitioned
-    * shuffle path below runs unchanged — override with
+    * collapses them to ≤|V| rows with no exchange — the scatter shuffles
+    * nothing, the aggregate at most the partials of a salted layout. Above
+    * the cap (a 100 TB graph's vertex state does not broadcast) CLASSIC mode
+    * indexes the edges by SRC at the vertex state's layout: a task scatters
+    * its own state partition's senders over its own index partition, with
+    * no broadcast and no sender shuffle, and each round pays one exchange
+    * of the partial aggregates on their destination — up to one row per
+    * (task, destination), |frontier out-edges| at worst (64M rows on the
+    * PageRank anchors). Override with
     * -Dgraft.engine.broadcastPullMaxVertices for deployment sizing.
     */
   private def broadcastPullMaxVertices: Long =
@@ -146,9 +155,9 @@ object SqlRunner {
                    numEdges: Long = -1L): (DataFrame, RunStats) = {
     import spark.implicits._
 
-    // NARROW ROWS (guide §2.3) — the loop's two recurring byte streams are
-    // the cached edge relation (re-probed every superstep) and the message
-    // shuffle; both shrink with the id width and the weight column:
+    // NARROW ROWS (guide §2.3) — the edge index's build shuffle and the
+    // message rows every superstep emits shrink with the id width and the
+    // weight column:
     //  - weight is dropped outright when the algorithm's msg hook never
     //    reads it (alg.usesWeight=false — label propagations, PageRank,
     //    unit-weight anchors): at 64M edges that is 512 MB of constant
@@ -157,7 +166,7 @@ object SqlRunner {
     //    probed with one vertex-sized agg (the engine contract is that
     //    edges reference declared vertices), gated on the same ≥8M-edge
     //    floor as the hub probe so tight driver loops (the SCC peel) never
-    //    pay an extra job on small graphs, where the cache is tiny anyway.
+    //    pay an extra job on small graphs, where the index is tiny anyway.
     // Values stay DOUBLE throughout — results are bit-identical; the
     // output re-widens ids to LONG so the surface schema is unchanged.
     val usesWeight = alg.usesWeight
@@ -165,34 +174,35 @@ object SqlRunner {
       if (usesWeight) edges.select($"src", $"dst", $"weight")
       else edges.select($"src", $"dst")
     // Unknown size: cache BEFORE counting so the sizing pass and the
-    // partitioned cache below share one computation of the edge derivation.
+    // index build below share one computation of the edge derivation.
     val needCount = numEdges < 0
     val sel = if (needCount) sel0.cache() else sel0
     val m = if (needCount) sel.count() else numEdges
     // Id-width probe, gated on the same ≥8M-edge floor as the hub probe so
     // tight driver loops (the SCC peel) never pay an extra job on small
-    // graphs, where the cache is tiny anyway. One vertex-sized agg; the
+    // graphs, where the index is tiny anyway. One vertex-sized agg; the
     // engine contract is that edges reference declared vertices.
     val narrowIds = m >= HubProbeMinEdges && {
       val b = vertices.agg(min($"id"), max($"id")).head()
       !b.isNullAt(0) && b.getLong(0) >= 0L &&
         b.getLong(1) < Int.MaxValue.toLong
     }
-    // Every id column takes one type, so the edge index's dst hashes as
-    // the messages scan declares it and its src as the senders' ids.
+    // Every id column takes one type, so the edge index's partition key
+    // hashes as the messages scan (pull) or the vertex state (classic)
+    // declares it.
     val idType = if (narrowIds) IntegerType else LongType
     def nid(c: org.apache.spark.sql.Column) = c.cast(idType)
     // Mode selection (see [[broadcastPullMaxVertices]]): pull mode
-    // partitions the edges by DST, indexes them, and broadcasts the
-    // senders per round — a zero-shuffle scatter over the senders'
-    // out-edges only, whose dst-clustered messages aggregate in place.
+    // partitions the edge index by DST and broadcasts the senders per round,
+    // whose dst-clustered messages aggregate in place; classic mode
+    // partitions it by SRC, beside the senders' own state partition.
     val pullMode = meta.numVertices > 0 &&
       meta.numVertices <= broadcastPullMaxVertices
     // PARTITION SIZING BY RELATION (guide §2.2/§2.3: size partitions to
     // the bytes that actually flow, not one count for every relation).
     // The loop moves two very differently sized relations:
-    //  - the cached edge relation, scanned once per superstep: 8 B/row
-    //    once ids are narrowed and the weight elided (24 B legacy width);
+    //  - the edge index, read once per superstep: 8 B/row once ids are
+    //    narrowed and the weight elided (24 B legacy width);
     //  - per-round VERTEX-sized state: the senders scan, the (pull-mode)
     //    message-partial exchange, the update join and the checkpoint —
     //    ~24 B/row over |V| rows.
@@ -203,14 +213,14 @@ object SqlRunner {
     // the only per-round exchange is the vertex-sized partial-agg one)
     // from the VERTEX bytes, with a defaultParallelism floor once the
     // vertex state is big enough to want the whole box, and partitions
-    // the edge cache explicitly from the EDGE bytes. Classic mode's
-    // message shuffle is edge-sized, so it keeps the edge-derived conf
-    // unchanged.
+    // the edge index explicitly from the EDGE bytes. Classic mode's index
+    // shares the vertex state's layout and its message shuffle is
+    // edge-sized, so both take the edge-derived count.
     //
     // CORE FLOOR for the edge-sized layouts: every round's scatter runs
     // per edge partition, so a graph of 1M edges at 8 MB per partition (2
     // partitions) ran every round on 2 of 4 cores. Once a graph has
-    // ≥ 64K edges per core, its edge cache and classic mode's `parts`
+    // ≥ 64K edges per core, its edge index and classic mode's `parts`
     // take at least one partition per core; smaller graphs keep the
     // sized count (1 below 64K edges), where dispatch outweighs the work.
     val coreFloor = math.min(spark.sparkContext.defaultParallelism.toLong,
@@ -234,56 +244,46 @@ object SqlRunner {
       else math.max(coreFloor, LoopConf.loopParallelism(spark, m))
     // The partition count the edges are actually laid out at — the
     // denominator of the hub-straggler threshold below.
-    val cacheParts = if (pullMode) edgeParts else parts
+    val indexParts = if (pullMode) edgeParts else parts
     // AQE OFF for the loop's own queries (r12, guide §1.2 config-last):
     // every superstep replans its stages through the adaptive executor —
     // a driver-side latency per stage per round — yet nothing here is
-    // adaptive: the join strategy is explicit (SHUFFLE_HASH hints; pull
-    // mode's scatter is no join), the exchange sizes are pre-computed from
-    // |V|/|E| (the sizing above), and the persisted edge side is invisible
-    // to AQE's skew/coalesce machinery anyway. Measured on the b03 64M anchor
-    // (this round, same box): loop 17.2 → 14.4 s and 805 → 625 MB
+    // adaptive: the update join's strategy is explicit (a SHUFFLE_HASH
+    // hint; the scatter is no join), the exchange sizes are pre-computed
+    // from |V|/|E| (the sizing above), and the edge index is an RDD AQE's
+    // skew/coalesce machinery cannot see anyway. Measured on the b03 64M
+    // anchor (this round, same box): loop 17.2 → 14.4 s and 805 → 625 MB
     // shuffled. Results are execution-identical.
     LoopConf.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> parts.toString)) {
-      // SKEW PROBE + HUB SALTING. Hash partitioning sends a vertex's whole
-      // edge list to ONE partition, so a power-law hub whose out-degree
-      // rivals a full partition serializes its scatter into a straggling,
-      // spilling task — and because the edge side is a cached RDD
-      // (deliberately: the per-round zero-exchange property), AQE's
-      // skew-join splitting cannot engage here (it re-plans shuffle
-      // exchanges, and this join reads none on the edge side). The runner
-      // therefore handles skew itself: a seeded 1% SAMPLE of the edges
-      // estimates out-degrees BEFORE any shuffle, and the top hub vertices
+      // SKEW PROBE + HUB SALTING (pull mode). Hash partitioning sends a
+      // vertex's whole in-edge list to ONE index partition, so a power-law
+      // hub whose in-degree rivals a full partition serializes its scatter
+      // into a straggling task, and AQE's skew splitting cannot engage on
+      // an RDD leaf. A seeded 1% SAMPLE of the edges therefore estimates
+      // in-degrees BEFORE the index's one shuffle, and the top hub vertices
       // (degree > 2× the mean partition's edge count) get their edge lists
-      // salted across `saltF` sub-partitions keyed by
-      // (src, salt = hash(dst) % saltF), each round's (small) sender set
-      // fanning hub rows out to every salt. Probing before the cache build
-      // means the salted layout costs the SAME single shuffle as the plain
-      // one — measured on the b04 anchor (64M edges, top hub ≈ 2.9M
-      // out-edges ≈ 6× a mean partition), salted and unsalted wall times
-      // are equal within local[32] run noise. The stable effect is the
-      // BOUND: no cached edge shard exceeds ~one mean partition, where
-      // unsalted the hub shard grows linearly with the graph — at cluster
-      // scale it alone would exceed executor memory. Uniform graphs pay
-      // one 1% scan and keep the identical unsalted plan; sub-8M-edge
-      // graphs skip even that.
-      val meanPartEdges = math.max(1L, m / cacheParts)
+      // spread across `saltF` sub-partitions keyed by
+      // (dst, salt = hash(src) % saltF). The salt is pure layout: the
+      // scatter and the groupBy never reference it, and the aggregate merges
+      // the split partials back on its small exchange. Uniform graphs pay
+      // one 1% scan and keep the unsalted layout; sub-8M-edge graphs skip
+      // even that. Classic mode never salts: its index is keyed by src, and
+      // a hub's shard there is its out-edges at 4–8 B each plus one key
+      // (on the b04 anchor, 64M edges with a ≈ 2.9M out-degree hub, the
+      // salted and unsalted classic scatters measured equal wall times).
+      val meanPartEdges = math.max(1L, m / indexParts)
       val hubMinDegreeOverride = sys.props.get("graft.engine.hubMinDegree")
         .map(_.toLong)
       val hubMinDegree = hubMinDegreeOverride
         .getOrElse(math.max(HubDegreePartitionFactor * meanPartEdges,
           HubMinDegreeFloor))
       val hubs: Array[(Long, Long)] =
-        if (m < HubProbeMinEdges && hubMinDegreeOverride.isEmpty)
+        if (!pullMode || (m < HubProbeMinEdges && hubMinDegreeOverride.isEmpty))
           Array.empty
         else
-          // The straggler risk lives on the cache's PARTITION KEY: src
-          // (out-degree hubs) in classic mode, dst (in-degree hubs) in
-          // pull mode — either way a vertex whose edge list rivals a
-          // partition serializes one task.
           sel.sample(withReplacement = false, HubSampleFraction, seed = 42)
-            .groupBy(if (pullMode) $"dst" else $"src")
+            .groupBy($"dst")
             .agg(count(lit(1)).as("c"))
             .filter($"c" >= math.max(1L,
               (hubMinDegree * HubSampleFraction).toLong))
@@ -300,45 +300,34 @@ object SqlRunner {
           Iterator.iterate(2)(_ * 2)
             .find(f => f >= 32 || f.toLong * meanPartEdges >= worst).get
         }
-      val hubIds: Seq[Long] = hubs.map(_._1).toIndexedSeq
       // Literal type matches the (possibly narrowed) id columns so the
       // IN-set probe stays a same-type comparison inside codegen.
       val hubLits: Seq[Any] =
-        if (narrowIds) hubIds.map(_.toInt) else hubIds
-      val allSalts = array((0 until saltF).map(i => lit(i)): _*)
+        if (narrowIds) hubs.map(_._1.toInt).toSeq else hubs.map(_._1).toSeq
       // Laid out pre-partitioned — the DataFrame form of the reference's
-      // precomputed adjloc routing table (partition.h:276-279):
-      //  - classic mode on src (or (src, salt) under skew): every
-      //    superstep's senders⋈edges join finds the edge side already
-      //    hash-partitioned on its key, so only the (active-set-sized)
-      //    senders relation shuffles per round;
-      //  - pull mode on dst, the aggregation key: the salt, when present,
-      //    only SPLITS a hot dst's rows across partitions; the scatter and
-      //    the groupBy never reference it (the aggregate merges the split
-      //    partials back on the small exchange).
-      // Narrowing applies HERE, to the relation every superstep re-reads
-      // — the sizing cache above keeps the caller's width.
+      // precomputed adjloc routing table (partition.h:276-279) — on dst in
+      // pull mode, the aggregation key, and on src in classic mode, the key
+      // of the vertex state each task scatters from. Narrowing applies
+      // HERE, to the relation the index holds — the sizing cache above
+      // keeps the caller's width.
       val eBase =
         if (usesWeight) sel.select(nid($"src").as("src"),
           nid($"dst").as("dst"), $"weight")
         else sel.select(nid($"src").as("src"), nid($"dst").as("dst"))
-      val pKey = if (pullMode) $"dst" else $"src"
-      val sKey = if (pullMode) $"src" else $"dst"
       val laidOut =
-        if (!salted) eBase.repartition(cacheParts, pKey)
+        if (!pullMode) eBase.repartition(indexParts, $"src")
+        else if (!salted) eBase.repartition(indexParts, $"dst")
         else eBase.withColumn("salt",
-            when(pKey.isInCollection(hubLits),
-              pmod(xxhash64(sKey), lit(saltF.toLong)).cast("int"))
+            when($"dst".isInCollection(hubLits),
+              pmod(xxhash64($"src"), lit(saltF.toLong)).cast("int"))
               .otherwise(lit(0)))
-          .repartition(cacheParts, pKey, $"salt")
-      // Classic mode scans a columnar cache of the layout; pull mode indexes
-      // each of its partitions as a CSR over src, so a round reads only its
-      // senders' out-edges. A hash partition holds about m / cacheParts
+          .repartition(indexParts, $"dst", $"salt")
+      // Each partition indexed as a CSR over src, so a round reads only its
+      // senders' out-edges. A hash partition holds about m / indexParts
       // edges; the index's builders start with an eighth more.
-      val cache = if (pullMode) None else Some(laidOut.cache())
-      val index = if (!pullMode) None else {
-        val perPart = m / cacheParts
-        Some(EdgeIndex.build(laidOut, usesWeight, (perPart + perPart / 8 + 16).toInt))
+      val index = {
+        val perPart = m / indexParts
+        EdgeIndex.build(laidOut, usesWeight, (perPart + perPart / 8 + 16).toInt)
       }
       // The out-degree aggregate + vertex join only run for algorithms
       // whose message hook reads the degree (PageRank): at 64M edges it is
@@ -353,29 +342,26 @@ object SqlRunner {
       // serves as the template for every round. The join takes the larger
       // layout of its two sides: in unsalted pull mode the messages keep
       // the dst-partitioned index's layout (no exchange before the
-      // aggregate), otherwise they are shuffled to `parts`.
-      val stateParts = if (pullMode && !salted) math.max(parts, cacheParts) else parts
+      // aggregate), otherwise they are shuffled to `parts`. In classic mode
+      // the state thereby shares the src-partitioned index's layout: state
+      // partition p holds exactly the sources whose out-edges index
+      // partition p holds.
+      val stateParts = if (pullMode && !salted) math.max(parts, indexParts) else parts
       val init = {
         val v = vertices.select(nid($"id").as("id"))
         if (alg.usesOutDegree) {
-          val deg = index match {
-            // A source's out-edges spread over the dst partitions: sum the
-            // index's per-partition key counts.
-            case Some(ix) =>
-              val out = Seq(AttributeReference("src", idType, nullable = false)(),
-                AttributeReference("n", IntegerType, nullable = false)())
-              GraftFrames.ofRdd(spark, out, EdgeIndex.degrees(ix, idType),
-                  UnknownPartitioning(cacheParts), Statistics(BigInt(m) * 12))
-                .groupBy($"src").agg(sum($"n").cast("int").as("outdeg"))
-            case None =>
-              cache.get.groupBy($"src").agg(count(lit(1)).cast("int").as("outdeg"))
-          }
+          // A source's out-edges may spread over several partitions (pull
+          // mode's dst layout): sum the index's per-partition key counts.
+          val out = Seq(AttributeReference("src", idType, nullable = false)(),
+            AttributeReference("n", IntegerType, nullable = false)())
+          val deg = GraftFrames.ofRdd(spark, out, EdgeIndex.degrees(index, idType),
+              UnknownPartitioning(indexParts), Statistics(BigInt(m) * 12))
+            .groupBy($"src").agg(sum($"n").cast("int").as("outdeg"))
           v.join(deg, $"id" === deg("src"), "left")
             .select($"id", coalesce($"outdeg", lit(0)).as("outdeg"),
               alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
         } else {
-          cache.foreach(_.count())
-          index.foreach(_.count())
+          index.count()
           v.select($"id", lit(0).as("outdeg"),
             alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
         }
@@ -395,21 +381,6 @@ object SqlRunner {
       val senders = {
         val senders0 = if (alg.activeMessaging) verts0.filter($"changed") else verts0
         val senders1 = senders0.filter(alg.sendCondCol($"value"))
-        // Classic salted path: a sender that is a hub fans out to every
-        // salt shard of its own edge list; everyone else probes shard 0.
-        // The fan-out adds ≤ |hub∩senders|·(saltF−1) rows to the SMALL
-        // relation, shuffled here on both scatter keys — the exchange the
-        // planner adds itself for a multi-partition cache, written out so
-        // that a one-partition cache is not re-shuffled to match the
-        // id-partitioned senders. Pull mode never fans senders out — its
-        // salt is pure index layout.
-        val fanOut = salted && !pullMode
-        val senders2 = if (!fanOut) senders1 else
-          senders1.withColumn("salt",
-            explode(when($"id".isInCollection(hubLits), allSalts)
-              .otherwise(array(lit(0)))))
-            .repartition(parts, $"id", $"salt")
-        val keys = if (fanOut) Seq($"id", $"salt") else Seq($"id")
         // SENDER-SIDE MESSAGE PRECOMPUTE (guide §2.3: shuffle fewer bytes,
         // aggregate before you shuffle — applied to the scatter side). When
         // the message never reads the edge weight (usesWeight=false:
@@ -417,43 +388,43 @@ object SqlRunner {
         // anchors), msg is a pure function of the SENDER row — so evaluate
         // it ONCE per sender here instead of once per edge in the scatter's
         // output (|senders| divisions instead of |messages|: 4M vs
-        // 64M/round on the PageRank anchors), and ship/broadcast only
-        // (id[, salt], msg) — the value/outdeg/changed columns never enter
-        // the scatter. Identical results: the same expression over the same
-        // operands, evaluated earlier.
-        if (usesWeight) senders2.select(keys :+ $"outdeg" :+ $"value": _*) else {
+        // 64M/round on the PageRank anchors), and pack only (id, msg) — the
+        // value/outdeg/changed columns never enter the scatter. Identical
+        // results: the same expression over the same operands, evaluated
+        // earlier.
+        if (usesWeight) senders1.select($"id", $"outdeg", $"value") else {
           // A sender with no out-edges matches no edge, so dropping it is
-          // result-identical and shrinks the broadcast — and it is
+          // result-identical and shrinks the packed senders — and it is
           // REQUIRED here: the precomputed expression now evaluates on
           // every sender row, and PageRank's value/outdeg would hit
           // DIVIDE_BY_ZERO (ANSI) on dangling vertices that the scatter
           // used to filter out before the expression ever ran.
           val live =
-            if (alg.usesOutDegree) senders2.filter($"outdeg" > 0)
-            else senders2
-          live.select(keys :+ alg.msgCol($"value", lit(1.0), $"outdeg").as("msg"): _*)
+            if (alg.usesOutDegree) senders1.filter($"outdeg" > 0)
+            else senders1
+          live.select($"id", alg.msgCol($"value", lit(1.0), $"outdeg").as("msg"))
         }
       }
       val payload = if (usesWeight) Seq("outdeg", "value") else Seq("msg")
-      // Pull mode plans the sender selection on its own, once: each
-      // state's job packs the rows it selects ([[Frontier]]), and each
-      // round scatters them over the index.
-      val selection = if (pullMode) Some(senders.queryExecution.executedPlan) else None
-      // Pull mode's messages, one row per out-edge of a sender: the
-      // index's destination, the sender's payload and, when the message
-      // reads it, the weight ([[EdgeIndex.scatter]]). The round plan scans
-      // them from `placeholder`, with the index's partitions, which each
-      // round rebinds to that round's scatter. Unsalted, the rows sit in
-      // their dst's partition, so they reach the aggregate with no
-      // exchange; salted, a dst's rows span partitions, so the layout is
+      // The sender selection, planned on its own once and bound for tasks
+      // ([[Frontier]]): pull mode's state jobs pack the rows it selects for
+      // the driver to broadcast; classic mode's scatter packs them from its
+      // own state partition.
+      val selection = senders.queryExecution.executedPlan
+      val senderSide = Frontier.select(selection, initRows)
+      // The messages, one row per out-edge of a sender: the index's
+      // destination, the sender's payload and, when the message reads it,
+      // the weight ([[EdgeIndex.scatter]]). The round plan scans them from
+      // `placeholder`, with the index's partitions, which each round
+      // rebinds to that round's scatter. In unsalted pull mode the rows sit
+      // in their dst's partition, so they reach the aggregate with no
+      // exchange; otherwise a dst's rows span partitions, so the layout is
       // unknown and the planner exchanges the partial aggregates.
-      val layout = selection.map { sel =>
-        EdgeIndex.Layout(idType, sel.output.size, payload.map { name =>
-          val at = sel.output.indexWhere(_.name == name)
-          (at, sel.output(at).dataType)
-        }, usesWeight)
-      }
-      val placeholder = index.map(_.mapPartitions(_ => Iterator.empty[InternalRow]))
+      val layout = EdgeIndex.Layout(idType, selection.output.size, payload.map { name =>
+        val at = selection.output.indexWhere(_.name == name)
+        (at, selection.output(at).dataType)
+      }, usesWeight)
+      val placeholder = index.mapPartitions(_ => Iterator.empty[InternalRow])
 
       // THE ROUND, planned once: round 1's scatter→agg→join Dataset over the
       // seed state, built and planned here and never executed itself. Every
@@ -462,36 +433,17 @@ object SqlRunner {
       // rerun per iteration, with no per-round analysis, optimization or
       // planning.
       val template = {
-        val messages = (placeholder, selection) match {
-          case (Some(rows), Some(sel)) =>
-            val out = AttributeReference("mdst", idType, nullable = false)() +:
-              payload.map { name =>
-                val a = sel.output.find(_.name == name).get
-                AttributeReference(name, a.dataType, a.nullable)()
-              } ++:
-              (if (usesWeight) Seq(AttributeReference("weight", DoubleType,
-                laidOut.schema("weight").nullable)()) else Nil)
-            GraftFrames.ofRdd(spark, out, rows,
-              if (salted) UnknownPartitioning(cacheParts)
-              else HashPartitioning(out.take(1), cacheParts),
-              Statistics(BigInt(m) * (edgeRowBytes + 8)))
-          case _ =>
-            // Classic: SHUFFLE_HASH on the small side of both joins —
-            // without the hint the planner sees two co-partitioned inputs
-            // (the edge cache and the vertex checkpoint both carry hash
-            // partitioning), plans a zero-exchange sort-merge join, and
-            // RE-SORTS the full edge relation EVERY superstep (measured
-            // 13-35 s/round at 64M edges regardless of active-set size);
-            // hash join keeps the zero-exchange property but probes the big
-            // side linearly.
-            val e = cache.get
-            val scatterCond =
-              if (!salted) senders("id") === e("src")
-              else senders("id") === e("src") && senders("salt") === e("salt")
-            senders.hint("SHUFFLE_HASH").join(e, scatterCond)
-              .select(e("dst").as("mdst") +: payload.map(senders(_)) ++:
-                (if (usesWeight) Seq(e("weight")) else Nil): _*)
-        }
+        val out = AttributeReference("mdst", idType, nullable = false)() +:
+          payload.map { name =>
+            val a = selection.output.find(_.name == name).get
+            AttributeReference(name, a.dataType, a.nullable)()
+          } ++:
+          (if (usesWeight) Seq(AttributeReference("weight", DoubleType,
+            laidOut.schema("weight").nullable)()) else Nil)
+        val messages = GraftFrames.ofRdd(spark, out, placeholder,
+          if (pullMode && !salted) HashPartitioning(out.take(1), indexParts)
+          else UnknownPartitioning(indexParts),
+          Statistics(BigInt(m) * (edgeRowBytes + 8)))
         val aggs = messages
           .select($"mdst", (if (usesWeight) alg.msgCol($"value", $"weight", $"outdeg")
             else $"msg").as("msg"))
@@ -515,14 +467,13 @@ object SqlRunner {
         throw new IllegalStateException(s"the round re-lays the ${stateParts}-" +
           s"partition vertex state out as ${template.outputPartitioning}:\n$template")
       val changedAt = template.output.indexWhere(_.name == "changed")
-      val senderSide = selection.map(Frontier.select(_, initRows))
       // ONE job over a state's rows: it materializes their checkpoint,
       // counts the changed rows and, in pull mode, packs the senders when a
-      // later round reads them. One stage, as it reads the rows directly
-      // instead of planning an aggregate over the checkpoint. It stays in
-      // this file: tracers mark round ends by its call site.
+      // later round reads them. It reads the rows directly instead of
+      // planning an aggregate over the checkpoint. It stays in this file:
+      // tracers mark round ends by its call site.
       def stateJob(rows: RDD[InternalRow], pack: Boolean): (Long, Option[Frontier.Packed]) = {
-        val side = senderSide.filter(_ => pack)
+        val side = Option.when(pack)(senderSide)
         val parts = GraftFrames.count(rows) { it =>
           val packer = side.map(_.packer(TaskContext.getPartitionId()))
           var changed = 0L
@@ -537,23 +488,31 @@ object SqlRunner {
           side.map(_ => Frontier.Packed(packed.map(_._1).sum, packed.map(_._2).toSeq)))
       }
       // The seed's job: the loop's input, materialized in setup.
-      val seedSenders = stateJob(initRows, pack = true)._2
+      val seedSenders = stateJob(initRows, pack = pullMode)._2
       val sendersTrace = Seq.newBuilder[Long]
       val messagesTrace = Seq.newBuilder[Long]
       val emitted = spark.sparkContext.longAccumulator
 
       val tLoop = System.nanoTime()
       val run = Fixpoint((verts0, seedSenders), alg.maxIter) { case ((verts, frontier), round) =>
-        // The driver sorts and broadcasts the senders the previous job
-        // packed, and destroys the broadcast once this round's job is done:
-        // the checkpoint it feeds is materialized by then.
-        val sent = for (sel <- selection; f <- frontier) yield {
+        // Pull mode: the driver sorts and broadcasts the senders the
+        // previous job packed (only the cap's job skips its pack, and no
+        // round follows it), and destroys the broadcast once this round's
+        // job is done: the checkpoint it feeds is materialized by then.
+        val sent = Option.when(pullMode) {
+          val f = frontier.get
           sendersTrace += f.count
-          spark.sparkContext.broadcast(f.senders(sel.output))
+          spark.sparkContext.broadcast(f.senders(selection.output))
         }
         try {
-          val messages = for (ix <- index; rows <- placeholder; s <- sent; l <- layout)
-            yield rows -> EdgeIndex.scatter(ix, s, l, emitted)
+          val state = stateRdd(verts)
+          // Classic mode: each task scatters the senders of its own state
+          // partition over its own index partition.
+          val messages = sent match {
+            case Some(s) => EdgeIndex.scatter(index, s, layout, emitted)
+            case None =>
+              EdgeIndex.scatter(index, state, senderSide, selection.output, layout, emitted)
+          }
           val emitted0 = emitted.sum
           // Lazy: the state job materializes the checkpoint. Fixpoint then
           // frees the superseded round's checkpoint: 120 rounds of leaked
@@ -561,14 +520,14 @@ object SqlRunner {
           // resulting GC pauses were measured dominating round time at 4M
           // vertices.
           val rows = GraftFrames.execute(spark,
-            rebind(template, (initRows -> stateRdd(verts)) +: messages.toSeq: _*)).map(_.copy())
+            rebind(template, initRows -> state, placeholder -> messages)).map(_.copy())
           val next = checkpoint(spark, template.output, rows,
             template.outputPartitioning, stateStats)
           // The last round's senders would go unread: no round follows the
           // cap. An ε-stop is decided by this job's own count, so its last
           // pack stays.
-          val (changed, nextSenders) = stateJob(rows, pack = round < alg.maxIter)
-          if (messages.isDefined) messagesTrace += emitted.sum - emitted0
+          val (changed, nextSenders) = stateJob(rows, pack = pullMode && round < alg.maxIter)
+          messagesTrace += emitted.sum - emitted0
           Fixpoint.Step((next, nextSenders), changed)
         } finally sent.foreach(GraftFrames.destroy)
       } { case (verts, _) =>
@@ -577,8 +536,7 @@ object SqlRunner {
           (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value")
       }
       val loopSecs = (System.nanoTime() - tLoop) / 1e9
-      cache.foreach(_.unpersist())
-      index.foreach(_.unpersist())
+      index.unpersist()
       if (needCount) sel.unpersist()
       (run.result, graft.obs.RunLog.run(RunStats(run.rounds.length, loopSecs,
         hubs.length, saltF, run.rounds.map(_.changed), Some(template),

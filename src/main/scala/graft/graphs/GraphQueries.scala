@@ -660,12 +660,14 @@ object GraphQueries {
     // src is log-uniform (P(src=d) ∝ 1/(d+1), a Zipf-1-like out-degree
     // law): vertex 0 owns ~4.5% of ALL edges (~2.9M out-edges ≈ 6× a mean
     // loop partition), exactly the hash-partitioning straggler shape.
-    // SqlRunner's degree-probe detects the hubs and salts their edge lists
-    // (see the SKEW PROBE block in SqlRunner) — the bench persists
+    // SqlRunner's edge index holds the hub's out-edges at 4–8 B each in
+    // classic mode's src layout and spreads them over the dst partitions
+    // in pull mode, whose in-degree probe salts hot destinations (see the
+    // SKEW PROBE block in SqlRunner) — the bench persists
     // b04_salted_hubs/b04_salt_factor beside the throughput so the
     // engagement is a recorded artifact. Like b03, the output is the
-    // REQUIRE-pinned per-depth frontier vector — the salted scatter path
-    // is value-locked at its real 64M scale, not just at EngineSpec's
+    // REQUIRE-pinned per-depth frontier vector — the skewed scatter is
+    // value-locked at its real 64M scale, not just at EngineSpec's
     // 200k-edge miniature.
     "b04_sssp_skew64m" -> ((s, dir) => {
       import s.implicits._

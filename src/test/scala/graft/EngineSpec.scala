@@ -174,11 +174,11 @@ class EngineSpec extends AnyFunSuite {
     edges.unpersist()
   }
 
-  test("hub salting engages on a skewed 200k graph and preserves results") {
+  test("classic mode on an out-degree-skewed 200k graph matches LocalRunner") {
     // b04's shape in miniature: vertex 1 owns half of all edges (a ~100k
-    // out-degree hub). Forcing the hub threshold down makes the SKEW PROBE
-    // fire at this scale; the salted scatter must agree bit-for-bit with
-    // the single-task LocalRunner, and the engagement flags must record it.
+    // out-degree hub), whose out-edges classic mode's src-partitioned edge
+    // index keeps in one partition, even with the hub threshold lowered.
+    // The scatter must agree bit-for-bit with the single-task LocalRunner.
     import spark.implicits._
     val nV = 20000L
     val edges = spark.range(0, 200000)
@@ -191,17 +191,13 @@ class EngineSpec extends AnyFunSuite {
     val verts = spark.range(1, nV + 1).select($"id")
     val meta = GraphMeta(nV, source = 1L)
     sys.props.put("graft.engine.hubMinDegree", "5000")
-    // Force the CLASSIC (src-partitioned, shuffled-scatter) path: at 20k
-    // vertices the runner would otherwise pick broadcast-pull mode, whose
-    // skew story is structural (src never partitions anything) — the
-    // pull-mode salting twin below covers that side.
+    // Force the CLASSIC (src-partitioned) path: at 20k vertices the runner
+    // would otherwise pick broadcast-pull mode, whose skew story is
+    // structural (src never partitions anything) — the pull-mode salting
+    // twin below covers that side.
     sys.props.put("graft.engine.broadcastPullMaxVertices", "0")
     try {
-      val (df, stats) = SqlRunner.runWithStats(spark, verts, edges, Algorithms.Sssp, meta)
-      val sqlR = toMap(df)
-      assert(stats.saltedHubs >= 1,
-        s"expected the hub probe to fire, saltedHubs=${stats.saltedHubs}")
-      assert(stats.saltFactor >= 2)
+      val sqlR = toMap(SqlRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
       val localR = toMap(LocalRunner.run(spark, verts, edges, Algorithms.Sssp, meta))
       assert(sqlR == localR)
     } finally {
@@ -407,22 +403,28 @@ class EngineSpec extends AnyFunSuite {
   test("distributed tier matches the 8M-edge depth golden (SqlRunner)") {
     // Runner equality AT the ≥8M-edge tier, not just the 200k miniature:
     // the same b02 generator forced through the distributed superstep
-    // path must reproduce the identical expansion vector. This is the
-    // suite's heavyweight (~30-40 s) — the price of a real correctness
-    // gate on the plan the 64M anchors actually run.
+    // path must reproduce the identical expansion vector, in pull mode and
+    // in classic mode (the mode the 64M anchors run on a heap below the
+    // broadcast-pull cap), both with narrowed ids. This is the suite's
+    // heavyweight — the price of a real correctness gate on the plans the
+    // 64M anchors actually run.
     import spark.implicits._
     val nV = graft.graphs.GraphQueries.B02NV
     val e = graft.graphs.GraphQueries.uniformEdges8M(spark)
       .withColumn("weight", lit(1.0))
     val v = spark.range(nV).select($"id")
-    val got = SqlRunner
-      .run(spark, v, e, Algorithms.Sssp, GraphMeta(nV, source = 1L),
-        numEdges = 8L * nV)
-      .filter($"value" =!= Double.PositiveInfinity)
-      .groupBy($"value".cast("long").as("dist"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == B02DepthGolden)
+    Seq("pull" -> None, "classic" -> Some("0")).foreach { case (mode, cap) =>
+      cap.foreach(sys.props.put("graft.engine.broadcastPullMaxVertices", _))
+      val got = try SqlRunner
+        .run(spark, v, e, Algorithms.Sssp, GraphMeta(nV, source = 1L),
+          numEdges = 8L * nV)
+        .filter($"value" =!= Double.PositiveInfinity)
+        .groupBy($"value".cast("long").as("dist"))
+        .agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally sys.props.remove("graft.engine.broadcastPullMaxVertices")
+      assert(got == B02DepthGolden, mode)
+    }
   }
 
   test("zero-edge graph: all three runners degenerate correctly") {

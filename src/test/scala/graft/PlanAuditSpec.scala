@@ -287,13 +287,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
-  test("salted scatter: hub-salted superstep join keeps the edge side exchange-free") {
-    // The b04 skew posture, structurally: with salting engaged the scatter
-    // join must (1) key on BOTH (id, salt) — the hub edge lists really are
-    // spread across sub-partitions — and (2) stream the cached edge
-    // relation with NO shuffle exchange above it, i.e. salting must not
-    // have cost the loop its zero-exchange-per-round property.
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  test("classic scatter: the messages scan feeds a partial aggregate " +
+      "exchanged on mdst, and the vertex side stays unshuffled") {
+    // Above the broadcast-pull cap each task scatters its own state
+    // partition's senders over the src-partitioned edge index, so the round
+    // reads no columnar cache, shuffles no sender, and pays ONE exchange:
+    // the partial aggregates on their destination. The vertex state keeps
+    // its layout through the update join.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
@@ -310,43 +314,36 @@ class PlanAuditSpec extends AnyFunSuite {
       .filter($"src" =!= $"dst")
       .withColumn("weight", lit(1.0))
     val verts = s.range(1, nV + 1).select($"id")
-    sys.props.put("graft.engine.hubMinDegree", "5000")
-    // Classic path pinned explicitly (pull mode — the sub-8M-vertex
-    // default — has no scatter shuffle to audit; its twin is below).
     sys.props.put("graft.engine.broadcastPullMaxVertices", "0")
     try {
       val (res, stats) = SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
         GraphMeta(nV, source = 1L), numEdges = 200000L)
       res.count()
-      assert(stats.saltedHubs >= 1, "salting must engage on this fixture")
       val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
       val nodes = expand(plan)
-      // The scatter join is the two-key SHJ (id, salt)×(src, salt); the
-      // one-key SHJ is the verts⋈aggs update join.
-      val scatter = nodes.collectFirst {
-        case j: ShuffledHashJoinExec if j.leftKeys.size == 2 => j
-      }.getOrElse(fail(s"no 2-key ShuffledHashJoin in:\n$plan"))
-      // The salt column BY NAME on both sides' keys — a refactor that
-      // keys the join on two other columns (or drops salt to a
-      // post-filter) would still be a 2-key SHJ but lose the hub fan-out.
-      assert(scatter.leftKeys.exists(_.toString.contains("salt")) &&
-        scatter.rightKeys.exists(_.toString.contains("salt")),
-        s"salt missing from scatter join keys: ${scatter.leftKeys} × ${scatter.rightKeys}")
-      // Streamed (non-build) side = the edge cache: an InMemoryTableScan
-      // with no ShuffleExchange anywhere above or below it.
-      val streamed = scatter.buildSide match {
-        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => scatter.right
-        case _ => scatter.left
+      assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"the round must read no columnar cache:\n$plan")
+      val update = nodes.collect { case j: ShuffledHashJoinExec => j } match {
+        case Seq(j) => j
+        case js => fail(s"${js.size} shuffled hash joins, want the update join alone:\n$plan")
       }
-      val sub = expand(streamed)
-      assert(sub.exists(_.isInstanceOf[InMemoryTableScanExec]),
-        s"edge side must read the cache:\n$streamed")
-      assert(!sub.exists(_.isInstanceOf[ShuffleExchangeExec]),
-        s"edge side must not re-shuffle:\n$streamed")
-    } finally {
-      sys.props.remove("graft.engine.hubMinDegree")
-      sys.props.remove("graft.engine.broadcastPullMaxVertices")
-    }
+      assert(!expand(update.left).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"the vertex side must not shuffle:\n$plan")
+      val exchanges = expand(update.right).collect { case x: ShuffleExchangeExec => x }
+      assert(exchanges.size == 1, s"the messages side must shuffle once:\n$plan")
+      val onMdst = exchanges.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSet)
+        case _ => Nil
+      }
+      assert(onMdst == Seq(Set("mdst")), s"the exchange must key on mdst:\n$plan")
+      val partial = expand(exchanges.head.child).collectFirst {
+        case a: BaseAggregateExec if a.aggregateExpressions.forall(_.mode == Partial) => a
+      }.getOrElse(fail(s"no partial aggregate below the exchange:\n$plan"))
+      assert(expand(partial).exists {
+        case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
+        case _ => false
+      }, s"the partial aggregate must read the messages scan:\n$plan")
+    } finally sys.props.remove("graft.engine.broadcastPullMaxVertices")
   }
 
   test("broadcast-pull scatter: the messages scan reaches the aggregate unshuffled") {

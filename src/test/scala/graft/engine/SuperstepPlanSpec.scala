@@ -11,7 +11,6 @@ import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
@@ -33,8 +32,8 @@ class SuperstepPlanSpec extends AnyFunSuite {
 
   /** 600 vertices on a ring with one random chord each (≈ 10 SSSP rounds
     * from 0), plus vertex 600 — reached from 3 — whose 10,000 out-edges
-    * into a 100-vertex cluster make it a hub once the threshold is lowered.
-    * Weights 1–9.
+    * into a 100-vertex cluster make each cluster vertex an in-degree hub
+    * (~100 in-edges) once the threshold is lowered. Weights 1–9.
     */
   private lazy val graph: (DataFrame, DataFrame) = {
     val s = spark
@@ -55,11 +54,11 @@ class SuperstepPlanSpec extends AnyFunSuite {
   }
   private val meta = GraphMeta(701L, source = 0L)
 
-  /** 600k random edges over 20k vertices: the edge cache and the classic
+  /** 600k random edges over 20k vertices: the edge index and the classic
     * loop take one partition per core while the vertex state alone would
     * take 1, so the seed must follow the larger side. Vertex 1 is an
-    * out-degree hub (classic salting) and vertex 2 an in-degree hub (pull
-    * salting).
+    * out-degree hub (which classic mode does not salt) and vertex 2 an
+    * in-degree hub (pull salting).
     */
   private lazy val wide: (DataFrame, DataFrame) = {
     val s = spark
@@ -116,8 +115,7 @@ class SuperstepPlanSpec extends AnyFunSuite {
   private val modes: Seq[(String, Seq[(String, String)])] = Seq(
     "pull" -> Nil,
     "classic" -> Seq("graft.engine.broadcastPullMaxVertices" -> "0"),
-    "salted" -> Seq("graft.engine.broadcastPullMaxVertices" -> "0",
-      "graft.engine.hubMinDegree" -> "5000"))
+    "salted" -> Seq("graft.engine.hubMinDegree" -> "100"))
 
   private val algorithms: Seq[(String, GmrAlgorithm)] = Seq(
     "SSSP" -> Algorithms.UnitWeighted(Algorithms.Sssp),
@@ -158,17 +156,18 @@ class SuperstepPlanSpec extends AnyFunSuite {
     val local = values(LocalRunner.run(spark, verts, edges, alg, wideMeta))
     val hubs = "graft.engine.hubMinDegree" -> "5000"
     val classic = "graft.engine.broadcastPullMaxVertices" -> "0"
+    // Classic mode never salts, even with the hub threshold lowered.
     val traces = Seq("pull" -> Nil, "pull salted" -> Seq(hubs),
-        "classic" -> Seq(classic), "classic salted" -> Seq(classic, hubs))
+        "classic" -> Seq(classic), "classic, hub threshold set" -> Seq(classic, hubs))
       .map { case (mode, props) =>
         val (got, stats) = withProps(props: _*) {
           SqlRunner.runWithStats(spark, verts, edges, alg, wideMeta)
         }
         val plan = stats.roundPlan.get
-        assert((stats.saltedHubs > 0) == props.contains(hubs), mode)
-        if (!props.contains(hubs)) {
+        assert((stats.saltedHubs > 0) == (mode == "pull salted"), mode)
+        if (stats.saltedHubs == 0) {
           val stateParts = plan.outputPartitioning.numPartitions
-          assert(stateParts == cacheParts(plan) &&
+          assert(stateParts == indexParts(plan) &&
             stateParts > LoopConf.sizedParallelism(spark, wideMeta.numVertices, 24),
             s"$mode:\n$plan")
           val toVerts = plan.collect { case j: ShuffledHashJoinExec => j.left }
@@ -182,13 +181,12 @@ class SuperstepPlanSpec extends AnyFunSuite {
     assert(traces.head == localTrace(alg, traces.head.size, wide, wideMeta))
   }
 
-  /** The partition count of the edges `plan` scans: pull mode's messages
-    * scan over the edge index, or classic mode's columnar cache.
+  /** The partition count of the edges `plan` scans: its messages scan over
+    * the edge index.
     */
-  private def cacheParts(plan: SparkPlan): Int =
+  private def indexParts(plan: SparkPlan): Int =
     plan.collectFirst {
       case m: RDDScanExec if m.output.exists(_.name == "mdst") => m.rdd.getNumPartitions
-      case c: InMemoryTableScanExec => c.relation.cachedPlan.outputPartitioning.numPartitions
     }.getOrElse(fail(s"no edges scanned in:\n$plan"))
 
   test("the loop fills the cores from 64K edges per core, and a small graph " +
@@ -210,7 +208,7 @@ class SuperstepPlanSpec extends AnyFunSuite {
           val plan = withProps(props: _*) {
             SqlRunner.runWithStats(s, g._1, g._2, oneRound, m)
           }._2.roundPlan.get
-          (plan.outputPartitioning.numPartitions, cacheParts(plan))
+          (plan.outputPartitioning.numPartitions, indexParts(plan))
         }
         assert(laidOut(big, GraphMeta(nV, source = 0L)) == (cores, cores), s"$mode, 1M edges")
         assert(laidOut(graph, meta) == (1, 1), s"$mode, ${meta.numVertices} vertices")
@@ -232,12 +230,12 @@ class SuperstepPlanSpec extends AnyFunSuite {
     assert(classic.sendersTrace.isEmpty, classic)
   }
 
-  test("messagesTrace: each pull-mode round's scatter rows, its senders' " +
-      "summed out-degree") {
+  test("messagesTrace: each round's scatter rows in pull and classic mode") {
     // Round k's senders are the vertices round k − 1 changed that pass the
-    // send condition; each sends one message per out-edge. WCC on the path
-    // starts with every vertex sending, more senders than the index holds
-    // source ids, so its first scatter walks the ids and probes the senders.
+    // send condition; each sends one message per out-edge, its scatter
+    // rows the senders' summed out-degree. WCC on the path starts with
+    // every vertex sending, more senders than the index holds source ids,
+    // so its first pull-mode scatter walks the ids and probes the senders.
     def check(alg: GmrAlgorithm, g: (DataFrame, DataFrame), m: GraphMeta): Seq[Long] = {
       val (got, stats) = SqlRunner.runWithStats(spark, g._1, g._2, alg, m)
       val states = localStates(alg, stats.iterations, g, m)
@@ -251,14 +249,15 @@ class SuperstepPlanSpec extends AnyFunSuite {
       assert(stats.messagesTrace == want, s"${alg.name}: $stats")
       stats.messagesTrace
     }
-    val onPath = check(Algorithms.UnitWeighted(Algorithms.Sssp), path(6), GraphMeta(6L, source = 0L))
-    assert(onPath == Seq(1L, 1L, 1L, 1L, 1L, 0L), "the path's end sends along no edge")
-    check(Algorithms.Wcc, path(6), GraphMeta(6L))
-    check(Algorithms.Sssp, graph, meta)
-    val classic = withProps("graft.engine.broadcastPullMaxVertices" -> "0") {
-      SqlRunner.runWithStats(spark, graph._1, graph._2, Algorithms.Sssp, meta)._2
+    modes.take(2).foreach { case (mode, props) =>
+      withProps(props: _*) {
+        val onPath = check(Algorithms.UnitWeighted(Algorithms.Sssp), path(6),
+          GraphMeta(6L, source = 0L))
+        assert(onPath == Seq(1L, 1L, 1L, 1L, 1L, 0L), s"$mode: the path's end sends along no edge")
+        check(Algorithms.Wcc, path(6), GraphMeta(6L))
+        check(Algorithms.Sssp, graph, meta)
+      }
     }
-    assert(classic.messagesTrace.isEmpty, classic)
   }
 
   /** Path 0 → 1 → … → len−1 as (vertices, edges). */
