@@ -43,7 +43,7 @@ private[engine] object EdgeIndex {
     def indexOf(id: Long): Int = java.util.Arrays.binarySearch(a, id)
   }
 
-  private def ids(a: Array[Long], narrow: Boolean): Ids =
+  private[engine] def ids(a: Array[Long], narrow: Boolean): Ids =
     if (!narrow) new LongIds(a)
     else {
       val b = new Array[Int](a.length)
@@ -64,13 +64,13 @@ private[engine] object EdgeIndex {
     out
   }
 
-  private def permute(a: Array[Double], order: Array[Int]): Array[Double] = {
+  private[engine] def permute(a: Array[Double], order: Array[Int]): Array[Double] = {
     val out = new Array[Double](order.length)
     java.util.Arrays.setAll(out, (i: Int) => a(order(i)))
     out
   }
 
-  private def fitsInt(a: Array[Long]): Boolean =
+  private[engine] def fitsInt(a: Array[Long]): Boolean =
     java.util.Arrays.stream(a).allMatch(x => x == x.toInt)
 
   /** One partition's CSR: `dst(offsets(k) until offsets(k + 1))` are the
@@ -163,7 +163,7 @@ private[engine] object EdgeIndex {
       }
     })
 
-  private def setId(row: SpecificInternalRow, idType: DataType, id: Long): Unit =
+  private[engine] def setId(row: SpecificInternalRow, idType: DataType, id: Long): Unit =
     if (idType == LongType) row.setLong(0, id) else row.setInt(0, id.toInt)
 
   /** A message row's layout: the destination id of type `idType`, the
@@ -186,17 +186,17 @@ private[engine] object EdgeIndex {
     index.mapPartitions(_.flatMap(part => new Scatter(part, senders.value, layout, emitted)))
 
   /** Classic mode's messages over `index`, laid out like the vertex state
-    * `state`: each task packs the senders `side` selects from its own state
-    * partition as rows of `fields` and scatters them over its own index
+    * `states`: each task packs the senders `side` selects as rows of
+    * `fields` from its own state partition's vertices (only the changed
+    * ones when `changedOnly`) and scatters them over its own index
     * partition, so no sender leaves its partition.
     */
-  def scatter(index: RDD[Part], state: RDD[InternalRow], side: Frontier.Select,
-              fields: Seq[Attribute], layout: Layout,
+  def scatter(index: RDD[Part], states: RDD[VertexState], side: Frontier.Select,
+              changedOnly: Boolean, fields: Seq[Attribute], layout: Layout,
               emitted: LongAccumulator): RDD[InternalRow] =
-    index.zipPartitions(state) { (parts, rows) =>
-      val packer = side.packer(TaskContext.getPartitionId())
-      rows.foreach(packer.add)
-      val (n, bytes) = packer.result
+    index.zipPartitions(states) { (parts, state) =>
+      val (n, bytes) = side.pack(TaskContext.getPartitionId(),
+        state.next().rows(layout.idType, changedOnly))
       val senders = Frontier.Packed(n, Seq(bytes)).senders(fields)
       parts.flatMap(new Scatter(_, senders, layout, emitted))
     }

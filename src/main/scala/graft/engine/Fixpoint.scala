@@ -1,8 +1,10 @@
 package graft.engine
 
+import org.apache.spark.NarrowDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one loop skeleton of the Spark-side fixpoints — the reference's
   * iteration driver (igmr.cpp:116-247) minus the round body, which is the
@@ -15,10 +17,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * that the next state does not read; at the end, those of the final
   * state that the caller's result does not read.
   *
-  * A state, scratch entry or result is a Dataset or any tuple, case class
-  * or Seq of them. Its checkpoints are the RDDs its plans scan, so a state
-  * built lazily over earlier checkpoints (Mst's union of per-round
-  * nominations) keeps them all. They must all belong to the loop.
+  * A state, scratch entry or result is a Dataset, an RDD, or any tuple,
+  * case class or Seq of them. Its checkpoints are the persisted RDDs
+  * nearest each RDD and each RDD its plans scan, through narrow
+  * dependencies: a state built lazily over earlier checkpoints (Mst's union
+  * of per-round nominations) keeps them all, and a frame that scans a row
+  * view of one (SqlRunner's result over its final vertex state) keeps the
+  * checkpoint behind the view. They must all belong to the loop.
   */
 object Fixpoint {
 
@@ -73,9 +78,17 @@ object Fixpoint {
 
   private def rdds(x: Any): Seq[RDD[_]] = x match {
     case d: Dataset[_] =>
-      d.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+      d.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }.flatMap(persisted)
+    case r: RDD[_] => persisted(r)
     case xs: Iterable[_] => xs.toSeq.flatMap(rdds)
     case p: Product => p.productIterator.toSeq.flatMap(rdds)
     case _ => Nil
   }
+
+  /** The persisted RDDs nearest `r` through narrow dependencies: `r`
+    * itself when it is persisted.
+    */
+  private def persisted(r: RDD[_]): Seq[RDD[_]] =
+    if (r.getStorageLevel != StorageLevel.NONE) Seq(r)
+    else r.dependencies.collect { case d: NarrowDependency[_] => d.rdd }.flatMap(persisted)
 }

@@ -61,14 +61,15 @@ private[engine] object Frontier {
       row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + at(i), sizes(i))
   }
 
-  /** The sender selection `side` — a filter/project chain over its scan of
-    * `from`, the state it was planned on, topped by a projection — bound so
-    * a task can evaluate it on any state's rows. Fails loudly on a plan of
-    * any other shape.
+  /** The chain `side` — filters and projections over its scan of `from`,
+    * the frame it was planned on, topped by a projection — bound so a task
+    * can evaluate it on any rows of `from`'s layout: the sender selection
+    * over a state's vertices, and the round's update. Fails loudly on a
+    * plan of any other shape.
     */
   def select(side: SparkPlan, from: RDD[_]): Select = {
     def shape = new IllegalStateException(
-      s"cannot gather senders through the selection:\n$side")
+      s"cannot evaluate rows through the plan:\n$side")
     def steps(p: SparkPlan): List[Either[Expression, Seq[Expression]]] = p match {
       case w: WholeStageCodegenExec => steps(w.child)
       case i: InputAdapter => steps(i.child)
@@ -79,7 +80,7 @@ private[engine] object Frontier {
       case s: RDDScanExec if s.rdd eq from => Nil
       case _ => throw shape
     }
-    // The top projection makes every packed row an UnsafeRow of the side.
+    // The top projection makes every selected row an UnsafeRow of the side.
     val topDown = steps(side)
     if (!topDown.headOption.exists(_.isRight)) throw shape
     new Select(topDown.reverse)
@@ -88,37 +89,43 @@ private[engine] object Frontier {
   /** A bound filter/project chain, applied bottom-up. */
   final class Select private[Frontier] (chain: Seq[Either[Expression, Seq[Expression]]])
       extends Serializable {
-    /** A packer for one task's partition. */
-    def packer(partition: Int): Packer = new Packer(chain.map {
-      case Left(cond) =>
-        val p = Predicate.create(cond)
-        p.initialize(partition)
-        (r: InternalRow) => if (r == null || !p.eval(r)) null else r
-      case Right(exprs) =>
-        val u = UnsafeProjection.create(exprs)
-        u.initialize(partition)
-        (r: InternalRow) => if (r == null) null else u(r)
-    })
-  }
-
-  /** Packs the senders among the state rows `add`ed to it. */
-  final class Packer private[Frontier] (chain: Seq[InternalRow => InternalRow]) {
-    private val bytes = new ByteArrayOutputStream()
-    private val out = new DataOutputStream(bytes)
-    private val buf = new Array[Byte](4096)
-    private var count = 0L
-
-    def add(state: InternalRow): Unit = {
-      // The chain ends in an UnsafeProjection, so a row that passes is unsafe.
-      val row = chain.foldLeft(state)((r, f) => f(r)).asInstanceOf[UnsafeRow]
-      if (row != null) {
-        out.writeInt(row.getSizeInBytes)
-        row.writeToStream(out, buf)
-        count += 1
+    /** The chain for one task's partition: a row's result, reused by the
+      * next call, or null when a filter drops the row.
+      */
+    def bind(partition: Int): InternalRow => UnsafeRow = {
+      val steps = chain.map {
+        case Left(cond) =>
+          val p = Predicate.create(cond)
+          p.initialize(partition)
+          (r: InternalRow) => if (r == null || !p.eval(r)) null else r
+        case Right(exprs) =>
+          val u = UnsafeProjection.create(exprs)
+          u.initialize(partition)
+          (r: InternalRow) => if (r == null) null else u(r)
       }
+      // The chain ends in an UnsafeProjection, so a row that passes is unsafe.
+      (r: InternalRow) => steps.foldLeft(r)((x, f) => f(x)).asInstanceOf[UnsafeRow]
     }
 
-    /** The sender count and the packed rows. */
-    def result: (Long, Array[Byte]) = { out.flush(); (count, bytes.toByteArray) }
+    /** The count of the rows this selects from one task's `rows`, and
+      * those rows packed, each prefixed by its size in bytes.
+      */
+    def pack(partition: Int, rows: Iterator[InternalRow]): (Long, Array[Byte]) = {
+      val select = bind(partition)
+      val bytes = new ByteArrayOutputStream()
+      val out = new DataOutputStream(bytes)
+      val buf = new Array[Byte](4096)
+      var count = 0L
+      rows.foreach { state =>
+        val row = select(state)
+        if (row != null) {
+          out.writeInt(row.getSizeInBytes)
+          row.writeToStream(out, buf)
+          count += 1
+        }
+      }
+      out.flush()
+      (count, bytes.toByteArray)
+    }
   }
 }

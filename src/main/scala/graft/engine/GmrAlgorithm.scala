@@ -43,8 +43,10 @@ trait GmrAlgorithm extends Serializable {
   /** True when an update with NO message is the identity
     * (`update(v, None) == v` for every v). Cover/accu label propagations
     * (SSSP, WCC, max-color) have this; PageRank's damped re-mix does not.
-    * Executors use it to skip idle vertices entirely (frontier iteration)
-    * — a pure optimization: results must be identical either way.
+    * Executors use it to skip idle vertices entirely — LocalRunner's
+    * frontier loop, and SqlRunner's update, which then evaluates only the
+    * vertices that received a message — a pure optimization: results must
+    * be identical either way, so a wrong `true` is a wrong answer.
     */
   def idleNoOp: Boolean = false
 

@@ -6,21 +6,32 @@ import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
-  UnknownPartitioning}
-import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType}
 
 /** DataFrame executor for [[GmrAlgorithm]] — the reference's iteration driver
-  * (igmr.cpp:116-247) collapsed to a scatter→groupBy→join round per superstep:
+  * (igmr.cpp:116-247) collapsed to a scatter → aggregate → partition-local
+  * merge per superstep:
   *
   *   messages  = the senders' out-edges          (O4: scan+filter+project)
   *   aggregate = messages.groupBy(dst).agg(...)   (O6+O10: Spark's shuffle
   *               replaces the sort+run-length-group; hash agg needs no sort)
-  *   update    = vertices ⟕ aggregate             (O11: merge + convergence)
+  *   update    = the aggregate merged into each   (O11: merge + convergence,
+  *               state partition's arrays          ≙ updateGraph, gmr.h:170-219)
+  *
+  * The vertex state is what the reference keeps per process: per partition,
+  * one [[VertexState]] of primitive arrays (ids ascending, out-degrees,
+  * values, a changed bit set), hash-partitioned on id at the aggregate's own
+  * layout, so the update is a merge inside each partition with no join and
+  * no shuffle. A round copies the values and evaluates the algorithm's
+  * update on the vertices the aggregate names: O(receivers) when a vertex
+  * without a message keeps its value ([[GmrAlgorithm.idleNoOp]]), every
+  * vertex otherwise (PageRank's re-mix), as LocalRunner's frontier loop
+  * chooses.
   *
   * The edges live in one representation: each partition indexed as a CSR
   * over src ([[EdgeIndex]], ≙ the reference's per-process subgraph), so a
@@ -35,21 +46,18 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * destination into the aggregate (≙ the reference's map over each
   * process's own vertices, gmr.h computing()).
   *
-  * Like the reference's compiled map→sort→reduce, the round is PREPARED
-  * once: round 1 is built as a Dataset and planned, and every round —
-  * round 1 included — executes a fresh copy of that physical plan with its
-  * vertex-state scan and its messages scan rebound to the round's inputs
-  * ([[rebind]]). No round is analyzed, optimized or planned again. The
-  * rounds run through [[Fixpoint]]; each marks its output for local
-  * checkpoint (lineage stays one round deep) and runs ONE job, a count of
-  * the changed rows that also materializes the checkpoint (≙ the
-  * reference's piggybacked Allgather convergence exchange,
+  * Like the reference's compiled map→sort→reduce, the round's aggregate is
+  * PREPARED once: round 1's is built as a Dataset and planned, and every
+  * round — round 1 included — executes a fresh copy of that physical plan
+  * with its messages scan rebound to the round's scatter ([[rebind]]); the
+  * sender selection and the update are planned once too and bound for
+  * tasks ([[Frontier.select]]). No round is analyzed, optimized or planned
+  * again. The rounds run through [[Fixpoint]]; each marks its state for
+  * local checkpoint (lineage stays one round deep) and runs ONE job, a
+  * count of the changed vertices that also materializes the checkpoint (≙
+  * the reference's piggybacked Allgather convergence exchange,
   * igmr.cpp:137-149). In pull mode the same job returns the next round's
   * senders ([[Frontier]]), so no round runs a job to gather them.
-  * The vertex state is seeded hash-partitioned on id at the loop's
-  * partition count, the layout each round's update join keeps, so the one
-  * plan fits every round. Vertices carry their static out-degree so
-  * PageRank-style messages need no extra join.
   */
 object SqlRunner {
 
@@ -114,8 +122,9 @@ object SqlRunner {
     * indexed per partition ([[EdgeIndex]]), and each superstep broadcasts
     * its senders to every index partition: the scatter shuffles nothing,
     * and because message rows are then dst-clustered, the aggregation
-    * collapses them to ≤|V| rows with no exchange — the scatter shuffles
-    * nothing, the aggregate at most the partials of a salted layout. Above
+    * collapses them to ≤|V| rows with no exchange — the aggregate shuffles
+    * at most the partials of a salted layout, and merges into the state
+    * partition it lands in. Above
     * the cap (a 100 TB graph's vertex state does not broadcast) CLASSIC mode
     * indexes the edges by SRC at the vertex state's layout: a task scatters
     * its own state partition's senders over its own index partition, with
@@ -130,9 +139,11 @@ object SqlRunner {
     // tuned to one box), sized when a generation was a ~48 B/vertex hash
     // relation. One generation now is a round's sorted senders — each its
     // packed row (~28 B) plus an 8 B id and two 4 B offsets, ~44 B — held
-    // on the driver next to the packed bytes it was built from and the
-    // edge index; each round destroys its broadcast once its job has
-    // finished, so one generation is live at a time. heap/(64·48) caps one
+    // on the driver next to the packed bytes it was built from; the vertex
+    // state itself never reaches the driver (it stays in the executors'
+    // per-partition arrays, ~20 B/vertex per live round). Each round
+    // destroys its broadcast once its job has finished, so one generation
+    // is live at a time. heap/(64·48) caps one
     // generation at ~heap/64: a 20 GiB driver derives ~6.5M vertices (the
     // 4M anchors stay in pull mode), an 8 GiB one ~2.6M (the anchors
     // correctly fall back to classic). Broadcast blocks are
@@ -203,9 +214,9 @@ object SqlRunner {
     // The loop moves two very differently sized relations:
     //  - the edge index, read once per superstep: 8 B/row once ids are
     //    narrowed and the weight elided (24 B legacy width);
-    //  - per-round VERTEX-sized state: the senders scan, the (pull-mode)
-    //    message-partial exchange, the update join and the checkpoint —
-    //    ~24 B/row over |V| rows.
+    //  - per-round VERTEX-sized state: the senders, the (pull-mode)
+    //    message-partial exchange, the aggregate and the state it merges
+    //    into — ~24 B/row over |V| rows.
     // The old single edge-derived count (128 at 64M edges) split each
     // 80 MB vertex pass into 128 ~0.07 s tasks — three waves of mostly
     // scheduling overhead per round. Pull mode therefore sets the session
@@ -248,8 +259,8 @@ object SqlRunner {
     // AQE OFF for the loop's own queries (r12, guide §1.2 config-last):
     // every superstep replans its stages through the adaptive executor —
     // a driver-side latency per stage per round — yet nothing here is
-    // adaptive: the update join's strategy is explicit (a SHUFFLE_HASH
-    // hint; the scatter is no join), the exchange sizes are pre-computed
+    // adaptive: the round plan holds no join (the scatter reads the index,
+    // the update merges arrays), the exchange sizes are pre-computed
     // from |V|/|E| (the sizing above), and the edge index is an RDD AQE's
     // skew/coalesce machinery cannot see anyway. Measured on the b03 64M
     // anchor (this round, same box): loop 17.2 → 14.4 s and 805 → 625 MB
@@ -337,12 +348,12 @@ object SqlRunner {
       // to force it), so loop seconds stay a loop measurement.
       //
       // The vertex state is seeded HASH-PARTITIONED on id at the partition
-      // count a round's update join leaves it in, so round 1's plan already
-      // has the steady-state shape (no exchange on the vertex side) and
-      // serves as the template for every round. The join takes the larger
-      // layout of its two sides: in unsalted pull mode the messages keep
-      // the dst-partitioned index's layout (no exchange before the
-      // aggregate), otherwise they are shuffled to `parts`. In classic mode
+      // count of a round's aggregate, so each round merges its aggregate
+      // into the state partition by partition, with no shuffle. The
+      // aggregate takes the larger layout of the two sides: in unsalted
+      // pull mode the messages keep the dst-partitioned index's layout (no
+      // exchange before the aggregate) unless the state wants more
+      // partitions, otherwise they are shuffled to `parts`. In classic mode
       // the state thereby shares the src-partitioned index's layout: state
       // partition p holds exactly the sources whose out-edges index
       // partition p holds.
@@ -359,27 +370,36 @@ object SqlRunner {
             .groupBy($"src").agg(sum($"n").cast("int").as("outdeg"))
           v.join(deg, $"id" === deg("src"), "left")
             .select($"id", coalesce($"outdeg", lit(0)).as("outdeg"),
-              alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
+              alg.initCol($"id", meta).cast(DoubleType).as("value"))
         } else {
           index.count()
           v.select($"id", lit(0).as("outdeg"),
-            alg.initCol($"id", meta).as("value"), lit(true).as("changed"))
+            alg.initCol($"id", meta).cast(DoubleType).as("value"))
         }
       }.repartition(stateParts, $"id")
-      val initRows = init.queryExecution.toRdd.map(_.copy())
-      val initOut = init.queryExecution.analyzed.output
       // Every state holds one row per vertex: the seed's estimate serves
-      // them all.
+      // the result.
       val stateStats = {
         val st = init.queryExecution.optimizedPlan.stats
         Statistics(st.sizeInBytes, st.rowCount)
       }
-      val verts0 = checkpoint(spark, initOut, initRows,
-        HashPartitioning(initOut.filter(_.name == "id"), stateParts), stateStats)
+      // The seed, one [[VertexState]] per partition, marked for local
+      // checkpoint like every round's state: the block store then holds one
+      // object of a few primitive arrays per partition, not a row per
+      // vertex.
+      val states0 = init.queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(VertexState.seed(rows, idType)))
+      states0.localCheckpoint()
+      val changedOnly = alg.activeMessaging
 
-      // THE SENDERS of a state, over the seed state.
+      // THE SENDERS of a state, planned over its (id, outdeg, value,
+      // changed) rows as [[VertexState.rows]] views them.
+      val viewRows = spark.sparkContext.emptyRDD[InternalRow]
       val senders = {
-        val senders0 = if (alg.activeMessaging) verts0.filter($"changed") else verts0
+        val view = GraftFrames.ofRdd(spark, init.queryExecution.analyzed.output :+
+            AttributeReference("changed", BooleanType, nullable = false)(), viewRows,
+          UnknownPartitioning(0), stateStats)
+        val senders0 = if (changedOnly) view.filter($"changed") else view
         val senders1 = senders0.filter(alg.sendCondCol($"value"))
         // SENDER-SIDE MESSAGE PRECOMPUTE (guide §2.3: shuffle fewer bytes,
         // aggregate before you shuffle — applied to the scatter side). When
@@ -411,27 +431,27 @@ object SqlRunner {
       // the driver to broadcast; classic mode's scatter packs them from its
       // own state partition.
       val selection = senders.queryExecution.executedPlan
-      val senderSide = Frontier.select(selection, initRows)
+      val senderSide = Frontier.select(selection, viewRows)
       // The messages, one row per out-edge of a sender: the index's
       // destination, the sender's payload and, when the message reads it,
       // the weight ([[EdgeIndex.scatter]]). The round plan scans them from
       // `placeholder`, with the index's partitions, which each round
-      // rebinds to that round's scatter. In unsalted pull mode the rows sit
-      // in their dst's partition, so they reach the aggregate with no
-      // exchange; otherwise a dst's rows span partitions, so the layout is
-      // unknown and the planner exchanges the partial aggregates.
+      // rebinds to that round's scatter. When the unsalted pull-mode index
+      // shares the state's layout, the rows sit in their dst's state
+      // partition and reach the aggregate with no exchange; otherwise the
+      // layout is unknown and the planner exchanges the partial aggregates
+      // to the state's `parts`.
       val layout = EdgeIndex.Layout(idType, selection.output.size, payload.map { name =>
         val at = selection.output.indexWhere(_.name == name)
         (at, selection.output(at).dataType)
       }, usesWeight)
       val placeholder = index.mapPartitions(_ => Iterator.empty[InternalRow])
 
-      // THE ROUND, planned once: round 1's scatter→agg→join Dataset over the
-      // seed state, built and planned here and never executed itself. Every
-      // round runs a fresh copy of this physical plan with its inputs
-      // rebound ([[rebind]]) — the reference's compiled map→sort→reduce
-      // rerun per iteration, with no per-round analysis, optimization or
-      // planning.
+      // THE ROUND'S AGGREGATE, planned once: round 1's scatter→agg Dataset,
+      // built and planned here and never executed itself. Every round runs
+      // a fresh copy of this physical plan with its messages scan rebound
+      // ([[rebind]]) — the reference's compiled map→sort→reduce rerun per
+      // iteration, with no per-round analysis, optimization or planning.
       val template = {
         val out = AttributeReference("mdst", idType, nullable = false)() +:
           payload.map { name =>
@@ -441,60 +461,55 @@ object SqlRunner {
           (if (usesWeight) Seq(AttributeReference("weight", DoubleType,
             laidOut.schema("weight").nullable)()) else Nil)
         val messages = GraftFrames.ofRdd(spark, out, placeholder,
-          if (pullMode && !salted) HashPartitioning(out.take(1), indexParts)
+          if (pullMode && !salted && indexParts == stateParts)
+            HashPartitioning(out.take(1), indexParts)
           else UnknownPartitioning(indexParts),
           Statistics(BigInt(m) * (edgeRowBytes + 8)))
-        val aggs = messages
+        messages
           .select($"mdst", (if (usesWeight) alg.msgCol($"value", $"weight", $"outdeg")
             else $"msg").as("msg"))
           .groupBy($"mdst")
-          .agg(alg.reduceAgg($"msg").as("agg"))
-        val verts = verts0
-        val updated = verts.join(aggs.hint("SHUFFLE_HASH"), verts("id") === aggs("mdst"), "left")
-          .select(verts("id"), verts("outdeg"), verts("value").as("old"),
-            alg.updateCol(verts("id"), verts("value"), $"agg", meta).as("value"))
-          .select($"id", $"outdeg", $"value",
-            // NaN-safe the SQL way: |inf-inf| is NaN, and Spark SQL orders
-            // NaN GREATER than every value (unlike Java, where NaN
-            // comparisons are false) — without the isnan guard every
-            // unreachable vertex counts as changed forever and the loop
-            // burns all 120 rounds instead of converging.
-            (!isnan($"value" - $"old") &&
-              abs($"value" - $"old") > alg.epsilon).as("changed"))
-        updated.queryExecution.executedPlan
+          .agg(alg.reduceAgg($"msg").cast(DoubleType).as("agg"))
+          .queryExecution.executedPlan
       }
-      if (template.outputPartitioning.numPartitions != stateParts)
-        throw new IllegalStateException(s"the round re-lays the ${stateParts}-" +
-          s"partition vertex state out as ${template.outputPartitioning}:\n$template")
-      val changedAt = template.output.indexWhere(_.name == "changed")
-      // ONE job over a state's rows: it materializes their checkpoint,
-      // counts the changed rows and, in pull mode, packs the senders when a
-      // later round reads them. It reads the rows directly instead of
-      // planning an aggregate over the checkpoint. It stays in this file:
-      // tracers mark round ends by its call site.
-      def stateJob(rows: RDD[InternalRow], pack: Boolean): (Long, Option[Frontier.Packed]) = {
+      // Aggregate partition p merges into state partition p: both must be
+      // laid out by the same hash of the same id type at `stateParts`.
+      template.outputPartitioning match {
+        case HashPartitioning(Seq(k: Attribute), n) if k.name == "mdst" && n == stateParts =>
+        case other => throw new IllegalStateException(s"the round's aggregate is laid " +
+          s"out as $other, not as the $stateParts-partition vertex state:\n$template")
+      }
+      // THE UPDATE, a partition-local merge of the aggregate into the state
+      // ([[VertexState.merge]]). When a vertex that receives no message
+      // keeps its value and counts as unchanged (`idleNoOp`, with ε ≥ 0 so
+      // that an unchanged value is not a change), it touches only the
+      // receivers: O(messages) plus one copy of the values.
+      val update = VertexState.update(spark, alg, meta, idType)
+      val receiversOnly = alg.idleNoOp && alg.epsilon >= 0
+      // ONE job over a state: it materializes its checkpoint, counts the
+      // changed vertices and, in pull mode, packs the senders when a later
+      // round reads them. It stays in this file: tracers mark round ends by
+      // its call site.
+      def stateJob(states: RDD[VertexState], pack: Boolean): (Long, Option[Frontier.Packed]) = {
         val side = Option.when(pack)(senderSide)
-        val parts = GraftFrames.count(rows) { it =>
-          val packer = side.map(_.packer(TaskContext.getPartitionId()))
-          var changed = 0L
-          it.foreach { r =>
-            if (!r.isNullAt(changedAt) && r.getBoolean(changedAt)) changed += 1
-            packer.foreach(_.add(r))
-          }
-          (changed, packer.map(_.result))
+        val parts = GraftFrames.count(states) { it =>
+          val state = it.next()
+          (state.changedCount.toLong, side.map(_.pack(TaskContext.getPartitionId(),
+            state.rows(idType, changedOnly))))
         }
         val packed = parts.flatMap(_._2)
         (parts.map(_._1).sum,
           side.map(_ => Frontier.Packed(packed.map(_._1).sum, packed.map(_._2).toSeq)))
       }
       // The seed's job: the loop's input, materialized in setup.
-      val seedSenders = stateJob(initRows, pack = pullMode)._2
+      val seedSenders = stateJob(states0, pack = pullMode)._2
       val sendersTrace = Seq.newBuilder[Long]
       val messagesTrace = Seq.newBuilder[Long]
       val emitted = spark.sparkContext.longAccumulator
 
       val tLoop = System.nanoTime()
-      val run = Fixpoint((verts0, seedSenders), alg.maxIter) { case ((verts, frontier), round) =>
+      val run = Fixpoint((states0, seedSenders), alg.maxIter) {
+          case ((states, frontier), round) =>
         // Pull mode: the driver sorts and broadcasts the senders the
         // previous job packed (only the cap's job skips its pack, and no
         // round follows it), and destroys the broadcast once this round's
@@ -505,35 +520,37 @@ object SqlRunner {
           spark.sparkContext.broadcast(f.senders(selection.output))
         }
         try {
-          val state = stateRdd(verts)
           // Classic mode: each task scatters the senders of its own state
           // partition over its own index partition.
           val messages = sent match {
             case Some(s) => EdgeIndex.scatter(index, s, layout, emitted)
-            case None =>
-              EdgeIndex.scatter(index, state, senderSide, selection.output, layout, emitted)
+            case None => EdgeIndex.scatter(index, states, senderSide, changedOnly,
+              selection.output, layout, emitted)
           }
           val emitted0 = emitted.sum
           // Lazy: the state job materializes the checkpoint. Fixpoint then
-          // frees the superseded round's checkpoint: 120 rounds of leaked
-          // vertex state is 120×|V| rows of memory pressure, and the
-          // resulting GC pauses were measured dominating round time at 4M
-          // vertices.
-          val rows = GraftFrames.execute(spark,
-            rebind(template, initRows -> state, placeholder -> messages)).map(_.copy())
-          val next = checkpoint(spark, template.output, rows,
-            template.outputPartitioning, stateStats)
+          // frees the superseded round's checkpoint.
+          val aggs = GraftFrames.execute(spark, rebind(template, placeholder -> messages))
+          val next = aggs.zipPartitions(states) { (rows, prev) =>
+            Iterator.single(VertexState.merge(prev.next(), rows, update,
+              TaskContext.getPartitionId(), idType, receiversOnly))
+          }
+          next.localCheckpoint()
           // The last round's senders would go unread: no round follows the
           // cap. An ε-stop is decided by this job's own count, so its last
           // pack stays.
-          val (changed, nextSenders) = stateJob(rows, pack = pullMode && round < alg.maxIter)
+          val (changed, nextSenders) = stateJob(next, pack = pullMode && round < alg.maxIter)
           messagesTrace += emitted.sum - emitted0
           Fixpoint.Step((next, nextSenders), changed)
         } finally sent.foreach(GraftFrames.destroy)
-      } { case (verts, _) =>
-        // Re-widen narrowed ids: the surface schema is (id LONG, value).
-        verts.select(
-          (if (narrowIds) $"id".cast("long") else $"id").as("id"), $"value")
+      } { case (states, _) =>
+        // The surface schema, (id LONG, value), over a row view of the
+        // final state; narrowed ids re-widen, so their hash layout is lost.
+        val out = Seq(AttributeReference("id", LongType, nullable = false)(),
+          AttributeReference("value", DoubleType, nullable = false)())
+        GraftFrames.ofRdd(spark, out, states.mapPartitions(_.flatMap(_.values)),
+          if (narrowIds) UnknownPartitioning(stateParts)
+          else HashPartitioning(out.take(1), stateParts), stateStats)
       }
       val loopSecs = (System.nanoTime() - tLoop) / 1e9
       index.unpersist()
@@ -543,22 +560,6 @@ object SqlRunner {
         sendersTrace.result(), messagesTrace.result())))
     }
   }
-
-  /** `rows` marked for local checkpoint — materialized by the first job
-    * that reads them — as a frame of `output` laid out by `partitioning`.
-    */
-  private def checkpoint(spark: SparkSession, output: Seq[Attribute],
-                         rows: RDD[InternalRow], partitioning: Partitioning,
-                         stats: Statistics): DataFrame = {
-    rows.localCheckpoint()
-    GraftFrames.ofRdd(spark, output, rows, partitioning, stats)
-  }
-
-  /** The vertex-state checkpoint a state frame scans. */
-  private def stateRdd(state: DataFrame): RDD[InternalRow] =
-    state.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .getOrElse(throw new IllegalStateException(
-        s"superstep state is not a checkpoint scan:\n${state.queryExecution.analyzed}"))
 
   /** A fresh, executable copy of the prepared round plan `template` whose
     * scans of each `from` in `swaps` read its `to` instead. Every operator

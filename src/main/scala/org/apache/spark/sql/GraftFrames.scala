@@ -44,7 +44,7 @@ object GraftFrames {
     * it, returning each partition's result. The name is the job's call
     * site, `count at <caller>`: traces find a loop's round ends by it.
     */
-  def count[T: ClassTag](rows: RDD[InternalRow])(f: Iterator[InternalRow] => T): Array[T] =
+  def count[T, U: ClassTag](rows: RDD[T])(f: Iterator[T] => U): Array[U] =
     rows.sparkContext.runJob(rows, f)
 
   /** Frees `relation`'s blocks everywhere before returning. */

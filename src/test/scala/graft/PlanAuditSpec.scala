@@ -292,15 +292,16 @@ class PlanAuditSpec extends AnyFunSuite {
     // Above the broadcast-pull cap each task scatters its own state
     // partition's senders over the src-partitioned edge index, so the round
     // reads no columnar cache, shuffles no sender, and pays ONE exchange:
-    // the partial aggregates on their destination. The vertex state keeps
-    // its layout through the update join.
+    // the partial aggregates on their destination. The round plan is that
+    // aggregate alone — no join and no scan of the vertex state, which
+    // merges the aggregate partition by partition at its own layout.
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.RDDScanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions._
     import graft.engine.{GraphMeta, SqlRunner}
     import graft.algos.Algorithms
@@ -323,14 +324,13 @@ class PlanAuditSpec extends AnyFunSuite {
       val nodes = expand(plan)
       assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
         s"the round must read no columnar cache:\n$plan")
-      val update = nodes.collect { case j: ShuffledHashJoinExec => j } match {
-        case Seq(j) => j
-        case js => fail(s"${js.size} shuffled hash joins, want the update join alone:\n$plan")
-      }
-      assert(!expand(update.left).exists(_.isInstanceOf[ShuffleExchangeExec]),
-        s"the vertex side must not shuffle:\n$plan")
-      val exchanges = expand(update.right).collect { case x: ShuffleExchangeExec => x }
-      assert(exchanges.size == 1, s"the messages side must shuffle once:\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"the round must join nothing:\n$plan")
+      assert(nodes.filter(_.children.isEmpty).forall {
+        case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
+        case _ => false
+      }, s"the round must scan the messages alone, never the vertex state:\n$plan")
+      val exchanges = nodes.collect { case x: ShuffleExchangeExec => x }
+      assert(exchanges.size == 1, s"the messages must shuffle once:\n$plan")
       val onMdst = exchanges.head.outputPartitioning match {
         case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSet)
         case _ => Nil
@@ -343,6 +343,9 @@ class PlanAuditSpec extends AnyFunSuite {
         case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
         case _ => false
       }, s"the partial aggregate must read the messages scan:\n$plan")
+      // The state keeps the aggregate's partition count, round after round.
+      assert(plan.outputPartitioning.numPartitions == res.queryExecution.toRdd.getNumPartitions,
+        s"the aggregate and the vertex state differ in layout:\n$plan")
     } finally sys.props.remove("graft.engine.broadcastPullMaxVertices")
   }
 
@@ -371,7 +374,7 @@ class PlanAuditSpec extends AnyFunSuite {
       GraphMeta(nV, source = 1L), numEdges = 200000L)
     res.count()
     val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
-    // The outermost aggregate is the reduce the update join reads.
+    // The outermost aggregate is the reduce the state merge reads.
     val reduce = expand(plan).collectFirst { case a: BaseAggregateExec => a }
       .getOrElse(fail(s"no aggregate in:\n$plan"))
     val sub = expand(reduce)

@@ -9,10 +9,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -149,6 +150,69 @@ class SuperstepPlanSpec extends AnyFunSuite {
     }
   }
 
+  /** `alg` with its `idleNoOp` flag off: every round then updates every
+    * vertex, with a null aggregate where no message arrived.
+    */
+  private def everyVertex(alg: GmrAlgorithm): GmrAlgorithm =
+    new DelegatingGmrAlgorithm(alg) {
+      override def name = base.name + "-every-vertex"
+      override def idleNoOp = false
+    }
+
+  private def bits(df: DataFrame): Map[Long, Long] =
+    values(df).map { case (id, v) => id -> java.lang.Double.doubleToRawLongBits(v) }
+
+  test("receivers-only update == every-vertex update: rows and traces in " +
+      "pull, salted and classic mode") {
+    val (verts, edges) = graph
+    // LongestPath layers a DAG: keep the edges that climb id mod 8, at most
+    // 8 layers, hubs included.
+    val dag = (verts, edges.filter(pmod(col("src"), lit(8L)) < pmod(col("dst"), lit(8L))))
+    Seq("SSSP" -> Algorithms.UnitWeighted(Algorithms.Sssp), "weighted SSSP" -> Algorithms.Sssp,
+        "WCC" -> Algorithms.Wcc, "FwdMaxColor" -> Algorithms.FwdMaxColor,
+        "LongestPath" -> Algorithms.LongestPath).foreach { case (algName, alg) =>
+      assert(alg.idleNoOp, algName)
+      val (v, e) = if (alg eq Algorithms.LongestPath) dag else graph
+      modes.foreach { case (mode, props) =>
+        val ((sparse, a), (dense, b)) = withProps(props: _*) {
+          (SqlRunner.runWithStats(spark, v, e, alg, meta),
+            SqlRunner.runWithStats(spark, v, e, everyVertex(alg), meta))
+        }
+        val at = s"$algName, $mode"
+        assert(a.iterations >= 3 && (a.saltedHubs > 0) == (mode == "salted"), s"$at: $a")
+        assert(bits(sparse) == bits(dense), at)
+        assert(a.changedTrace == b.changedTrace, s"$at changed trace")
+        assert(a.sendersTrace == b.sendersTrace, s"$at senders trace")
+        assert(a.messagesTrace == b.messagesTrace, s"$at messages trace")
+      }
+    }
+  }
+
+  test("idleNoOp algorithms: an update with no message keeps the value, in " +
+      "updateCol and updateFn") {
+    // SqlRunner's receivers-only update skips every vertex without a
+    // message on this flag, so each algorithm that declares it must mean it.
+    // Algorithms' members: its objects and its algorithm-typed vals.
+    val objects = Class.forName("graft.algos.Algorithms").getDeclaredClasses.toSeq
+      .flatMap(c => scala.util.Try(c.getField("MODULE$").get(null)).toOption)
+    val vals = Algorithms.getClass.getMethods.toSeq
+      .filter(m => m.getParameterCount == 0 &&
+        classOf[GmrAlgorithm].isAssignableFrom(m.getReturnType))
+      .map(_.invoke(Algorithms))
+    val declared = (objects ++ vals).collect { case a: GmrAlgorithm if a.idleNoOp => a }.distinct
+    assert(Set("sssp", "wcc", "fwd-max-color", "longest-path").subsetOf(declared.map(_.name).toSet),
+      declared.map(_.name))
+    val vs = Seq(0.0, 1.5, -3.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    (declared :+ Algorithms.UnitWeighted(Algorithms.Sssp)).foreach { alg =>
+      val row = spark.range(1).select(vs.map(v =>
+        alg.updateCol(lit(7L), lit(v), lit(null).cast("double"), meta)): _*).head()
+      vs.zipWithIndex.foreach { case (v, i) =>
+        assert(!row.isNullAt(i) && row.getDouble(i).equals(v), s"${alg.name}: updateCol($v, null)")
+        assert(alg.updateFn(7L, v, None, meta).equals(v), s"${alg.name}: updateFn($v, None)")
+      }
+    }
+  }
+
   test("multi-partition layouts: SSSP rows and trace match LocalRunner in " +
       "every mode, and unsalted rounds run exchange-free on the vertex side") {
     val (verts, edges) = wide
@@ -170,9 +234,21 @@ class SuperstepPlanSpec extends AnyFunSuite {
           assert(stateParts == indexParts(plan) &&
             stateParts > LoopConf.sizedParallelism(spark, wideMeta.numVertices, 24),
             s"$mode:\n$plan")
-          val toVerts = plan.collect { case j: ShuffledHashJoinExec => j.left }
-            .flatMap(_.collect { case x: ShuffleExchangeExec => x })
-          assert(toVerts.isEmpty, s"$mode shuffles the vertex state:\n$plan")
+          // The round plan is the messages' aggregate alone: it joins
+          // nothing and scans nothing but the messages, so no exchange in
+          // it carries vertex state, and the state merges partition by
+          // partition at the aggregate's count.
+          assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"$mode joins:\n$plan")
+          assert(plan.collectLeaves().forall {
+            case m: RDDScanExec => m.output.exists(_.name == "mdst")
+            case _ => false
+          }, s"$mode scans more than the messages:\n$plan")
+          assert(got.queryExecution.toRdd.getNumPartitions == stateParts, mode)
+          val exchanges = plan.collect { case x: ShuffleExchangeExec => x }
+          if (mode == "pull") assert(exchanges.isEmpty, s"$mode shuffles:\n$plan")
+          else assert(exchanges.map(_.outputPartitioning).collect {
+            case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSet)
+          } == Seq(Seq(Set("mdst"))), s"$mode must exchange once, on mdst:\n$plan")
         }
         assert(values(got) == local, mode)
         stats.changedTrace
