@@ -2,12 +2,14 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuilder
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SpecificInternalRow, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences,
+  SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
@@ -19,10 +21,17 @@ import org.apache.spark.util.LongAccumulator
   * out-edges start, and their destinations and weights. A round's scatter
   * visits only its senders' out-edges, so its work follows the frontier
   * instead of the edge count.
+  *
+  * Like the reference's per-process sub-CSRs, shipped whole as arrays
+  * (partition.h:281-497), the edges travel to their partitions as
+  * primitive-array chunks, never a row at a time: each map task buckets
+  * its edges by target partition, and each partition fills its CSR from
+  * its chunks with one stable counting pass over the sources. A source's
+  * out-edges keep their input order, fixed on every run and retry.
   */
 private[engine] object EdgeIndex {
 
-  /** Vertex ids, stored int-width when every id of the partition fits. */
+  /** Vertex ids, stored int-width when every one of them fits. */
   sealed trait Ids extends Serializable {
     def length: Int
     def apply(i: Int): Long
@@ -70,85 +79,211 @@ private[engine] object EdgeIndex {
     out
   }
 
-  private[engine] def fitsInt(a: Array[Long]): Boolean =
-    java.util.Arrays.stream(a).allMatch(x => x == x.toInt)
+  private[engine] def fitsInt(a: Array[Long]): Boolean = {
+    var i = 0
+    while (i < a.length && a(i) == a(i).toInt) i += 1
+    i == a.length
+  }
+
+  /** The ids `a(at(i))` at i, int-width when every one fits. */
+  private def gather(a: Array[Long], at: Array[Int]): Ids =
+    if (!at.forall(i => a(i) == a(i).toInt)) new LongIds(permute(a, at))
+    else {
+      val b = new Array[Int](at.length)
+      java.util.Arrays.setAll(b, (i: Int) => a(at(i)).toInt)
+      new IntIds(b)
+    }
 
   /** One partition's CSR: `dst(offsets(k) until offsets(k + 1))` are the
-    * out-edges of `keys(k)`, with `weight` in step (null when no message
-    * reads it) and `nullWeight` marking its nulls (null when it has none).
+    * out-edges of `keys(k)` in input order, with `weight` in step (null
+    * when no message reads it) and `nullWeight` marking its nulls (null
+    * when it has none).
     */
   final class Part(val keys: Ids, val offsets: Array[Int], val dst: Ids,
                    val weight: Array[Double], val nullWeight: java.util.BitSet)
       extends Serializable
 
-  /** `edges` — (src, dst[, weight]) rows as they are partitioned, about
-    * `rowsHint` per partition — indexed partition by partition and
-    * persisted; the caller unpersists it. An edge with a null endpoint is
-    * left out: it joins no sender and no vertex, so it never carried a
-    * message.
+  /** One map task's edges bound for one index partition, in input order:
+    * `map` is the task's input partition and `seq` the flush that emitted
+    * it, so (map, seq) orders a partition's chunks as its input does.
     */
-  def build(edges: DataFrame, weighted: Boolean, rowsHint: Int): RDD[Part] = {
-    val schema = edges.schema
-    val (srcAt, dstAt) = (schema.fieldIndex("src"), schema.fieldIndex("dst"))
-    val weightAt = if (weighted) schema.fieldIndex("weight") else -1
-    val wide = schema(srcAt).dataType == LongType
-    edges.queryExecution.toRdd.mapPartitions { rows =>
-      val (src, dst) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
-      val (weight, nulls) = (new ArrayBuilder.ofDouble, new java.util.BitSet)
-      src.sizeHint(rowsHint)
-      dst.sizeHint(rowsHint)
-      if (weighted) weight.sizeHint(rowsHint)
+  final class Chunk(val map: Int, val seq: Int, val src: Ids, val dst: Ids,
+                    val weight: Array[Double], val nullWeight: java.util.BitSet)
+      extends Serializable {
+    def size: Int = src.length
+  }
+
+  /** The edges a map task buffers before it ships them as chunks: a large
+    * input partition is never held whole.
+    */
+  private val ChunkEdges = 1 << 18
+
+  /** `edges` — (src, dst[, weight]) rows, and any further `keys` columns —
+    * indexed as `parts` partitions laid out by `HashPartitioning(keys,
+    * parts)`, the layout `repartition(parts, keys)` gives them, and
+    * persisted; the caller unpersists it. Each map task tags its edges with
+    * that layout's own partition id expression and ships them to their
+    * partitions as primitive-array [[Chunk]]s through one shuffle; each
+    * partition's CSR is then filled by [[merge]], so a source's out-edges
+    * keep their input order on every run and retry. An edge with a null
+    * endpoint is left out: it joins no sender and no vertex, so it never
+    * carried a message.
+    */
+  def build(edges: DataFrame, keys: Seq[String], parts: Int, weighted: Boolean): RDD[Part] =
+    shipped(edges, keys, parts, weighted)
+      // The keys are partition ids, which a HashPartitioner of `parts`
+      // leaves where they are.
+      .partitionBy(new HashPartitioner(parts))
+      .mapPartitions(cs => Iterator.single(merge(cs.map(_._2), weighted)))
+      .setName("edge index").persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The map side of [[build]]: every task's edges as (partition, chunk)
+    * pairs, each edge tagged by the partition id expression of
+    * `HashPartitioning(keys, parts)` over `edges`' own columns.
+    */
+  private[engine] def shipped(edges: DataFrame, keys: Seq[String], parts: Int,
+                              weighted: Boolean): RDD[(Int, Chunk)] = {
+    val out = edges.queryExecution.executedPlan.output
+    def col(name: String) = out.find(_.name == name).get
+    val tagged = BindReferences.bindReferences(
+      HashPartitioning(keys.map(col), parts).partitionIdExpression +:
+        Seq(col("src"), col("dst")) ++: (if (weighted) Seq(col("weight")) else Nil), out)
+    val wide = col("src").dataType == LongType
+    edges.queryExecution.toRdd.mapPartitionsWithIndex { (map, rows) =>
+      val tag = UnsafeProjection.create(tagged)
+      tag.initialize(map)
+      chunks(rows.map(tag), map, parts, wide, weighted)
+    }
+  }
+
+  /** Map task `map`'s edges as (partition, chunk) pairs, from `rows` of
+    * (partition, src, dst[, weight]), ids LONG when `wide` else INT: every
+    * [[ChunkEdges]] edges, each partition receives its share of them, in
+    * input order, as one chunk. A null weight reads 0.0 and is marked.
+    */
+  private def chunks(rows: Iterator[InternalRow], map: Int, parts: Int, wide: Boolean,
+                     weighted: Boolean): Iterator[(Int, Chunk)] = {
+    val (part, src, dst) = (new Array[Int](ChunkEdges), new Array[Long](ChunkEdges),
+      new Array[Long](ChunkEdges))
+    val weight = if (weighted) new Array[Double](ChunkEdges) else null
+    val nulls = new java.util.BitSet
+    def id(r: InternalRow, i: Int) = if (wide) r.getLong(i) else r.getInt(i).toLong
+    var seq = -1
+    def flush(): Seq[(Int, Chunk)] = {
       var n = 0
-      def id(r: InternalRow, i: Int) = if (wide) r.getLong(i) else r.getInt(i).toLong
-      rows.foreach { r =>
-        if (!r.isNullAt(srcAt) && !r.isNullAt(dstAt)) {
-          src += id(r, srcAt)
-          dst += id(r, dstAt)
+      nulls.clear()
+      while (n < ChunkEdges && rows.hasNext) {
+        val r = rows.next()
+        if (!r.isNullAt(1) && !r.isNullAt(2)) {
+          part(n) = r.getInt(0)
+          src(n) = id(r, 1)
+          dst(n) = id(r, 2)
           if (weighted) {
-            if (r.isNullAt(weightAt)) nulls.set(n)
-            weight += (if (r.isNullAt(weightAt)) 0.0 else r.getDouble(weightAt))
+            if (r.isNullAt(3)) nulls.set(n)
+            weight(n) = if (r.isNullAt(3)) 0.0 else r.getDouble(3)
           }
           n += 1
         }
       }
-      val (s, d) = (src.result(), dst.result())
-      val order = sortedOrder(s)
-      val keys = new ArrayBuilder.ofLong
-      val offsets = new ArrayBuilder.ofInt
-      order.indices.foreach { i =>
-        if (i == 0 || s(order(i)) != s(order(i - 1))) { keys += s(order(i)); offsets += i }
+      seq += 1
+      val (order, start) = countingOrder(n, parts)(part(_))
+      (0 until parts).filter(p => start(p + 1) > start(p)).map { p =>
+        val at = java.util.Arrays.copyOfRange(order, start(p), start(p + 1))
+        p -> new Chunk(map, seq, gather(src, at), gather(dst, at),
+          if (weighted) permute(weight, at) else null, nullsAt(nulls, at))
       }
-      offsets += order.length
-      val narrow = fitsInt(s) && fitsInt(d)
-      val w = if (weighted) permute(weight.result(), order) else null
-      val nullWeight = if (nulls.isEmpty) null else {
-        val b = new java.util.BitSet
-        order.indices.foreach(i => if (nulls.get(order(i))) b.set(i))
-        b
-      }
-      Iterator.single(new Part(ids(keys.result(), narrow), offsets.result(),
-        ids(permute(d, order), narrow), w, nullWeight))
-    }.setName("edge index").persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    Iterator.continually(flush()).takeWhile(_.nonEmpty).flatten
   }
 
-  /** Positions of `keys` in ascending key order, equal keys in position
-    * order. Keys within a 2^32 span sort packed with their positions as
-    * primitive longs; wider spans fall back to a boxed stable sort.
+  /** One partition's CSR from its `chunks`, in any arrival order: their
+    * edges in (map, seq) order, grouped by source with one stable counting
+    * pass — over `src − lo` when the sources span at most twice the edges,
+    * else over each source's rank among the partition's distinct sources.
     */
-  def sortedOrder(keys: Array[Long]): Array[Int] =
-    if (keys.isEmpty) Array.emptyIntArray
-    else {
-      val lo = java.util.Arrays.stream(keys).min().getAsLong
-      val span = java.util.Arrays.stream(keys).max().getAsLong - lo
-      val order = new Array[Int](keys.length)
-      if (span >= 0 && span < (1L << 32)) {
-        val packed = new Array[Long](keys.length)
-        java.util.Arrays.setAll(packed, (i: Int) => ((keys(i) - lo) << 31) | i)
-        java.util.Arrays.sort(packed)
-        java.util.Arrays.setAll(order, (i: Int) => (packed(i) & Int.MaxValue).toInt)
-      } else keys.indices.sortBy(keys(_)).copyToArray(order)
-      order
+  private[engine] def merge(chunks: Iterator[Chunk], weighted: Boolean): Part = {
+    val cs = chunks.toArray.sortBy(c => (c.map, c.seq))
+    val n = cs.iterator.map(_.size).sum
+    val (src, dst) = (new Array[Long](n), new Array[Long](n))
+    val weight = if (weighted) new Array[Double](n) else null
+    val nulls = new java.util.BitSet
+    var at = 0
+    cs.foreach { c =>
+      var i = 0
+      while (i < c.size) { src(at + i) = c.src(i); dst(at + i) = c.dst(i); i += 1 }
+      if (weighted) System.arraycopy(c.weight, 0, weight, at, c.size)
+      if (c.nullWeight != null)
+        c.nullWeight.stream().forEach(i => nulls.set(at + i))
+      at += c.size
     }
+    // Each edge's bucket, and the source id a bucket stands for.
+    val lo = java.util.Arrays.stream(src).min().orElse(0L)
+    val span = java.util.Arrays.stream(src).max().orElse(0L) - lo
+    val (bucket, buckets, key): (Int => Int, Int, Int => Long) =
+      if (span >= 0 && span < 2L * n) ((i: Int) => (src(i) - lo).toInt, span.toInt + 1, lo + _)
+      else {
+        val order = sortedOrder(src)
+        val (rank, distinct) = (new Array[Int](n), new ArrayBuilder.ofLong)
+        order.indices.foreach { i =>
+          if (i == 0 || src(order(i)) != src(order(i - 1))) distinct += src(order(i))
+          rank(order(i)) = distinct.length - 1
+        }
+        val ks = distinct.result()
+        (rank(_), ks.length, ks(_))
+      }
+    val (order, start) = countingOrder(n, buckets)(bucket)
+    val (keys, offsets) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofInt)
+    (0 until buckets).foreach { k =>
+      if (start(k + 1) > start(k)) { keys += key(k); offsets += start(k) }
+    }
+    offsets += n
+    val ks = keys.result()
+    new Part(ids(ks, fitsInt(ks)), offsets.result(), gather(dst, order),
+      if (weighted) permute(weight, order) else null, nullsAt(nulls, order))
+  }
+
+  /** The positions `0 until n` grouped by `bucket`, each in `0 until
+    * buckets`, by one stable counting pass: bucket b's positions, in
+    * ascending order, are `order(start(b) until start(b + 1))`. Returns
+    * (order, start).
+    */
+  private def countingOrder(n: Int, buckets: Int)(bucket: Int => Int): (Array[Int], Array[Int]) = {
+    val start = new Array[Int](buckets + 1)
+    var i = 0
+    while (i < n) { start(bucket(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < buckets) { start(i + 1) += start(i); i += 1 }
+    val (next, order) = (start.clone(), new Array[Int](n))
+    i = 0
+    while (i < n) { val b = bucket(i); order(next(b)) = i; next(b) += 1; i += 1 }
+    (order, start)
+  }
+
+  /** The positions i of `order` with `nulls(order(i))` set, or null for none. */
+  private def nullsAt(nulls: java.util.BitSet, order: Array[Int]): java.util.BitSet =
+    if (nulls.isEmpty) null
+    else {
+      val b = new java.util.BitSet
+      order.indices.foreach(i => if (nulls.get(order(i))) b.set(i))
+      if (b.isEmpty) null else b
+    }
+
+  /** Positions of `keys` in ascending key order, equal keys in position
+    * order: a stable LSD radix sort over `key − lo`, read as unsigned, in
+    * as few passes of at most 16 bits as the span needs.
+    */
+  def sortedOrder(keys: Array[Long]): Array[Int] = {
+    val lo = java.util.Arrays.stream(keys).min().orElse(0L)
+    val bits = 64 - java.lang.Long.numberOfLeadingZeros(
+      java.util.Arrays.stream(keys).max().orElse(0L) - lo)
+    val passes = (bits + 15) / 16
+    val width = if (passes == 0) 0 else (bits + passes - 1) / passes
+    (0 until passes).foldLeft(Array.range(0, keys.length)) { (order, pass) =>
+      permute(order, countingOrder(keys.length, 1 << width) { i =>
+        ((keys(order(i)) - lo) >>> (pass * width)).toInt & ((1 << width) - 1)
+      }._1)
+    }
+  }
 
   /** Per partition, each source id with its out-edge count there, as
     * (src, n) rows of the id width `idType`.
@@ -205,8 +340,20 @@ private[engine] object EdgeIndex {
                               emitted: LongAccumulator) extends Iterator[InternalRow] {
     private val row = new SpecificInternalRow(
       layout.idType +: layout.payload.map(_._2) ++: (if (layout.weighted) Seq(DoubleType) else Nil))
-    private val (payloadAt, payloadType) = layout.payload.toArray.unzip
-    private val weightAt = payloadAt.length + 1
+    // Each payload field's copy from the matched sender into the message
+    // row, typed once here so that no value is boxed per sender.
+    private val copies: Array[UnsafeRow => Unit] = layout.payload.zipWithIndex.map {
+      case ((from, t), i) =>
+        val to = i + 1
+        val set: UnsafeRow => Unit = t match {
+          case DoubleType => s => row.setDouble(to, s.getDouble(from))
+          case IntegerType => s => row.setInt(to, s.getInt(from))
+          case LongType => s => row.setLong(to, s.getLong(from))
+          case _ => s => row.update(to, s.get(from, t))
+        }
+        (s: UnsafeRow) => if (s.isNullAt(from)) row.setNullAt(to) else set(s)
+    }.toArray
+    private val weightAt = copies.length + 1
     private val sender = new UnsafeRow(layout.senderFields)
     private val sparse = senders.size <= part.keys.length
     private val steps = if (sparse) senders.size else part.keys.length
@@ -230,11 +377,7 @@ private[engine] object EdgeIndex {
         if (k >= 0) {
           senders.read(s, sender)
           var i = 0
-          while (i < payloadAt.length) {
-            if (sender.isNullAt(payloadAt(i))) row.setNullAt(i + 1)
-            else row.update(i + 1, sender.get(payloadAt(i), payloadType(i)))
-            i += 1
-          }
+          while (i < copies.length) { copies(i)(sender); i += 1 }
           edge = part.offsets(k)
           end = part.offsets(k + 1)
         }

@@ -35,8 +35,12 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
   *
   * The edges live in one representation: each partition indexed as a CSR
   * over src ([[EdgeIndex]], ≙ the reference's per-process subgraph), so a
-  * round's scatter visits only its senders' out-edges. The two modes differ
-  * only in the index's partition key and where a task finds its senders.
+  * round's scatter visits only its senders' out-edges. Setup builds it in
+  * one job that ships the edges to their partitions as primitive-array
+  * chunks, not rows, as the reference ships each process its sub-CSR
+  * whole, and fills each partition's CSR with a counting pass. The two
+  * modes differ only in the index's partition key and where a task finds
+  * its senders.
   * PULL mode, whenever the vertex state fits a broadcast
   * ([[broadcastPullMaxVertices]]), partitions the edges by dst: the driver
   * broadcasts each round's senders to every partition, and the messages
@@ -166,9 +170,10 @@ object SqlRunner {
                    numEdges: Long = -1L): (DataFrame, RunStats) = {
     import spark.implicits._
 
-    // NARROW ROWS (guide §2.3) — the edge index's build shuffle and the
-    // message rows every superstep emits shrink with the id width and the
-    // weight column:
+    // NARROW ROWS (guide §2.3) — the edge index's chunks (its build
+    // shuffles primitive arrays, int-width wherever a chunk's ids fit) and
+    // the message rows every superstep emits shrink with the id width and
+    // the weight column:
     //  - weight is dropped outright when the algorithm's msg hook never
     //    reads it (alg.usesWeight=false — label propagations, PageRank,
     //    unit-weight anchors): at 64M edges that is 512 MB of constant
@@ -212,8 +217,9 @@ object SqlRunner {
     // PARTITION SIZING BY RELATION (guide §2.2/§2.3: size partitions to
     // the bytes that actually flow, not one count for every relation).
     // The loop moves two very differently sized relations:
-    //  - the edge index, read once per superstep: 8 B/row once ids are
-    //    narrowed and the weight elided (24 B legacy width);
+    //  - the edge index, shipped once as chunks and read once per
+    //    superstep: 8 B/edge once ids are narrowed and the weight elided
+    //    (24 B legacy width);
     //  - per-round VERTEX-sized state: the senders, the (pull-mode)
     //    message-partial exchange, the aggregate and the state it merges
     //    into — ~24 B/row over |V| rows.
@@ -315,31 +321,27 @@ object SqlRunner {
       // IN-set probe stays a same-type comparison inside codegen.
       val hubLits: Seq[Any] =
         if (narrowIds) hubs.map(_._1.toInt).toSeq else hubs.map(_._1).toSeq
-      // Laid out pre-partitioned — the DataFrame form of the reference's
-      // precomputed adjloc routing table (partition.h:276-279) — on dst in
-      // pull mode, the aggregation key, and on src in classic mode, the key
-      // of the vertex state each task scatters from. Narrowing applies
-      // HERE, to the relation the index holds — the sizing cache above
-      // keeps the caller's width.
+      // Keyed — the reference's precomputed adjloc routing table
+      // (partition.h:276-279) — on dst in pull mode, the aggregation key,
+      // and on src in classic mode, the key of the vertex state each task
+      // scatters from: the index puts each edge in the partition
+      // `repartition(indexParts, keys)` would. Narrowing applies HERE, to
+      // the relation the index holds — the sizing cache above keeps the
+      // caller's width.
       val eBase =
         if (usesWeight) sel.select(nid($"src").as("src"),
           nid($"dst").as("dst"), $"weight")
         else sel.select(nid($"src").as("src"), nid($"dst").as("dst"))
-      val laidOut =
-        if (!pullMode) eBase.repartition(indexParts, $"src")
-        else if (!salted) eBase.repartition(indexParts, $"dst")
-        else eBase.withColumn("salt",
+      val (keyed, keys) =
+        if (!pullMode) (eBase, Seq("src"))
+        else if (!salted) (eBase, Seq("dst"))
+        else (eBase.withColumn("salt",
             when($"dst".isInCollection(hubLits),
               pmod(xxhash64($"src"), lit(saltF.toLong)).cast("int"))
-              .otherwise(lit(0)))
-          .repartition(indexParts, $"dst", $"salt")
+              .otherwise(lit(0))), Seq("dst", "salt"))
       // Each partition indexed as a CSR over src, so a round reads only its
-      // senders' out-edges. A hash partition holds about m / indexParts
-      // edges; the index's builders start with an eighth more.
-      val index = {
-        val perPart = m / indexParts
-        EdgeIndex.build(laidOut, usesWeight, (perPart + perPart / 8 + 16).toInt)
-      }
+      // senders' out-edges.
+      val index = EdgeIndex.build(keyed, keys, indexParts, usesWeight)
       // The out-degree aggregate + vertex join only run for algorithms
       // whose message hook reads the degree (PageRank): at 64M edges it is
       // a full-width partial aggregate plus a vertex-sized join for a
@@ -459,7 +461,7 @@ object SqlRunner {
             AttributeReference(name, a.dataType, a.nullable)()
           } ++:
           (if (usesWeight) Seq(AttributeReference("weight", DoubleType,
-            laidOut.schema("weight").nullable)()) else Nil)
+            eBase.schema("weight").nullable)()) else Nil)
         val messages = GraftFrames.ofRdd(spark, out, placeholder,
           if (pullMode && !salted && indexParts == stateParts)
             HashPartitioning(out.take(1), indexParts)

@@ -237,4 +237,19 @@ object EngineProperties extends Properties("graft.engine") {
       val x = m(a, b); val y = m(b, a)
       x == y || (x.isNaN && y.isNaN)
     }
+
+  // The one sort under the vertex state's seed and the driver's per-round
+  // sender sort: small spans with repeated keys, negative ids, spans past
+  // 2^32 up to the whole of Long, and keys that take several radix passes.
+  private val genKeys: Gen[Array[Long]] = Gen.oneOf(
+    Gen.listOf(Gen.choose(-5L, 5L)),
+    Gen.listOf(Gen.choose(-70000L, 70000L)),
+    Gen.listOf(Gen.oneOf(Long.MinValue, -(1L << 32), -1L, 0L, 1L << 32,
+      (1L << 32) + 1, Long.MaxValue)),
+    Gen.listOf(Gen.choose(Long.MinValue, Long.MaxValue))).map(_.toArray)
+
+  property("sortedOrder == a stable sortBy (ties in position order, empty input)") =
+    Prop.forAll(genKeys) { keys =>
+      EdgeIndex.sortedOrder(keys).toSeq == keys.indices.sortBy(keys(_))
+    } && Prop(EdgeIndex.sortedOrder(Array.emptyLongArray).isEmpty)
 }
