@@ -26,8 +26,8 @@ import org.apache.spark.util.LongAccumulator
   * (partition.h:281-497), the edges travel to their partitions as
   * primitive-array chunks, never a row at a time: each map task buckets
   * its edges by target partition, and each partition fills its CSR from
-  * its chunks with one stable counting pass over the sources. A source's
-  * out-edges keep their input order, fixed on every run and retry.
+  * its chunks with one stable radix sort of the sources. A source's
+  * out-edges keep the input order of each input partition.
   */
 private[engine] object EdgeIndex {
 
@@ -52,8 +52,8 @@ private[engine] object EdgeIndex {
     def indexOf(id: Long): Int = java.util.Arrays.binarySearch(a, id)
   }
 
-  private[engine] def ids(a: Array[Long], narrow: Boolean): Ids =
-    if (!narrow) new LongIds(a)
+  private[engine] def ids(a: Array[Long]): Ids =
+    if (!fitsInt(a)) new LongIds(a)
     else {
       val b = new Array[Int](a.length)
       java.util.Arrays.setAll(b, (i: Int) => a(i).toInt)
@@ -79,20 +79,11 @@ private[engine] object EdgeIndex {
     out
   }
 
-  private[engine] def fitsInt(a: Array[Long]): Boolean = {
+  private def fitsInt(a: Array[Long]): Boolean = {
     var i = 0
     while (i < a.length && a(i) == a(i).toInt) i += 1
     i == a.length
   }
-
-  /** The ids `a(at(i))` at i, int-width when every one fits. */
-  private def gather(a: Array[Long], at: Array[Int]): Ids =
-    if (!at.forall(i => a(i) == a(i).toInt)) new LongIds(permute(a, at))
-    else {
-      val b = new Array[Int](at.length)
-      java.util.Arrays.setAll(b, (i: Int) => a(at(i)).toInt)
-      new IntIds(b)
-    }
 
   /** One partition's CSR: `dst(offsets(k) until offsets(k + 1))` are the
     * out-edges of `keys(k)` in input order, with `weight` in step (null
@@ -125,7 +116,9 @@ private[engine] object EdgeIndex {
     * that layout's own partition id expression and ships them to their
     * partitions as primitive-array [[Chunk]]s through one shuffle; each
     * partition's CSR is then filled by [[merge]], so a source's out-edges
-    * keep their input order on every run and retry. An edge with a null
+    * keep the input order of each input partition: the same on every run,
+    * and on a retry too when `edges`' rows come in a fixed order. An edge
+    * with a null
     * endpoint is left out: it joins no sender and no vertex, so it never
     * carried a message.
     */
@@ -189,7 +182,7 @@ private[engine] object EdgeIndex {
       val (order, start) = countingOrder(n, parts)(part(_))
       (0 until parts).filter(p => start(p + 1) > start(p)).map { p =>
         val at = java.util.Arrays.copyOfRange(order, start(p), start(p + 1))
-        p -> new Chunk(map, seq, gather(src, at), gather(dst, at),
+        p -> new Chunk(map, seq, ids(permute(src, at)), ids(permute(dst, at)),
           if (weighted) permute(weight, at) else null, nullsAt(nulls, at))
       }
     }
@@ -197,9 +190,8 @@ private[engine] object EdgeIndex {
   }
 
   /** One partition's CSR from its `chunks`, in any arrival order: their
-    * edges in (map, seq) order, grouped by source with one stable counting
-    * pass — over `src − lo` when the sources span at most twice the edges,
-    * else over each source's rank among the partition's distinct sources.
+    * edges in (map, seq) order, grouped by source with the stable
+    * [[sortedOrder]].
     */
   private[engine] def merge(chunks: Iterator[Chunk], weighted: Boolean): Part = {
     val cs = chunks.toArray.sortBy(c => (c.map, c.seq))
@@ -216,29 +208,13 @@ private[engine] object EdgeIndex {
         c.nullWeight.stream().forEach(i => nulls.set(at + i))
       at += c.size
     }
-    // Each edge's bucket, and the source id a bucket stands for.
-    val lo = java.util.Arrays.stream(src).min().orElse(0L)
-    val span = java.util.Arrays.stream(src).max().orElse(0L) - lo
-    val (bucket, buckets, key): (Int => Int, Int, Int => Long) =
-      if (span >= 0 && span < 2L * n) ((i: Int) => (src(i) - lo).toInt, span.toInt + 1, lo + _)
-      else {
-        val order = sortedOrder(src)
-        val (rank, distinct) = (new Array[Int](n), new ArrayBuilder.ofLong)
-        order.indices.foreach { i =>
-          if (i == 0 || src(order(i)) != src(order(i - 1))) distinct += src(order(i))
-          rank(order(i)) = distinct.length - 1
-        }
-        val ks = distinct.result()
-        (rank(_), ks.length, ks(_))
-      }
-    val (order, start) = countingOrder(n, buckets)(bucket)
+    val order = sortedOrder(src)
     val (keys, offsets) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofInt)
-    (0 until buckets).foreach { k =>
-      if (start(k + 1) > start(k)) { keys += key(k); offsets += start(k) }
+    order.indices.foreach { i =>
+      if (i == 0 || src(order(i)) != src(order(i - 1))) { keys += src(order(i)); offsets += i }
     }
     offsets += n
-    val ks = keys.result()
-    new Part(ids(ks, fitsInt(ks)), offsets.result(), gather(dst, order),
+    new Part(ids(keys.result()), offsets.result(), ids(permute(dst, order)),
       if (weighted) permute(weight, order) else null, nullsAt(nulls, order))
   }
 

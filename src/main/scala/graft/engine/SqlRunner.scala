@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
   * round's scatter visits only its senders' out-edges. Setup builds it in
   * one job that ships the edges to their partitions as primitive-array
   * chunks, not rows, as the reference ships each process its sub-CSR
-  * whole, and fills each partition's CSR with a counting pass. The two
+  * whole, and fills each partition's CSR with a radix sort. The two
   * modes differ only in the index's partition key and where a task finds
   * its senders.
   * PULL mode, whenever the vertex state fits a broadcast

@@ -80,7 +80,7 @@ private[engine] object VertexState {
     }
     val changed = new java.util.BitSet(ids.length)
     changed.set(0, ids.length)
-    new VertexState(EdgeIndex.ids(sorted, EdgeIndex.fitsInt(sorted)),
+    new VertexState(EdgeIndex.ids(sorted),
       EdgeIndex.permute(deg.result(), order), EdgeIndex.permute(value.result(), order),
       changed)
   }
