@@ -295,11 +295,8 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
       System.gc()
       val mb = 1024.0 * 1024.0
-      // Kept to the end of the sweep, so without the round plans: a plan
-      // would keep the shuffles it read from the context cleaner.
       val r = QRun(name, dt, (r1 - r0) / mb, (w1 - w0) / mb, (s1 - s0) / mb,
-        mxT, medT, (c1 - c0) / 1e9,
-        records.copy(runs = records.runs.map(_.copy(roundPlan = None))))
+        mxT, medT, (c1 - c0) / 1e9, records)
       // A loop anchor whose records hold other than one engine run would
       // publish another run's figures: stop the bench now.
       if (r.ok && (SuperstepAnchors(name) || name == "b02_sssp_rand8m")) r.run

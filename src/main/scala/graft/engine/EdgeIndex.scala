@@ -2,25 +2,25 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuilder
 
-import org.apache.spark.{HashPartitioner, TaskContext}
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences,
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, JoinedRow,
   SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.LongAccumulator
 
 /** SqlRunner's edges as the reference keeps its subgraph, a CSR per
   * process reached through a routing table (partition.h:276-279): each
   * partition of the partitioned edges (by dst in pull mode, by src in
   * classic mode) becomes its sorted distinct source ids, where each one's
-  * out-edges start, and their destinations and weights. A round's scatter
-  * visits only its senders' out-edges, so its work follows the frontier
-  * instead of the edge count.
+  * out-edges start, and their destinations and weights, each destination
+  * a slot into the partition's sorted distinct destinations. A round's
+  * fold visits only its senders' out-edges and reduces their messages into
+  * one buffer per slot, so its work follows the frontier instead of the
+  * edge count.
   *
   * Like the reference's per-process sub-CSRs, shipped whole as arrays
   * (partition.h:281-497), the edges travel to their partitions as
@@ -85,12 +85,29 @@ private[engine] object EdgeIndex {
     i == a.length
   }
 
-  /** One partition's CSR: `dst(offsets(k) until offsets(k + 1))` are the
-    * out-edges of `keys(k)` in input order, with `weight` in step (null
-    * when no message reads it) and `nullWeight` marking its nulls (null
-    * when it has none).
+  /** A partition's edge destinations as slots into its sorted distinct
+    * destinations, char-width while there are at most 2^16 of them.
     */
-  final class Part(val keys: Ids, val offsets: Array[Int], val dst: Ids,
+  sealed trait Slots extends Serializable {
+    def apply(e: Int): Int
+  }
+
+  private final class CharSlots(a: Array[Char]) extends Slots {
+    def apply(e: Int): Int = a(e).toInt
+  }
+
+  private final class IntSlots(a: Array[Int]) extends Slots {
+    def apply(e: Int): Int = a(e)
+  }
+
+  /** One partition's CSR: edges `offsets(k) until offsets(k + 1)` are the
+    * out-edges of `keys(k)` in input order. Edge e leads to `dsts(slot(e))`,
+    * `dsts` the partition's distinct destinations ascending, so a round
+    * folds its messages into one buffer per slot. `weight` is in step with
+    * the edges (null when no message reads it) and `nullWeight` marks its
+    * nulls (null when it has none).
+    */
+  final class Part(val keys: Ids, val offsets: Array[Int], val dsts: Ids, val slot: Slots,
                    val weight: Array[Double], val nullWeight: java.util.BitSet)
       extends Serializable
 
@@ -214,7 +231,22 @@ private[engine] object EdgeIndex {
       if (i == 0 || src(order(i)) != src(order(i - 1))) { keys += src(order(i)); offsets += i }
     }
     offsets += n
-    new Part(ids(keys.result()), offsets.result(), ids(permute(dst, order)),
+    // Each edge's destination as its rank among the distinct destinations.
+    val byDst = sortedOrder(dst)
+    val (dsts, rank) = (new ArrayBuilder.ofLong, new Array[Int](n))
+    var slots = -1
+    byDst.indices.foreach { i =>
+      if (i == 0 || dst(byDst(i)) != dst(byDst(i - 1))) { dsts += dst(byDst(i)); slots += 1 }
+      rank(byDst(i)) = slots
+    }
+    val slot =
+      if (slots < (1 << 16)) {
+        val a = new Array[Char](n)
+        var i = 0
+        while (i < n) { a(i) = rank(order(i)).toChar; i += 1 }
+        new CharSlots(a)
+      } else new IntSlots(permute(rank, order))
+    new Part(ids(keys.result()), offsets.result(), ids(dsts.result()), slot,
       if (weighted) permute(weight, order) else null, nullsAt(nulls, order))
   }
 
@@ -223,7 +255,8 @@ private[engine] object EdgeIndex {
     * ascending order, are `order(start(b) until start(b + 1))`. Returns
     * (order, start).
     */
-  private def countingOrder(n: Int, buckets: Int)(bucket: Int => Int): (Array[Int], Array[Int]) = {
+  private[engine] def countingOrder(n: Int, buckets: Int)(
+      bucket: Int => Int): (Array[Int], Array[Int]) = {
     val start = new Array[Int](buckets + 1)
     var i = 0
     while (i < n) { start(bucket(i) + 1) += 1; i += 1 }
@@ -277,101 +310,52 @@ private[engine] object EdgeIndex {
   private[engine] def setId(row: SpecificInternalRow, idType: DataType, id: Long): Unit =
     if (idType == LongType) row.setLong(0, id) else row.setInt(0, id.toInt)
 
-  /** A message row's layout: the destination id of type `idType`, the
-    * fields `payload` (ordinal, type) of the sender's row of `senderFields`
-    * fields, and the edge weight when `weighted`.
+  /** Folds the round's messages over `part` into `into`, whose buffers are
+    * `part`'s slots: every out-edge of a sender in `senders` updates its
+    * destination's buffer with the sender's row of `fields` fields, joined
+    * with the edge's weight when `weighted`. Each partition picks its
+    * direction by size (Beamer et al., SC 2012): when the senders are no
+    * more than its source ids, each sender looks up its own out-edges;
+    * otherwise it walks its source ids and probes the senders. Both visit
+    * the matches in id order, so each buffer folds its messages in the same
+    * order either way. Returns the count of messages folded.
     */
-  final case class Layout(idType: DataType, senderFields: Int,
-                          payload: Seq[(Int, DataType)], weighted: Boolean)
-
-  /** The round's messages over `index`: one row per out-edge of a sender in
-    * `senders`, laid out by `layout`, with `emitted` counting them. Each
-    * partition picks its direction by size (Beamer et al., SC 2012): when
-    * the senders are no more than its source ids, each sender looks up its
-    * own out-edges; otherwise it walks its source ids and probes the
-    * senders. Both visit the matches in id order, so the rows come out the
-    * same either way.
-    */
-  def scatter(index: RDD[Part], senders: Broadcast[Frontier.Senders], layout: Layout,
-              emitted: LongAccumulator): RDD[InternalRow] =
-    index.mapPartitions(_.flatMap(part => new Scatter(part, senders.value, layout, emitted)))
-
-  /** Classic mode's messages over `index`, laid out like the vertex state
-    * `states`: each task packs the senders `side` selects as rows of
-    * `fields` from its own state partition's vertices (only the changed
-    * ones when `changedOnly`) and scatters them over its own index
-    * partition, so no sender leaves its partition.
-    */
-  def scatter(index: RDD[Part], states: RDD[VertexState], side: Frontier.Select,
-              changedOnly: Boolean, fields: Seq[Attribute], layout: Layout,
-              emitted: LongAccumulator): RDD[InternalRow] =
-    index.zipPartitions(states) { (parts, state) =>
-      val (n, bytes) = side.pack(TaskContext.getPartitionId(),
-        state.next().rows(layout.idType, changedOnly))
-      val senders = Frontier.Packed(n, Seq(bytes)).senders(fields)
-      parts.flatMap(new Scatter(_, senders, layout, emitted))
-    }
-
-  private final class Scatter(part: Part, senders: Frontier.Senders, layout: Layout,
-                              emitted: LongAccumulator) extends Iterator[InternalRow] {
-    private val row = new SpecificInternalRow(
-      layout.idType +: layout.payload.map(_._2) ++: (if (layout.weighted) Seq(DoubleType) else Nil))
-    // Each payload field's copy from the matched sender into the message
-    // row, typed once here so that no value is boxed per sender.
-    private val copies: Array[UnsafeRow => Unit] = layout.payload.zipWithIndex.map {
-      case ((from, t), i) =>
-        val to = i + 1
-        val set: UnsafeRow => Unit = t match {
-          case DoubleType => s => row.setDouble(to, s.getDouble(from))
-          case IntegerType => s => row.setInt(to, s.getInt(from))
-          case LongType => s => row.setLong(to, s.getLong(from))
-          case _ => s => row.update(to, s.get(from, t))
-        }
-        (s: UnsafeRow) => if (s.isNullAt(from)) row.setNullAt(to) else set(s)
-    }.toArray
-    private val weightAt = copies.length + 1
-    private val sender = new UnsafeRow(layout.senderFields)
-    private val sparse = senders.size <= part.keys.length
-    private val steps = if (sparse) senders.size else part.keys.length
-    private var step = 0
-    private var probe = 0 // dense: the first sender a later key can match
-    private var edge, end = 0 // the matched sender's out-edges not yet emitted
-    private var count = 0L
-
-    def hasNext: Boolean = {
-      while (edge == end && step < steps) {
-        var s, k = -1
-        if (sparse) {
-          s = step
-          k = part.keys.indexOf(senders.ids(step))
-        } else {
-          val key = part.keys(step)
-          while (probe < senders.size && senders.ids(probe) < key) probe += 1
-          if (probe < senders.size && senders.ids(probe) == key) { s = probe; k = step }
-        }
-        step += 1
-        if (k >= 0) {
-          senders.read(s, sender)
-          var i = 0
-          while (i < copies.length) { copies(i)(sender); i += 1 }
-          edge = part.offsets(k)
-          end = part.offsets(k + 1)
+  def fold(part: Part, senders: Frontier.Senders, fields: Int, weighted: Boolean,
+           into: Fold.Buffers): Long = {
+    val sender = new UnsafeRow(fields)
+    val weight = new SpecificInternalRow(Seq(DoubleType))
+    val message = if (weighted) new JoinedRow(sender, weight) else sender
+    val sparse = senders.size <= part.keys.length
+    val steps = if (sparse) senders.size else part.keys.length
+    var probe = 0 // dense: the first sender a later key can match
+    var count = 0L
+    var step = 0
+    while (step < steps) {
+      var s, k = -1
+      if (sparse) {
+        s = step
+        k = part.keys.indexOf(senders.ids(step))
+      } else {
+        val key = part.keys(step)
+        while (probe < senders.size && senders.ids(probe) < key) probe += 1
+        if (probe < senders.size && senders.ids(probe) == key) { s = probe; k = step }
+      }
+      if (k >= 0) {
+        senders.read(s, sender)
+        var e = part.offsets(k)
+        val end = part.offsets(k + 1)
+        count += end - e
+        while (e < end) {
+          if (weighted) {
+            if (part.nullWeight != null && part.nullWeight.get(e)) weight.setNullAt(0)
+            else weight.setDouble(0, part.weight(e))
+          }
+          into.update(part.slot(e), message)
+          e += 1
         }
       }
-      val more = edge < end
-      if (!more && count > 0) { emitted.add(count); count = 0 }
-      more
+      step += 1
     }
-
-    def next(): InternalRow = {
-      setId(row, layout.idType, part.dst(edge))
-      if (layout.weighted) {
-        if (part.nullWeight != null && part.nullWeight.get(edge)) row.setNullAt(weightAt)
-        else row.setDouble(weightAt, part.weight(edge))
-      }
-      edge += 1
-      count += 1
-      row
-    }
+    count
   }
 }

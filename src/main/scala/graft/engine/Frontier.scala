@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
 import org.apache.spark.rdd.RDD
@@ -15,10 +14,10 @@ import org.apache.spark.unsafe.Platform
 /** A round's senders (≙ the reference's next-frontier exchange,
   * igmr.cpp:137-153): each state partition packs the rows the sender
   * selection selects from it, as `UnsafeRow` bytes, sorted by id into the
-  * [[Senders]] the scatter reads. In pull mode the job of the round before
-  * packs them and the driver sorts and broadcasts them to the next round's
-  * scatter without a job of its own; in classic mode each scatter task
-  * packs and sorts its own state partition's senders.
+  * [[Senders]] the fold reads ([[EdgeIndex.fold]]). In pull mode the job of
+  * the round before packs them and the driver sorts and broadcasts them to
+  * the next round's fold without a job of its own; in classic mode each
+  * fold task packs and sorts its own state partition's senders.
   */
 private[engine] object Frontier {
 
@@ -48,7 +47,7 @@ private[engine] object Frontier {
     }
   }
 
-  /** A round's senders as the scatter reads them: `ids` ascending, and
+  /** A round's senders as the fold reads them: `ids` ascending, and
     * sender i's row at `at(i)` in `bytes`, `sizes(i)` bytes long.
     */
   final class Senders private[Frontier] (val ids: Array[Long], at: Array[Int],
@@ -93,39 +92,48 @@ private[engine] object Frontier {
       * next call, or null when a filter drops the row.
       */
     def bind(partition: Int): InternalRow => UnsafeRow = {
-      val steps = chain.map {
+      val steps: Array[InternalRow => InternalRow] = chain.map {
         case Left(cond) =>
           val p = Predicate.create(cond)
           p.initialize(partition)
-          (r: InternalRow) => if (r == null || !p.eval(r)) null else r
+          (r: InternalRow) => if (p.eval(r)) r else null
         case Right(exprs) =>
           val u = UnsafeProjection.create(exprs)
           u.initialize(partition)
-          (r: InternalRow) => if (r == null) null else u(r)
-      }
+          (r: InternalRow) => u(r)
+      }.toArray
       // The chain ends in an UnsafeProjection, so a row that passes is unsafe.
-      (r: InternalRow) => steps.foldLeft(r)((x, f) => f(x)).asInstanceOf[UnsafeRow]
+      (r: InternalRow) => {
+        var x = r
+        var i = 0
+        while (x != null && i < steps.length) { x = steps(i)(x); i += 1 }
+        x.asInstanceOf[UnsafeRow]
+      }
     }
 
     /** The count of the rows this selects from one task's `rows`, and
-      * those rows packed, each prefixed by its size in bytes.
+      * those rows packed, each prefixed by its size in bytes (big-endian,
+      * as [[Packed.senders]] reads it).
       */
     def pack(partition: Int, rows: Iterator[InternalRow]): (Long, Array[Byte]) = {
       val select = bind(partition)
-      val bytes = new ByteArrayOutputStream()
-      val out = new DataOutputStream(bytes)
-      val buf = new Array[Byte](4096)
+      var bytes = new Array[Byte](4096)
+      var at = 0
       var count = 0L
       rows.foreach { state =>
         val row = select(state)
         if (row != null) {
-          out.writeInt(row.getSizeInBytes)
-          row.writeToStream(out, buf)
+          val n = row.getSizeInBytes
+          if (at + 4 + n > bytes.length)
+            bytes = java.util.Arrays.copyOf(bytes, math.max(2 * bytes.length, at + 4 + n))
+          var b = 0
+          while (b < 4) { bytes(at + b) = (n >>> (24 - 8 * b)).toByte; b += 1 }
+          row.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + at + 4)
+          at += 4 + n
           count += 1
         }
       }
-      out.flush()
-      (count, bytes.toByteArray)
+      (count, java.util.Arrays.copyOf(bytes, at))
     }
   }
 }

@@ -73,6 +73,17 @@ trait GmrAlgorithm extends Serializable {
   def initCol(id: Column, meta: GraphMeta): Column
   def msgCol(srcVal: Column, weight: Column, srcOutDeg: Column): Column
   def sendCondCol(srcVal: Column): Column = lit(true)
+  /** The per-destination combine of the messages `msg`, read as DOUBLE;
+    * null when every message was null, which counts as no message. Every
+    * aggregate function in it must be a declarative aggregate (min, max,
+    * sum, count, avg, first, ...: no distinct, no filter) whose buffer is
+    * fixed-width: SqlRunner binds its update, merge and evaluate
+    * expressions once and folds each message straight into a buffer per
+    * destination, giving what `groupBy(dst).agg(reduceAgg(msg))` over the
+    * same messages gives, bit for bit. Anything else (e.g.
+    * `percentile_approx`) fails SqlRunner's setup with an error that names
+    * the algorithm.
+    */
   def reduceAgg(msg: Column): Column
   /** `agg` is null when the vertex received no message this round. */
   def updateCol(id: Column, oldVal: Column, agg: Column, meta: GraphMeta): Column

@@ -1,41 +1,37 @@
 package graft.engine
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType}
 
 /** DataFrame executor for [[GmrAlgorithm]] — the reference's iteration driver
-  * (igmr.cpp:116-247) collapsed to a scatter → aggregate → partition-local
-  * merge per superstep:
+  * (igmr.cpp:116-247) collapsed to a fold → partition-local merge per
+  * superstep:
   *
-  *   messages  = the senders' out-edges          (O4: scan+filter+project)
-  *   aggregate = messages.groupBy(dst).agg(...)   (O6+O10: Spark's shuffle
-  *               replaces the sort+run-length-group; hash agg needs no sort)
-  *   update    = the aggregate merged into each   (O11: merge + convergence,
-  *               state partition's arrays          ≙ updateGraph, gmr.h:170-219)
+  *   fold   = the senders' out-edges reduced  (O4+O6+O10: map, then
+  *            into one buffer per destination  reduce over each run of the
+  *            ([[Fold]], [[EdgeIndex.fold]])   grouped KV stream, gmr.h:300-313)
+  *   update = the reduced values merged into   (O11: merge + convergence,
+  *            each state partition's arrays    ≙ updateGraph, gmr.h:170-219)
   *
   * The vertex state is what the reference keeps per process: per partition,
   * one [[VertexState]] of primitive arrays (ids ascending, out-degrees,
-  * values, a changed bit set), hash-partitioned on id at the aggregate's own
-  * layout, so the update is a merge inside each partition with no join and
-  * no shuffle. A round copies the values and evaluates the algorithm's
-  * update on the vertices the aggregate names: O(receivers) when a vertex
-  * without a message keeps its value ([[GmrAlgorithm.idleNoOp]]), every
-  * vertex otherwise (PageRank's re-mix), as LocalRunner's frontier loop
-  * chooses.
+  * values, a changed bit set), hash-partitioned on id, so the update is a
+  * merge inside each partition with no join. A round copies the values and
+  * evaluates the algorithm's update on the vertices that received a
+  * message: O(receivers) when a vertex without a message keeps its value
+  * ([[GmrAlgorithm.idleNoOp]]), every vertex otherwise (PageRank's
+  * re-mix), as LocalRunner's frontier loop chooses.
   *
   * The edges live in one representation: each partition indexed as a CSR
   * over src ([[EdgeIndex]], ≙ the reference's per-process subgraph), so a
-  * round's scatter visits only its senders' out-edges. Setup builds it in
+  * round's fold visits only its senders' out-edges. Setup builds it in
   * one job that ships the edges to their partitions as primitive-array
   * chunks, not rows, as the reference ships each process its sub-CSR
   * whole, and fills each partition's CSR with a radix sort. The two
@@ -43,25 +39,27 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
   * its senders.
   * PULL mode, whenever the vertex state fits a broadcast
   * ([[broadcastPullMaxVertices]]), partitions the edges by dst: the driver
-  * broadcasts each round's senders to every partition, and the messages
-  * reach the aggregate without an exchange. CLASSIC mode partitions them by
-  * src at the vertex state's own layout: each task scatters the senders of
-  * its own state partition, and the messages take one exchange on their
-  * destination into the aggregate (≙ the reference's map over each
-  * process's own vertices, gmr.h computing()).
+  * broadcasts each round's senders to every partition. CLASSIC mode
+  * partitions them by src at the vertex state's own layout: each task
+  * folds the senders of its own state partition (≙ the reference's map
+  * over each process's own vertices, gmr.h computing()).
   *
-  * Like the reference's compiled map→sort→reduce, the round's aggregate is
-  * PREPARED once: round 1's is built as a Dataset and planned, and every
-  * round — round 1 included — executes a fresh copy of that physical plan
-  * with its messages scan rebound to the round's scatter ([[rebind]]); the
-  * sender selection and the update are planned once too and bound for
-  * tasks ([[Frontier.select]]). No round is analyzed, optimized or planned
-  * again. The rounds run through [[Fixpoint]]; each marks its state for
-  * local checkpoint (lineage stays one round deep) and runs ONE job, a
-  * count of the changed vertices that also materializes the checkpoint (≙
-  * the reference's piggybacked Allgather convergence exchange,
-  * igmr.cpp:137-149). In pull mode the same job returns the next round's
-  * senders ([[Frontier]]), so no round runs a job to gather them.
+  * The reduce is the algorithm's own `reduceAgg`, bound once as the
+  * expressions of a declarative aggregate: each task folds every message
+  * straight into a dense buffer per destination slot of its index
+  * partition, with no hash table and no message row kept. Where the
+  * unsalted pull-mode index shares the state's layout, a task then merges
+  * its buffers into its own state partition; otherwise it ships its
+  * touched buffers to their destinations' state partitions as
+  * primitive-array partials through one shuffle, which merges them in map
+  * order. No round is analyzed, optimized or planned: the sender selection
+  * and the update are planned once too and bound for tasks
+  * ([[Frontier.select]]). The rounds run through [[Fixpoint]]; each marks
+  * its state for local checkpoint (lineage stays one round deep) and runs
+  * ONE job, a count of the changed vertices that also materializes the
+  * checkpoint (≙ the reference's piggybacked Allgather convergence
+  * exchange, igmr.cpp:137-149). In pull mode the same job returns the next
+  * round's senders ([[Frontier]]), so no round runs a job to gather them.
   */
 object SqlRunner {
 
@@ -71,19 +69,15 @@ object SqlRunner {
     * entry is 0 for an ε-converged run and nonzero when a fixed iteration
     * cap stopped the loop. `saltedHubs`/`saltFactor` record whether pull
     * mode's in-degree hub salting engaged (1 = uniform path, no salting;
-    * classic mode never salts). `roundPlan` is the prepared round plan
-    * every superstep copies — SqlRunner's alone; the local tiers run no
-    * plan per round. The plan keeps the shuffles it read reachable, so a
-    * caller that stores stats past the call drops it. `sendersTrace(i)` is
-    * superstep i+1's sender count in pull mode, the rows its broadcast
-    * carried (classic mode broadcasts none and leaves it empty), and
-    * `messagesTrace(i)` the message rows its scatter emitted in either mode
-    * (a retried task counts again). The local tiers leave both empty.
+    * classic mode never salts). `sendersTrace(i)` is superstep i+1's
+    * sender count in pull mode, the rows its broadcast carried (classic
+    * mode broadcasts none and leaves it empty), and `messagesTrace(i)` the
+    * messages its fold reduced in either mode (a retried task counts
+    * again). The local tiers leave both empty.
     */
   final case class RunStats(iterations: Int, loopSeconds: Double,
                             saltedHubs: Int, saltFactor: Int,
                             changedTrace: Seq[Long],
-                            roundPlan: Option[SparkPlan] = None,
                             sendersTrace: Seq[Long] = Nil,
                             messagesTrace: Seq[Long] = Nil)
 
@@ -124,18 +118,17 @@ object SqlRunner {
     * rows once — here, never). When the vertex state fits a per-round
     * broadcast (≤ this many vertices), the edges are partitioned by DST and
     * indexed per partition ([[EdgeIndex]]), and each superstep broadcasts
-    * its senders to every index partition: the scatter shuffles nothing,
-    * and because message rows are then dst-clustered, the aggregation
-    * collapses them to ≤|V| rows with no exchange — the aggregate shuffles
-    * at most the partials of a salted layout, and merges into the state
-    * partition it lands in. Above
+    * its senders to every index partition: the fold shuffles nothing, and
+    * because an index partition then holds whole in-edge lists, it reduces
+    * each destination's messages in place — a round ships at most the
+    * partials of a salted layout, and merges into the state partition it
+    * lands in. Above
     * the cap (a 100 TB graph's vertex state does not broadcast) CLASSIC mode
-    * indexes the edges by SRC at the vertex state's layout: a task scatters
+    * indexes the edges by SRC at the vertex state's layout: a task folds
     * its own state partition's senders over its own index partition, with
-    * no broadcast and no sender shuffle, and each round pays one exchange
-    * of the partial aggregates on their destination — up to one row per
-    * (task, destination), |frontier out-edges| at worst (64M rows on the
-    * PageRank anchors). Override with
+    * no broadcast and no sender shuffle, and each round pays one shuffle of
+    * the partials to their destinations' state partitions — at most one
+    * buffer per (task, destination). Override with
     * -Dgraft.engine.broadcastPullMaxVertices for deployment sizing.
     */
   private def broadcastPullMaxVertices: Long =
@@ -210,7 +203,7 @@ object SqlRunner {
     def nid(c: org.apache.spark.sql.Column) = c.cast(idType)
     // Mode selection (see [[broadcastPullMaxVertices]]): pull mode
     // partitions the edge index by DST and broadcasts the senders per round,
-    // whose dst-clustered messages aggregate in place; classic mode
+    // whose dst-clustered messages reduce in place; classic mode
     // partitions it by SRC, beside the senders' own state partition.
     val pullMode = meta.numVertices > 0 &&
       meta.numVertices <= broadcastPullMaxVertices
@@ -220,21 +213,20 @@ object SqlRunner {
     //  - the edge index, shipped once as chunks and read once per
     //    superstep: 8 B/edge once ids are narrowed and the weight elided
     //    (24 B legacy width);
-    //  - per-round VERTEX-sized state: the senders, the (pull-mode)
-    //    message-partial exchange, the aggregate and the state it merges
-    //    into — ~24 B/row over |V| rows.
+    //  - per-round VERTEX-sized state: the senders, the (salted pull-mode)
+    //    partials' shuffle and the state they merge into — ~24 B/row over
+    //    |V| rows.
     // The old single edge-derived count (128 at 64M edges) split each
     // 80 MB vertex pass into 128 ~0.07 s tasks — three waves of mostly
-    // scheduling overhead per round. Pull mode therefore sets the session
-    // shuffle conf (which sizes exactly the vertex-side exchanges there —
-    // the only per-round exchange is the vertex-sized partial-agg one)
-    // from the VERTEX bytes, with a defaultParallelism floor once the
-    // vertex state is big enough to want the whole box, and partitions
-    // the edge index explicitly from the EDGE bytes. Classic mode's index
-    // shares the vertex state's layout and its message shuffle is
-    // edge-sized, so both take the edge-derived count.
+    // scheduling overhead per round. Pull mode therefore sizes the vertex
+    // state (and with it the partials' shuffle) from the VERTEX bytes,
+    // with a defaultParallelism floor once the vertex state is big enough
+    // to want the whole box, and partitions the edge index explicitly from
+    // the EDGE bytes. Classic mode's index shares the vertex state's
+    // layout and its partials' shuffle is edge-sized, so both take the
+    // edge-derived count.
     //
-    // CORE FLOOR for the edge-sized layouts: every round's scatter runs
+    // CORE FLOOR for the edge-sized layouts: every round's fold runs
     // per edge partition, so a graph of 1M edges at 8 MB per partition (2
     // partitions) ran every round on 2 of 4 cores. Once a graph has
     // ≥ 64K edges per core, its edge index and classic mode's `parts`
@@ -265,30 +257,33 @@ object SqlRunner {
     // AQE OFF for the loop's own queries (r12, guide §1.2 config-last):
     // every superstep replans its stages through the adaptive executor —
     // a driver-side latency per stage per round — yet nothing here is
-    // adaptive: the round plan holds no join (the scatter reads the index,
-    // the update merges arrays), the exchange sizes are pre-computed
+    // adaptive: a round plans nothing (the fold reads the index, the update
+    // merges arrays), the partition counts are pre-computed
     // from |V|/|E| (the sizing above), and the edge index is an RDD AQE's
     // skew/coalesce machinery cannot see anyway. Measured on the b03 64M
     // anchor (this round, same box): loop 17.2 → 14.4 s and 805 → 625 MB
     // shuffled. Results are execution-identical.
-    LoopConf.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false",
+    // The edge index and the sizing cache are released however the call
+    // ends, a setup that throws included (an unsupported `reduceAgg`).
+    var index: RDD[EdgeIndex.Part] = null
+    try LoopConf.withConfs(spark, Map("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> parts.toString)) {
       // SKEW PROBE + HUB SALTING (pull mode). Hash partitioning sends a
       // vertex's whole in-edge list to ONE index partition, so a power-law
-      // hub whose in-degree rivals a full partition serializes its scatter
+      // hub whose in-degree rivals a full partition serializes its fold
       // into a straggling task, and AQE's skew splitting cannot engage on
       // an RDD leaf. A seeded 1% SAMPLE of the edges therefore estimates
       // in-degrees BEFORE the index's one shuffle, and the top hub vertices
       // (degree > 2× the mean partition's edge count) get their edge lists
       // spread across `saltF` sub-partitions keyed by
-      // (dst, salt = hash(src) % saltF). The salt is pure layout: the
-      // scatter and the groupBy never reference it, and the aggregate merges
-      // the split partials back on its small exchange. Uniform graphs pay
+      // (dst, salt = hash(src) % saltF). The salt is pure layout: the fold
+      // never reads it, and the state merges the split partials back after
+      // their small shuffle. Uniform graphs pay
       // one 1% scan and keep the unsalted layout; sub-8M-edge graphs skip
       // even that. Classic mode never salts: its index is keyed by src, and
       // a hub's shard there is its out-edges at 4–8 B each plus one key
       // (on the b04 anchor, 64M edges with a ≈ 2.9M out-degree hub, the
-      // salted and unsalted classic scatters measured equal wall times).
+      // salted and unsalted classic rounds measured equal wall times).
       val meanPartEdges = math.max(1L, m / indexParts)
       val hubMinDegreeOverride = sys.props.get("graft.engine.hubMinDegree")
         .map(_.toLong)
@@ -341,7 +336,7 @@ object SqlRunner {
               .otherwise(lit(0))), Seq("dst", "salt"))
       // Each partition indexed as a CSR over src, so a round reads only its
       // senders' out-edges.
-      val index = EdgeIndex.build(keyed, keys, indexParts, usesWeight)
+      index = EdgeIndex.build(keyed, keys, indexParts, usesWeight)
       // The out-degree aggregate + vertex join only run for algorithms
       // whose message hook reads the degree (PageRank): at 64M edges it is
       // a full-width partial aggregate plus a vertex-sized join for a
@@ -349,13 +344,11 @@ object SqlRunner {
       // explicit count keeps the edges' materialization in SETUP (deg used
       // to force it), so loop seconds stay a loop measurement.
       //
-      // The vertex state is seeded HASH-PARTITIONED on id at the partition
-      // count of a round's aggregate, so each round merges its aggregate
-      // into the state partition by partition, with no shuffle. The
-      // aggregate takes the larger layout of the two sides: in unsalted
-      // pull mode the messages keep the dst-partitioned index's layout (no
-      // exchange before the aggregate) unless the state wants more
-      // partitions, otherwise they are shuffled to `parts`. In classic mode
+      // The vertex state is seeded HASH-PARTITIONED on id, the layout the
+      // partials are routed by. In unsalted pull mode it takes the larger
+      // count of the two sides: the dst-partitioned index's (each task then
+      // merges its own buffers, with no shuffle) unless the state wants
+      // more partitions, otherwise `parts`. In classic mode
       // the state thereby shares the src-partitioned index's layout: state
       // partition p holds exactly the sources whose out-edges index
       // partition p holds.
@@ -385,13 +378,6 @@ object SqlRunner {
         val st = init.queryExecution.optimizedPlan.stats
         Statistics(st.sizeInBytes, st.rowCount)
       }
-      // The seed, one [[VertexState]] per partition, marked for local
-      // checkpoint like every round's state: the block store then holds one
-      // object of a few primitive arrays per partition, not a row per
-      // vertex.
-      val states0 = init.queryExecution.toRdd
-        .mapPartitions(rows => Iterator.single(VertexState.seed(rows, idType)))
-      states0.localCheckpoint()
       val changedOnly = alg.activeMessaging
 
       // THE SENDERS of a state, planned over its (id, outdeg, value,
@@ -404,14 +390,14 @@ object SqlRunner {
         val senders0 = if (changedOnly) view.filter($"changed") else view
         val senders1 = senders0.filter(alg.sendCondCol($"value"))
         // SENDER-SIDE MESSAGE PRECOMPUTE (guide §2.3: shuffle fewer bytes,
-        // aggregate before you shuffle — applied to the scatter side). When
+        // aggregate before you shuffle — applied to the fold's input). When
         // the message never reads the edge weight (usesWeight=false:
         // PageRank's value/outdeg, label propagations, the unit-weight
         // anchors), msg is a pure function of the SENDER row — so evaluate
-        // it ONCE per sender here instead of once per edge in the scatter's
-        // output (|senders| divisions instead of |messages|: 4M vs
-        // 64M/round on the PageRank anchors), and pack only (id, msg) — the
-        // value/outdeg/changed columns never enter the scatter. Identical
+        // it ONCE per sender here instead of once per edge in the fold
+        // (|senders| divisions instead of |messages|: 4M vs 64M/round on
+        // the PageRank anchors), and pack only (id, msg) — the
+        // value/outdeg/changed columns never enter the fold. Identical
         // results: the same expression over the same operands, evaluated
         // earlier.
         if (usesWeight) senders1.select($"id", $"outdeg", $"value") else {
@@ -419,7 +405,7 @@ object SqlRunner {
           // result-identical and shrinks the packed senders — and it is
           // REQUIRED here: the precomputed expression now evaluates on
           // every sender row, and PageRank's value/outdeg would hit
-          // DIVIDE_BY_ZERO (ANSI) on dangling vertices that the scatter
+          // DIVIDE_BY_ZERO (ANSI) on dangling vertices that the fold
           // used to filter out before the expression ever ran.
           val live =
             if (alg.usesOutDegree) senders1.filter($"outdeg" > 0)
@@ -427,67 +413,48 @@ object SqlRunner {
           live.select($"id", alg.msgCol($"value", lit(1.0), $"outdeg").as("msg"))
         }
       }
-      val payload = if (usesWeight) Seq("outdeg", "value") else Seq("msg")
       // The sender selection, planned on its own once and bound for tasks
       // ([[Frontier]]): pull mode's state jobs pack the rows it selects for
-      // the driver to broadcast; classic mode's scatter packs them from its
+      // the driver to broadcast; classic mode's fold packs them from its
       // own state partition.
       val selection = senders.queryExecution.executedPlan
       val senderSide = Frontier.select(selection, viewRows)
-      // The messages, one row per out-edge of a sender: the index's
-      // destination, the sender's payload and, when the message reads it,
-      // the weight ([[EdgeIndex.scatter]]). The round plan scans them from
-      // `placeholder`, with the index's partitions, which each round
-      // rebinds to that round's scatter. When the unsalted pull-mode index
-      // shares the state's layout, the rows sit in their dst's state
-      // partition and reach the aggregate with no exchange; otherwise the
-      // layout is unknown and the planner exchanges the partial aggregates
-      // to the state's `parts`.
-      val layout = EdgeIndex.Layout(idType, selection.output.size, payload.map { name =>
-        val at = selection.output.indexWhere(_.name == name)
-        (at, selection.output(at).dataType)
-      }, usesWeight)
-      val placeholder = index.mapPartitions(_ => Iterator.empty[InternalRow])
-
-      // THE ROUND'S AGGREGATE, planned once: round 1's scatter→agg Dataset,
-      // built and planned here and never executed itself. Every round runs
-      // a fresh copy of this physical plan with its messages scan rebound
-      // ([[rebind]]) — the reference's compiled map→sort→reduce rerun per
-      // iteration, with no per-round analysis, optimization or planning.
-      val template = {
-        val out = AttributeReference("mdst", idType, nullable = false)() +:
-          payload.map { name =>
-            val a = selection.output.find(_.name == name).get
-            AttributeReference(name, a.dataType, a.nullable)()
-          } ++:
-          (if (usesWeight) Seq(AttributeReference("weight", DoubleType,
-            eBase.schema("weight").nullable)()) else Nil)
-        val messages = GraftFrames.ofRdd(spark, out, placeholder,
-          if (pullMode && !salted && indexParts == stateParts)
-            HashPartitioning(out.take(1), indexParts)
-          else UnknownPartitioning(indexParts),
-          Statistics(BigInt(m) * (edgeRowBytes + 8)))
-        messages
-          .select($"mdst", (if (usesWeight) alg.msgCol($"value", $"weight", $"outdeg")
-            else $"msg").as("msg"))
-          .groupBy($"mdst")
-          .agg(alg.reduceAgg($"msg").cast(DoubleType).as("agg"))
-          .queryExecution.executedPlan
+      val senderFields = selection.output
+      // THE REDUCE, bound once ([[Fold]]): a message is a sender's row,
+      // joined with its edge's weight when the message reads it, and each
+      // destination's buffer folds the algorithm's `reduceAgg` over them.
+      val fields = senderFields.size
+      val reduce = {
+        val input = senderFields.map(a => AttributeReference(a.name, a.dataType, a.nullable)()) ++
+          (if (usesWeight) Seq(AttributeReference("weight", DoubleType)()) else Nil)
+        Fold.reduce(spark, alg, input,
+          if (usesWeight) alg.msgCol($"value", $"weight", $"outdeg") else $"msg")
       }
-      // Aggregate partition p merges into state partition p: both must be
-      // laid out by the same hash of the same id type at `stateParts`.
-      template.outputPartitioning match {
-        case HashPartitioning(Seq(k: Attribute), n) if k.name == "mdst" && n == stateParts =>
-        case other => throw new IllegalStateException(s"the round's aggregate is laid " +
-          s"out as $other, not as the $stateParts-partition vertex state:\n$template")
-      }
-      // THE UPDATE, a partition-local merge of the aggregate into the state
-      // ([[VertexState.merge]]). When a vertex that receives no message
-      // keeps its value and counts as unchanged (`idleNoOp`, with ε ≥ 0 so
-      // that an unchanged value is not a change), it touches only the
-      // receivers: O(messages) plus one copy of the values.
+      // THE UPDATE, a partition-local merge of the reduced values into the
+      // state ([[VertexState.merge]]). When a vertex that receives no
+      // message keeps its value and counts as unchanged (`idleNoOp`, with
+      // ε ≥ 0 so that an unchanged value is not a change), it touches only
+      // the receivers: O(messages) plus one copy of the values.
       val update = VertexState.update(spark, alg, meta, idType)
       val receiversOnly = alg.idleNoOp && alg.epsilon >= 0
+      // Where the unsalted pull-mode index shares the state's layout, index
+      // partition p holds exactly the in-edges of state partition p's
+      // vertices: a task folds its messages and merges them into its own
+      // state partition, with no exchange. Otherwise each task ships its
+      // touched buffers to their destinations' state partitions as
+      // primitive-array partials, one shuffle per round.
+      val coLocated = pullMode && !salted && indexParts == stateParts
+      val route = new Fold.Route(idType, stateParts)
+      val emitted = spark.sparkContext.longAccumulator
+      def fold(part: EdgeIndex.Part, senders: Frontier.Senders, task: Fold.Task): Fold.Buffers = {
+        val into = task.buffers(part.dsts.length)
+        emitted.add(EdgeIndex.fold(part, senders, fields, usesWeight, into))
+        into
+      }
+      def merge(prev: VertexState, partials: Iterator[Fold.Partials],
+                task: Fold.Task): VertexState =
+        VertexState.merge(prev, partials, task, update, TaskContext.getPartitionId(),
+          idType, receiversOnly)
       // ONE job over a state: it materializes its checkpoint, counts the
       // changed vertices and, in pull mode, packs the senders when a later
       // round reads them. It stays in this file: tracers mark round ends by
@@ -503,11 +470,16 @@ object SqlRunner {
         (parts.map(_._1).sum,
           side.map(_ => Frontier.Packed(packed.map(_._1).sum, packed.map(_._2).toSeq)))
       }
-      // The seed's job: the loop's input, materialized in setup.
+      // The seed, one [[VertexState]] per partition, marked for local
+      // checkpoint like every round's state: the block store then holds one
+      // object of a few primitive arrays per partition, not a row per
+      // vertex. Its job is the loop's input, materialized in setup.
+      val states0 = init.queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(VertexState.seed(rows, idType)))
+      states0.localCheckpoint()
       val seedSenders = stateJob(states0, pack = pullMode)._2
       val sendersTrace = Seq.newBuilder[Long]
       val messagesTrace = Seq.newBuilder[Long]
-      val emitted = spark.sparkContext.longAccumulator
 
       val tLoop = System.nanoTime()
       val run = Fixpoint((states0, seedSenders), alg.maxIter) {
@@ -519,23 +491,44 @@ object SqlRunner {
         val sent = Option.when(pullMode) {
           val f = frontier.get
           sendersTrace += f.count
-          spark.sparkContext.broadcast(f.senders(selection.output))
+          spark.sparkContext.broadcast(f.senders(senderFields))
         }
         try {
-          // Classic mode: each task scatters the senders of its own state
-          // partition over its own index partition.
-          val messages = sent match {
-            case Some(s) => EdgeIndex.scatter(index, s, layout, emitted)
-            case None => EdgeIndex.scatter(index, states, senderSide, changedOnly,
-              selection.output, layout, emitted)
-          }
           val emitted0 = emitted.sum
           // Lazy: the state job materializes the checkpoint. Fixpoint then
           // frees the superseded round's checkpoint.
-          val aggs = GraftFrames.execute(spark, rebind(template, placeholder -> messages))
-          val next = aggs.zipPartitions(states) { (rows, prev) =>
-            Iterator.single(VertexState.merge(prev.next(), rows, update,
-              TaskContext.getPartitionId(), idType, receiversOnly))
+          val next = sent match {
+            case Some(s) if coLocated =>
+              index.zipPartitions(states) { (parts, prev) =>
+                val (part, p) = (parts.next(), TaskContext.getPartitionId())
+                val task = reduce.task(p)
+                Iterator.single(merge(prev.next(),
+                  Iterator.single(fold(part, s.value, task).partials(part.dsts, p)), task))
+              }
+            case _ =>
+              val partials = sent match {
+                case Some(s) =>
+                  index.mapPartitionsWithIndex { (p, parts) =>
+                    val task = reduce.task(p)
+                    parts.flatMap(part => fold(part, s.value, task).partials(part.dsts, p, route))
+                  }
+                // Classic mode: each task folds the senders of its own
+                // state partition over its own index partition.
+                case None =>
+                  index.zipPartitions(states) { (parts, prev) =>
+                    val p = TaskContext.getPartitionId()
+                    val (n, bytes) = senderSide.pack(p, prev.next().rows(idType, changedOnly))
+                    val senders = Frontier.Packed(n, Seq(bytes)).senders(senderFields)
+                    val task = reduce.task(p)
+                    parts.flatMap(part => fold(part, senders, task).partials(part.dsts, p, route))
+                  }
+              }
+              // The keys are state partition ids, which a HashPartitioner of
+              // `stateParts` leaves where they are.
+              partials.partitionBy(new HashPartitioner(stateParts)).values
+                .zipPartitions(states) { (ps, prev) =>
+                  Iterator.single(merge(prev.next(), ps, reduce.task(TaskContext.getPartitionId())))
+                }
           }
           next.localCheckpoint()
           // The last round's senders would go unread: no round follows the
@@ -555,46 +548,12 @@ object SqlRunner {
           else HashPartitioning(out.take(1), stateParts), stateStats)
       }
       val loopSecs = (System.nanoTime() - tLoop) / 1e9
-      index.unpersist()
-      if (needCount) sel.unpersist()
       (run.result, graft.obs.RunLog.run(RunStats(run.rounds.length, loopSecs,
-        hubs.length, saltF, run.rounds.map(_.changed), Some(template),
-        sendersTrace.result(), messagesTrace.result())))
+        hubs.length, saltF, run.rounds.map(_.changed), sendersTrace.result(),
+        messagesTrace.result())))
+    } finally {
+      if (index != null) index.unpersist()
+      if (needCount) sel.unpersist()
     }
-  }
-
-  /** A fresh, executable copy of the prepared round plan `template` whose
-    * scans of each `from` in `swaps` read its `to` instead. Every operator
-    * is copied, so no exchange or metric of one round survives into the
-    * next, and the template itself never runs. Fails loudly on a plan a
-    * rebind cannot serve: an adaptive plan (it re-plans itself as stages
-    * finish, so its copy would run stale decisions), a reused exchange (its
-    * copy would still point into the template), no scan of some `from`, or
-    * a `to` whose partition count differs from its `from`'s, the layout the
-    * plan was built on.
-    */
-  private[engine] def rebind(template: SparkPlan,
-                             swaps: (RDD[_], RDD[InternalRow])*): SparkPlan = {
-    template.foreach {
-      case p @ (_: AdaptiveSparkPlanExec | _: ReusedExchangeExec) =>
-        throw new IllegalStateException(
-          s"cannot rebind a plan containing ${p.nodeName}:\n$template")
-      case _ =>
-    }
-    val matched = scala.collection.mutable.Set.empty[Int]
-    val plan = template.clone().transform {
-      case s: RDDScanExec if swaps.exists(_._1 eq s.rdd) =>
-        val (from, to) = swaps.find(_._1 eq s.rdd).get
-        if (to.getNumPartitions != from.getNumPartitions)
-          throw new IllegalStateException(s"rebind of RDD ${from.id} " +
-            s"(${from.getNumPartitions} partitions) to RDD ${to.id} " +
-            s"(${to.getNumPartitions} partitions) would break the plan's layout")
-        matched += from.id
-        s.copy(rdd = to)
-    }
-    swaps.find { case (from, _) => !matched(from.id) }.foreach { case (from, _) =>
-      throw new IllegalStateException(s"no scan of RDD ${from.id} to rebind in:\n$template")
-    }
-    plan
   }
 }

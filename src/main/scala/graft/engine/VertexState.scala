@@ -29,20 +29,20 @@ private[engine] final class VertexState(val ids: EdgeIndex.Ids, val outdeg: Arra
     * `idType` — every vertex, or only the changed ones — through one
     * reused row.
     */
-  def rows(idType: DataType, changedOnly: Boolean): Iterator[InternalRow] = {
-    val row = new SpecificInternalRow(Seq(idType, IntegerType, DoubleType, BooleanType))
-    val at =
-      if (!changedOnly) Iterator.range(0, size)
-      else Iterator.iterate(changed.nextSetBit(0))(i => changed.nextSetBit(i + 1))
-        .takeWhile(_ >= 0)
-    at.map { i =>
-      EdgeIndex.setId(row, idType, ids(i))
-      row.setInt(1, outdeg(i))
-      row.setDouble(2, value(i))
-      row.setBoolean(3, changed.get(i))
-      row
+  def rows(idType: DataType, changedOnly: Boolean): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private val row = new SpecificInternalRow(Seq(idType, IntegerType, DoubleType, BooleanType))
+      private var i = if (changedOnly) changed.nextSetBit(0) else 0
+      def hasNext: Boolean = i >= 0 && i < ids.length
+      def next(): InternalRow = {
+        EdgeIndex.setId(row, idType, ids(i))
+        row.setInt(1, outdeg(i))
+        row.setDouble(2, value(i))
+        row.setBoolean(3, changed.get(i))
+        i = if (changedOnly) changed.nextSetBit(i + 1) else i + 1
+        row
+      }
     }
-  }
 
   /** The vertices as (id LONG, value) rows, through one reused row. */
   def values: Iterator[InternalRow] = {
@@ -112,46 +112,58 @@ private[engine] object VertexState {
   }
 
   /** The state a round leaves in one partition: `prev` with `update`
-    * applied, as partition `partition` evaluates it, to the vertices the
-    * round's (id, agg) rows `aggs` name, or, unless `receiversOnly`, to
-    * every vertex, with a null agg where no message arrived. A vertex
+    * applied, as partition `partition` evaluates it, to the vertices whose
+    * reduced value is not null, or, unless `receiversOnly`, to every
+    * vertex, with a null agg where none arrived. A vertex's reduced value
+    * is `reduce`'s result over one buffer per vertex that `partials` merge
+    * into, in map order. A destination the partition does not hold is a
+    * vertex the caller did not declare, which no update reads. A vertex
     * `update` does not reach keeps its value, unchanged. `prev` is only
     * read.
     */
-  def merge(prev: VertexState, aggs: Iterator[InternalRow], update: Frontier.Select,
-            partition: Int, idType: DataType, receiversOnly: Boolean): VertexState = {
+  def merge(prev: VertexState, partials: Iterator[Fold.Partials], reduce: Fold.Task,
+            update: Frontier.Select, partition: Int, idType: DataType,
+            receiversOnly: Boolean): VertexState = {
+    // Merge-join each partial's ascending ids into the state's. Taken in map
+    // order, a vertex's partials merge in the same order on every run.
+    val buffers = reduce.buffers(prev.size)
+    partials.toArray.sortBy(_.map).foreach { p =>
+      var i, j = 0
+      while (i < p.size) {
+        val id = p.ids(i)
+        while (j < prev.size && prev.ids(j) < id) j += 1
+        if (j < prev.size && prev.ids(j) == id) buffers.merge(j, p, i)
+        i += 1
+      }
+    }
+    val agg = new Array[Double](prev.size)
+    val received = new java.util.BitSet(prev.size)
+    var i = 0
+    while (i < prev.size) {
+      if (buffers.isTouched(i)) {
+        val r = buffers.result(i)
+        if (!r.isNullAt(0)) { agg(i) = r.getDouble(0); received.set(i) }
+      }
+      i += 1
+    }
     val eval = update.bind(partition)
     val in = new SpecificInternalRow(Seq(idType, DoubleType, DoubleType))
     val value = prev.value.clone()
     val changed = new java.util.BitSet(prev.size)
-    def apply(i: Int, received: Boolean, agg: Double): Unit = {
+    def apply(i: Int): Unit = {
       EdgeIndex.setId(in, idType, prev.ids(i))
       in.setDouble(1, prev.value(i))
-      if (received) in.setDouble(2, agg) else in.setNullAt(2)
+      if (received.get(i)) in.setDouble(2, agg(i)) else in.setNullAt(2)
       val out = eval(in)
       if (out.isNullAt(0))
         throw new IllegalStateException(s"the update left vertex ${prev.ids(i)} null")
       value(i) = out.getDouble(0)
       if (!out.isNullAt(1) && out.getBoolean(1)) changed.set(i)
     }
-    // The position of an aggregate row's vertex; negative for a message
-    // to a vertex the caller did not declare, which no update reads.
-    def at(r: InternalRow): Int =
-      prev.ids.indexOf(if (idType == LongType) r.getLong(0) else r.getInt(0).toLong)
-    if (receiversOnly)
-      aggs.foreach { r =>
-        val i = at(r)
-        if (i >= 0) apply(i, !r.isNullAt(1), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-      }
-    else {
-      val agg = new Array[Double](prev.size)
-      val received = new java.util.BitSet(prev.size)
-      aggs.foreach { r =>
-        val i = at(r)
-        if (i >= 0 && !r.isNullAt(1)) { agg(i) = r.getDouble(1); received.set(i) }
-      }
-      var i = 0
-      while (i < prev.size) { apply(i, received.get(i), agg(i)); i += 1 }
+    i = if (receiversOnly) received.nextSetBit(0) else 0
+    while (i >= 0 && i < prev.size) {
+      apply(i)
+      i = if (receiversOnly) received.nextSetBit(i + 1) else i + 1
     }
     new VertexState(prev.ids, prev.outdeg, value, changed)
   }

@@ -8,25 +8,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** The few lines of graft that need Spark's `private[sql]` API: running a
-  * prepared physical plan under its session, wrapping rows it produced
-  * as a DataFrame without planning them again, and freeing a broadcast
-  * before a call returns.
+/** The few lines of graft that need Spark's `private[sql]` API: wrapping
+  * rows as a DataFrame without planning them again, and freeing a
+  * broadcast before a call returns.
   */
 object GraftFrames {
 
   private def classicSession(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]
-
-  /** `plan`'s RDD, with `spark` active while `plan` is built and run: an
-    * operator takes its session (and so every conf it reads) from the
-    * thread's active session when it is constructed, so a plan copied on
-    * a thread without one would have none.
-    */
-  def execute(spark: SparkSession, plan: => SparkPlan): RDD[InternalRow] =
-    classicSession(spark).withActive(plan.execute())
 
   /** A DataFrame scanning `rdd`, whose rows are `output`, laid out by
     * `partitioning` and estimated by `stats` — a checkpoint as

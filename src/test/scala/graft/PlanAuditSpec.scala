@@ -289,21 +289,14 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("classic scatter: the messages scan feeds a partial aggregate " +
       "exchanged on mdst, and the vertex side stays unshuffled") {
-    // Above the broadcast-pull cap each task scatters its own state
-    // partition's senders over the src-partitioned edge index, so the round
-    // reads no columnar cache, shuffles no sender, and pays ONE exchange:
-    // the partial aggregates on their destination. The round plan is that
-    // aggregate alone — no join and no scan of the vertex state, which
-    // merges the aggregate partition by partition at its own layout.
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.RDDScanExec
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // Above the broadcast-pull cap each task folds its own state
+    // partition's senders over the src-partitioned edge index into one
+    // buffer per destination, so a round shuffles no sender and no message
+    // row: ONE shuffle carries the partials, at most one record per (task,
+    // state partition), to their destinations' state partitions, which
+    // merge them at the state's own layout, round after round.
     import org.apache.spark.sql.functions._
-    import graft.engine.{GraphMeta, SqlRunner}
+    import graft.engine.{GraphMeta, RoundJobs, SqlRunner}
     import graft.algos.Algorithms
     val s = spark
     import s.implicits._
@@ -317,49 +310,33 @@ class PlanAuditSpec extends AnyFunSuite {
     val verts = s.range(1, nV + 1).select($"id")
     sys.props.put("graft.engine.broadcastPullMaxVertices", "0")
     try {
-      val (res, stats) = SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
-        GraphMeta(nV, source = 1L), numEdges = 200000L)
-      res.count()
-      val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
-      val nodes = expand(plan)
-      assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
-        s"the round must read no columnar cache:\n$plan")
-      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"the round must join nothing:\n$plan")
-      assert(nodes.filter(_.children.isEmpty).forall {
-        case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
-        case _ => false
-      }, s"the round must scan the messages alone, never the vertex state:\n$plan")
-      val exchanges = nodes.collect { case x: ShuffleExchangeExec => x }
-      assert(exchanges.size == 1, s"the messages must shuffle once:\n$plan")
-      val onMdst = exchanges.head.outputPartitioning match {
-        case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSet)
-        case _ => Nil
+      val ((res, stats), jobs) = RoundJobs.record(s) {
+        SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
+          GraphMeta(nV, source = 1L), numEdges = 200000L)
       }
-      assert(onMdst == Seq(Set("mdst")), s"the exchange must key on mdst:\n$plan")
-      val partial = expand(exchanges.head.child).collectFirst {
-        case a: BaseAggregateExec if a.aggregateExpressions.forall(_.mode == Partial) => a
-      }.getOrElse(fail(s"no partial aggregate below the exchange:\n$plan"))
-      assert(expand(partial).exists {
-        case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
-        case _ => false
-      }, s"the partial aggregate must read the messages scan:\n$plan")
-      // The state keeps the aggregate's partition count, round after round.
-      assert(plan.outputPartitioning.numPartitions == res.queryExecution.toRdd.getNumPartitions,
-        s"the aggregate and the vertex state differ in layout:\n$plan")
+      res.count()
+      val stateParts = res.queryExecution.toRdd.getNumPartitions
+      val rounds = RoundJobs.rounds(jobs, stats.iterations)
+      assert(rounds.size == stats.iterations && stats.iterations > 2, jobs)
+      rounds.zip(stats.messagesTrace).foreach { case (job, messages) =>
+        assert(job.stages.size == 2, s"a classic round is a fold and a merge: $job")
+        val Seq(fold, merge) = job.stages
+        assert(fold.recordsWritten <= math.min(messages, fold.tasks.toLong * stateParts),
+          s"the fold must ship partials, not messages ($messages): $job")
+        assert(merge.recordsRead == fold.recordsWritten && merge.recordsWritten == 0, job)
+        assert(merge.tasks == stateParts, s"the state keeps its layout: $job")
+      }
     } finally sys.props.remove("graft.engine.broadcastPullMaxVertices")
   }
 
   test("broadcast-pull scatter: the messages scan reaches the aggregate unshuffled") {
     // The default mode below BroadcastPullMaxVertices: the senders
-    // broadcast to the dst-partitioned edge index, so the scatter's
-    // message rows are already clustered on the aggregation key and reach
-    // the aggregate with zero ShuffleExchange — the scatter moves no row
-    // over the wire.
-    import org.apache.spark.sql.execution.RDDScanExec
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // broadcast to the dst-partitioned edge index, whose partition p holds
+    // the in-edges of state partition p's vertices, so a task folds its
+    // messages and merges them into its own state partition: each round is
+    // one stage and moves no row over the wire.
     import org.apache.spark.sql.functions._
-    import graft.engine.{GraphMeta, SqlRunner}
+    import graft.engine.{GraphMeta, RoundJobs, SqlRunner}
     import graft.algos.Algorithms
     val s = spark
     import s.implicits._
@@ -370,20 +347,19 @@ class PlanAuditSpec extends AnyFunSuite {
       .filter($"src" =!= $"dst")
       .withColumn("weight", lit(1.0))
     val verts = s.range(1, nV + 1).select($"id")
-    val (res, stats) = SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
-      GraphMeta(nV, source = 1L), numEdges = 200000L)
+    val ((res, stats), jobs) = RoundJobs.record(s) {
+      SqlRunner.runWithStats(s, verts, edges, Algorithms.Sssp,
+        GraphMeta(nV, source = 1L), numEdges = 200000L)
+    }
     res.count()
-    val plan = stats.roundPlan.getOrElse(fail("no captured plan"))
-    // The outermost aggregate is the reduce the state merge reads.
-    val reduce = expand(plan).collectFirst { case a: BaseAggregateExec => a }
-      .getOrElse(fail(s"no aggregate in:\n$plan"))
-    val sub = expand(reduce)
-    assert(sub.exists {
-      case scan: RDDScanExec => scan.output.exists(_.name == "mdst")
-      case _ => false
-    }, s"the aggregate must read the messages scan:\n$reduce")
-    assert(!sub.exists(_.isInstanceOf[ShuffleExchangeExec]),
-      s"the messages must not shuffle before the aggregate:\n$reduce")
+    val rounds = RoundJobs.rounds(jobs, stats.iterations)
+    assert(rounds.size == stats.iterations && stats.iterations > 2, jobs)
+    rounds.foreach { job =>
+      assert(job.stages.size == 1, s"a pull round is one stage: $job")
+      assert(job.stages.head.recordsWritten == 0 && job.stages.head.recordsRead == 0,
+        s"the messages must not shuffle: $job")
+      assert(job.stages.head.tasks == res.queryExecution.toRdd.getNumPartitions, job)
+    }
   }
 
   test("AQE splits a skewed sort-merge join partition at runtime") {

@@ -54,7 +54,7 @@ class EdgeIndexSpec extends AnyFunSuite {
     (0 until p.keys.length).map { k =>
       p.keys(k) -> (p.offsets(k) until p.offsets(k + 1)).map { e =>
         val w = Option(p.weight).filterNot(_ => p.nullWeight != null && p.nullWeight.get(e))
-        (p.keys(k), p.dst(e), w.map(_(e)))
+        (p.keys(k), p.dsts(p.slot(e)), w.map(_(e)))
       }
     }
 
@@ -102,7 +102,7 @@ class EdgeIndexSpec extends AnyFunSuite {
     import spark.implicits._
     Seq(IntegerType, LongType).foreach { idType =>
       val e = edges(idType, 2000, 3, 21)
-      Seq("dst" -> ((p: EdgeIndex.Part) => (0 until p.dst.length).map(p.dst(_))),
+      Seq("dst" -> ((p: EdgeIndex.Part) => (0 until p.dsts.length).map(p.dsts(_))),
           "src" -> ((p: EdgeIndex.Part) => (0 until p.keys.length).map(p.keys(_))))
         .foreach { case (key, held) =>
           val index = EdgeIndex.build(e, Seq(key), 6, weighted = false)
@@ -114,6 +114,22 @@ class EdgeIndexSpec extends AnyFunSuite {
             ids.foreach(v => assert(hashed(v) == p, s"$idType $key $v in partition $p"))
           }
         }
+    }
+  }
+
+  test("each edge's slot names its destination among the partition's sorted distinct " +
+      "destinations, past 2^16 of them too") {
+    val spark = this.spark
+    import spark.implicits._
+    Seq(5000L, 70001L).foreach { distinct =>
+      val e = spark.range(0, 140000, 1, 2)
+        .select(($"id" % 1000).as("src"), (($"id" * 7) % distinct).as("dst"))
+      val index = EdgeIndex.build(e, Seq("dst"), 1, weighted = false)
+      val Array(p) = try index.collect() finally index.unpersist()
+      val dsts = (0 until p.dsts.length).map(p.dsts(_))
+      assert(dsts == (0L until distinct), s"$distinct destinations")
+      assert((0 until p.offsets.last).map(e => p.dsts(p.slot(e))).sorted ==
+        e.select($"dst").as[Long].collect().toSeq.sorted, s"$distinct destinations")
     }
   }
 
@@ -136,7 +152,7 @@ class EdgeIndexSpec extends AnyFunSuite {
         a.weight.toSeq == b.weight.toSeq, s"partition $p")
     }
     val empty = EdgeIndex.merge(Iterator.empty, weighted = true)
-    assert(empty.keys.length == 0 && empty.offsets.toSeq == Seq(0) && empty.dst.length == 0)
+    assert(empty.keys.length == 0 && empty.offsets.toSeq == Seq(0) && empty.dsts.length == 0)
   }
 }
 

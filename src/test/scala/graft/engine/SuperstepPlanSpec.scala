@@ -1,32 +1,23 @@
 package graft.engine
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.algos.Algorithms
 
-/** SqlRunner's prepared round: one physical plan, planned in round 1 and
-  * re-executed every round with its vertex-state scans rebound to the
-  * current checkpoint. Pins that the rebound rounds compute exactly what
+/** SqlRunner's rounds: no plan per round, each round one job that folds
+  * the senders' messages into per-destination buffers and merges them
+  * into the vertex state. Pins that the rounds compute exactly what
   * LocalRunner's in-memory loop does, that planning does not grow with the
-  * round count, that each round is one one-stage job, that the loop's
-  * partitions follow the graph's size, and that the rebind refuses plans
-  * it cannot serve.
+  * round count, that each round is one job of one stage, or of two around
+  * one shuffle of partials where the index does not share the state's
+  * layout, and that the loop's partitions follow the graph's size.
   */
 class SuperstepPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -224,46 +215,39 @@ class SuperstepPlanSpec extends AnyFunSuite {
     val traces = Seq("pull" -> Nil, "pull salted" -> Seq(hubs),
         "classic" -> Seq(classic), "classic, hub threshold set" -> Seq(classic, hubs))
       .map { case (mode, props) =>
-        val (got, stats) = withProps(props: _*) {
-          SqlRunner.runWithStats(spark, verts, edges, alg, wideMeta)
+        val ((got, stats), jobs) = RoundJobs.record(spark) {
+          withProps(props: _*)(SqlRunner.runWithStats(spark, verts, edges, alg, wideMeta))
         }
-        val plan = stats.roundPlan.get
         assert((stats.saltedHubs > 0) == (mode == "pull salted"), mode)
-        if (stats.saltedHubs == 0) {
-          val stateParts = plan.outputPartitioning.numPartitions
-          assert(stateParts == indexParts(plan) &&
-            stateParts > LoopConf.sizedParallelism(spark, wideMeta.numVertices, 24),
-            s"$mode:\n$plan")
-          // The round plan is the messages' aggregate alone: it joins
-          // nothing and scans nothing but the messages, so no exchange in
-          // it carries vertex state, and the state merges partition by
-          // partition at the aggregate's count.
-          assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"$mode joins:\n$plan")
-          assert(plan.collectLeaves().forall {
-            case m: RDDScanExec => m.output.exists(_.name == "mdst")
-            case _ => false
-          }, s"$mode scans more than the messages:\n$plan")
-          assert(got.queryExecution.toRdd.getNumPartitions == stateParts, mode)
-          val exchanges = plan.collect { case x: ShuffleExchangeExec => x }
-          if (mode == "pull") assert(exchanges.isEmpty, s"$mode shuffles:\n$plan")
-          else assert(exchanges.map(_.outputPartitioning).collect {
-            case h: HashPartitioning => h.expressions.map(_.references.map(_.name).toSet)
-          } == Seq(Seq(Set("mdst"))), s"$mode must exchange once, on mdst:\n$plan")
+        val stateParts = got.queryExecution.toRdd.getNumPartitions
+        val rounds = RoundJobs.rounds(jobs, stats.iterations)
+        assert(rounds.size == stats.iterations, s"$mode: $jobs")
+        rounds.zip(stats.messagesTrace).foreach { case (job, messages) =>
+          // Every round ends in a stage over the state's partitions, whose
+          // count no round changes.
+          assert(job.stages.last.tasks == stateParts, s"$mode: $job")
+          if (mode == "pull") {
+            // The index shares the state's layout: each task merges its own
+            // buffers, so a round is one stage and shuffles nothing.
+            assert(job.stages.size == 1 && job.stages.head.recordsWritten == 0, s"$mode: $job")
+          } else {
+            // One shuffle, of partials: at most one record per (task,
+            // state partition), each destination once in it, never a
+            // record per message.
+            val Seq(fold, _) = job.stages
+            assert(fold.recordsWritten <= math.min(messages, fold.tasks.toLong * stateParts),
+              s"$mode: $job, $messages messages")
+          }
         }
+        if (stats.saltedHubs == 0)
+          assert(rounds.head.stages.head.tasks == stateParts &&
+            stateParts > LoopConf.sizedParallelism(spark, wideMeta.numVertices, 24), mode)
         assert(values(got) == local, mode)
         stats.changedTrace
       }
     assert(traces.forall(_ == traces.head), traces)
     assert(traces.head == localTrace(alg, traces.head.size, wide, wideMeta))
   }
-
-  /** The partition count of the edges `plan` scans: its messages scan over
-    * the edge index.
-    */
-  private def indexParts(plan: SparkPlan): Int =
-    plan.collectFirst {
-      case m: RDDScanExec if m.output.exists(_.name == "mdst") => m.rdd.getNumPartitions
-    }.getOrElse(fail(s"no edges scanned in:\n$plan"))
 
   test("the loop fills the cores from 64K edges per core, and a small graph " +
       "keeps one partition") {
@@ -280,11 +264,14 @@ class SuperstepPlanSpec extends AnyFunSuite {
     }
     Seq("pull" -> Nil, "classic" -> Seq("graft.engine.broadcastPullMaxVertices" -> "0"))
       .foreach { case (mode, props) =>
+        // (state partitions, index partitions): the round's first stage
+        // folds over the index.
         def laidOut(g: (DataFrame, DataFrame), m: GraphMeta): (Int, Int) = {
-          val plan = withProps(props: _*) {
-            SqlRunner.runWithStats(s, g._1, g._2, oneRound, m)
-          }._2.roundPlan.get
-          (plan.outputPartitioning.numPartitions, indexParts(plan))
+          val ((got, _), jobs) = RoundJobs.record(s) {
+            withProps(props: _*)(SqlRunner.runWithStats(s, g._1, g._2, oneRound, m))
+          }
+          (got.queryExecution.toRdd.getNumPartitions,
+            RoundJobs.rounds(jobs, 1).head.stages.head.tasks)
         }
         assert(laidOut(big, GraphMeta(nV, source = 0L)) == (cores, cores), s"$mode, 1M edges")
         assert(laidOut(graph, meta) == (1, 1), s"$mode, ${meta.numVertices} vertices")
@@ -370,9 +357,9 @@ class SuperstepPlanSpec extends AnyFunSuite {
   }
 
   test("rounds run on a thread with no active session") {
-    // Each round copies the prepared plan, and an operator takes its
-    // session from the thread's active one when it is built: the copy must
-    // be made with the loop's session active, whatever thread runs it.
+    // Setup plans the sender selection, the reduce and the update, and an
+    // operator takes its session from the thread's active one when it is
+    // built: the loop must run whatever thread calls it.
     val (verts, edges) = path(5)
     var got: Either[Throwable, Int] = Left(new IllegalStateException("not run"))
     val t = new Thread(() => {
@@ -388,102 +375,23 @@ class SuperstepPlanSpec extends AnyFunSuite {
 
   test("pull mode: every round's changed count is a one-stage job") {
     // On a multi-partition state, so no round can pass by skipping a merge
-    // of partial counts. Per job: its call site and the stages that ran in it. A job also
-    // lists the skipped stages of inputs computed earlier (the edge cache);
-    // only stages that complete did work in it.
-    val jobOf = new ConcurrentHashMap[Int, Int]
-    val sites = new ConcurrentHashMap[Int, String]
-    val ran = new ConcurrentHashMap[Int, Int]
-    val ended = ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        e.stageIds.foreach(jobOf.put(_, e.jobId))
-        sites.put(e.jobId, e.stageInfos.maxBy(_.stageId).name)
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        ran.merge(jobOf.get(e.stageInfo.stageId), 1, _ + _)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
-    }
+    // of partial counts.
     val (verts, edges) = wide
-    spark.sparkContext.addSparkListener(listener)
-    val stats = try {
-      val (_, stats) = SqlRunner.runWithStats(spark, verts, edges,
-        Algorithms.UnitWeighted(Algorithms.Sssp), wideMeta)
-      // The bus delivers in order: once a later job's end arrives, every
-      // event of the run has.
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      def marked = sites.asScala.exists { case (job, site) =>
-        site.startsWith("count at SuperstepPlanSpec") && ended.contains(job)
-      }
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
-      stats
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((_, stats), jobs) = RoundJobs.record(spark) {
+      SqlRunner.runWithStats(spark, verts, edges, Algorithms.UnitWeighted(Algorithms.Sssp),
+        wideMeta)
+    }
     // Setup counts share the call site; the seed's and the rounds' are the
     // last ones.
-    val jobs = sites.asScala.toSeq.sortBy(_._1)
-    val seeded = jobs
-      .collect { case (job, site) if site.startsWith("count at SqlRunner") => job }
+    val seeded = jobs.filter(_.site.startsWith("count at SqlRunner"))
       .takeRight(stats.iterations + 1)
-    val counts = seeded.tail
-    val stages = counts.map(j => j -> ran.getOrDefault(j, 0))
-    assert(counts.size == stats.iterations && stages.forall(_._2 == 1), stages)
+    val stages = seeded.tail.map(j => j.id -> j.stages.size)
+    assert(stages.size == stats.iterations && stages.forall(_._2 == 1), stages)
     // Nothing else runs from the seed's count to the last round's: the
     // senders come back with each count, so no round collects them itself.
-    val between = jobs.filter { case (job, _) =>
-      job > seeded.head && job < seeded.last && !seeded.contains(job)
+    val between = jobs.filter { j =>
+      j.id > seeded.head.id && j.id < seeded.last.id && !seeded.contains(j)
     }
     assert(between.isEmpty, s"jobs between the counts $seeded: $between")
-  }
-
-  test("rebind refuses an adaptive plan, a plan without the scan, and a " +
-      "different partition count") {
-    val s = spark
-    import s.implicits._
-    val adaptive = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "true")) {
-      s.range(100).groupBy(($"id" % 3).as("k")).count().queryExecution.executedPlan
-    }
-    val ckpt = s.range(0, 100, 1, 2).select($"id", ($"id" * 2).as("v")).localCheckpoint()
-    val ckptRdd = ckpt.queryExecution.analyzed
-      .collectFirst { case l: LogicalRDD => l.rdd }.get
-    val plan = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "false")) {
-      ckpt.filter($"v" > 10).queryExecution.executedPlan
-    }
-    val same = s.range(0, 100, 1, 2).select($"id", ($"id" * 3).as("v"))
-      .queryExecution.toRdd
-    val other = s.range(0, 100, 1, 3).select($"id", $"id".as("v")).queryExecution.toRdd
-    def refused(p: => Any): String = intercept[IllegalStateException](p).getMessage
-    assert(refused(SqlRunner.rebind(adaptive, ckptRdd -> same)).contains("AdaptiveSparkPlan"))
-    assert(refused(SqlRunner.rebind(plan, same -> other)).contains("no scan of RDD"))
-    assert(refused(SqlRunner.rebind(plan, ckptRdd -> other)).contains("partitions"))
-    // The guards leave the one legal rebind: same layout, new rows.
-    val rebound = SqlRunner.rebind(plan, ckptRdd -> same).execute()
-      .map(r => r.getLong(1)).collect().sorted
-    assert(rebound.toSeq == (4 until 100).map(_ * 3L))
-  }
-
-  test("rebind swaps the state and messages scans together, each guarded") {
-    // A pull-mode round rebinds two leaves; either one's guard refuses the
-    // whole copy, and a legal rebind reads both new inputs.
-    val s = spark
-    import s.implicits._
-    def ckpt(from: Long, parts: Int) = {
-      val df = s.range(from, from + 100, 1, parts).select($"id").localCheckpoint()
-      (df, df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get)
-    }
-    val ((a, aRdd), (b, bRdd)) = (ckpt(0, 2), ckpt(1000, 3))
-    val plan = LoopConf.withConfs(s, Map("spark.sql.adaptive.enabled" -> "false")) {
-      a.union(b).queryExecution.executedPlan
-    }
-    def rows(from: Long, parts: Int) =
-      s.range(from, from + 10, 1, parts).select($"id").queryExecution.toRdd
-    def refused(p: => Any): String = intercept[IllegalStateException](p).getMessage
-    assert(refused(SqlRunner.rebind(plan, aRdd -> rows(0, 2), rows(0, 2) -> rows(0, 3)))
-      .contains("no scan of RDD"))
-    assert(refused(SqlRunner.rebind(plan, aRdd -> rows(0, 2), bRdd -> rows(0, 2)))
-      .contains("partitions"))
-    val rebound = SqlRunner.rebind(plan, aRdd -> rows(10, 2), bRdd -> rows(2000, 3))
-      .execute().map(_.getLong(0)).collect().sorted
-    assert(rebound.toSeq == (10L until 20L) ++ (2000L until 2010L))
   }
 }

@@ -1,7 +1,9 @@
 package graft.engine
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -23,12 +25,18 @@ class VertexStateSpec extends AnyFunSuite {
     VertexState.seed((9L to 0L by -1L).iterator.map(i =>
       InternalRow(i, i.toInt, alg.initFn(i, meta))), LongType)
 
-  /** Messages for vertices 2, 5 and 7, a null aggregate for 3, and one for
-    * 42, which the partition does not hold.
+  /** One task's partials of `alg`'s reduce: messages for vertices 2, 5
+    * and 7, a null message for 3, and one for 42, which the partition does
+    * not hold.
     */
-  private def aggs: Iterator[InternalRow] =
-    Iterator(InternalRow(7L, 1.0), InternalRow(2L, 0.5), InternalRow(3L, null),
-      InternalRow(5L, 8.0), InternalRow(42L, 0.0))
+  private def partials(reduce: Fold.Reduce): Fold.Partials = {
+    val dsts = Array(2L, 3L, 5L, 7L, 42L)
+    val buffers = reduce.task(0).buffers(dsts.length)
+    Seq[(Int, Any)](3 -> 1.0, 0 -> 0.5, 1 -> null, 2 -> 8.0, 4 -> 0.0).foreach {
+      case (slot, msg) => buffers.update(slot, InternalRow(msg))
+    }
+    buffers.partials(EdgeIndex.ids(dsts), 0)
+  }
   private val got = Map(7L -> 1.0, 2L -> 0.5, 5L -> 8.0)
 
   private def snapshot(s: VertexState) =
@@ -41,7 +49,10 @@ class VertexStateSpec extends AnyFunSuite {
         val prev = seed(alg)
         val before = snapshot(prev)
         val update = VertexState.update(spark, alg, meta, LongType)
-        def round() = VertexState.merge(prev, aggs, update, 0, LongType,
+        val reduce = Fold.reduce(spark, alg,
+          Seq(AttributeReference("msg", DoubleType)()), col("msg"))
+        val sent = partials(reduce)
+        def round() = VertexState.merge(prev, Iterator(sent), reduce.task(0), update, 0, LongType,
           receiversOnly = alg.idleNoOp)
         val (a, b) = (round(), round())
         assert(snapshot(a) == snapshot(b))
@@ -57,7 +68,8 @@ class VertexStateSpec extends AnyFunSuite {
           assert(a.changed.get(i) == (!d.isNaN && math.abs(d) > alg.epsilon), s"vertex $id")
         }
         if (alg.idleNoOp) {
-          val all = VertexState.merge(prev, aggs, update, 0, LongType, receiversOnly = false)
+          val all = VertexState.merge(prev, Iterator(sent), reduce.task(0), update, 0, LongType,
+            receiversOnly = false)
           assert(snapshot(all) == snapshot(a), "receivers-only and every-vertex updates differ")
         }
       }
